@@ -318,7 +318,7 @@ object Bench {
           extra += 1
           if (!retried.contains(name)) retried += name
           drainListeners()
-          val cpu0 = cpuAcc.get
+          val cpu0 = cpuAcc.get; val jobs0 = jobAcc.get
           val s0 = System.nanoTime()
           try {
             exec(name)
@@ -326,6 +326,7 @@ object Bench {
             times(name) = dt :: times(name)
             drainListeners()
             cpuTimes(name) = (cpuAcc.get - cpu0) / 1e9 :: cpuTimes(name)
+            jobCounts(name) = jobAcc.get - jobs0
             System.err.println(f"[bench] retry$extra $name ${dt}%.2fs (contention adjudication)")
           } catch { case _: Throwable => extra = 2 } // warm rep failed: keep original reps
           writeArtifacts(partial = true)

@@ -42,6 +42,19 @@ case class KalmanDefaults(
     initialMean: Array[Double],
     initialCovariance: DMat) extends Serializable
 
+/** A user matrix struct rebuilt field by field, by name, into the canonical
+  * (numRows int, numCols int, values array<double>) layout the kernels read
+  * by ordinal: any field order resolves, a missing field fails analysis, and
+  * a null struct stays null. */
+private[filter] object MatrixColumn {
+  def apply(m: Column): Column = when(m.isNull, lit(null)).otherwise(struct(
+    m.getField("numRows").cast("int").as("numRows"),
+    m.getField("numCols").cast("int").as("numCols"),
+    m.getField("values").cast("array<double>").as("values")))
+
+  val absent: Column = lit(null).cast("struct<numRows:int,numCols:int,values:array<double>>")
+}
+
 /** In-flight per-key filter state (never leaves the executor in batch mode).
   * `adaptiveQ` holds the RAUKF-inflated process noise when adaptive noise is
   * enabled and the last residual breached the mahalanobis threshold; it
@@ -359,16 +372,8 @@ abstract class KalmanFilterBase[Impl <: KalmanFilterBase[Impl]](
 
   protected def storeResidual: Boolean = calcLoglikelihood || calcMahalanobis || calcSlidingLikelihood
 
-  private val matStructType = "struct<numRows:int,numCols:int,values:array<double>>"
-
-  /** Per-row matrix columns are cast to the canonical
-    * (numRows int, numCols int, values array<double>) struct so the kernel's
-    * positional reads and the encoder's resolution see the same layout
-    * (no-op for the canonical structs every caller builds). */
-  private def matCol(colName: Option[String]): Column = colName match {
-    case Some(c) => col(c).cast(matStructType)
-    case None => lit(null).cast(matStructType)
-  }
+  private def matCol(colName: Option[String]): Column =
+    colName.map(c => MatrixColumn(col(c))).getOrElse(MatrixColumn.absent)
 
   /** Canonical 11-column input projection shared by the encoder path
     * (`toKalmanInput`) and the InternalRow kernel (`KalmanRowKernel` reads
@@ -387,13 +392,13 @@ abstract class KalmanFilterBase[Impl <: KalmanFilterBase[Impl]](
       matCol(processModelCol).as("processModel"),
       matCol(processNoiseCol).as("processNoise"),
       controlCol.map(c => col(c).cast("array<double>")).getOrElse(lit(null).cast("array<double>")).as("control"),
-      controlFunctionCol.map(c => col(c).cast(matStructType)).getOrElse(lit(null).cast(matStructType)).as("controlFunction"),
+      matCol(controlFunctionCol).as("controlFunction"),
       initialStateDistributionCol.map(c => col(c).getField("mean").cast("array<double>"))
         .orElse(initialStateMeanCol.map(c => col(c).cast("array<double>")))
         .getOrElse(lit(null).cast("array<double>")).as("initialMean"),
-      initialStateDistributionCol.map(c => col(c).getField("covariance").cast(matStructType))
-        .orElse(initialStateCovarianceCol.map(c => col(c).cast(matStructType)))
-        .getOrElse(lit(null).cast(matStructType)).as("initialCovariance")
+      initialStateDistributionCol.map(c => MatrixColumn(col(c).getField("covariance")))
+        .orElse(initialStateCovarianceCol.map(c => MatrixColumn(col(c))))
+        .getOrElse(MatrixColumn.absent).as("initialCovariance")
     )
   }
 
@@ -438,16 +443,11 @@ abstract class KalmanFilterBase[Impl <: KalmanFilterBase[Impl]](
           hasIM = initialStateDistributionCol.isDefined || initialStateMeanCol.isDefined,
           hasIC = initialStateDistributionCol.isDefined || initialStateCovarianceCol.isDefined)
         StatefulStage.batchRows(kalmanProjection(df), KalmanRowKernel.outputSchema,
-          assumeUnique = assumeUniqueEventTimes)(kernel.run)
+          assumeUnique = assumeUniqueEventTimes, kernel)
       }
     val out = finalizeColumns(out0)
     if (mmaeEnabled) mmaeAggregate(out) else out
   }
-
-  /** Executed plan of the kernel's inner (exchange + sort) frame — plan-pin
-    * test support. */
-  private[graft] def batchInnerPlan(df: DataFrame): String =
-    StatefulStage.batchInnerPlan(kalmanProjection(df), assumeUniqueEventTimes)
 
   /** Encoder-path batch execution — the pre-kernel physical plan, kept as
     * the executable reference for the bit-exactness pin (KalmanKernelPinSpec)
@@ -470,12 +470,7 @@ abstract class KalmanFilterBase[Impl <: KalmanFilterBase[Impl]](
     if (!storeResidual) out = out.drop("residualMean", "residualCovariance")
     if (!outputSystemMatrices)
       out = out.drop("processModel", "processNoise", "measurementModel", "measurementNoise")
-    stateKeyCol.foreach(c => out = out.withColumnRenamed("stateKey", c))
-    eventTimeCol match {
-      case Some(c) => out = out.withColumnRenamed("eventTime", c)
-      case None => out = out.drop("eventTime")
-    }
-    out
+    StatefulStage.userColumns(out, stateKeyCol, eventTimeCol)
   }
 
   /**

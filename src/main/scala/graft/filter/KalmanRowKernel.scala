@@ -4,9 +4,9 @@ import org.apache.spark.sql.Encoders
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{GenericInternalRow, UnsafeArrayData}
 import org.apache.spark.sql.types.StructType
-import org.apache.spark.unsafe.types.UTF8String
 
 import graft.linalg.DMat
+import graft.state.{FoldKernel, KeyRun}
 import graft.stats.Distributions
 
 /**
@@ -37,20 +37,12 @@ final class KalmanRowKernel(
     emitSystemMatrices: Boolean,
     hasMM: Boolean, hasMN: Boolean, hasPM: Boolean, hasPN: Boolean,
     hasCtl: Boolean, hasCtlFn: Boolean, hasIM: Boolean, hasIC: Boolean)
-  extends Serializable {
+  extends FoldKernel {
 
   private val s = compute.stateSize
   private val m = compute.measurementSize
-  // constant system matrices pre-wrapped once (per-row columns override)
-  private val defMM = Some(defaults.measurementModel)
-  private val defMN = Some(defaults.measurementNoise)
-  private val defPM = Some(defaults.processModel)
-  private val defPN = Some(defaults.processNoise)
-
-  private def readMat(row: InternalRow, i: Int): DMat = {
-    val st = row.getStruct(i, 3)
-    DMat(st.getInt(0), st.getInt(1), st.getArray(2).toDoubleArray)
-  }
+  private val input = new KalmanRowInput(defaults, hasMM, hasMN, hasPM, hasPN,
+    hasCtl, hasCtlFn, hasIM, hasIC)
 
   def run(rows: Iterator[InternalRow]): Iterator[InternalRow] = new Iterator[InternalRow] {
     private val zerosM = new Array[Double](m)
@@ -59,8 +51,7 @@ final class KalmanRowKernel(
     private var slidStart = 0
     private var slidLen = 0
     // per-key fold state (mirrors KState)
-    private var haveKey = false
-    private var curKey: UTF8String = null
+    private val keys = new KeyRun
     private var stateIndex = 0L
     private var mean: Array[Double] = null
     private var cov: Array[Double] = null
@@ -98,38 +89,19 @@ final class KalmanRowKernel(
         UnsafeArrayData.fromPrimitiveArray(d.values)))
 
     private def process(row: InternalRow): Unit = {
-      val keyView = if (row.isNullAt(0)) null else row.getUTF8String(0)
-      val sameKey = haveKey &&
-        (if (curKey == null) keyView == null else keyView != null && curKey.equals(keyView))
-      if (!sameKey) {
-        curKey = if (keyView == null) null else keyView.copy()
-        haveKey = true
+      if (keys.starts(row)) {
         stateIndex = 0L
-        mean =
-          if (hasIM && !row.isNullAt(9)) row.getArray(9).toDoubleArray
-          else defaults.initialMean
-        cov =
-          if (hasIC && !row.isNullAt(10)) readMat(row, 10).values
-          else defaults.initialCovariance.values
+        mean = input.initialMean(row)
+        cov = input.initialCovariance(row)
         residMean = null; residCov = null; adaptiveQ = null
         slidStart = 0; slidLen = 0
       }
       val timeNull = row.isNullAt(1)
       val timeMicros = if (timeNull) 0L else row.getLong(1)
       val measNull = row.isNullAt(2)
-      val measOpt: Option[Array[Double]] =
-        if (measNull) None else Some(row.getArray(2).toDoubleArray)
-      val mmOpt = if (hasMM && !row.isNullAt(3)) Some(readMat(row, 3)) else defMM
-      val mnOpt = if (hasMN && !row.isNullAt(4)) Some(readMat(row, 4)) else defMN
-      val pmOpt = if (hasPM && !row.isNullAt(5)) Some(readMat(row, 5)) else defPM
-      val pnStatic = if (hasPN && !row.isNullAt(6)) Some(readMat(row, 6)) else defPN
-      val ctlOpt: Option[Array[Double]] =
-        if (hasCtl && !row.isNullAt(7)) Some(row.getArray(7).toDoubleArray) else None
-      val ctlFnOpt = if (hasCtlFn && !row.isNullAt(8)) Some(readMat(row, 8)) else None
       // resolved row with the STATIC (per-row or default) Q: what resolve()
       // yields in the encoder path — used for output/multistep/matrix echo
-      val rowStatic = KalmanIn(null, None, measOpt, mmOpt, mnOpt, pmOpt, pnStatic,
-        ctlOpt, ctlFnOpt, None, None)
+      val rowStatic = input.resolve(row)
       // effective row for update(): RAUKF-adapted Q overrides until reset
       val rowEff =
         if (adaptiveQ == null) rowStatic
@@ -176,7 +148,7 @@ final class KalmanRowKernel(
       def emit(stepIndex: Int, mn: Array[Double], cv: Array[Double],
           rm: Array[Double], rc: Array[Double], l: Any, mh: Any, sl: Any): Unit = {
         pending(pendingLen) = new GenericInternalRow(Array[Any](
-          curKey, stateIndex, stepIndex, timeVal,
+          keys.key, stateIndex, stepIndex, timeVal,
           UnsafeArrayData.fromPrimitiveArray(mn),
           new GenericInternalRow(Array[Any](s, s, UnsafeArrayData.fromPrimitiveArray(cv))),
           if (rm == null) null else UnsafeArrayData.fromPrimitiveArray(rm),
@@ -200,6 +172,47 @@ final class KalmanRowKernel(
       }
     }
   }
+}
+
+/** Decodes the canonical 11-column Kalman input projection shared by the
+  * Kalman and RTS forward kernels: per-row columns where the filter has them
+  * and they are non-null, the filter's constants otherwise. */
+private[graft] final class KalmanRowInput(
+    defaults: KalmanDefaults,
+    hasMM: Boolean, hasMN: Boolean, hasPM: Boolean, hasPN: Boolean,
+    hasCtl: Boolean, hasCtlFn: Boolean, hasIM: Boolean, hasIC: Boolean)
+  extends Serializable {
+
+  // constant system matrices pre-wrapped once (per-row columns override)
+  private val defMM = Some(defaults.measurementModel)
+  private val defMN = Some(defaults.measurementNoise)
+  private val defPM = Some(defaults.processModel)
+  private val defPN = Some(defaults.processNoise)
+
+  private def readMat(row: InternalRow, i: Int): DMat = {
+    val st = row.getStruct(i, 3)
+    DMat(st.getInt(0), st.getInt(1), st.getArray(2).toDoubleArray)
+  }
+
+  private def vec(row: InternalRow, i: Int): Option[Array[Double]] =
+    if (row.isNullAt(i)) None else Some(row.getArray(i).toDoubleArray)
+
+  def initialMean(row: InternalRow): Array[Double] =
+    if (hasIM && !row.isNullAt(9)) row.getArray(9).toDoubleArray else defaults.initialMean
+
+  def initialCovariance(row: InternalRow): Array[Double] =
+    if (hasIC && !row.isNullAt(10)) readMat(row, 10).values else defaults.initialCovariance.values
+
+  /** The row as the encoder path's `resolve` sees it: key, time and initial
+    * moments left out. */
+  def resolve(row: InternalRow): KalmanIn = KalmanIn(null, None, vec(row, 2),
+    if (hasMM && !row.isNullAt(3)) Some(readMat(row, 3)) else defMM,
+    if (hasMN && !row.isNullAt(4)) Some(readMat(row, 4)) else defMN,
+    if (hasPM && !row.isNullAt(5)) Some(readMat(row, 5)) else defPM,
+    if (hasPN && !row.isNullAt(6)) Some(readMat(row, 6)) else defPN,
+    if (hasCtl) vec(row, 7) else None,
+    if (hasCtlFn && !row.isNullAt(8)) Some(readMat(row, 8)) else None,
+    None, None)
 }
 
 object KalmanRowKernel {

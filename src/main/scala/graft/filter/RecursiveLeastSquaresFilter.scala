@@ -88,27 +88,34 @@ class RecursiveLeastSquaresFilter(val featuresSize: Int) {
   def setAssumeUniqueEventTimes(): this.type = { assumeUniqueEventTimes = true; this }
   private var assumeUniqueEventTimes: Boolean = false
 
-  private val matStructType = "struct<numRows:int,numCols:int,values:array<double>>"
+  private def keyExpr = stateKeyCol.map(c => col(c).cast("string")).getOrElse(lit("rls.default"))
+  private def timeExpr = eventTimeCol.map(c => col(c).cast("timestamp")).getOrElse(lit(null).cast("timestamp"))
+
+  /** Input of the encoder engine: the streaming path and the batch reference. */
+  private def encoderInput(df: DataFrame): Dataset[RlsIn] = {
+    val spark = df.sparkSession
+    import spark.implicits._
+    df.select(
+      keyExpr.as("stateKey"),
+      timeExpr.as("eventTime"),
+      col(labelCol).cast("double").as("label"),
+      col(featuresCol).cast("array<double>").as("features"),
+      initialStateDistributionCol.map(c => col(c).getField("mean").cast("array<double>"))
+        .orElse(initialEstimateCol.map(c => col(c).cast("array<double>")))
+        .getOrElse(typedLit(initialEstimate)).as("initialMean"),
+      initialStateDistributionCol.map(c => col(c).getField("covariance"))
+        .orElse(regularizationMatrixCol.map(col))
+        .getOrElse(typedLit(regularizationMatrix)).as("initialCovariance")
+    ).as[RlsIn]
+  }
+
+  private def spec = new RlsSpec(forgettingFactor, featuresSize)
 
   def transform(df: DataFrame): DataFrame = {
     val spark = df.sparkSession
     import spark.implicits._
-    val keyExpr = stateKeyCol.map(c => col(c).cast("string")).getOrElse(lit("rls.default"))
-    val timeExpr = eventTimeCol.map(c => col(c).cast("timestamp")).getOrElse(lit(null).cast("timestamp"))
     val out = if (df.isStreaming) {
-      val in = df.select(
-        keyExpr.as("stateKey"),
-        timeExpr.as("eventTime"),
-        col(labelCol).cast("double").as("label"),
-        col(featuresCol).cast("array<double>").as("features"),
-        initialStateDistributionCol.map(c => col(c).getField("mean").cast("array<double>"))
-          .orElse(initialEstimateCol.map(c => col(c).cast("array<double>")))
-          .getOrElse(typedLit(initialEstimate)).as("initialMean"),
-        initialStateDistributionCol.map(c => col(c).getField("covariance"))
-          .orElse(regularizationMatrixCol.map(col))
-          .getOrElse(typedLit(regularizationMatrix)).as("initialCovariance")
-      ).as[RlsIn]
-      StatefulStage.run(in, new RlsSpec(forgettingFactor, featuresSize),
+      StatefulStage.run(encoderInput(df), spec,
         StageConf(timeoutMode, timeoutDuration, watermarkDuration)).toDF()
     } else {
       // InternalRow kernel: constant init/regularization live in the kernel
@@ -116,8 +123,8 @@ class RecursiveLeastSquaresFilter(val featuresSize: Int) {
       // encoder path ships ~(n + n²) doubles of constants per row).
       val imExpr = initialStateDistributionCol.map(c => col(c).getField("mean").cast("array<double>"))
         .orElse(initialEstimateCol.map(c => col(c).cast("array<double>")))
-      val icExpr = initialStateDistributionCol.map(c => col(c).getField("covariance").cast(matStructType))
-        .orElse(regularizationMatrixCol.map(c => col(c).cast(matStructType)))
+      val icExpr = initialStateDistributionCol.map(c => MatrixColumn(col(c).getField("covariance")))
+        .orElse(regularizationMatrixCol.map(c => MatrixColumn(col(c))))
       val cols = scala.collection.mutable.ArrayBuffer(
         keyExpr.as("stateKey"),
         timeExpr.as("eventTime"),
@@ -130,43 +137,18 @@ class RecursiveLeastSquaresFilter(val featuresSize: Int) {
         initialEstimate, regularizationMatrix,
         hasIM = imExpr.isDefined, hasIC = icExpr.isDefined)
       StatefulStage.batchRows(df.select(cols.toSeq: _*), RlsRowKernel.outputSchema,
-        assumeUnique = assumeUniqueEventTimes)(kernel.run)
+        assumeUnique = assumeUniqueEventTimes, kernel)
     }
-    var res = out
-    stateKeyCol.foreach(c => res = res.withColumnRenamed("stateKey", c))
-    eventTimeCol match {
-      case Some(c) => res = res.withColumnRenamed("eventTime", c)
-      case None => res = res.drop("eventTime")
-    }
-    res
+    StatefulStage.userColumns(out, stateKeyCol, eventTimeCol)
   }
 
   /** Encoder-path batch execution kept as the pin-spec reference. */
   private[graft] def transformEncoderBatch(df: DataFrame): DataFrame = {
     val spark = df.sparkSession
     import spark.implicits._
-    val keyExpr = stateKeyCol.map(c => col(c).cast("string")).getOrElse(lit("rls.default"))
-    val timeExpr = eventTimeCol.map(c => col(c).cast("timestamp")).getOrElse(lit(null).cast("timestamp"))
-    val in = df.select(
-      keyExpr.as("stateKey"),
-      timeExpr.as("eventTime"),
-      col(labelCol).cast("double").as("label"),
-      col(featuresCol).cast("array<double>").as("features"),
-      initialStateDistributionCol.map(c => col(c).getField("mean").cast("array<double>"))
-        .orElse(initialEstimateCol.map(c => col(c).cast("array<double>")))
-        .getOrElse(typedLit(initialEstimate)).as("initialMean"),
-      initialStateDistributionCol.map(c => col(c).getField("covariance"))
-        .orElse(regularizationMatrixCol.map(col))
-        .getOrElse(typedLit(regularizationMatrix)).as("initialCovariance")
-    ).as[RlsIn]
-    var res = StatefulStage.batch(in, new RlsSpec(forgettingFactor, featuresSize),
+    val res = StatefulStage.batch(encoderInput(df), spec,
       StageConf(timeoutMode, timeoutDuration, watermarkDuration)).toDF()
-    stateKeyCol.foreach(c => res = res.withColumnRenamed("stateKey", c))
-    eventTimeCol match {
-      case Some(c) => res = res.withColumnRenamed("eventTime", c)
-      case None => res = res.drop("eventTime")
-    }
-    res
+    StatefulStage.userColumns(res, stateKeyCol, eventTimeCol)
   }
 }
 
@@ -261,20 +243,29 @@ class LeastMeanSquaresFilter(val featuresSize: Int) {
   def setAssumeUniqueEventTimes(): this.type = { assumeUniqueEventTimes = true; this }
   private var assumeUniqueEventTimes: Boolean = false
 
+  private def keyExpr = stateKeyCol.map(c => col(c).cast("string")).getOrElse(lit("lms.default"))
+  private def timeExpr = eventTimeCol.map(c => col(c).cast("timestamp")).getOrElse(lit(null).cast("timestamp"))
+
+  /** Input of the encoder engine: the streaming path and the batch reference. */
+  private def encoderInput(df: DataFrame): Dataset[LmsIn] = {
+    val spark = df.sparkSession
+    import spark.implicits._
+    df.select(
+      keyExpr.as("stateKey"),
+      timeExpr.as("eventTime"),
+      col(labelCol).cast("double").as("label"),
+      col(featuresCol).cast("array<double>").as("features"),
+      initialEstimateCol.map(c => col(c).cast("array<double>")).getOrElse(typedLit(initialEstimate)).as("initialMean")
+    ).as[LmsIn]
+  }
+
+  private def spec = new LmsSpec(learningRate, regularization)
+
   def transform(df: DataFrame): DataFrame = {
     val spark = df.sparkSession
     import spark.implicits._
-    val keyExpr = stateKeyCol.map(c => col(c).cast("string")).getOrElse(lit("lms.default"))
-    val timeExpr = eventTimeCol.map(c => col(c).cast("timestamp")).getOrElse(lit(null).cast("timestamp"))
     val out = if (df.isStreaming) {
-      val in = df.select(
-        keyExpr.as("stateKey"),
-        timeExpr.as("eventTime"),
-        col(labelCol).cast("double").as("label"),
-        col(featuresCol).cast("array<double>").as("features"),
-        initialEstimateCol.map(c => col(c).cast("array<double>")).getOrElse(typedLit(initialEstimate)).as("initialMean")
-      ).as[LmsIn]
-      StatefulStage.run(in, new LmsSpec(learningRate, regularization),
+      StatefulStage.run(encoderInput(df), spec,
         StageConf(timeoutMode, timeoutDuration, watermarkDuration)).toDF()
     } else {
       val cols = scala.collection.mutable.ArrayBuffer(
@@ -286,38 +277,18 @@ class LeastMeanSquaresFilter(val featuresSize: Int) {
       val kernel = new LmsRowKernel(learningRate, regularization,
         initialEstimate, hasIM = initialEstimateCol.isDefined)
       StatefulStage.batchRows(df.select(cols.toSeq: _*), LmsRowKernel.outputSchema,
-        assumeUnique = assumeUniqueEventTimes)(kernel.run)
+        assumeUnique = assumeUniqueEventTimes, kernel)
     }
-    var res = out
-    stateKeyCol.foreach(c => res = res.withColumnRenamed("stateKey", c))
-    eventTimeCol match {
-      case Some(c) => res = res.withColumnRenamed("eventTime", c)
-      case None => res = res.drop("eventTime")
-    }
-    res
+    StatefulStage.userColumns(out, stateKeyCol, eventTimeCol)
   }
 
   /** Encoder-path batch execution kept as the pin-spec reference. */
   private[graft] def transformEncoderBatch(df: DataFrame): DataFrame = {
     val spark = df.sparkSession
     import spark.implicits._
-    val keyExpr = stateKeyCol.map(c => col(c).cast("string")).getOrElse(lit("lms.default"))
-    val timeExpr = eventTimeCol.map(c => col(c).cast("timestamp")).getOrElse(lit(null).cast("timestamp"))
-    val in = df.select(
-      keyExpr.as("stateKey"),
-      timeExpr.as("eventTime"),
-      col(labelCol).cast("double").as("label"),
-      col(featuresCol).cast("array<double>").as("features"),
-      initialEstimateCol.map(c => col(c).cast("array<double>")).getOrElse(typedLit(initialEstimate)).as("initialMean")
-    ).as[LmsIn]
-    var res = StatefulStage.batch(in, new LmsSpec(learningRate, regularization),
+    val res = StatefulStage.batch(encoderInput(df), spec,
       StageConf(timeoutMode, timeoutDuration, watermarkDuration)).toDF()
-    stateKeyCol.foreach(c => res = res.withColumnRenamed("stateKey", c))
-    eventTimeCol match {
-      case Some(c) => res = res.withColumnRenamed("eventTime", c)
-      case None => res = res.drop("eventTime")
-    }
-    res
+    StatefulStage.userColumns(res, stateKeyCol, eventTimeCol)
   }
 }
 

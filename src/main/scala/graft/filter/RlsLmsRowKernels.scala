@@ -4,9 +4,9 @@ import org.apache.spark.sql.Encoders
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{GenericInternalRow, UnsafeArrayData}
 import org.apache.spark.sql.types.StructType
-import org.apache.spark.unsafe.types.UTF8String
 
 import graft.linalg.{DMat, Dense}
+import graft.state.{FoldKernel, KeyRun}
 
 /**
  * InternalRow-level batch executors for RLS and LMS — same pattern as
@@ -22,14 +22,13 @@ import graft.linalg.{DMat, Dense}
 final class RlsRowKernel(
     lambda: Double, n: Int,
     constMean: Array[Double], constCov: DMat,
-    hasIM: Boolean, hasIC: Boolean) extends Serializable {
+    hasIM: Boolean, hasIC: Boolean) extends FoldKernel {
 
   private def readMatValues(row: InternalRow, i: Int): Array[Double] =
     row.getStruct(i, 3).getArray(2).toDoubleArray
 
   def run(rows: Iterator[InternalRow]): Iterator[InternalRow] = new Iterator[InternalRow] {
-    private var haveKey = false
-    private var curKey: UTF8String = null
+    private val keys = new KeyRun
     private var stateIndex = 0L
     private var mean: Array[Double] = null
     private var cov: Array[Double] = null
@@ -38,12 +37,7 @@ final class RlsRowKernel(
 
     def next(): InternalRow = {
       val row = rows.next()
-      val keyView = if (row.isNullAt(0)) null else row.getUTF8String(0)
-      val sameKey = haveKey &&
-        (if (curKey == null) keyView == null else keyView != null && curKey.equals(keyView))
-      if (!sameKey) {
-        curKey = if (keyView == null) null else keyView.copy()
-        haveKey = true
+      if (keys.starts(row)) {
         stateIndex = 0L
         mean = if (hasIM && !row.isNullAt(4)) row.getArray(4).toDoubleArray else constMean
         cov = if (hasIC && !row.isNullAt(5)) readMatValues(row, 5) else constCov.values
@@ -70,7 +64,7 @@ final class RlsRowKernel(
       stateIndex += 1
       mean = mean2; cov = covScaled
       new GenericInternalRow(Array[Any](
-        curKey, stateIndex,
+        keys.key, stateIndex,
         if (row.isNullAt(1)) null else Long.box(row.getLong(1)),
         UnsafeArrayData.fromPrimitiveArray(mean2),
         new GenericInternalRow(Array[Any](n, n, UnsafeArrayData.fromPrimitiveArray(covScaled)))))
@@ -84,11 +78,10 @@ object RlsRowKernel {
 
 final class LmsRowKernel(
     mu: Double, eps: Double,
-    constMean: Array[Double], hasIM: Boolean) extends Serializable {
+    constMean: Array[Double], hasIM: Boolean) extends FoldKernel {
 
   def run(rows: Iterator[InternalRow]): Iterator[InternalRow] = new Iterator[InternalRow] {
-    private var haveKey = false
-    private var curKey: UTF8String = null
+    private val keys = new KeyRun
     private var stateIndex = 0L
     private var mean: Array[Double] = null
 
@@ -96,12 +89,7 @@ final class LmsRowKernel(
 
     def next(): InternalRow = {
       val row = rows.next()
-      val keyView = if (row.isNullAt(0)) null else row.getUTF8String(0)
-      val sameKey = haveKey &&
-        (if (curKey == null) keyView == null else keyView != null && curKey.equals(keyView))
-      if (!sameKey) {
-        curKey = if (keyView == null) null else keyView.copy()
-        haveKey = true
+      if (keys.starts(row)) {
         stateIndex = 0L
         mean = if (hasIM && !row.isNullAt(4)) row.getArray(4).toDoubleArray else constMean
       }
@@ -115,7 +103,7 @@ final class LmsRowKernel(
       stateIndex += 1
       mean = mean2
       new GenericInternalRow(Array[Any](
-        curKey, stateIndex,
+        keys.key, stateIndex,
         if (row.isNullAt(1)) null else Long.box(row.getLong(1)),
         UnsafeArrayData.fromPrimitiveArray(mean2)))
     }

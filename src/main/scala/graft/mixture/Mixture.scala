@@ -352,15 +352,9 @@ abstract class MixtureBase[Impl <: MixtureBase[Impl]](val mixtureCount: Int) { s
       // without the per-row Dataset-encoder round trip
       val kernel = new MixtureRowKernel(family, mixtureCount, initialWeights, initialParams)
       StatefulStage.batchRows(mixProjection(df), MixtureRowKernel.outputSchema,
-        assumeUnique = false)(kernel.run)
+        assumeUnique = false, kernel)
     })
-    var res = out
-    stateKeyCol.foreach(c => res = res.withColumnRenamed("stateKey", c))
-    eventTimeCol match {
-      case Some(c) => res = res.withColumnRenamed("eventTime", c)
-      case None => res = res.drop("eventTime")
-    }
-    res
+    StatefulStage.userColumns(out, stateKeyCol, eventTimeCol)
   }
 
   /** Encoder-path batch execution kept as the pin-spec reference. */
@@ -368,15 +362,10 @@ abstract class MixtureBase[Impl <: MixtureBase[Impl]](val mixtureCount: Int) { s
     val spark = df.sparkSession
     import spark.implicits._
     require(!batchTrainEnabled && !df.isStreaming)
-    var res = StatefulStage.batch(mixProjection(df).as[MixIn],
+    val res = StatefulStage.batch(mixProjection(df).as[MixIn],
       new MixtureSpec(family, mixtureCount, initialWeights, initialParams),
       StageConf(timeoutMode, timeoutDuration, watermarkDuration)).toDF()
-    stateKeyCol.foreach(c => res = res.withColumnRenamed("stateKey", c))
-    eventTimeCol match {
-      case Some(c) => res = res.withColumnRenamed("eventTime", c)
-      case None => res = res.drop("eventTime")
-    }
-    res
+    StatefulStage.userColumns(res, stateKeyCol, eventTimeCol)
   }
 }
 

@@ -5,7 +5,8 @@ import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{GenericInternalRow, UnsafeArrayData}
 import org.apache.spark.sql.catalyst.util.GenericArrayData
 import org.apache.spark.sql.types.StructType
-import org.apache.spark.unsafe.types.UTF8String
+
+import graft.state.{FoldKernel, KeyRun}
 
 /**
  * InternalRow-level batch executor for the online (stochastic-EM) mixture
@@ -25,12 +26,11 @@ final class MixtureRowKernel(
     family: MixtureFamily,
     k: Int,
     initWeights: Array[Double],
-    initParams: Array[Array[Double]]) extends Serializable {
+    initParams: Array[Array[Double]]) extends FoldKernel {
 
   def run(rows: Iterator[InternalRow]): Iterator[InternalRow] = new Iterator[InternalRow] {
     // per-key fold state (mirrors MixState)
-    private var haveKey = false
-    private var curKey: UTF8String = null
+    private val keys = new KeyRun
     private var stateIndex = 0L
     private var buffer: List[Array[Double]] = Nil
     private var summaryWeights: Array[Double] = null
@@ -58,12 +58,7 @@ final class MixtureRowKernel(
 
     /** Returns the emitted row, or null when this input row only buffers. */
     private def process(row: InternalRow): InternalRow = {
-      val keyView = if (row.isNullAt(0)) null else row.getUTF8String(0)
-      val sameKey = haveKey &&
-        (if (curKey == null) keyView == null else keyView != null && curKey.equals(keyView))
-      if (!sameKey) {
-        curKey = if (keyView == null) null else keyView.copy()
-        haveKey = true
+      if (keys.starts(row)) {
         // ---- MixtureSpec.initState, verbatim ----
         val w0 = if (!row.isNullAt(7)) row.getArray(7).toDoubleArray else initWeights
         val p0 = if (!row.isNullAt(8)) readParams(row, 8) else initParams
@@ -129,7 +124,7 @@ final class MixtureRowKernel(
         loglikelihood = llSum / b
         // ---- MixtureSpec.output (buffer empty -> one row) ----
         new GenericInternalRow(Array[Any](
-          curKey, stateIndex,
+          keys.key, stateIndex,
           if (row.isNullAt(1)) null else Long.box(row.getLong(1)),
           UnsafeArrayData.fromPrimitiveArray(weights),
           new GenericArrayData(

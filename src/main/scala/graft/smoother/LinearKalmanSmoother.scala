@@ -151,21 +151,15 @@ class LinearKalmanSmoother(stateSize: Int, measurementSize: Int)
     val fwd: Dataset[FiltRecord] =
       graft.state.StatefulStage.run(toKalmanInput(df), fwdSpec)
     val lagged = graft.state.StatefulStage.run(fwd, new FixedLagSpec(lag, stateSize))
-    var out = lagged.toDF()
-    stateKeyCol.foreach(c => out = out.withColumnRenamed("stateKey", c))
-    eventTimeCol match {
-      case Some(c) => out = out.withColumnRenamed("eventTime", c)
-      case None => out = out.drop("eventTime")
-    }
-    out
+    StatefulStage.userColumns(lagged.toDF(), stateKeyCol, eventTimeCol)
   }
 
-  /** Full-pass RTS at InternalRow level: forward kernel (one exchange on
-    * stateKey + sort), then the backward kernel over a LOCAL re-sort of the
-    * same partitions — the forward output is already key-partitioned
-    * physically, so the second exchange of the encoder path is gone
-    * (2 Exchange → 1). Bit-exact vs [[smoothEncoderBatch]]
-    * (KalmanKernelPinSpec). */
+  /** Full-pass RTS at InternalRow level: the forward fold (one exchange on
+    * stateKey + sort), then the backward fold over its output ordered
+    * (stateKey, stateIndex desc). The forward fold's output keeps its key
+    * partitioning, so the planner adds only a local sort for the backward
+    * pass: one exchange where the encoder path has two. Bit-exact vs
+    * [[smoothEncoderBatch]] (KalmanKernelPinSpec). */
   def smooth(df: DataFrame): DataFrame = {
     val compute = new LinearKalmanCompute(stateSize, measurementSize, 1.0)
     val fwdKernel = new RtsForwardRowKernel(compute, defaults,
@@ -178,18 +172,10 @@ class LinearKalmanSmoother(stateSize: Int, measurementSize: Int)
       hasIM = initialStateDistributionCol.isDefined || initialStateMeanCol.isDefined,
       hasIC = initialStateDistributionCol.isDefined || initialStateCovarianceCol.isDefined)
     val fwdDF = StatefulStage.batchRows(kalmanProjection(df),
-      RtsForwardRowKernel.outputSchema, assumeUnique = assumeUniqueEventTimes)(fwdKernel.run)
-    val bwdKernel = new RtsBackwardRowKernel(stateSize)
-    val smoothed = StatefulStage.mapSortedPartitions(fwdDF,
-      Seq(col("stateKey"), col("stateIndex").desc),
-      RtsBackwardRowKernel.outputSchema)(bwdKernel.run)
-    var out = smoothed
-    stateKeyCol.foreach(c => out = out.withColumnRenamed("stateKey", c))
-    eventTimeCol match {
-      case Some(c) => out = out.withColumnRenamed("eventTime", c)
-      case None => out = out.drop("eventTime")
-    }
-    out
+      RtsForwardRowKernel.outputSchema, assumeUnique = assumeUniqueEventTimes, fwdKernel)
+    val smoothed = StatefulStage.fold(fwdDF, Seq(col("stateKey"), col("stateIndex").desc),
+      RtsBackwardRowKernel.outputSchema, new RtsBackwardRowKernel(stateSize))
+    StatefulStage.userColumns(smoothed, stateKeyCol, eventTimeCol)
   }
 
   /** Encoder-path RTS kept as the pin-spec reference (pre-kernel plan:
@@ -232,13 +218,7 @@ class LinearKalmanSmoother(stateSize: Int, measurementSize: Int)
         }
       }
 
-    var out = smoothed.toDF()
-    stateKeyCol.foreach(c => out = out.withColumnRenamed("stateKey", c))
-    eventTimeCol match {
-      case Some(c) => out = out.withColumnRenamed("eventTime", c)
-      case None => out = out.drop("eventTime")
-    }
-    out
+    StatefulStage.userColumns(smoothed.toDF(), stateKeyCol, eventTimeCol)
   }
 
   /** Smoothing replaces filtering as this transformer's output: full-pass

@@ -4,17 +4,17 @@ import org.apache.spark.sql.Encoders
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{GenericInternalRow, UnsafeArrayData}
 import org.apache.spark.sql.types.StructType
-import org.apache.spark.unsafe.types.UTF8String
 
-import graft.filter.{KalmanDefaults, KalmanIn, LinearKalmanCompute}
-import graft.linalg.{DMat, Dense}
+import graft.filter.{KalmanDefaults, KalmanRowInput, LinearKalmanCompute}
+import graft.linalg.Dense
+import graft.state.{FoldKernel, KeyRun}
 
 /**
  * InternalRow-level RTS passes (same pattern as
  * [[graft.filter.KalmanRowKernel]]): the forward kernel replicates
  * ForwardSpec's op order over the canonical 11-column Kalman projection and
  * emits FiltRecord rows; the backward kernel replicates the smoothing
- * recursion of LinearKalmanSmoother.smooth's mapPartitions over
+ * recursion of LinearKalmanSmoother.smoothEncoderBatch's mapPartitions over
  * (stateKey asc, stateIndex desc)-sorted FiltRecord rows. Bit-exactness vs
  * the encoder path is pinned by KalmanKernelPinSpec.
  */
@@ -23,22 +23,13 @@ final class RtsForwardRowKernel(
     defaults: KalmanDefaults,
     hasMM: Boolean, hasMN: Boolean, hasPM: Boolean, hasPN: Boolean,
     hasCtl: Boolean, hasCtlFn: Boolean, hasIM: Boolean, hasIC: Boolean)
-  extends Serializable {
+  extends FoldKernel {
 
-  private val s = compute.stateSize
-  private val defMM = Some(defaults.measurementModel)
-  private val defMN = Some(defaults.measurementNoise)
-  private val defPM = Some(defaults.processModel)
-  private val defPN = Some(defaults.processNoise)
-
-  private def readMat(row: InternalRow, i: Int): DMat = {
-    val st = row.getStruct(i, 3)
-    DMat(st.getInt(0), st.getInt(1), st.getArray(2).toDoubleArray)
-  }
+  private val input = new KalmanRowInput(defaults, hasMM, hasMN, hasPM, hasPN,
+    hasCtl, hasCtlFn, hasIM, hasIC)
 
   def run(rows: Iterator[InternalRow]): Iterator[InternalRow] = new Iterator[InternalRow] {
-    private var haveKey = false
-    private var curKey: UTF8String = null
+    private val keys = new KeyRun
     private var stateIndex = 0L
     private var mean: Array[Double] = null
     private var cov: Array[Double] = null
@@ -47,30 +38,13 @@ final class RtsForwardRowKernel(
 
     def next(): InternalRow = {
       val row = rows.next()
-      val keyView = if (row.isNullAt(0)) null else row.getUTF8String(0)
-      val sameKey = haveKey &&
-        (if (curKey == null) keyView == null else keyView != null && curKey.equals(keyView))
-      if (!sameKey) {
-        curKey = if (keyView == null) null else keyView.copy()
-        haveKey = true
+      if (keys.starts(row)) {
         stateIndex = 0L
-        mean = if (hasIM && !row.isNullAt(9)) row.getArray(9).toDoubleArray
-               else defaults.initialMean
-        cov = if (hasIC && !row.isNullAt(10)) readMat(row, 10).values
-              else defaults.initialCovariance.values
+        mean = input.initialMean(row)
+        cov = input.initialCovariance(row)
       }
       val measNull = row.isNullAt(2)
-      val measOpt: Option[Array[Double]] =
-        if (measNull) None else Some(row.getArray(2).toDoubleArray)
-      val mmOpt = if (hasMM && !row.isNullAt(3)) Some(readMat(row, 3)) else defMM
-      val mnOpt = if (hasMN && !row.isNullAt(4)) Some(readMat(row, 4)) else defMN
-      val pmOpt = if (hasPM && !row.isNullAt(5)) Some(readMat(row, 5)) else defPM
-      val pnOpt = if (hasPN && !row.isNullAt(6)) Some(readMat(row, 6)) else defPN
-      val ctlOpt: Option[Array[Double]] =
-        if (hasCtl && !row.isNullAt(7)) Some(row.getArray(7).toDoubleArray) else None
-      val ctlFnOpt = if (hasCtlFn && !row.isNullAt(8)) Some(readMat(row, 8)) else None
-      val in = KalmanIn(null, None, measOpt, mmOpt, mnOpt, pmOpt, pnOpt,
-        ctlOpt, ctlFnOpt, None, None)
+      val in = input.resolve(row)
       // ---- ForwardSpec.update, verbatim op order ----
       val (pm0, pc0) = compute.predict(mean, cov, in)
       var em = pm0
@@ -81,9 +55,9 @@ final class RtsForwardRowKernel(
       }
       stateIndex += 1
       mean = em; cov = ec
-      val pmMat = pmOpt.get
+      val pmMat = in.processModel.get
       new GenericInternalRow(Array[Any](
-        curKey, stateIndex,
+        keys.key, stateIndex,
         if (row.isNullAt(1)) null else Long.box(row.getLong(1)),
         UnsafeArrayData.fromPrimitiveArray(em),
         UnsafeArrayData.fromPrimitiveArray(ec),
@@ -100,12 +74,11 @@ object RtsForwardRowKernel {
 }
 
 /** Backward recursion over FiltRecord rows sorted (stateKey, stateIndex desc)
-  * within the forward pass's partitions (no second exchange). */
-final class RtsBackwardRowKernel(s: Int) extends Serializable {
+  * within the forward fold's partitions (no second exchange). */
+final class RtsBackwardRowKernel(s: Int) extends FoldKernel {
 
   def run(rows: Iterator[InternalRow]): Iterator[InternalRow] = new Iterator[InternalRow] {
-    private var haveKey = false
-    private var curKey: UTF8String = null
+    private val keys = new KeyRun
     private var sm: Array[Double] = null      // smoothed mean of k+1
     private var sc: Array[Double] = null      // smoothed cov of k+1
     private var nextPredMean: Array[Double] = null
@@ -116,14 +89,9 @@ final class RtsBackwardRowKernel(s: Int) extends Serializable {
 
     def next(): InternalRow = {
       val row = rows.next()
-      val keyView = if (row.isNullAt(0)) null else row.getUTF8String(0)
-      val sameKey = haveKey &&
-        (if (curKey == null) keyView == null else keyView != null && curKey.equals(keyView))
       val filtMean = row.getArray(3).toDoubleArray
       val filtCov = row.getArray(4).toDoubleArray
-      if (!sameKey) {
-        curKey = if (keyView == null) null else keyView.copy()
-        haveKey = true
+      if (keys.starts(row)) {
         sm = filtMean; sc = filtCov
       } else {
         // ---- smooth()'s backward step, verbatim op order ----
@@ -143,7 +111,7 @@ final class RtsBackwardRowKernel(s: Int) extends Serializable {
       nextPredCov = row.getArray(6).toDoubleArray
       nextPMvals = row.getStruct(7, 3).getArray(2).toDoubleArray
       new GenericInternalRow(Array[Any](
-        curKey, row.getLong(1),
+        keys.key, row.getLong(1),
         if (row.isNullAt(2)) null else Long.box(row.getLong(2)),
         UnsafeArrayData.fromPrimitiveArray(sm),
         new GenericInternalRow(Array[Any](s, s, UnsafeArrayData.fromPrimitiveArray(sc)))))

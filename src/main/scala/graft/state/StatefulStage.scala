@@ -2,9 +2,13 @@ package graft.state
 
 import java.sql.Timestamp
 
-import org.apache.spark.sql.{DataFrame, Dataset, Encoder}
-import org.apache.spark.sql.functions.col
+import org.apache.spark.sql.{Column, DataFrame, Dataset, Encoder}
+import org.apache.spark.sql.catalyst.expressions.AttributeReference
+import org.apache.spark.sql.catalyst.plans.logical.Sort
+import org.apache.spark.sql.functions.{col, xxhash64}
+import org.apache.spark.sql.graftbridge.Bridge
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
+import org.apache.spark.sql.types.StructType
 
 /** Input rows to a stateful stage carry a grouping key and optional event time. */
 trait KeyedIn extends Serializable {
@@ -55,7 +59,9 @@ final case class StageConf(
  *   sort, so a key with billions of rows never has to fit in memory —
  *   unlike `groupByKey.flatMapGroups`, which materializes each group.
  *   This is the 100 TB path: hash-partition by key across executors,
- *   sequential O(rows) compute per partition.
+ *   sequential O(rows) compute per partition. [[batch]] is the encoder
+ *   reference; transforms run [[batchRows]], the same contract as a
+ *   [[StatefulFold]] plan node folding InternalRows.
  *
  * - **Streaming**: `groupByKey.flatMapGroupsWithState` in Append mode with
  *   optional watermark + state timeout (none / processing-time / event-time),
@@ -125,21 +131,12 @@ object StatefulStage {
   }
 
   /**
-   * InternalRow-level batch path: same partitioning/ordering contract as
-   * [[batch]] (one exchange on stateKey + external sort, deterministic
-   * tiebreak hash unless the caller declares (key, time) unique), but the
-   * per-partition fold runs directly on Tungsten rows — no Dataset-encoder
-   * round trip per row. The caller supplies the canonical input projection
-   * as a DataFrame whose first two columns are (stateKey, eventTime) and a
-   * kernel that folds one sorted partition of InternalRows; kernels must
-   * replicate the matching StateSpec's floating-point operation order
-   * bit-for-bit (pinned by the *KernelPinSpec suites).
-   *
-   * The inner plan is built with AQE off so that `toRdd` stays lazy (an
-   * AdaptiveSparkPlanExec would eagerly run its shuffle stages at plan
-   * time); the exchange therefore fans out to exactly
-   * spark.sql.shuffle.partitions — the same scale-configured knob the AQE
-   * path bottoms out at under parallelismFirst coalescing.
+   * InternalRow-level batch path: [[batch]]'s partitioning and ordering
+   * contract (tiebreak hash unless (key, time) is declared unique) as a
+   * [[StatefulFold]] node, folding Tungsten rows with no per-row encoder
+   * round trip. `in` is the canonical input projection, starting with
+   * (stateKey, eventTime); kernels replicate their StateSpec's floating-point
+   * operation order bit for bit (pinned by the *KernelPinSpec suites).
    *
    * Tiebreak note: __rowSeq is xxhash64 over THIS projection's columns, so
    * a kernel projection that drops constant columns carried by the encoder
@@ -148,64 +145,32 @@ object StatefulStage {
    * Rows that tie on (key, time) and differ elsewhere have no defined fold
    * order in either path.
    */
-  def batchRows(in: DataFrame, outSchema: org.apache.spark.sql.types.StructType,
-      assumeUnique: Boolean)(
-      kernel: Iterator[org.apache.spark.sql.catalyst.InternalRow] =>
-        Iterator[org.apache.spark.sql.catalyst.InternalRow]): DataFrame = {
-    val ordered = orderedFrame(in, assumeUnique)
-    val session = in.sparkSession
-    val prevAqe = session.conf.get("spark.sql.adaptive.enabled", "true")
-    session.conf.set("spark.sql.adaptive.enabled", "false")
-    val rdd =
-      try ordered.queryExecution.toRdd.mapPartitions(kernel)
-      finally session.conf.set("spark.sql.adaptive.enabled", prevAqe)
-    org.apache.spark.sql.graftbridge.Bridge.internalDF(session, rdd, outSchema)
-  }
-
-  /** The exchange+sort the batch kernels fold over — identical contract to
-    * [[batch]]'s ordering. */
-  private def orderedFrame(in: DataFrame, assumeUnique: Boolean): DataFrame =
-    if (assumeUnique)
-      in.repartition(col("stateKey"))
-        .sortWithinPartitions(col("stateKey"), col("eventTime"))
+  def batchRows(in: DataFrame, outSchema: StructType, assumeUnique: Boolean,
+      kernel: FoldKernel): DataFrame =
+    if (assumeUnique) fold(in, Seq(col("stateKey"), col("eventTime")), outSchema, kernel)
     else
-      in.withColumn("__rowSeq",
-          org.apache.spark.sql.functions.xxhash64(in.columns.map(col): _*))
-        .repartition(col("stateKey"))
-        .sortWithinPartitions(col("stateKey"), col("eventTime"), col("__rowSeq"))
-        .drop("__rowSeq")
+      fold(in.withColumn("__rowSeq", xxhash64(in.columns.map(col): _*)),
+        Seq(col("stateKey"), col("eventTime"), col("__rowSeq")), outSchema, kernel)
 
-  /** Executed plan of the inner ordered frame — plan-pin test support: the
-    * kernel consumes this frame behind an RDD boundary, so the outer
-    * query's explain only shows `Scan ExistingRDD`. */
-  private[graft] def batchInnerPlan(in: DataFrame, assumeUnique: Boolean): String = {
+  /** Folds `in` with `kernel`, clustered on stateKey (the first column of
+    * `in` and `outSchema`) and sorted by `order` within each partition. */
+  def fold(in: DataFrame, order: Seq[Column], outSchema: StructType,
+      kernel: FoldKernel): DataFrame = {
     val session = in.sparkSession
-    val prevAqe = session.conf.get("spark.sql.adaptive.enabled", "true")
-    session.conf.set("spark.sql.adaptive.enabled", "false")
-    try orderedFrame(in, assumeUnique).queryExecution.executedPlan.toString
-    finally session.conf.set("spark.sql.adaptive.enabled", prevAqe)
+    StatefulFoldStrategy.register(session)
+    val sorted = in.sortWithinPartitions(order: _*).queryExecution.analyzed.asInstanceOf[Sort]
+    val key = sorted.child.output.head
+    require(key.name == "stateKey" && outSchema.head.dataType == key.dataType,
+      s"fold input and output must start with stateKey: ${key.name} / ${outSchema.head}")
+    val output = key +: outSchema.tail.map(f => AttributeReference(f.name, f.dataType, f.nullable)())
+    Bridge.dataFrame(session, StatefulFold(kernel, sorted.order, output, sorted.child))
   }
 
-  /**
-   * Second-stage InternalRow fold over an ALREADY key-partitioned frame
-   * (e.g. the output of [[batchRows]]): local re-sort only, NO exchange —
-   * mapPartitions preserves physical partition assignment, so every key's
-   * rows are still co-located even though the planner can no longer prove
-   * it. Used by the RTS backward pass (was a second full shuffle of the
-   * forward output).
-   */
-  def mapSortedPartitions(in: DataFrame, sortCols: Seq[org.apache.spark.sql.Column],
-      outSchema: org.apache.spark.sql.types.StructType)(
-      kernel: Iterator[org.apache.spark.sql.catalyst.InternalRow] =>
-        Iterator[org.apache.spark.sql.catalyst.InternalRow]): DataFrame = {
-    val ordered = in.sortWithinPartitions(sortCols: _*)
-    val session = in.sparkSession
-    val prevAqe = session.conf.get("spark.sql.adaptive.enabled", "true")
-    session.conf.set("spark.sql.adaptive.enabled", "false")
-    val rdd =
-      try ordered.queryExecution.toRdd.mapPartitions(kernel)
-      finally session.conf.set("spark.sql.adaptive.enabled", prevAqe)
-    org.apache.spark.sql.graftbridge.Bridge.internalDF(session, rdd, outSchema)
+  /** Renames the engine's stateKey/eventTime columns to the caller's input
+    * column names; without an event-time column, eventTime is dropped. */
+  def userColumns(df: DataFrame, keyCol: Option[String], timeCol: Option[String]): DataFrame = {
+    val keyed = keyCol.fold(df)(df.withColumnRenamed("stateKey", _))
+    timeCol.fold(keyed.drop("eventTime"))(keyed.withColumnRenamed("eventTime", _))
   }
 
   def stream[I <: KeyedIn, S, O](ds: Dataset[I], spec: StateSpec[I, S, O], conf: StageConf)(

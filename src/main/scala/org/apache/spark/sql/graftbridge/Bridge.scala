@@ -1,11 +1,9 @@
 package org.apache.spark.sql.graftbridge
 
-import org.apache.spark.rdd.RDD
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
-import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.{classic, Column, DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.expressions.Expression
+import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
 import org.apache.spark.sql.classic.ExpressionUtils
-import org.apache.spark.sql.types.StructType
 
 /** Column <-> catalyst Expression bridge. ExpressionUtils is private[sql] in
   * Spark 4, so this one-liner lives inside the org.apache.spark.sql namespace
@@ -15,10 +13,8 @@ object Bridge {
   def column(e: Expression): Column = ExpressionUtils.column(e)
   def expression(c: Column): Expression = ExpressionUtils.expression(c)
 
-  /** RDD[InternalRow] -> DataFrame without an encoder round trip
-    * (classic.SparkSession.internalCreateDataFrame is private[sql]; used by
-    * the InternalRow-level stateful-stage batch kernels). */
-  def internalDF(spark: SparkSession, rdd: RDD[InternalRow], schema: StructType): DataFrame =
-    spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
-      .internalCreateDataFrame(rdd, schema, isStreaming = false)
+  /** The DataFrame of a logical plan (classic.Dataset.ofRows is
+    * private[sql]; used to wrap graft's own plan nodes). */
+  def dataFrame(spark: SparkSession, plan: LogicalPlan): DataFrame =
+    classic.Dataset.ofRows(spark.asInstanceOf[classic.SparkSession], plan)
 }

@@ -54,25 +54,15 @@ class PlanQualitySpec extends AnyFunSuite with SparkTestSession {
   }
 
   test("stateful filter plan has exactly one exchange before the stateful map") {
-    // Round 14: the stateful fold runs at InternalRow level behind an RDD
-    // boundary, so the outer plan shows the kernel output as Scan
-    // ExistingRDD feeding the aggregation directly — no re-shuffle of the
-    // filter output before the agg's own exchange.
+    // The fold is a plan node: with AQE on, the outer plan shows it fed by
+    // ONE hashpartitioning exchange on stateKey + external sort (q_lkf_llt
+    // declares unique (key, time), so no tiebreak hash column), and no RDD
+    // boundary hides it.
     val p = plan("q_lkf_llt")
-    assert(p.contains("Scan ExistingRDD"), p.take(3000))
-    // the inner plan keeps the contract: ONE hashpartitioning exchange on
-    // stateKey + external sort (q_lkf_llt declares unique (key, time), so
-    // no tiebreak hash column)
-    import org.apache.spark.sql.functions._
-    val ev = graft.Tables.events(spark, dir)
-      .groupBy(col("user_id"), col("ts")).agg(avg(col("value")).as("z"))
-      .withColumn("meas", array(col("z")))
-    val lkf = new graft.filter.LinearKalmanFilter(1, 1)
-      .setStateKeyCol("user_id").setEventTimeCol("ts").setMeasurementCol("meas")
-      .setAssumeUniqueEventTimes()
-    val inner = lkf.batchInnerPlan(ev)
-    assert(inner.contains("hashpartitioning(stateKey"), inner.take(3000))
-    assert("Exchange hashpartitioning\\(stateKey".r.findAllIn(inner).size == 1, inner.take(3000))
+    assert(p.contains("AdaptiveSparkPlan"), p.take(3000))
+    assert(p.contains("StatefulFold") && !p.contains("Scan ExistingRDD"), p.take(3000))
+    assert("Exchange hashpartitioning\\(stateKey".r.findAllIn(p).size == 1, p.take(3000))
+    assert(!p.contains("__rowSeq"), p.take(3000))
   }
 
   test("LSH bucketing is a map-side projection (bucket computed before the join shuffle)") {

@@ -217,4 +217,46 @@ class FilterSpec extends AnyFunSuite with SparkTestSession {
       assert(math.abs(bm - sm) < 1e-12)
     }
   }
+
+  test("per-row matrix structs resolve by field name, and a null struct falls back to the default") {
+    import spark.implicits._
+    val rnd = new scala.util.Random(17)
+    val rows = for (k <- Seq("a", "b"); i <- 0 until 30)
+      yield (k, ts(i), Array(rnd.nextDouble() * 4), rnd.nextDouble() * 2, i)
+    val df = rows.toDF("key", "t", "meas", "x", "i")
+    val values = array(lit(1.0), col("x")).as("values")
+    // every 5th row has no per-row H and takes the filter's constant model
+    def perRow(h: org.apache.spark.sql.Column) = when(col("i") % 5 =!= 0, h)
+    val canonical = df.withColumn("h", perRow(struct(lit(1).as("numRows"), lit(2).as("numCols"), values)))
+    val reordered = df.withColumn("h", perRow(struct(lit(2).as("numCols"), lit(1).as("numRows"), values)))
+    def run(in: DataFrame) = new LinearKalmanFilter(2, 1)
+      .setStateKeyCol("key").setEventTimeCol("t").setMeasurementCol("meas")
+      .setMeasurementModelCol("h").setMeasurementModel(DMat.of(1, 2, 1.0, 0.0))
+      .setInitialStateCovariance(DMat.of(2, 2, 10.0, 0.0, 0.0, 10.0))
+      .setProcessNoise(DMat.of(2, 2, 0.01, 0.0, 0.0, 0.01))
+      .setMeasurementNoise(DMat.of(1, 1, 1.0))
+      .setOutputSystemMatrices()
+      .transform(in)
+      .orderBy("key", "stateIndex")
+      .select(col("stateMean"), col("stateCovariance.values"),
+        col("measurementModel.numRows"), col("measurementModel.numCols"))
+      .as[(Seq[Double], Seq[Double], Int, Int)].collect().toSeq
+    // the filter's math reads H by the configured sizes; the echoed
+    // measurementModel shows the dimensions the struct resolved to
+    def raw(r: Seq[(Seq[Double], Seq[Double], Int, Int)]) =
+      r.map { case (m, c, rows, cols) => ((m ++ c).map(java.lang.Double.doubleToRawLongBits), rows, cols) }
+    val want = run(canonical)
+    assert(want.size == 60 && want.forall(r => r._3 == 1 && r._4 == 2))
+    assert(raw(run(reordered)) == raw(want))
+    // the null-H rows really took the constant model: a per-row H of
+    // (1, 0) everywhere gives the same estimates
+    val constH = df.withColumn("h", perRow(struct(lit(1).as("numRows"), lit(2).as("numCols"),
+      array(lit(1.0), lit(0.0)).as("values"))))
+    val noH = run(df.withColumn("h", lit(null).cast("struct<numRows:int,numCols:int,values:array<double>>")))
+    assert(raw(run(constH)) == raw(noH))
+    // a struct missing a field fails at analysis, not with swapped dims
+    intercept[org.apache.spark.sql.AnalysisException] {
+      run(df.withColumn("h", struct(lit(2).as("numCols"), values)))
+    }
+  }
 }

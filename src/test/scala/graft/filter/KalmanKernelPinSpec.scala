@@ -232,10 +232,14 @@ class KalmanKernelPinSpec extends AnyFunSuite with SparkTestSession {
     }
     assertBitIdentical(build().smooth(df), build().smoothEncoderBatch(df),
       Seq("key", "stateIndex"))
-    // plan shape: exactly one Exchange in the whole two-pass pipeline
+    // plan shape, AQE on: both passes are fold nodes, and the planner proves
+    // the backward pass co-located with the forward one — exactly one
+    // stateKey exchange across the two-pass pipeline
     val plan = build().smooth(df).queryExecution.executedPlan.toString
-    assert(!plan.contains("Exchange"),
-      "outer plan over the kernel RDD must not re-shuffle the smoothed rows")
+    assert(plan.contains("AdaptiveSparkPlan"), plan)
+    assert("StatefulFold".r.findAllIn(plan).size == 2, plan)
+    assert("Exchange hashpartitioning\\(stateKey".r.findAllIn(plan).size == 1, plan)
+    assert("Exchange ".r.findAllIn(plan).size == 1, plan)
   }
 
   test("assumeUniqueEventTimes kernel path == default path on unique (key,time) input") {

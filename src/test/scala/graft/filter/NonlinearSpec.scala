@@ -312,12 +312,11 @@ class NonlinearSpec extends AnyFunSuite with SparkTestSession {
     // deterministic tie order; with the caller-declared unique-(key,time)
     // invariant the hash column vanishes (8 bytes/row off the external
     // sort key) and results are bit-identical on tie-free data
-    // Round 14: the sort runs in the kernel's INNER plan (the outer explain
-    // only shows Scan ExistingRDD), so assert on batchInnerPlan
     val base = configure(new LinearKalmanFilter(1, 1))
     val slim = configure(new LinearKalmanFilter(1, 1)).setAssumeUniqueEventTimes()
-    assert(base.batchInnerPlan(lltData).contains("__rowSeq"))
-    val p = slim.batchInnerPlan(lltData)
+    def plan(f: LinearKalmanFilter) = f.transform(lltData).queryExecution.executedPlan.toString
+    assert(plan(base).contains("__rowSeq"))
+    val p = plan(slim)
     assert(!p.contains("__rowSeq") && !p.contains("xxhash64"), p.take(2000))
     assert(means(base.transform(lltData)) == means(slim.transform(lltData)))
   }
