@@ -40,7 +40,16 @@ case class KalmanDefaults(
     processModel: DMat,
     processNoise: DMat,
     initialMean: Array[Double],
-    initialCovariance: DMat) extends Serializable
+    initialCovariance: DMat) extends Serializable {
+
+  /** Fill constant system matrices into the row once per row (cheap object
+    * plumbing; nothing is serialized). */
+  def resolve(row: KalmanIn): KalmanIn = row.copy(
+    measurementModel = if (row.measurementModel.isDefined) row.measurementModel else Some(measurementModel),
+    measurementNoise = if (row.measurementNoise.isDefined) row.measurementNoise else Some(measurementNoise),
+    processModel = if (row.processModel.isDefined) row.processModel else Some(processModel),
+    processNoise = if (row.processNoise.isDefined) row.processNoise else Some(processNoise))
+}
 
 /** A user matrix struct rebuilt field by field, by name, into the canonical
   * (numRows int, numCols int, values array<double>) layout the kernels read
@@ -191,16 +200,8 @@ class KalmanSpec(
     emitSystemMatrices: Boolean = false)
   extends StateSpec[KalmanIn, KState, KalmanOut] {
 
-  /** Fill constant system matrices into the row once per row (cheap object
-    * plumbing; nothing is serialized). */
-  private def resolve(row: KalmanIn): KalmanIn = row.copy(
-    measurementModel = if (row.measurementModel.isDefined) row.measurementModel else Some(defaults.measurementModel),
-    measurementNoise = if (row.measurementNoise.isDefined) row.measurementNoise else Some(defaults.measurementNoise),
-    processModel = if (row.processModel.isDefined) row.processModel else Some(defaults.processModel),
-    processNoise = if (row.processNoise.isDefined) row.processNoise else Some(defaults.processNoise))
-
   def update(key: String, rawRow: KalmanIn, state: Option[KState]): Option[KState] = {
-    val resolved = resolve(rawRow)
+    val resolved = defaults.resolve(rawRow)
     val cur = state.getOrElse(
       KState(0L, rawRow.initialMean.getOrElse(defaults.initialMean),
         rawRow.initialCovariance.map(_.values).getOrElse(defaults.initialCovariance.values), None, None, Nil))
@@ -230,7 +231,7 @@ class KalmanSpec(
   }
 
   def output(key: String, rawRow: KalmanIn, state: KState): List[KalmanOut] = {
-    val row = resolve(rawRow)
+    val row = defaults.resolve(rawRow)
     val m = compute.measurementSize
     val base = toOut(key, row, state, 0)
     if (multiStepPredict <= 0) List(base)
@@ -252,11 +253,9 @@ class KalmanSpec(
 
   private def toOut(key: String, row: KalmanIn, s: KState, stepIndex: Int): KalmanOut = {
     val n = compute.stateSize
-    val ll = s.residualMean.flatMap { r =>
-      if (computeLoglikelihood)
-        Some(Distributions.mvnLogpdf(r, new Array[Double](r.length), s.residualCov.get.clone()))
-      else None
-    }
+    // a residual means `update` just folded a measurement and, with the
+    // loglikelihood on, appended its loglikelihood to slidingLL
+    val ll = if (computeLoglikelihood) s.residualMean.map(_ => s.slidingLL.last) else None
     val maha = s.residualMean.flatMap { r =>
       if (computeMahalanobis)
         Some(Distributions.mahalanobis(r, new Array[Double](r.length), s.residualCov.get))
@@ -418,10 +417,8 @@ abstract class KalmanFilterBase[Impl <: KalmanFilterBase[Impl]](
     calcLoglikelihood, calcMahalanobis, calcSlidingLikelihood, outputSystemMatrices)
 
   /** Run the filter; batch or streaming chosen from the input DataFrame.
-    * Batch folds at InternalRow level ([[KalmanRowKernel]] — no per-row
-    * encoder round trip); streaming keeps the encoder engine, which also
-    * remains the executable reference the kernel is pinned bit-exact
-    * against (KalmanKernelPinSpec). */
+    * Both run [[spec]]: batch through its row driver ([[KalmanRowKernel]],
+    * no per-row encoder round trip), streaming through the state store. */
   def transform(df: DataFrame): DataFrame = {
     val out0 =
       if (df.isStreaming) {

@@ -348,8 +348,7 @@ abstract class MixtureBase[Impl <: MixtureBase[Impl]](val mixtureCount: Int) { s
         new MixtureSpec(family, mixtureCount, initialWeights, initialParams),
         StageConf(timeoutMode, timeoutDuration, watermarkDuration)).toDF()
     } else {
-      // InternalRow kernel (round 14): the online stochastic-EM fold
-      // without the per-row Dataset-encoder round trip
+      // the same MixtureSpec, driven over InternalRows
       val kernel = new MixtureRowKernel(family, mixtureCount, initialWeights, initialParams)
       StatefulStage.batchRows(mixProjection(df), MixtureRowKernel.outputSchema,
         assumeUnique = false, kernel)

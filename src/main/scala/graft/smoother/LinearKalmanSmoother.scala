@@ -66,16 +66,7 @@ private[smoother] class FixedLagSpec(lag: Int, s: Int)
       var step = lag - 2
       while (rest.nonEmpty) {
         val r = rest.head
-        val ft = Dense.matmulNT(r.filtCov, newer.processModel.values, s, s, s)
-        val pInv = Dense.inverse(newer.predCov.clone(), s)
-        val g = Dense.matmul(ft, pInv, s, s, s)
-        val dm = Dense.sub(sm, newer.predMean)
-        val m = r.filtMean.clone()
-        Dense.axpy(1.0, Dense.matvec(g, dm, s, s), m)
-        val dc = Dense.sub(sc, newer.predCov)
-        val gdc = Dense.matmul(g, dc, s, s, s)
-        val gdcgt = Dense.matmulNT(gdc, g, s, s, s)
-        val c = Dense.symmetrize(Dense.add(r.filtCov, gdcgt), s)
+        val (m, c) = BackwardSpec.step(s, r, newer, sm, sc)
         outs = RtsLagOut(key, r.stateIndex, step.toLong, r.eventTime, m, DMat(s, s, c)) :: outs
         sm = m; sc = c; newer = r
         rest = rest.tail
@@ -83,6 +74,43 @@ private[smoother] class FixedLagSpec(lag: Int, s: Int)
       }
       outs
     }
+  }
+}
+
+/** A record with its smoothed moments: the backward pass's state. */
+private[smoother] case class Smoothed(record: FiltRecord, mean: Array[Double], cov: Array[Double])
+
+/** The RTS backward pass over one key's forward records, newest first: the
+  * newest record's smoothed moments are its filtered ones, each older one
+  * is [[BackwardSpec.step]] from its successor. */
+private[smoother] class BackwardSpec(s: Int) extends StateSpec[FiltRecord, Smoothed, SmoothedOut] {
+
+  def update(key: String, row: FiltRecord, state: Option[Smoothed]): Option[Smoothed] = Some(state match {
+    case None => Smoothed(row, row.filtMean, row.filtCov)
+    case Some(newer) =>
+      val (m, c) = BackwardSpec.step(s, row, newer.record, newer.mean, newer.cov)
+      Smoothed(row, m, c)
+  })
+
+  def output(key: String, row: FiltRecord, st: Smoothed): List[SmoothedOut] =
+    List(SmoothedOut(key, row.stateIndex, row.eventTime, st.mean, DMat(s, s, st.cov)))
+}
+
+private[smoother] object BackwardSpec {
+  /** One RTS backward step: the smoothed (mean, covariance) of `r`, given
+    * its successor `newer` and the successor's smoothed moments (sm, sc). */
+  def step(s: Int, r: FiltRecord, newer: FiltRecord, sm: Array[Double], sc: Array[Double])
+    : (Array[Double], Array[Double]) = {
+    val ft = Dense.matmulNT(r.filtCov, newer.processModel.values, s, s, s)
+    val pInv = Dense.inverse(newer.predCov.clone(), s)
+    val g = Dense.matmul(ft, pInv, s, s, s)
+    val dm = Dense.sub(sm, newer.predMean)
+    val m = r.filtMean.clone()
+    Dense.axpy(1.0, Dense.matvec(g, dm, s, s), m)
+    val dc = Dense.sub(sc, newer.predCov)
+    val gdc = Dense.matmul(g, dc, s, s, s)
+    val gdcgt = Dense.matmulNT(gdc, g, s, s, s)
+    (m, Dense.symmetrize(Dense.add(r.filtCov, gdcgt), s))
   }
 }
 
@@ -94,14 +122,8 @@ private[smoother] case class FwdState(
 private[smoother] class ForwardSpec(compute: LinearKalmanCompute, defaults: graft.filter.KalmanDefaults)
   extends StateSpec[KalmanIn, (FwdState, FiltRecord), FiltRecord] {
 
-  private def resolve(r: KalmanIn): KalmanIn = r.copy(
-    measurementModel = if (r.measurementModel.isDefined) r.measurementModel else Some(defaults.measurementModel),
-    measurementNoise = if (r.measurementNoise.isDefined) r.measurementNoise else Some(defaults.measurementNoise),
-    processModel = if (r.processModel.isDefined) r.processModel else Some(defaults.processModel),
-    processNoise = if (r.processNoise.isDefined) r.processNoise else Some(defaults.processNoise))
-
   def update(key: String, rawRow: KalmanIn, state: Option[(FwdState, FiltRecord)]): Option[(FwdState, FiltRecord)] = {
-    val row = resolve(rawRow)
+    val row = defaults.resolve(rawRow)
     val cur = state.map(_._1).getOrElse(FwdState(0L,
       rawRow.initialMean.getOrElse(defaults.initialMean),
       rawRow.initialCovariance.map(_.values).getOrElse(defaults.initialCovariance.values)))
@@ -198,20 +220,7 @@ class LinearKalmanSmoother(stateSize: Int, measurementSize: Int)
         rows.map { r =>
           val (sm, sc) =
             if (r.stateKey != curKey || nextRec == null) (r.filtMean, r.filtCov)
-            else {
-              // G = P_f F^T inv(P_pred_next)
-              val ft = Dense.matmulNT(r.filtCov, nextRec.processModel.values, s, s, s)
-              val pInv = Dense.inverse(nextRec.predCov.clone(), s)
-              val g = Dense.matmul(ft, pInv, s, s, s)
-              val dm = Dense.sub(nextSm, nextRec.predMean)
-              val m = r.filtMean.clone()
-              Dense.axpy(1.0, Dense.matvec(g, dm, s, s), m)
-              val dc = Dense.sub(nextSmCov, nextRec.predCov)
-              val gdc = Dense.matmul(g, dc, s, s, s)
-              val gdcgt = Dense.matmulNT(gdc, g, s, s, s)
-              val c = Dense.add(r.filtCov, gdcgt)
-              (m, Dense.symmetrize(c, s))
-            }
+            else BackwardSpec.step(s, r, nextRec, nextSm, nextSmCov)
           curKey = r.stateKey
           nextSm = sm; nextSmCov = sc; nextRec = r
           SmoothedOut(r.stateKey, r.stateIndex, r.eventTime, sm, DMat(s, s, sc))

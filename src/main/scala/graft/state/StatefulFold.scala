@@ -8,28 +8,11 @@ import org.apache.spark.sql.catalyst.plans.logical.{LogicalPlan, UnaryNode}
 import org.apache.spark.sql.catalyst.plans.physical.{ClusteredDistribution, Distribution, Partitioning}
 import org.apache.spark.sql.execution.{InputRDDCodegen, SparkPlan, SparkStrategy, UnaryExecNode}
 import org.apache.spark.sql.internal.SQLConf
-import org.apache.spark.unsafe.types.UTF8String
 
 /** Folds one partition, sorted by the fold's ordering, into output rows;
   * column 0 (`stateKey`) of input and output is the key. */
 trait FoldKernel extends Serializable {
   def run(rows: Iterator[InternalRow]): Iterator[InternalRow]
-}
-
-/** The key run of a fold over key-sorted rows: [[starts]] is true on the
-  * first row of each key (a null key is a key of its own), and [[key]] is
-  * that key, copied off the row. */
-final class KeyRun {
-  private var started = false
-  private var current: UTF8String = null
-  def key: UTF8String = current
-
-  def starts(row: InternalRow): Boolean = {
-    val k = if (row.isNullAt(0)) null else row.getUTF8String(0)
-    val same = started && (if (current == null) k == null else k != null && current.equals(k))
-    if (!same) { current = if (k == null) null else k.copy(); started = true }
-    !same
-  }
 }
 
 /**

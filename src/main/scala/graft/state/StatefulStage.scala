@@ -25,9 +25,10 @@ trait StateSpec[I <: KeyedIn, S, O] extends Serializable {
   def update(key: String, row: I, state: Option[S]): Option[S]
   def output(key: String, row: I, state: S): List[O]
 
-  /** Emitted when a key's rows are exhausted (batch path only — streams have
-    * no end). Default: nothing. Lets specs run whole-group computations
-    * (e.g. batch EM) without a second shuffle. */
+  /** Emitted when a key's rows are exhausted (encoder batch path only:
+    * streams have no end, and [[SpecKernel]] does not call it). Default:
+    * nothing. Lets specs run whole-group computations (e.g. batch EM)
+    * without a second shuffle. */
   def finish(key: String, state: S): List[O] = Nil
 }
 
@@ -51,17 +52,18 @@ final case class StageConf(
     assumeUniqueKeyTime: Boolean = false)
 
 /**
- * One engine, two physical strategies:
+ * One [[StateSpec]] per family, three drivers:
  *
- * - **Batch**: `repartition(stateKey)` + `sortWithinPartitions(stateKey,
- *   eventTime)` + `mapPartitions` with streaming key-boundary detection.
+ * - **Batch**: the key exchange and `sortWithinPartitions(stateKey,
+ *   eventTime)`, then a sequential fold with key-boundary detection.
  *   Exactly one shuffle; ordering comes from Spark's external (spilling)
  *   sort, so a key with billions of rows never has to fit in memory —
  *   unlike `groupByKey.flatMapGroups`, which materializes each group.
  *   This is the 100 TB path: hash-partition by key across executors,
- *   sequential O(rows) compute per partition. [[batch]] is the encoder
- *   reference; transforms run [[batchRows]], the same contract as a
- *   [[StatefulFold]] plan node folding InternalRows.
+ *   sequential O(rows) compute per partition. Transforms run [[batchRows]]:
+ *   a [[StatefulFold]] plan node whose kernel is the spec's row driver
+ *   ([[SpecKernel]]). [[batch]] drives the spec through Dataset encoders
+ *   and is the reference the kernels are pinned to.
  *
  * - **Streaming**: `groupByKey.flatMapGroupsWithState` in Append mode with
  *   optional watermark + state timeout (none / processing-time / event-time),
@@ -69,7 +71,8 @@ final case class StageConf(
  *
  * Capability parity with the reference's stateful transformer
  * (/root/reference/src/main/scala/com/github/ozancicek/artan/ml/state/StatefulTransformer.scala:103),
- * re-expressed with Spark-native Product encoders (no Kryo state blobs).
+ * re-expressed with Spark-native Product encoders for inputs and outputs;
+ * the streaming state is stored as a Kryo blob (see [[stream]]).
  */
 object StatefulStage {
 
@@ -135,8 +138,8 @@ object StatefulStage {
    * contract (tiebreak hash unless (key, time) is declared unique) as a
    * [[StatefulFold]] node, folding Tungsten rows with no per-row encoder
    * round trip. `in` is the canonical input projection, starting with
-   * (stateKey, eventTime); kernels replicate their StateSpec's floating-point
-   * operation order bit for bit (pinned by the *KernelPinSpec suites).
+   * (stateKey, eventTime); the kernels are [[SpecKernel]]s, running the
+   * family's own StateSpec over decoded rows.
    *
    * Tiebreak note: __rowSeq is xxhash64 over THIS projection's columns, so
    * a kernel projection that drops constant columns carried by the encoder
@@ -173,6 +176,10 @@ object StatefulStage {
     timeCol.fold(keyed.drop("eventTime"))(keyed.withColumnRenamed("eventTime", _))
   }
 
+  /** Event time in microseconds, the unit batch sorts by: `getTime` alone
+    * drops the sub-millisecond part. */
+  private def micros(t: Timestamp): Long = t.getTime * 1000L + (t.getNanos / 1000) % 1000
+
   def stream[I <: KeyedIn, S, O](ds: Dataset[I], spec: StateSpec[I, S, O], conf: StageConf)(
       implicit ie: Encoder[I], oe: Encoder[O]): Dataset[O] = {
     import org.apache.spark.sql.{Encoders => Encs}
@@ -195,7 +202,7 @@ object StatefulStage {
       } else {
         var state: Option[S] = gs.getOption.map(_.value)
         val out = List.newBuilder[O]
-        rows.toSeq.sortBy(_.eventTime.map(_.getTime).getOrElse(Long.MinValue)).foreach { row =>
+        rows.toSeq.sortBy(_.eventTime.map(micros).getOrElse(Long.MinValue)).foreach { row =>
           state = spec.update(key, row, state)
           state.foreach { s =>
             gs.update(Wrapped(s))

@@ -137,4 +137,39 @@ class StreamingParitySpec extends AnyFunSuite with SparkTestSession {
       assert(i1 == i2); assert(a1 == a2, s"idx $i1: $a1 vs $a2"); assert(b1 == b2)
     }
   }
+
+  test("LKF streaming folds rows of one millisecond in microsecond order, as batch does") {
+    import spark.implicits._
+    implicit val sqlCtx = spark.sqlContext
+    // +100 µs and +900 µs past the same millisecond, sent latest first
+    def at(micros: Int): Timestamp = {
+      val t = new Timestamp(1700000000000L); t.setNanos(micros * 1000); t
+    }
+    val data = Seq(("k", at(900), Array(5.0)), ("k", at(100), Array(1.0)))
+
+    def lkf = new LinearKalmanFilter(1, 1)
+      .setStateKeyCol("key").setEventTimeCol("t").setMeasurementCol("meas")
+      .setInitialStateCovariance(DMat.of(1, 1, 10.0))
+      .setProcessNoise(DMat.of(1, 1, 1.0))
+      .setMeasurementNoise(DMat.of(1, 1, 1.0))
+    def states(df: org.apache.spark.sql.DataFrame) = df
+      .select(col("stateIndex"), col("t"), col("stateMean"), col("stateCovariance.values"))
+      .as[(Long, Timestamp, Array[Double], Array[Double])].collect().sortBy(_._1)
+      .map { case (i, t, m, c) =>
+        (i, t, (m ++ c).map(java.lang.Double.doubleToRawLongBits).toSeq)
+      }.toSeq
+
+    val batch = states(lkf.transform(data.toDF("key", "t", "meas")))
+
+    val stream = MemoryStream[(String, Timestamp, Array[Double])]
+    val sq = lkf.transform(stream.toDS().toDF("key", "t", "meas"))
+      .writeStream.format("memory").queryName("lkf_micros_parity").outputMode("append").start()
+    stream.addData(data)
+    sq.processAllAvailable()
+    val streamed = states(spark.table("lkf_micros_parity"))
+    sq.stop()
+
+    assert(batch.map(_._2) == Seq(at(100), at(900)))
+    assert(streamed == batch)
+  }
 }

@@ -44,12 +44,13 @@ class KalmanKernelPinSpec extends AnyFunSuite with SparkTestSession {
     }
   }
 
-  /** 4 keys x 60 steps, deterministic pseudo-random measurements, ~8% nulls
+  /** 4 keys and a null key x 60 steps (a null key is a key run of its
+    * own), deterministic pseudo-random measurements, ~8% nulls
     * (measurement gaps), optionally ~5% null event times (ties on
     * (key, null) — exercises the tiebreak hash). */
   private def measurements(seed: Int, gaps: Boolean = true, nullTimes: Boolean = true): DataFrame = {
     val rnd = new scala.util.Random(seed)
-    val rows = for (k <- Seq("a", "b", "c", "d"); i <- 0 until 60) yield {
+    val rows = for (k <- Seq("a", "b", "c", "d", null); i <- 0 until 60) yield {
       val z = if (gaps && rnd.nextInt(12) == 0) null else Array(rnd.nextDouble() * 10 - 5)
       val t = if (nullTimes && rnd.nextInt(20) == 0) null else ts(i)
       (k, t, z, 1.0 + rnd.nextDouble(), rnd.nextDouble())

@@ -47,8 +47,9 @@ class MixtureKernelPinSpec extends AnyFunSuite with SparkTestSession {
   test("GMM kernel == encoder: minibatch 4, holdout 1, duplicate (key,time) rows") {
     val rnd = new scala.util.Random(21)
     // three rows per timestamp: fold order is the __rowSeq permutation,
-    // identical across paths because the projection is shared
-    val rows = for (k <- Seq("a", "b"); i <- 0 until 30; _ <- 0 until 3)
+    // identical across paths because the projection is shared; the null
+    // key is a key run of its own
+    val rows = for (k <- Seq("a", "b", null); i <- 0 until 30; _ <- 0 until 3)
       yield (k, ts(i), Array(rnd.nextDouble() * 4 - 2, rnd.nextDouble() * 4 - 2))
     val df = spark.createDataFrame(rows).toDF("key", "t", "sample")
     def build() = new MultivariateGaussianMixture(2, 2)
