@@ -6,7 +6,7 @@ import org.apache.spark.sql.{Column, DataFrame, Dataset, Encoder, Encoders, Spar
 import org.apache.spark.sql.functions._
 
 import graft.linalg.{DMat, Dense}
-import graft.state.{KeyedIn, StateSpec, StatefulStage, StageConf, TimeoutMode, NoTimeout, ProcessTimeout, EventTimeout}
+import graft.state.{KeyedIn, StateSpec, StatefulStage, StatefulTransformer, UniqueEventTimes}
 import graft.stats.Distributions
 
 /**
@@ -280,10 +280,9 @@ class KalmanSpec(
  * on a plain-Scala fluent API.
  */
 abstract class KalmanFilterBase[Impl <: KalmanFilterBase[Impl]](
-    val stateSize: Int, val measurementSize: Int) { self: Impl =>
+    val stateSize: Int, val measurementSize: Int)
+    extends StatefulTransformer with UniqueEventTimes { self: Impl =>
 
-  protected var stateKeyCol: Option[String] = None
-  protected var eventTimeCol: Option[String] = None
   protected var measurementCol: String = "measurement"
   protected var initialStateMean: Array[Double] = new Array[Double](stateSize)
   protected var initialStateCovariance: DMat = DMat.eye(stateSize)
@@ -312,15 +311,9 @@ abstract class KalmanFilterBase[Impl <: KalmanFilterBase[Impl]](
   protected var calcSlidingLikelihood: Boolean = false
   protected var slidingLikelihoodWindow: Int = 1
   protected var outputSystemMatrices: Boolean = false
-  protected var watermarkDuration: Option[String] = None
-  protected var timeoutMode: TimeoutMode = NoTimeout
-  protected var timeoutDuration: Option[String] = None
   protected var mmaeEnabled: Boolean = false
   protected var mmaeWindowDuration: Option[String] = None
-  protected var assumeUniqueEventTimes: Boolean = false
 
-  def setStateKeyCol(v: String): Impl = { stateKeyCol = Some(v); this }
-  def setEventTimeCol(v: String): Impl = { eventTimeCol = Some(v); this }
   def setMeasurementCol(v: String): Impl = { measurementCol = v; this }
   def setInitialStateMean(v: Array[Double]): Impl = { initialStateMean = v; this }
   def setInitialStateCovariance(v: DMat): Impl = { initialStateCovariance = v; this }
@@ -347,23 +340,6 @@ abstract class KalmanFilterBase[Impl <: KalmanFilterBase[Impl]](
   def setCalculateSlidingLikelihood(): Impl = { calcSlidingLikelihood = true; this }
   def setSlidingLikelihoodWindow(v: Int): Impl = { calcSlidingLikelihood = true; slidingLikelihoodWindow = v; this }
   def setOutputSystemMatrices(): Impl = { outputSystemMatrices = true; this }
-  /** Declare (stateKey, eventTime) unique in the input: the batch path then
-    * skips its full-row-hash sort tiebreaker, narrowing the external sort
-    * key by 8 bytes/row (see StageConf.assumeUniqueKeyTime). Only set when
-    * the invariant truly holds — with duplicate (key, time) rows and this
-    * flag, their fold order is nondeterministic. */
-  def setAssumeUniqueEventTimes(): Impl = { assumeUniqueEventTimes = true; this }
-  def setWatermarkDuration(v: String): Impl = { watermarkDuration = Some(v); this }
-  def setStateTimeoutMode(v: String): Impl = {
-    timeoutMode = v match {
-      case "none" => NoTimeout
-      case "process" => ProcessTimeout
-      case "event" => EventTimeout
-      case other => throw new IllegalArgumentException(s"unsupported timeout mode $other")
-    }
-    this
-  }
-  def setStateTimeoutDuration(v: String): Impl = { timeoutDuration = Some(v); this }
   def setEnableMultipleModelAdaptiveEstimation(): Impl = { mmaeEnabled = true; this }
   def setMultipleModelMeasurementWindowDuration(v: String): Impl = { mmaeWindowDuration = Some(v); this }
 
@@ -379,9 +355,7 @@ abstract class KalmanFilterBase[Impl <: KalmanFilterBase[Impl]](
     * these fixed ordinals). Keeping ONE projection keeps the batch
     * tiebreak hash (`__rowSeq` over all 11 columns) and therefore the fold
     * order of duplicate (key, time) rows identical across both paths. */
-  protected def kalmanProjection(df: DataFrame): DataFrame = {
-    val keyExpr = stateKeyCol.map(c => col(c).cast("string")).getOrElse(lit(getClass.getSimpleName + ".default"))
-    val timeExpr = eventTimeCol.map(c => col(c).cast("timestamp")).getOrElse(lit(null).cast("timestamp"))
+  protected def kalmanProjection(df: DataFrame): DataFrame =
     df.select(
       keyExpr.as("stateKey"),
       timeExpr.as("eventTime"),
@@ -399,7 +373,6 @@ abstract class KalmanFilterBase[Impl <: KalmanFilterBase[Impl]](
         .orElse(initialStateCovarianceCol.map(c => MatrixColumn(col(c))))
         .getOrElse(MatrixColumn.absent).as("initialCovariance")
     )
-  }
 
   /** Wire user columns/defaults into the canonical KalmanIn shape. */
   protected def toKalmanInput(df: DataFrame): Dataset[KalmanIn] = {
@@ -424,9 +397,7 @@ abstract class KalmanFilterBase[Impl <: KalmanFilterBase[Impl]](
       if (df.isStreaming) {
         val spark = df.sparkSession
         import spark.implicits._
-        val conf = StageConf(timeoutMode, timeoutDuration, watermarkDuration,
-          assumeUniqueKeyTime = assumeUniqueEventTimes)
-        StatefulStage.run(toKalmanInput(df), spec, conf).toDF()
+        StatefulStage.run(toKalmanInput(df), spec, stageConf).toDF()
       } else {
         val kernel = new KalmanRowKernel(compute, defaults, storeResidual,
           slidingLikelihoodWindow, multiStepPredict,
@@ -439,8 +410,7 @@ abstract class KalmanFilterBase[Impl <: KalmanFilterBase[Impl]](
           hasCtlFn = controlFunctionCol.isDefined,
           hasIM = initialStateDistributionCol.isDefined || initialStateMeanCol.isDefined,
           hasIC = initialStateDistributionCol.isDefined || initialStateCovarianceCol.isDefined)
-        StatefulStage.batchRows(kalmanProjection(df), KalmanRowKernel.outputSchema,
-          assumeUnique = assumeUniqueEventTimes, kernel)
+        StatefulStage.batchRows(kalmanProjection(df), KalmanRowKernel.outputSchema, stageConf, kernel)
       }
     val out = finalizeColumns(out0)
     if (mmaeEnabled) mmaeAggregate(out) else out
@@ -452,9 +422,7 @@ abstract class KalmanFilterBase[Impl <: KalmanFilterBase[Impl]](
   private[graft] def transformEncoderBatch(df: DataFrame): DataFrame = {
     val spark = df.sparkSession
     import spark.implicits._
-    val conf = StageConf(timeoutMode, timeoutDuration, watermarkDuration,
-      assumeUniqueKeyTime = assumeUniqueEventTimes)
-    val outDs = StatefulStage.batch(toKalmanInput(df), spec, conf)
+    val outDs = StatefulStage.batch(toKalmanInput(df), spec, stageConf)
     val out = finalizeColumns(outDs.toDF())
     if (mmaeEnabled) mmaeAggregate(out) else out
   }
@@ -467,7 +435,7 @@ abstract class KalmanFilterBase[Impl <: KalmanFilterBase[Impl]](
     if (!storeResidual) out = out.drop("residualMean", "residualCovariance")
     if (!outputSystemMatrices)
       out = out.drop("processModel", "processNoise", "measurementModel", "measurementNoise")
-    StatefulStage.userColumns(out, stateKeyCol, eventTimeCol)
+    userColumns(out)
   }
 
   /**
@@ -482,9 +450,9 @@ abstract class KalmanFilterBase[Impl <: KalmanFilterBase[Impl]](
     val base = if (df.isStreaming) {
       // flatMapGroupsWithState(Append) output carries no watermark metadata,
       // so re-apply it here; streaming MMAE needs the windowed variant.
-      require(mmaeWindowDuration.isDefined && watermarkDuration.isDefined,
+      require(mmaeWindowDuration.isDefined && stageConf.watermarkDuration.isDefined,
         "streaming MMAE requires setMultipleModelMeasurementWindowDuration and setWatermarkDuration")
-      df.withWatermark(evCol, watermarkDuration.get)
+      df.withWatermark(evCol, stageConf.watermarkDuration.get)
     } else df
     val groupKeys: Seq[Column] = (mmaeWindowDuration match {
       case Some(d) => Seq(window(col(evCol), d).as("eventWindow"))

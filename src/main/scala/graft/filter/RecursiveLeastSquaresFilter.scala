@@ -6,7 +6,7 @@ import org.apache.spark.sql.{Column, DataFrame, Dataset}
 import org.apache.spark.sql.functions._
 
 import graft.linalg.{DMat, Dense}
-import graft.state.{KeyedIn, StateSpec, StatefulStage, StageConf, TimeoutMode, NoTimeout, ProcessTimeout, EventTimeout}
+import graft.state.{KeyedIn, StateSpec, StatefulStage, StatefulTransformer, UniqueEventTimes}
 
 case class RlsIn(
     stateKey: String,
@@ -35,10 +35,9 @@ case class RlsOut(
  *
  * Capability parity: /root/reference/src/main/scala/com/github/ozancicek/artan/ml/filter/RecursiveLeastSquaresFilter.scala:211.
  */
-class RecursiveLeastSquaresFilter(val featuresSize: Int) {
+class RecursiveLeastSquaresFilter(val featuresSize: Int)
+    extends StatefulTransformer with UniqueEventTimes {
 
-  private var stateKeyCol: Option[String] = None
-  private var eventTimeCol: Option[String] = None
   private var labelCol: String = "label"
   private var featuresCol: String = "features"
   private var forgettingFactor: Double = 1.0
@@ -48,11 +47,7 @@ class RecursiveLeastSquaresFilter(val featuresSize: Int) {
     Dense.scale(1e5, Dense.eye(featuresSize)))
   private var regularizationMatrixCol: Option[String] = None
   private var initialStateDistributionCol: Option[String] = None
-  private var watermarkDuration: Option[String] = None
-  private var timeoutMode: TimeoutMode = NoTimeout
-  private var timeoutDuration: Option[String] = None
 
-  def setStateKeyCol(v: String): this.type = { stateKeyCol = Some(v); this }
   /** Single struct column `(mean: array<double>, covariance: matrix struct)`
     * carrying the per-key prior — e.g. a previously filtered posterior
     * (stream-batch init; reference RLS initialStateDistributionCol).
@@ -60,7 +55,6 @@ class RecursiveLeastSquaresFilter(val featuresSize: Int) {
   def setInitialStateDistributionCol(v: String): this.type = {
     initialStateDistributionCol = Some(v); this
   }
-  def setEventTimeCol(v: String): this.type = { eventTimeCol = Some(v); this }
   def setLabelCol(v: String): this.type = { labelCol = v; this }
   def setFeaturesCol(v: String): this.type = { featuresCol = v; this }
   def setForgettingFactor(v: Double): this.type = { forgettingFactor = v; this }
@@ -71,25 +65,8 @@ class RecursiveLeastSquaresFilter(val featuresSize: Int) {
     regularizationMatrix = DMat(featuresSize, featuresSize, Dense.scale(v, Dense.eye(featuresSize))); this
   }
   def setRegularizationMatrixCol(v: String): this.type = { regularizationMatrixCol = Some(v); this }
-  def setWatermarkDuration(v: String): this.type = { watermarkDuration = Some(v); this }
-  def setStateTimeoutMode(v: String): this.type = {
-    timeoutMode = v match {
-      case "none" => NoTimeout
-      case "process" => ProcessTimeout
-      case "event" => EventTimeout
-      case other => throw new IllegalArgumentException(s"unsupported timeout mode $other")
-    }
-    this
-  }
-  def setStateTimeoutDuration(v: String): this.type = { timeoutDuration = Some(v); this }
-  /** Caller-declared invariant: (stateKey, eventTime) unique in the input —
-    * the batch path then skips its tiebreak-hash sort column (see
-    * StageConf.assumeUniqueKeyTime). */
-  def setAssumeUniqueEventTimes(): this.type = { assumeUniqueEventTimes = true; this }
-  private var assumeUniqueEventTimes: Boolean = false
 
-  private def keyExpr = stateKeyCol.map(c => col(c).cast("string")).getOrElse(lit("rls.default"))
-  private def timeExpr = eventTimeCol.map(c => col(c).cast("timestamp")).getOrElse(lit(null).cast("timestamp"))
+  override protected def defaultStateKey: String = "rls.default"
 
   /** Input of the encoder engine: the streaming path and the batch reference. */
   private def encoderInput(df: DataFrame): Dataset[RlsIn] = {
@@ -115,8 +92,7 @@ class RecursiveLeastSquaresFilter(val featuresSize: Int) {
     val spark = df.sparkSession
     import spark.implicits._
     val out = if (df.isStreaming) {
-      StatefulStage.run(encoderInput(df), spec,
-        StageConf(timeoutMode, timeoutDuration, watermarkDuration)).toDF()
+      StatefulStage.run(encoderInput(df), spec, stageConf).toDF()
     } else {
       // InternalRow kernel: constant init/regularization live in the kernel
       // closure, NOT as typedLit columns shuffled with every row (the
@@ -136,19 +112,16 @@ class RecursiveLeastSquaresFilter(val featuresSize: Int) {
       val kernel = new RlsRowKernel(forgettingFactor, featuresSize,
         initialEstimate, regularizationMatrix,
         hasIM = imExpr.isDefined, hasIC = icExpr.isDefined)
-      StatefulStage.batchRows(df.select(cols.toSeq: _*), RlsRowKernel.outputSchema,
-        assumeUnique = assumeUniqueEventTimes, kernel)
+      StatefulStage.batchRows(df.select(cols.toSeq: _*), RlsRowKernel.outputSchema, stageConf, kernel)
     }
-    StatefulStage.userColumns(out, stateKeyCol, eventTimeCol)
+    userColumns(out)
   }
 
   /** Encoder-path batch execution kept as the pin-spec reference. */
   private[graft] def transformEncoderBatch(df: DataFrame): DataFrame = {
     val spark = df.sparkSession
     import spark.implicits._
-    val res = StatefulStage.batch(encoderInput(df), spec,
-      StageConf(timeoutMode, timeoutDuration, watermarkDuration)).toDF()
-    StatefulStage.userColumns(res, stateKeyCol, eventTimeCol)
+    userColumns(StatefulStage.batch(encoderInput(df), spec, stageConf).toDF())
   }
 }
 
@@ -206,45 +179,24 @@ case class LmsOut(
  *
  * Capability parity: /root/reference/src/main/scala/com/github/ozancicek/artan/ml/filter/LeastMeanSquaresFilter.scala:156.
  */
-class LeastMeanSquaresFilter(val featuresSize: Int) {
+class LeastMeanSquaresFilter(val featuresSize: Int)
+    extends StatefulTransformer with UniqueEventTimes {
 
-  private var stateKeyCol: Option[String] = None
-  private var eventTimeCol: Option[String] = None
   private var labelCol: String = "label"
   private var featuresCol: String = "features"
   private var learningRate: Double = 1.0
   private var regularization: Double = 1.0
   private var initialEstimate: Array[Double] = new Array[Double](featuresSize)
   private var initialEstimateCol: Option[String] = None
-  private var watermarkDuration: Option[String] = None
-  private var timeoutMode: TimeoutMode = NoTimeout
-  private var timeoutDuration: Option[String] = None
 
-  def setStateKeyCol(v: String): this.type = { stateKeyCol = Some(v); this }
-  def setEventTimeCol(v: String): this.type = { eventTimeCol = Some(v); this }
   def setLabelCol(v: String): this.type = { labelCol = v; this }
   def setFeaturesCol(v: String): this.type = { featuresCol = v; this }
   def setLearningRate(v: Double): this.type = { learningRate = v; this }
   def setRegularization(v: Double): this.type = { regularization = v; this }
   def setInitialEstimate(v: Array[Double]): this.type = { initialEstimate = v; this }
   def setInitialEstimateCol(v: String): this.type = { initialEstimateCol = Some(v); this }
-  def setWatermarkDuration(v: String): this.type = { watermarkDuration = Some(v); this }
-  def setStateTimeoutMode(v: String): this.type = {
-    timeoutMode = v match {
-      case "none" => NoTimeout
-      case "process" => ProcessTimeout
-      case "event" => EventTimeout
-      case other => throw new IllegalArgumentException(s"unsupported timeout mode $other")
-    }
-    this
-  }
-  def setStateTimeoutDuration(v: String): this.type = { timeoutDuration = Some(v); this }
-  /** See RecursiveLeastSquaresFilter.setAssumeUniqueEventTimes. */
-  def setAssumeUniqueEventTimes(): this.type = { assumeUniqueEventTimes = true; this }
-  private var assumeUniqueEventTimes: Boolean = false
 
-  private def keyExpr = stateKeyCol.map(c => col(c).cast("string")).getOrElse(lit("lms.default"))
-  private def timeExpr = eventTimeCol.map(c => col(c).cast("timestamp")).getOrElse(lit(null).cast("timestamp"))
+  override protected def defaultStateKey: String = "lms.default"
 
   /** Input of the encoder engine: the streaming path and the batch reference. */
   private def encoderInput(df: DataFrame): Dataset[LmsIn] = {
@@ -265,8 +217,7 @@ class LeastMeanSquaresFilter(val featuresSize: Int) {
     val spark = df.sparkSession
     import spark.implicits._
     val out = if (df.isStreaming) {
-      StatefulStage.run(encoderInput(df), spec,
-        StageConf(timeoutMode, timeoutDuration, watermarkDuration)).toDF()
+      StatefulStage.run(encoderInput(df), spec, stageConf).toDF()
     } else {
       val cols = scala.collection.mutable.ArrayBuffer(
         keyExpr.as("stateKey"),
@@ -276,19 +227,16 @@ class LeastMeanSquaresFilter(val featuresSize: Int) {
       initialEstimateCol.foreach(c => cols += col(c).cast("array<double>").as("initialMean"))
       val kernel = new LmsRowKernel(learningRate, regularization,
         initialEstimate, hasIM = initialEstimateCol.isDefined)
-      StatefulStage.batchRows(df.select(cols.toSeq: _*), LmsRowKernel.outputSchema,
-        assumeUnique = assumeUniqueEventTimes, kernel)
+      StatefulStage.batchRows(df.select(cols.toSeq: _*), LmsRowKernel.outputSchema, stageConf, kernel)
     }
-    StatefulStage.userColumns(out, stateKeyCol, eventTimeCol)
+    userColumns(out)
   }
 
   /** Encoder-path batch execution kept as the pin-spec reference. */
   private[graft] def transformEncoderBatch(df: DataFrame): DataFrame = {
     val spark = df.sparkSession
     import spark.implicits._
-    val res = StatefulStage.batch(encoderInput(df), spec,
-      StageConf(timeoutMode, timeoutDuration, watermarkDuration)).toDF()
-    StatefulStage.userColumns(res, stateKeyCol, eventTimeCol)
+    userColumns(StatefulStage.batch(encoderInput(df), spec, stageConf).toDF())
   }
 }
 

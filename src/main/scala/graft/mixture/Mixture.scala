@@ -5,7 +5,7 @@ import java.sql.Timestamp
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.state.{KeyedIn, StateSpec, StatefulStage, StageConf, TimeoutMode, NoTimeout, ProcessTimeout, EventTimeout}
+import graft.state.{KeyedIn, StateSpec, StatefulStage, StatefulTransformer}
 import graft.stats.Distributions
 
 /**
@@ -241,18 +241,14 @@ private[mixture] class BatchEmSpec(
 }
 
 /** Shared builder for the three mixture transformers. */
-abstract class MixtureBase[Impl <: MixtureBase[Impl]](val mixtureCount: Int) { self: Impl =>
-  protected var stateKeyCol: Option[String] = None
-  protected var eventTimeCol: Option[String] = None
+abstract class MixtureBase[Impl <: MixtureBase[Impl]](val mixtureCount: Int)
+    extends StatefulTransformer { self: Impl =>
   protected var sampleCol: String = "sample"
   protected var stepSize: Double = 0.1
   protected var decayRate: Double = -1.0
   protected var minibatchSize: Int = 1
   protected var updateHoldout: Int = 1
   protected var initialWeights: Array[Double] = Array.fill(mixtureCount)(1.0 / mixtureCount)
-  protected var watermarkDuration: Option[String] = None
-  protected var timeoutMode: TimeoutMode = NoTimeout
-  protected var timeoutDuration: Option[String] = None
   protected var batchTrainEnabled: Boolean = false
   protected var batchTrainMaxIter: Int = 30
   protected var batchTrainTol: Double = 0.1
@@ -264,8 +260,6 @@ abstract class MixtureBase[Impl <: MixtureBase[Impl]](val mixtureCount: Int) { s
   def setEnableBatchTrain(): Impl = { batchTrainEnabled = true; this }
   def setBatchTrainMaxIter(v: Int): Impl = { batchTrainMaxIter = v; this }
   def setBatchTrainTol(v: Double): Impl = { batchTrainTol = v; this }
-  def setStateKeyCol(v: String): Impl = { stateKeyCol = Some(v); this }
-  def setEventTimeCol(v: String): Impl = { eventTimeCol = Some(v); this }
   def setSampleCol(v: String): Impl = { sampleCol = v; this }
   def setStepSize(v: Double): Impl = { stepSize = v; this }
   def setDecayRate(v: Double): Impl = { decayRate = v; this }
@@ -283,17 +277,6 @@ abstract class MixtureBase[Impl <: MixtureBase[Impl]](val mixtureCount: Int) { s
     * carrying a per-key initial mixture model — warm start from a previously
     * trained model (reference MixtureParams.scala:287). */
   def setInitialMixtureModelCol(v: String): Impl = { initialMixtureModelCol = Some(v); this }
-  def setWatermarkDuration(v: String): Impl = { watermarkDuration = Some(v); this }
-  def setStateTimeoutMode(v: String): Impl = {
-    timeoutMode = v match {
-      case "none" => NoTimeout
-      case "process" => ProcessTimeout
-      case "event" => EventTimeout
-      case other => throw new IllegalArgumentException(s"unsupported timeout mode $other")
-    }
-    this
-  }
-  def setStateTimeoutDuration(v: String): Impl = { timeoutDuration = Some(v); this }
 
   protected var initialWeightsCol: Option[String] = None
   /** Per-key initial component weights column (reference initialWeightsCol);
@@ -312,9 +295,7 @@ abstract class MixtureBase[Impl <: MixtureBase[Impl]](val mixtureCount: Int) { s
   /** Canonical 9-column MixIn projection — shared by the encoder path and
     * the InternalRow kernel (fixed ordinals + the SAME __rowSeq tiebreak
     * hash domain on both paths). */
-  private def mixProjection(df: DataFrame): DataFrame = {
-    val keyExpr = stateKeyCol.map(c => col(c).cast("string")).getOrElse(lit(getClass.getSimpleName + ".default"))
-    val timeExpr = eventTimeCol.map(c => col(c).cast("timestamp")).getOrElse(lit(null).cast("timestamp"))
+  private def mixProjection(df: DataFrame): DataFrame =
     df.select(
       keyExpr.as("stateKey"),
       timeExpr.as("eventTime"),
@@ -333,7 +314,6 @@ abstract class MixtureBase[Impl <: MixtureBase[Impl]](val mixtureCount: Int) { s
         .orElse(initialMixtureModelCol.map(c => col(c).getField("params").cast("array<array<double>>")))
         .getOrElse(lit(null).cast("array<array<double>>")).as("initialParams")
     )
-  }
 
   def transform(df: DataFrame): DataFrame = {
     val spark = df.sparkSession
@@ -342,18 +322,16 @@ abstract class MixtureBase[Impl <: MixtureBase[Impl]](val mixtureCount: Int) { s
       require(!df.isStreaming, "batch EM training requires a batch DataFrame")
       StatefulStage.batch(mixProjection(df).as[MixIn],
         new BatchEmSpec(family, mixtureCount, initialWeights, initialParams,
-          batchTrainMaxIter, batchTrainTol)).toDF()
+          batchTrainMaxIter, batchTrainTol), stageConf).toDF()
     } else if (df.isStreaming) {
       StatefulStage.run(mixProjection(df).as[MixIn],
-        new MixtureSpec(family, mixtureCount, initialWeights, initialParams),
-        StageConf(timeoutMode, timeoutDuration, watermarkDuration)).toDF()
+        new MixtureSpec(family, mixtureCount, initialWeights, initialParams), stageConf).toDF()
     } else {
       // the same MixtureSpec, driven over InternalRows
       val kernel = new MixtureRowKernel(family, mixtureCount, initialWeights, initialParams)
-      StatefulStage.batchRows(mixProjection(df), MixtureRowKernel.outputSchema,
-        assumeUnique = false, kernel)
+      StatefulStage.batchRows(mixProjection(df), MixtureRowKernel.outputSchema, stageConf, kernel)
     })
-    StatefulStage.userColumns(out, stateKeyCol, eventTimeCol)
+    userColumns(out)
   }
 
   /** Encoder-path batch execution kept as the pin-spec reference. */
@@ -361,10 +339,8 @@ abstract class MixtureBase[Impl <: MixtureBase[Impl]](val mixtureCount: Int) { s
     val spark = df.sparkSession
     import spark.implicits._
     require(!batchTrainEnabled && !df.isStreaming)
-    val res = StatefulStage.batch(mixProjection(df).as[MixIn],
-      new MixtureSpec(family, mixtureCount, initialWeights, initialParams),
-      StageConf(timeoutMode, timeoutDuration, watermarkDuration)).toDF()
-    StatefulStage.userColumns(res, stateKeyCol, eventTimeCol)
+    userColumns(StatefulStage.batch(mixProjection(df).as[MixIn],
+      new MixtureSpec(family, mixtureCount, initialWeights, initialParams), stageConf).toDF())
   }
 }
 

@@ -158,8 +158,7 @@ abstract class KalmanTransformer[T <: KalmanTransformer[T]](override val uid: St
 
   /** Push every set param into a core builder (any Kalman-family impl). */
   protected final def configure[B <: CoreBase[B]](b: B): B = {
-    if (isSet(stateKeyCol)) b.setStateKeyCol($(stateKeyCol))
-    if (isSet(eventTimeCol)) b.setEventTimeCol($(eventTimeCol))
+    configureEngine(b)
     b.setMeasurementCol($(measurementCol))
     if (isSet(initialStateMean)) b.setInitialStateMean(toArr($(initialStateMean)))
     if (isSet(initialStateCovariance)) b.setInitialStateCovariance(toDMat($(initialStateCovariance)))
@@ -182,9 +181,6 @@ abstract class KalmanTransformer[T <: KalmanTransformer[T]](override val uid: St
     if ($(calculateMahalanobis)) b.setCalculateMahalanobis()
     if ($(calculateSlidingLikelihood)) b.setSlidingLikelihoodWindow($(slidingLikelihoodWindow))
     if ($(outputSystemMatrices)) b.setOutputSystemMatrices()
-    if (isSet(watermarkDuration)) b.setWatermarkDuration($(watermarkDuration))
-    b.setStateTimeoutMode($(stateTimeoutMode))
-    if (isSet(stateTimeoutDuration)) b.setStateTimeoutDuration($(stateTimeoutDuration))
     if ($(multipleModelAdaptiveEstimation)) b.setEnableMultipleModelAdaptiveEstimation()
     if (isSet(multipleModelMeasurementWindowDuration))
       b.setMultipleModelMeasurementWindowDuration($(multipleModelMeasurementWindowDuration))

@@ -83,4 +83,14 @@ private[ml] trait StatefulEngineParams extends Params {
   def setStateTimeoutDuration(value: String): this.type = set(stateTimeoutDuration, value)
 
   setDefault(stateTimeoutMode -> "none")
+
+  /** Hands the key, event-time, watermark and timeout settings to a core
+    * estimator. */
+  protected final def configureEngine(core: graft.state.StatefulTransformer): Unit = {
+    if (isSet(stateKeyCol)) core.setStateKeyCol($(stateKeyCol))
+    if (isSet(eventTimeCol)) core.setEventTimeCol($(eventTimeCol))
+    if (isSet(watermarkDuration)) core.setWatermarkDuration($(watermarkDuration))
+    core.setStateTimeoutMode($(stateTimeoutMode))
+    if (isSet(stateTimeoutDuration)) core.setStateTimeoutDuration($(stateTimeoutDuration))
+  }
 }

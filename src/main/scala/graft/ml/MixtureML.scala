@@ -64,8 +64,7 @@ private[ml] trait MixtureMLParams extends StatefulEngineParams {
     batchTrainMaxIter -> 30, batchTrainTol -> 0.1)
 
   protected final def configureMixture[B <: CoreMixtureBase[B]](b: B): B = {
-    if (isSet(stateKeyCol)) b.setStateKeyCol($(stateKeyCol))
-    if (isSet(eventTimeCol)) b.setEventTimeCol($(eventTimeCol))
+    configureEngine(b)
     b.setSampleCol($(sampleCol))
     b.setStepSize($(stepSize))
     b.setDecayRate($(decayRate))
@@ -76,9 +75,6 @@ private[ml] trait MixtureMLParams extends StatefulEngineParams {
     if ($(enableBatchTrain)) b.setEnableBatchTrain()
     b.setBatchTrainMaxIter($(batchTrainMaxIter))
     b.setBatchTrainTol($(batchTrainTol))
-    if (isSet(watermarkDuration)) b.setWatermarkDuration($(watermarkDuration))
-    b.setStateTimeoutMode($(stateTimeoutMode))
-    if (isSet(stateTimeoutDuration)) b.setStateTimeoutDuration($(stateTimeoutDuration))
     b
   }
 

@@ -76,8 +76,7 @@ class RecursiveLeastSquaresFilter(override val uid: String)
   override def transform(dataset: Dataset[_]): DataFrame = {
     transformSchema(dataset.schema)
     val b = new graft.filter.RecursiveLeastSquaresFilter($(featuresSize))
-    if (isSet(stateKeyCol)) b.setStateKeyCol($(stateKeyCol))
-    if (isSet(eventTimeCol)) b.setEventTimeCol($(eventTimeCol))
+    configureEngine(b)
     b.setLabelCol($(labelCol))
     b.setFeaturesCol($(featuresCol))
     b.setForgettingFactor($(forgettingFactor))
@@ -86,9 +85,6 @@ class RecursiveLeastSquaresFilter(override val uid: String)
     if (isSet(regularizationMatrix)) b.setRegularizationMatrix(toDMat($(regularizationMatrix)))
     if (isSet(regularizationMatrixFactor)) b.setRegularizationMatrixFactor($(regularizationMatrixFactor))
     if (isSet(regularizationMatrixCol)) b.setRegularizationMatrixCol($(regularizationMatrixCol))
-    if (isSet(watermarkDuration)) b.setWatermarkDuration($(watermarkDuration))
-    b.setStateTimeoutMode($(stateTimeoutMode))
-    if (isSet(stateTimeoutDuration)) b.setStateTimeoutDuration($(stateTimeoutDuration))
     b.transform(MLConv.vectorColsToArrays(dataset.toDF(),
       Seq(Some($(featuresCol)), get(initialEstimateCol)).flatten))
   }
@@ -126,17 +122,13 @@ class LeastMeanSquaresFilter(override val uid: String)
   override def transform(dataset: Dataset[_]): DataFrame = {
     transformSchema(dataset.schema)
     val b = new graft.filter.LeastMeanSquaresFilter($(featuresSize))
-    if (isSet(stateKeyCol)) b.setStateKeyCol($(stateKeyCol))
-    if (isSet(eventTimeCol)) b.setEventTimeCol($(eventTimeCol))
+    configureEngine(b)
     b.setLabelCol($(labelCol))
     b.setFeaturesCol($(featuresCol))
     b.setLearningRate($(learningRate))
     b.setRegularization($(regularization))
     if (isSet(initialEstimate)) b.setInitialEstimate(toArr($(initialEstimate)))
     if (isSet(initialEstimateCol)) b.setInitialEstimateCol($(initialEstimateCol))
-    if (isSet(watermarkDuration)) b.setWatermarkDuration($(watermarkDuration))
-    b.setStateTimeoutMode($(stateTimeoutMode))
-    if (isSet(stateTimeoutDuration)) b.setStateTimeoutDuration($(stateTimeoutDuration))
     b.transform(MLConv.vectorColsToArrays(dataset.toDF(),
       Seq(Some($(featuresCol)), get(initialEstimateCol)).flatten))
   }

@@ -6,6 +6,8 @@ import org.apache.spark.sql.{DataFrame, Encoders, Row}
 import org.apache.spark.sql.functions.{col, timestamp_micros}
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
+import graft.state.StatefulStage.micros
+
 /**
  * Streaming twins of the event-analytics pair (q_funnel / q_retention).
  * Both carry BOUNDED per-user state across micro-batches — a fixed handful
@@ -179,7 +181,6 @@ object EventStreams {
     implicit val stateEnc = Encoders.kryo[(Boolean, String, String)]
     implicit val outEnc =
       Encoders.tuple(Encoders.STRING, Encoders.STRING, Encoders.STRING)
-    def micros(t: Timestamp): Long = t.getTime * 1000L + (t.getNanos / 1000) % 1000
     df.groupByKey((r: Row) => String.valueOf(r.getAs[Any](userCol)))
       .flatMapGroupsWithState[(Boolean, String, String), (String, String, String)](
         OutputMode.Update, GroupStateTimeout.NoTimeout) {
@@ -226,7 +227,6 @@ object EventStreams {
     implicit val stateEnc = Encoders.kryo[(Long, Long, Long, BigInt)]
     implicit val outEnc = Encoders.tuple(
       Encoders.STRING, Encoders.scalaLong, Encoders.scalaLong, Encoders.scalaLong)
-    def micros(t: Timestamp): Long = t.getTime * 1000L + (t.getNanos / 1000) % 1000
     df.groupByKey((r: Row) => String.valueOf(r.getAs[Any](userCol)))
       .flatMapGroupsWithState[(Long, Long, Long, BigInt), (String, Long, Long, Long)](
         OutputMode.Update, GroupStateTimeout.NoTimeout) {
@@ -287,7 +287,6 @@ object EventStreams {
     implicit val stateEnc = Encoders.kryo[(Long, Long, Long, Long)]
     implicit val outEnc = Encoders.tuple(Encoders.STRING, Encoders.scalaLong,
       Encoders.scalaLong, Encoders.scalaLong, Encoders.scalaLong)
-    def micros(t: Timestamp): Long = t.getTime * 1000L + (t.getNanos / 1000) % 1000
     val gapUs = gapSec * 1000000L
     val out = df.groupByKey((r: Row) => String.valueOf(r.getAs[Any](userCol)))
       .flatMapGroupsWithState[(Long, Long, Long, Long), (String, Long, Long, Long, Long)](
@@ -319,7 +318,6 @@ object EventStreams {
     implicit val strEnc = Encoders.STRING
     implicit val stateEnc = Encoders.kryo[(Long, Long, String)]
     implicit val outEnc = Encoders.tuple(Encoders.STRING, Encoders.STRING)
-    def micros(t: Timestamp): Long = t.getTime * 1000L + (t.getNanos / 1000) % 1000
     df.groupByKey((r: Row) => String.valueOf(r.getAs[Any](userCol)))
       .flatMapGroupsWithState[(Long, Long, String), (String, String)](
         OutputMode.Append, GroupStateTimeout.NoTimeout) {

@@ -170,10 +170,9 @@ class LinearKalmanSmoother(stateSize: Int, measurementSize: Int)
     val spark = df.sparkSession
     import spark.implicits._
     val fwdSpec = new ForwardSpec(new LinearKalmanCompute(stateSize, measurementSize, 1.0), defaults)
-    val fwd: Dataset[FiltRecord] =
-      graft.state.StatefulStage.run(toKalmanInput(df), fwdSpec)
-    val lagged = graft.state.StatefulStage.run(fwd, new FixedLagSpec(lag, stateSize))
-    StatefulStage.userColumns(lagged.toDF(), stateKeyCol, eventTimeCol)
+    val fwd: Dataset[FiltRecord] = StatefulStage.run(toKalmanInput(df), fwdSpec)
+    val lagged = StatefulStage.run(fwd, new FixedLagSpec(lag, stateSize))
+    userColumns(lagged.toDF())
   }
 
   /** Full-pass RTS at InternalRow level: the forward fold (one exchange on
@@ -181,8 +180,11 @@ class LinearKalmanSmoother(stateSize: Int, measurementSize: Int)
     * (stateKey, stateIndex desc). The forward fold's output keeps its key
     * partitioning, so the planner adds only a local sort for the backward
     * pass: one exchange where the encoder path has two. Bit-exact vs
-    * [[smoothEncoderBatch]] (KalmanKernelPinSpec). */
+    * [[smoothEncoderBatch]] (KalmanKernelPinSpec). A stream has no last
+    * row to start the backward pass from: it needs [[setFixedLag]]. */
   def smooth(df: DataFrame): DataFrame = {
+    require(!df.isStreaming,
+      "full-pass RTS smoothing needs a batch DataFrame; use setFixedLag to smooth a stream")
     val compute = new LinearKalmanCompute(stateSize, measurementSize, 1.0)
     val fwdKernel = new RtsForwardRowKernel(compute, defaults,
       hasMM = measurementModelCol.isDefined,
@@ -194,10 +196,10 @@ class LinearKalmanSmoother(stateSize: Int, measurementSize: Int)
       hasIM = initialStateDistributionCol.isDefined || initialStateMeanCol.isDefined,
       hasIC = initialStateDistributionCol.isDefined || initialStateCovarianceCol.isDefined)
     val fwdDF = StatefulStage.batchRows(kalmanProjection(df),
-      RtsForwardRowKernel.outputSchema, assumeUnique = assumeUniqueEventTimes, fwdKernel)
+      RtsForwardRowKernel.outputSchema, stageConf, fwdKernel)
     val smoothed = StatefulStage.fold(fwdDF, Seq(col("stateKey"), col("stateIndex").desc),
       RtsBackwardRowKernel.outputSchema, new RtsBackwardRowKernel(stateSize))
-    StatefulStage.userColumns(smoothed, stateKeyCol, eventTimeCol)
+    userColumns(smoothed)
   }
 
   /** Encoder-path RTS kept as the pin-spec reference (pre-kernel plan:
@@ -206,7 +208,7 @@ class LinearKalmanSmoother(stateSize: Int, measurementSize: Int)
     val spark = df.sparkSession
     import spark.implicits._
     val fwdSpec = new ForwardSpec(new LinearKalmanCompute(stateSize, measurementSize, 1.0), defaults)
-    val fwd: Dataset[FiltRecord] = StatefulStage.batch(toKalmanInput(df), fwdSpec)
+    val fwd: Dataset[FiltRecord] = StatefulStage.batch(toKalmanInput(df), fwdSpec, stageConf)
     val s = stateSize
 
     val smoothed = fwd
@@ -227,7 +229,7 @@ class LinearKalmanSmoother(stateSize: Int, measurementSize: Int)
         }
       }
 
-    StatefulStage.userColumns(smoothed.toDF(), stateKeyCol, eventTimeCol)
+    userColumns(smoothed.toDF())
   }
 
   /** Smoothing replaces filtering as this transformer's output: full-pass

@@ -148,9 +148,9 @@ object StatefulStage {
    * Rows that tie on (key, time) and differ elsewhere have no defined fold
    * order in either path.
    */
-  def batchRows(in: DataFrame, outSchema: StructType, assumeUnique: Boolean,
+  def batchRows(in: DataFrame, outSchema: StructType, conf: StageConf,
       kernel: FoldKernel): DataFrame =
-    if (assumeUnique) fold(in, Seq(col("stateKey"), col("eventTime")), outSchema, kernel)
+    if (conf.assumeUniqueKeyTime) fold(in, Seq(col("stateKey"), col("eventTime")), outSchema, kernel)
     else
       fold(in.withColumn("__rowSeq", xxhash64(in.columns.map(col): _*)),
         Seq(col("stateKey"), col("eventTime"), col("__rowSeq")), outSchema, kernel)
@@ -169,19 +169,19 @@ object StatefulStage {
     Bridge.dataFrame(session, StatefulFold(kernel, sorted.order, output, sorted.child))
   }
 
-  /** Renames the engine's stateKey/eventTime columns to the caller's input
-    * column names; without an event-time column, eventTime is dropped. */
-  def userColumns(df: DataFrame, keyCol: Option[String], timeCol: Option[String]): DataFrame = {
-    val keyed = keyCol.fold(df)(df.withColumnRenamed("stateKey", _))
-    timeCol.fold(keyed.drop("eventTime"))(keyed.withColumnRenamed("eventTime", _))
-  }
-
   /** Event time in microseconds, the unit batch sorts by: `getTime` alone
     * drops the sub-millisecond part. */
-  private def micros(t: Timestamp): Long = t.getTime * 1000L + (t.getNanos / 1000) % 1000
+  private[graft] def micros(t: Timestamp): Long = t.getTime * 1000L + (t.getNanos / 1000) % 1000
 
+  /** Rejects a state timeout that is only half configured: Spark would
+    * never fire a mode without a duration, and a duration without a mode
+    * would be dropped. */
   def stream[I <: KeyedIn, S, O](ds: Dataset[I], spec: StateSpec[I, S, O], conf: StageConf)(
       implicit ie: Encoder[I], oe: Encoder[O]): Dataset[O] = {
+    require(conf.timeoutMode == NoTimeout || conf.timeoutDuration.isDefined,
+      s"state timeout mode ${conf.timeoutMode} needs setStateTimeoutDuration")
+    require(conf.timeoutMode != NoTimeout || conf.timeoutDuration.isEmpty,
+      s"state timeout duration ${conf.timeoutDuration.get} needs setStateTimeoutMode(\"process\" or \"event\")")
     import org.apache.spark.sql.{Encoders => Encs}
     // Kryo state-store encoding: ~5-10x smaller/faster than Java
     // serialization for the array-heavy filter states (the output rows still
@@ -206,11 +206,11 @@ object StatefulStage {
           state = spec.update(key, row, state)
           state.foreach { s =>
             gs.update(Wrapped(s))
-            (conf.timeoutMode, conf.timeoutDuration) match {
-              case (EventTimeout, Some(d)) =>
-                row.eventTime.foreach(ts => gs.setTimeoutTimestamp(ts.getTime, d))
-              case (ProcessTimeout, Some(d)) => gs.setTimeoutDuration(d)
-              case _ =>
+            conf.timeoutMode match {
+              case EventTimeout =>
+                row.eventTime.foreach(ts => gs.setTimeoutTimestamp(ts.getTime, conf.timeoutDuration.get))
+              case ProcessTimeout => gs.setTimeoutDuration(conf.timeoutDuration.get)
+              case NoTimeout =>
             }
             out ++= spec.output(key, row, s)
           }
