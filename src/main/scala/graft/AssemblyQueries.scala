@@ -22,8 +22,7 @@ import graft.text.TextFunctions
  */
 object AssemblyQueries {
 
-  private def t(s: SparkSession, dir: String, name: String): DataFrame =
-    s.read.parquet(s"$dir/$name.parquet")
+  import Tables.t
 
   // =================================================================== queries
 

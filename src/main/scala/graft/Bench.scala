@@ -1,6 +1,6 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths, StandardCopyOption}
+import Harness.{jsonString => jq}
 
 /** Benchmark main. Prints ONE JSON line on stdout (and mirrors it to
   * bench.json). Each query runs up to SPARK_GRAFT_BENCH_REPS passes
@@ -31,62 +31,42 @@ import java.nio.file.{Files, Paths, StandardCopyOption}
   * driver-side kill at any point leaves a parseable artifact whose
   * reps_effective map reflects exactly how far the run got. The write is an
   * atomic tmp-file + move so a kill mid-write can't leave torn JSON.
+  *
+  * Per-stage attribution: bench_raw.json's `stages` holds every completed
+  * stage of each query's fastest rep (wall, tasks, run and CPU time, shuffle
+  * read/write bytes and records, input, spill), and bench.json's
+  * `queries_layers` their per-query sums. For one query's stages alone:
+  * SPARK_GRAFT_BENCH_ONLY=q_a SPARK_GRAFT_BENCH_REPS=1 sbt "runMain graft.Bench"
   */
 object Bench {
   def main(args: Array[String]): Unit = {
-    def loadavg: String =
-      try Files.readString(Paths.get("/proc/loadavg")).trim.split(" ").take(3).mkString(" ")
-      catch { case _: Throwable => "" }
     // FIRST statement of the run: snapshot loadavg BEFORE SparkSession
     // creation (round-13 advice — the round-12 capture sat after
     // getOrCreate, so our own JVM warm-up leaked into the "pre-existing
     // load" signal). Note the 1-minute average can still carry a
     // just-finished sbt compile; the loadFlag threshold below scales with
     // the core count for that reason.
-    val loadBefore = loadavg
+    val loadBefore = Harness.loadavg
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
-      math.min(32, Runtime.getRuntime.availableProcessors).toString)
+    val cpus = Harness.cpus
     val reps = sys.env.getOrElse("SPARK_GRAFT_BENCH_REPS", "3").toInt
     val budgetS = sys.env.getOrElse("SPARK_GRAFT_BENCH_BUDGET_S", "1800").toDouble
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // let AQE coalesce post-shuffle partitions of CACHED frames too —
-      // iterative operators (connected components) persist small frontiers
-      // each round, and the default pins them at full shuffle-partition
-      // fan-out (hundreds of empty tasks per iteration)
-      .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning", "true")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    // optional comma-separated subset for targeted iteration (full run default)
+    val names = Harness.only("SPARK_GRAFT_BENCH_ONLY", SparkEntry.queries.keys.toSeq.sorted)
+    val spark = Harness.session(cpus)
     // Per-query executor-CPU / job-count attribution (round 14, VERDICT r13
     // item 2): the 8-core scaling control kept reading ~= the 32-core run
     // because most queries sit on the per-query scheduler floor at sf0.1;
     // CPU and job columns in bench.json let the driver separate real
     // compute from that floor. ADDITIVE artifact fields only — the timed
     // region (exec = toRdd.count per rep) and the stdout line are
-    // unchanged; counters are snapshotted OUTSIDE the timed window and the
-    // listener drain happens after the rep's clock stops.
-    val cpuAcc = new java.util.concurrent.atomic.AtomicLong(0L) // ns
-    val jobAcc = new java.util.concurrent.atomic.AtomicInteger(0)
-    spark.sparkContext.addSparkListener(new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(js: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-        jobAcc.incrementAndGet()
-      override def onStageCompleted(sc: org.apache.spark.scheduler.SparkListenerStageCompleted): Unit =
-        cpuAcc.addAndGet(sc.stageInfo.taskMetrics.executorCpuTime)
-    })
-    def drainListeners(): Unit =
-      org.apache.spark.graftbridge.CoreBridge.waitListenerBusEmpty(spark.sparkContext, 2000)
+    // unchanged; the recorder is marked and read OUTSIDE the timed window.
+    val recorder = new Harness.StageRecorder(spark)
     val cpuTimes = scala.collection.mutable.Map[String, List[Double]]().withDefaultValue(Nil)
     val jobCounts = scala.collection.mutable.Map[String, Int]()
+    val fastestStages = scala.collection.mutable.Map[String, Seq[Harness.StageRow]]()
     val t0 = System.nanoTime()
     def elapsedS: Double = (System.nanoTime() - t0) / 1e9
-    // optional comma-separated subset for targeted iteration (full run default)
-    val only = sys.env.get("SPARK_GRAFT_BENCH_ONLY").map(_.split(",").map(_.trim).toSet)
-    val names = SparkEntry.queries.keys.toSeq.sorted
-      .filter(n => only.forall(_.contains(n)))
 
     val times = scala.collection.mutable.Map[String, List[Double]]().withDefaultValue(Nil)
     val errors = scala.collection.mutable.Map[String, String]()
@@ -101,12 +81,14 @@ object Bench {
       val xs = if (retried.contains(name)) times(name).sorted.take(3) else times(name)
       median(xs)
     }
-    def jq(s: String): String = "\"" + s.flatMap {
-      case '"' => "\\\""; case '\\' => "\\\\"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"; case c => c.toString
-    } + "\""
     def r4(v: Double): Double = math.round(v * 10000).toDouble / 10000
     def r2(v: Double): Double = math.round(v * 100).toDouble / 100
+    // the summary both artifacts and the stdout line are built from
+    def measured: Seq[String] = names.filter(times(_).nonEmpty)
+    def mins: Seq[(String, Double)] = measured.map(n => n -> times(n).min)
+    def errJson: String =
+      errors.toSeq.sorted.map { case (k, v) => jq(k) + ":" + jq(v) }.mkString("{", ",", "}")
+    def repsEffMin: Int = measured.map(times(_).size).minOption.getOrElse(0)
 
     // pinned-baseline comparison context, loaded ONCE up front (it reads
     // only BASELINE.json — independent of the measurements)
@@ -151,14 +133,11 @@ object Bench {
       * artifacts. Called after warm-up and after every completed rep, so a
       * driver timeout at any instant leaves valid partial JSON on disk. */
     def writeArtifacts(partial: Boolean): String = {
-      val measured = names.filter(times(_).nonEmpty)
       val medians = measured.map(n => n -> effMedian(n))
-      val mins = measured.map(n => n -> times(n).min)
       val qs = medians.map { case (k, v) => jq(k) + ":" + r4(v) }.mkString("{", ",", "}")
       val qsMin = mins.map { case (k, v) => jq(k) + ":" + r4(v) }.mkString("{", ",", "}")
       val raw = measured.map(n => jq(n) + ":" + times(n).reverse.mkString("[", ",", "]"))
         .mkString("{", ",", "}")
-      val errJson = errors.toSeq.sorted.map { case (k, v) => jq(k) + ":" + jq(v) }.mkString("{", ",", "}")
       val total = medians.map(_._2).sum
       val totalMin = mins.map(_._2).sum
       // Contention signals (round 12; the round-11 artifact ran 7.7×-inflated
@@ -180,8 +159,6 @@ object Bench {
       //    environmental signal; alone it rides as
       //    `uniform_inflation_uncorroborated` and the per-query
       //    vs_baseline_regressions list trips tools/baseline_gate.py.
-      val repsEffective = measured.map(n => times(n).size)
-      val repsEffMin = if (repsEffective.isEmpty) 0 else repsEffective.min
       val spreadFlag = measured.exists { n =>
         times(n).size >= 2 && effMedian(n) > 1.5 * times(n).min + 0.15
       }
@@ -202,7 +179,7 @@ object Bench {
       if (loadFlag) contendedReasons += f"loadavg-$load1m%.1f-at-1-rep"
       if (uniformCorroborated) contendedReasons += "uniform-baseline-inflation"
       val contended = spreadFlag || loadFlag || uniformCorroborated
-      val loadAfter = loadavg
+      val loadAfter = Harness.loadavg
       val vsBaselineJson: String = baselineCmp match {
         case Right((rnd, base)) =>
           val common = mins.filter { case (n, _) => base.contains(n) }
@@ -225,12 +202,16 @@ object Bench {
         .map(n => jq(n) + ":" + r4(cpuTimes(n).min)).mkString("{", ",", "}")
       val jobsJson = measured.filter(jobCounts.contains)
         .map(n => jq(n) + ":" + jobCounts(n)).mkString("{", ",", "}")
+      val layersJson = measured.map(n => jq(n) + ":" + Harness.layersJson(fastestStages(n)))
+        .mkString("{", ",", "}")
+      val stagesJson = measured.map(n => jq(n) + ":" + fastestStages(n).map(_.json).mkString("[", ",", "]"))
+        .mkString("{", ",", "}")
       val reasonsJson = contendedReasons.toSeq.map(jq).mkString("[", ",", "]")
       val fullLine =
-        s"""{"metric":"total","value":${r4(totalMin)},"unit":"sec","stat":"min","partial":$partial,"covered":${measured.size},"book":${names.size},"queries":$qsMin,"errors":$errJson,"reps":$reps,"reps_effective_min":$repsEffMin,"reps_effective":$repsEffJson,"sf":${jq(sfDir)},"total_min":${r4(totalMin)},"total_median":${r4(total)},"queries_min":$qsMin,"queries_median":$qs,"queries_cpu":$cpuJson,"queries_jobs":$jobsJson,"loadavg_before":${jq(loadBefore)},"loadavg_after":${jq(loadAfter)},"contended":$contended,"contended_reasons":$reasonsJson,"uniform_inflation_uncorroborated":$uniformAlone,"retried":$retriedJson$vsBaselineJson}"""
+        s"""{"metric":"total","value":${r4(totalMin)},"unit":"sec","stat":"min","partial":$partial,"covered":${measured.size},"book":${names.size},"queries":$qsMin,"errors":$errJson,"reps":$reps,"reps_effective_min":$repsEffMin,"reps_effective":$repsEffJson,"sf":${jq(sfDir)},"total_min":${r4(totalMin)},"total_median":${r4(total)},"queries_min":$qsMin,"queries_median":$qs,"queries_cpu":$cpuJson,"queries_jobs":$jobsJson,"queries_layers":$layersJson,"loadavg_before":${jq(loadBefore)},"loadavg_after":${jq(loadAfter)},"contended":$contended,"contended_reasons":$reasonsJson,"uniform_inflation_uncorroborated":$uniformAlone,"retried":$retriedJson$vsBaselineJson}"""
       writeAtomic("bench.json", fullLine + "\n")
       writeAtomic("bench_raw.json",
-        s"""{"raw":$raw,"loadavg_before":${jq(loadBefore)},"loadavg_after":${jq(loadAfter)},"reps":$reps,"partial":$partial,"sf":${jq(sfDir)}}""" + "\n")
+        s"""{"raw":$raw,"stages":$stagesJson,"loadavg_before":${jq(loadBefore)},"loadavg_after":${jq(loadAfter)},"reps":$reps,"partial":$partial,"sf":${jq(sfDir)}}""" + "\n")
       if (!partial) {
         if (spreadFlag)
           System.err.println("[bench] WARNING: median >1.5x min for at least one query — " +
@@ -250,20 +231,29 @@ object Bench {
       fullLine
     }
 
+    /** One timed rep: only the query's action sits inside the clock; the
+      * recorder's drains and the bookkeeping run outside it. */
+    def timedRep(name: String): Double = {
+      recorder.mark()
+      val s0 = System.nanoTime()
+      Harness.run(spark, name, sfDir)
+      val dt = (System.nanoTime() - s0) / 1e9
+      val rec = recorder.since()
+      if (times(name).forall(dt < _)) fastestStages(name) = rec.stages
+      times(name) = dt :: times(name)
+      cpuTimes(name) = rec.cpuS :: cpuTimes(name)
+      jobCounts(name) = rec.jobs
+      dt
+    }
+
     // Discarded warm-up pass over EVERY query (round-2 medians were 3.6x
     // inflated because only one query was warmed: with 3 reps, one cold +
     // one half-warm rep IS the median). JIT, codegen caches, and shuffle
     // machinery all reach steady state before the first timed rep; failures
     // stay silent here — the timed reps report them with context.
     spark.range(1 << 20).selectExpr("sum(id)").collect()
-    // Execute the query's OWN optimized plan (all output columns
-    // materialized). A plain .count() lets Catalyst prune projection-only
-    // work — scan-and-project queries (text kernels, left-join canonicals)
-    // were silently measured as bare row counts.
-    def exec(name: String): Long =
-      SparkEntry.queries(name)(spark, sfDir).queryExecution.toRdd.count()
     for (name <- names) {
-      try { exec(name); () }
+      try { Harness.run(spark, name, sfDir); () }
       catch { case _: Throwable => }
     }
     System.err.println(f"[bench] warm-up pass done at ${elapsedS}%.1fs")
@@ -283,16 +273,8 @@ object Bench {
         xs.min < 1.0 && (xs.max - xs.min) <= 0.15 * xs.min + 0.05
       }
       if ((rep == 1 || elapsedS < budgetS) && !cheapDone) {
-        drainListeners()
-        val cpu0 = cpuAcc.get; val jobs0 = jobAcc.get
-        val s0 = System.nanoTime()
         try {
-          exec(name)
-          val dt = (System.nanoTime() - s0) / 1e9
-          times(name) = dt :: times(name)
-          drainListeners() // outside the timed window
-          cpuTimes(name) = (cpuAcc.get - cpu0) / 1e9 :: cpuTimes(name)
-          jobCounts(name) = jobAcc.get - jobs0
+          val dt = timedRep(name)
           System.err.println(f"[bench] rep$rep $name ${dt}%.2fs (total ${elapsedS}%.1fs)")
         } catch { case e: Throwable =>
           errors(name) = s"${e.getClass.getSimpleName}: ${String.valueOf(e.getMessage).take(80)}"
@@ -317,16 +299,8 @@ object Bench {
         while (flagged && extra < 2 && elapsedS < budgetS * 1.2) {
           extra += 1
           if (!retried.contains(name)) retried += name
-          drainListeners()
-          val cpu0 = cpuAcc.get; val jobs0 = jobAcc.get
-          val s0 = System.nanoTime()
           try {
-            exec(name)
-            val dt = (System.nanoTime() - s0) / 1e9
-            times(name) = dt :: times(name)
-            drainListeners()
-            cpuTimes(name) = (cpuAcc.get - cpu0) / 1e9 :: cpuTimes(name)
-            jobCounts(name) = jobAcc.get - jobs0
+            val dt = timedRep(name)
             System.err.println(f"[bench] retry$extra $name ${dt}%.2fs (contention adjudication)")
           } catch { case _: Throwable => extra = 2 } // warm rep failed: keep original reps
           writeArtifacts(partial = true)
@@ -341,12 +315,7 @@ object Bench {
     // stdout line therefore carries 2-decimal minima ONLY; full-precision
     // medians, minima, raw reps and loadavg live in bench.json/bench_raw
     // .json, which are committed and read directly.
-    val measured = names.filter(times(_).nonEmpty)
-    val mins = measured.map(n => n -> times(n).min)
-    val errJson = errors.toSeq.sorted.map { case (k, v) => jq(k) + ":" + jq(v) }.mkString("{", ",", "}")
     val totalMin = mins.map(_._2).sum
-    val repsEffective = measured.map(n => times(n).size)
-    val repsEffMin = if (repsEffective.isEmpty) 0 else repsEffective.min
     val contendedNow = fullLine.contains(""""contended":true""")
     val total = measured.map(n => effMedian(n)).sum
     def buildLine(prec: Int, entries: Seq[(String, Double)], omitted: Int): String = {

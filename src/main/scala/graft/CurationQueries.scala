@@ -20,8 +20,7 @@ import graft.text.TextFunctions
  */
 object CurationQueries {
 
-  private def t(s: SparkSession, dir: String, name: String): DataFrame =
-    s.read.parquet(s"$dir/$name.parquet")
+  import Tables.t
 
   // =================================================================== queries
 

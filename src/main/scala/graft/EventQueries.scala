@@ -13,12 +13,7 @@ import graft.operators.EventAnalytics
  */
 object EventQueries {
 
-  private def t(s: SparkSession, dir: String, name: String): DataFrame =
-    s.read.parquet(s"$dir/$name.parquet")
-
-  // ts normalized to TIMESTAMP — one shared helper (Tables.events).
-  private def events(s: SparkSession, dir: String): DataFrame =
-    Tables.events(s, dir)
+  import Tables.{t, events}
 
   // =================================================================== queries
 

@@ -20,12 +20,7 @@ import graft.smoother.LinearKalmanSmoother
  */
 object ModelQueries {
 
-  private def t(s: SparkSession, dir: String, name: String): DataFrame =
-    s.read.parquet(s"$dir/$name.parquet")
-
-  // ts normalized to TIMESTAMP — one shared helper (Tables.events).
-  private def events(s: SparkSession, dir: String): DataFrame =
-    Tables.events(s, dir)
+  import Tables.{t, events}
 
   /** unique (user_id, ts) measurement stream, z = avg event value. */
   private def userStream(s: SparkSession, dir: String): DataFrame =

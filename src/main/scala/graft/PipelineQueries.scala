@@ -16,12 +16,7 @@ import graft.text.TextFunctions
  */
 object PipelineQueries {
 
-  private def t(s: SparkSession, dir: String, name: String): DataFrame =
-    s.read.parquet(s"$dir/$name.parquet")
-
-  // ts normalized to TIMESTAMP — one shared helper (Tables.events).
-  private def events(s: SparkSession, dir: String): DataFrame =
-    Tables.events(s, dir)
+  import Tables.{t, events}
 
   /** documents ∪ a truncated copy (ids offset by 100000) — injects known
     * near-duplicates so dedup operators have positives to find. */

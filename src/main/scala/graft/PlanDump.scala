@@ -2,16 +2,14 @@ package graft
 
 /**
  * Dev tool: print the executed physical plan of named SparkEntry queries at
- * sf0.001 — the `.explain` audit loop behind PlanQualitySpec's pins.
+ * sf0.001 — the `.explain` audit loop behind PlanQualitySpec's pins. Runs on
+ * the drivers' session settings at a fixed 4 cores, so a plan matches what
+ * Bench and Verify execute on a 4-core host.
  * Usage: sbt "runMain graft.PlanDump q_bm25 q_fuzzy_join"
  */
 object PlanDump {
   def main(args: Array[String]): Unit = {
-    val spark = org.apache.spark.sql.SparkSession.builder()
-      .master("local[4]").config("spark.sql.shuffle.partitions", 4)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = Harness.session(cpus = "4", logLevel = "ERROR")
     val dir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.001")
     // SPARK_GRAFT_PLAN_OUT: write one <query>.txt per query (the
     // plans/r13/ audit artifacts) instead of stdout; formatted explain.

@@ -22,8 +22,7 @@ import graft.sim.Similarity
  */
 object RetrievalQueries {
 
-  private def t(s: SparkSession, dir: String, name: String): DataFrame =
-    s.read.parquet(s"$dir/$name.parquet")
+  import Tables.{t, events}
 
   /** Query fixture shared by q_bm25 / q_rrf: 3 highest-df word-BIGRAM terms
     * of >= 4 chars with df < n_docs/10 (informative head; see
@@ -85,7 +84,7 @@ object RetrievalQueries {
     }),
 
     "q_seasonality" -> ((s, dir) =>
-      EventAnalytics.seasonality(Tables.events(s, dir), "event_type", "ts")),
+      EventAnalytics.seasonality(events(s, dir), "event_type", "ts")),
 
     "q_rank_eval" -> ((s, dir) => {
       // retrieval EVALUATION: how far apart are the lexical and vector views

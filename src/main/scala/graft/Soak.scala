@@ -191,30 +191,16 @@ object Soak {
     // clique corpora get their own suffix for the same reason
     val soakDir = sys.env.getOrElse("SPARK_GRAFT_SOAK_DIR",
       if (clique > 0) s"target/soak/scale${scale}c$clique" else s"target/soak/scale$scale")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
-      math.min(32, Runtime.getRuntime.availableProcessors).toString)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // AQE may re-coalesce cached-plan output (see Bench.scala note)
-      .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning", "true")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-
     // Optional subset (comma-separated names): adjudicate or extend a prior
     // recorded run without re-timing all ~50 queries (mirrors
-    // SPARK_GRAFT_BENCH_ONLY). The semdedup k-scaled extra only runs on
-    // full sweeps or when named explicitly.
-    val only = sys.env.get("SPARK_GRAFT_SOAK_ONLY").map(_.split(",").map(_.trim).toSet)
-    val selected = only.fold(SoakQueries)(s => SoakQueries.filter(s.contains))
-    val runSemDedup = only.forall(_.contains("q_semdedup_kscaled"))
-    val runAnnIncKscaled = only.forall(_.contains("q_ann_inc_kscaled_hiertrain"))
-    // fail on a typo'd ONLY list BEFORE the expensive generate/warm phases
-    require(selected.nonEmpty || runSemDedup || runAnnIncKscaled,
-      s"SPARK_GRAFT_SOAK_ONLY matched no soak queries: ${only.get.mkString(",")}")
+    // SPARK_GRAFT_BENCH_ONLY). The two k-scaled extras only run on full
+    // sweeps or when named explicitly. Parsed (and a typo'd name rejected)
+    // BEFORE the expensive generate/warm phases.
+    val extras = Seq("q_semdedup_kscaled", "q_ann_inc_kscaled_hiertrain")
+    val only = Harness.only("SPARK_GRAFT_SOAK_ONLY", SoakQueries ++ extras)
+    val selected = only.filterNot(extras.contains)
+    val spark = Harness.session()
+    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
 
     if (!Files.exists(Paths.get(soakDir, "_DONE"))) {
       System.err.println(s"[soak] generating ${scale}x data into $soakDir" +
@@ -223,20 +209,12 @@ object Soak {
       Files.writeString(Paths.get(soakDir, "_DONE"), s"$scale c$clique")
     }
 
-    // Execute each query's OWN optimized plan — .count() lets Catalyst
-    // prune projection-only work and fakes the scan-shaped queries' cost.
-    def exec(name: String, dir: String): Long =
-      SparkEntry.queries(name)(spark, dir).queryExecution.toRdd.count()
-
     // Warm-up (JIT + codegen caches) so base-vs-soak ratios compare steady
     // state against steady state, not cold JVM against warm.
     for (name <- selected)
-      try { exec(name, baseDir); () } catch { case _: Throwable => }
+      try { Harness.run(spark, name, baseDir); () } catch { case _: Throwable => }
 
-    def loadavg: String =
-      try Files.readString(Paths.get("/proc/loadavg")).trim.split(" ").take(3).mkString(" ")
-      catch { case _: Throwable => "" }
-    val load0 = loadavg
+    val load0 = Harness.loadavg
 
     // Min of `reps` timings per measurement: this host shows sporadic
     // heavy external CPU steal (identical runs swing 5-10x), and a ratio
@@ -244,30 +222,25 @@ object Soak {
     // contention-free estimate — same self-adjudication Bench.scala uses
     // for the headline number.
     val reps = sys.env.getOrElse("SPARK_GRAFT_SOAK_REPS", "2").toInt
-    def time(name: String, dir: String): (Double, Long) = {
-      val samples = (1 to reps).map { _ =>
-        val t0 = System.nanoTime()
-        val n = exec(name, dir)
-        ((System.nanoTime() - t0) / 1e9, n)
-      }
-      (samples.map(_._1).min, samples.head._2)
-    }
-
-    val rows0 = selected.map { name =>
-      val (bs, brows) = time(name, baseDir)
-      val (ss, srows) = time(name, soakDir)
+    /** One soak row: `run(dir, k)` timed at the base and the soak scale;
+      * `k` is 32 at the base and 32·scale at the soak (the k ∝ N extras). */
+    def soakRow(name: String)(run: (String, Int) => Long) = {
+      val (bs, brows) = Harness.minOf(reps)(run(baseDir, 32))
+      val (ss, srows) = Harness.minOf(reps)(run(soakDir, 32 * scale))
       val ratio = ss / bs
       System.err.println(
         f"[soak] $name%-18s base ${bs}%6.2fs ($brows%d rows)  soak ${ss}%6.2fs ($srows%d rows)  ratio ${ratio}%5.2fx")
       (name, bs, brows, ss, srows, ratio)
     }
 
+    val rows0 = selected.map(name => soakRow(name)((dir, _) => Harness.run(spark, name, dir)))
+
     // SemDeDup soaks with k PROPORTIONAL to the corpus (the paper's regime:
     // cluster count tracks N, so per-cluster occupancy — and the bounded
     // quadratic within each cluster — stays constant). A fixed k under 10x
     // data would measure the known quadratic on purpose-missized clusters,
     // not the operator's scaling design.
-    val rows = if (!runSemDedup) rows0 else rows0 :+ {
+    val rows = if (!only.contains("q_semdedup_kscaled")) rows0 else rows0 :+ {
       // hierAssign: flat nearest-centroid is O(N·k) per pass — with k ∝ N
       // that's the hidden quadratic; two-level routing is O(N·sqrt(k))
       def semdedup(dir: String, k: Int): Long =
@@ -276,20 +249,7 @@ object Soak {
             k = k, iters = 2, threshold = 0.42, hierAssign = true)
           .queryExecution.toRdd.count()
       semdedup(baseDir, 32) // warm
-      def timeSem(dir: String, k: Int): (Double, Long) = {
-        val samples = (1 to reps).map { _ =>
-          val t0 = System.nanoTime()
-          val n = semdedup(dir, k)
-          ((System.nanoTime() - t0) / 1e9, n)
-        }
-        (samples.map(_._1).min, samples.head._2)
-      }
-      val (bs, brows) = timeSem(baseDir, 32)
-      val (ss, srows) = timeSem(soakDir, 32 * scale)
-      val ratio = ss / bs
-      System.err.println(
-        f"[soak] q_semdedup_kscaled base ${bs}%6.2fs ($brows%d rows)  soak ${ss}%6.2fs ($srows%d rows)  ratio ${ratio}%5.2fx")
-      ("q_semdedup_kscaled", bs, brows, ss, srows, ratio)
+      soakRow("q_semdedup_kscaled")(semdedup)
     }
 
     // Incremental-ANN k ∝ N regime (round 11): the plain q_ann_incremental
@@ -298,7 +258,7 @@ object Soak {
     // wrong regime. The scale path keeps per-cell occupancy constant
     // (k = 32·scale) and hier-routes BOTH sides (O(√k) per row, probes
     // co-partition-join instead of broadcasting).
-    val rows2 = if (!runAnnIncKscaled) rows else rows :+ {
+    val rows2 = if (!only.contains("q_ann_inc_kscaled_hiertrain")) rows else rows :+ {
       import org.apache.spark.sql.functions.col
       def annInc(dir: String, k: Int): Long = {
         val emb = spark.read.parquet(s"$dir/embeddings.parquet")
@@ -314,23 +274,10 @@ object Soak {
           .queryExecution.toRdd.count()
       }
       annInc(baseDir, 32) // warm
-      def timeAnn(dir: String, k: Int): (Double, Long) = {
-        val samples = (1 to reps).map { _ =>
-          val t0 = System.nanoTime()
-          val n = annInc(dir, k)
-          ((System.nanoTime() - t0) / 1e9, n)
-        }
-        (samples.map(_._1).min, samples.head._2)
-      }
-      val (bs, brows) = timeAnn(baseDir, 32)
-      val (ss, srows) = timeAnn(soakDir, 32 * scale)
-      val ratio = ss / bs
-      System.err.println(
-        f"[soak] q_ann_inc_kscaled_hiertrain base ${bs}%6.2fs ($brows%d rows)  soak ${ss}%6.2fs ($srows%d rows)  ratio ${ratio}%5.2fx")
       // renamed in round 12: the official q_ann_incremental_kscaled row now
       // rides SoakQueries (flat-trained, k = Nh/16); this hand-rolled extra
       // keeps the hierAssign-TRAINED variant (k = 32*scale) under watch
-      ("q_ann_inc_kscaled_hiertrain", bs, brows, ss, srows, ratio)
+      soakRow("q_ann_inc_kscaled_hiertrain")(annInc)
     }
 
     val qjson = rows2.map { case (n, bs, br, ss, sr, r) =>
@@ -339,7 +286,7 @@ object Soak {
     val worst = rows2.map(_._6).max
     val cliqueJson = if (clique > 0) s""","clique":$clique""" else ""
     val line =
-      s"""{"metric":"soak_worst_ratio","value":$worst,"unit":"x","scale":$scale$cliqueJson,"reps":$reps,"stat":"min","queries":$qjson,"base":"$baseDir","loadavg_start":"$load0","loadavg_end":"$loadavg"}"""
+      s"""{"metric":"soak_worst_ratio","value":$worst,"unit":"x","scale":$scale$cliqueJson,"reps":$reps,"stat":"min","queries":$qjson,"base":${Harness.jsonString(baseDir)},"loadavg_start":"$load0","loadavg_end":"${Harness.loadavg}"}"""
     println(line)
     Files.writeString(Paths.get("soak.json"), line + "\n")
     spark.stop()

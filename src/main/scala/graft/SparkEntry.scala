@@ -9,12 +9,7 @@ import graft.linalg.DMat
 /** Driver contract — see /root/repo/SURVEY.md §2 for the inventory. */
 object SparkEntry {
 
-  private def t(s: SparkSession, dir: String, name: String): DataFrame =
-    s.read.parquet(s"$dir/$name.parquet")
-
-  /** events with ts normalized to TIMESTAMP (see [[Tables.events]]). */
-  private def events(s: SparkSession, dir: String): DataFrame =
-    Tables.events(s, dir)
+  import Tables.{t, events}
 
   /**
    * Measurement stream with a unique (key, ts) so the sequential filters and

@@ -22,8 +22,7 @@ import graft.text.{BpeTrainer, SubwordTokenizer, TextFunctions}
  */
 object TokenizerQueries {
 
-  private def t(s: SparkSession, dir: String, name: String): DataFrame =
-    s.read.parquet(s"$dir/$name.parquet")
+  import Tables.t
 
   private val MaxLen = 4
   private val VocabSize = 256

@@ -20,8 +20,7 @@ import graft.text.{TextClassifiers, TextFunctions}
  */
 object TrainingQueries {
 
-  private def t(s: SparkSession, dir: String, name: String): DataFrame =
-    s.read.parquet(s"$dir/$name.parquet")
+  import Tables.t
 
   // =================================================================== queries
 

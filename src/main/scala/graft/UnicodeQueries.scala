@@ -27,8 +27,7 @@ import graft.text.UnicodeText
  */
 object UnicodeQueries {
 
-  private def t(s: SparkSession, dir: String, name: String): DataFrame =
-    s.read.parquet(s"$dir/$name.parquet")
+  import Tables.t
 
   // ------------------------------------------------------------- fixtures
 

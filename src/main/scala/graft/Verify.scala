@@ -1,6 +1,6 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
+import Harness.{jsonString => q}
 
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare.
@@ -70,57 +70,30 @@ object Verify {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
     val t0 = System.nanoTime()
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
-      math.min(32, Runtime.getRuntime.availableProcessors).toString)
+    // SPARK_GRAFT_VERIFY_ONLY=q_a,q_b runs a subset (targeted re-checks
+    // after an oracle edit without the full sweep); default = everything.
+    val ordered = Harness.only("SPARK_GRAFT_VERIFY_ONLY", SparkEntry.queries.keys.toSeq)
+      .sortBy { n => val i = costOrder.indexOf(n); (if (i < 0) Int.MaxValue else i, n) }
     val budgetS = sys.env.getOrElse("SPARK_GRAFT_VERIFY_BUDGET_S", "2400").toDouble
     new java.io.File(outDir).mkdirs()
 
-    // JSON string escape: backslash, quote, and ALL control chars (<0x20)
-    // — a tab or CR in builder-authored SQL would otherwise make the
-    // driver's json.load fail and silently zero the round's correctness.
-    def q(s: String): String = "\"" + s.flatMap {
-      case '"'  => "\\\""
-      case '\\' => "\\\\"
-      case '\n' => "\\n"
-      case '\r' => "\\r"
-      case '\t' => "\\t"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
     val json = SparkEntry.oracleSql
       .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
     System.err.println(s"[verify] oracle_sql.json written (${SparkEntry.oracleSql.size} oracles)")
 
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // AQE may re-coalesce cached-plan output (see Bench.scala note)
-      .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning", "true")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Harness.session()
 
     def elapsedS: Double = (System.nanoTime() - t0) / 1e9
-    // SPARK_GRAFT_VERIFY_ONLY=q_a,q_b runs a subset (targeted re-checks
-    // after an oracle edit without the full sweep); default = everything.
-    val only = sys.env.get("SPARK_GRAFT_VERIFY_ONLY")
-      .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
-    val ordered = SparkEntry.queries.toSeq
-      .filter { case (n, _) => only.forall(_.contains(n)) }
-      .sortBy { case (n, _) =>
-        val i = costOrder.indexOf(n); (if (i < 0) Int.MaxValue else i, n)
-      }
     var failures = 0
-    ordered.foreach { case (name, fn) =>
+    ordered.foreach { name =>
       if (elapsedS > budgetS) {
         System.err.println(f"[verify] $name SKIPPED (budget ${budgetS}%.0fs exceeded at ${elapsedS}%.1fs)")
       } else {
-        val s0 = System.nanoTime()
         try {
-          fn(spark, sfDir).coalesce(1).write.mode("overwrite").parquet(s"$outDir/$name")
-          System.err.println(f"[verify] $name ok in ${(System.nanoTime() - s0) / 1e9}%.1fs (total ${elapsedS}%.1fs)")
+          val (s, _) = Harness.minOf(1)(SparkEntry.queries(name)(spark, sfDir)
+            .coalesce(1).write.mode("overwrite").parquet(s"$outDir/$name"))
+          System.err.println(f"[verify] $name ok in ${s}%.1fs (total ${elapsedS}%.1fs)")
         } catch { case e: Throwable =>
           failures += 1
           System.err.println(s"[verify] $name FAILED: ${e.getClass.getSimpleName}: ${e.getMessage}")
