@@ -390,28 +390,25 @@ abstract class KalmanFilterBase[Impl <: KalmanFilterBase[Impl]](
     calcLoglikelihood, calcMahalanobis, calcSlidingLikelihood, outputSystemMatrices)
 
   /** Run the filter; batch or streaming chosen from the input DataFrame.
-    * Both run [[spec]]: batch through its row driver ([[KalmanRowKernel]],
-    * no per-row encoder round trip), streaming through the state store. */
+    * Both fold [[kalmanProjection]] with one [[KalmanRowKernel]]: batch in
+    * a fold plan node, streaming from each key's stored `KState`. */
   def transform(df: DataFrame): DataFrame = {
+    val kernel = new KalmanRowKernel(compute, defaults, storeResidual,
+      slidingLikelihoodWindow, multiStepPredict,
+      calcLoglikelihood, calcMahalanobis, calcSlidingLikelihood, outputSystemMatrices,
+      hasMM = measurementModelCol.isDefined,
+      hasMN = measurementNoiseCol.isDefined,
+      hasPM = processModelCol.isDefined,
+      hasPN = processNoiseCol.isDefined,
+      hasCtl = controlCol.isDefined,
+      hasCtlFn = controlFunctionCol.isDefined,
+      hasIM = initialStateDistributionCol.isDefined || initialStateMeanCol.isDefined,
+      hasIC = initialStateDistributionCol.isDefined || initialStateCovarianceCol.isDefined)
+    val in = kalmanProjection(df)
     val out0 =
-      if (df.isStreaming) {
-        val spark = df.sparkSession
-        import spark.implicits._
-        StatefulStage.run(toKalmanInput(df), spec, stageConf).toDF()
-      } else {
-        val kernel = new KalmanRowKernel(compute, defaults, storeResidual,
-          slidingLikelihoodWindow, multiStepPredict,
-          calcLoglikelihood, calcMahalanobis, calcSlidingLikelihood, outputSystemMatrices,
-          hasMM = measurementModelCol.isDefined,
-          hasMN = measurementNoiseCol.isDefined,
-          hasPM = processModelCol.isDefined,
-          hasPN = processNoiseCol.isDefined,
-          hasCtl = controlCol.isDefined,
-          hasCtlFn = controlFunctionCol.isDefined,
-          hasIM = initialStateDistributionCol.isDefined || initialStateMeanCol.isDefined,
-          hasIC = initialStateDistributionCol.isDefined || initialStateCovarianceCol.isDefined)
-        StatefulStage.batchRows(kalmanProjection(df), KalmanRowKernel.outputSchema, stageConf, kernel)
-      }
+      if (df.isStreaming)
+        StatefulStage.stream(in, KalmanRowKernel.outputSchema, stageConf, kernel, KalmanRowKernel.state)
+      else StatefulStage.batchRows(in, KalmanRowKernel.outputSchema, stageConf, kernel)
     val out = finalizeColumns(out0)
     if (mmaeEnabled) mmaeAggregate(out) else out
   }

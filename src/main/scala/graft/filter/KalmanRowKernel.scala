@@ -7,10 +7,10 @@ import org.apache.spark.sql.types.StructType
 
 import graft.linalg.DMat
 import graft.state.RowCodec._
-import graft.state.SpecKernel
+import graft.state.{SpecKernel, StateCodec}
 
 /**
- * Batch row kernel of the Kalman family (LKF/EKF/UKF/CKF/RAUKF, multi-step
+ * Row kernel of the Kalman family (LKF/EKF/UKF/CKF/RAUKF, multi-step
  * prediction, the MMAE bank): [[KalmanSpec]] driven over the canonical
  * 11-column input projection ([[KalmanFilterBase.kalmanProjection]]),
  * writing `KalmanOut`-shaped rows with no Dataset-encoder round trip.
@@ -33,7 +33,7 @@ final class KalmanRowKernel(
       computeLL, computeMaha, computeSliding, emitSystemMatrices),
     new KalmanRowInput(hasMM, hasMN, hasPM, hasPN, hasCtl, hasCtlFn, hasIM, hasIC).decode,
     KalmanRowKernel.encode,
-    timeOut = 3)
+    timeOut = Some(3))
 
 /** Decodes the canonical 11-column Kalman input projection shared by the
   * Kalman and RTS forward kernels into the `KalmanIn` that
@@ -57,9 +57,15 @@ private[graft] final class KalmanRowInput(
 }
 
 object KalmanRowKernel {
-  /** Exactly the schema `StatefulStage.run(...).toDF()` yields on the
-    * encoder path (same Product encoder). */
+  /** Exactly the schema the encoder path yields (same Product encoder). */
   val outputSchema: StructType = Encoders.product[KalmanOut].schema
+
+  /** The streamed state: `KState` as its struct. */
+  private[graft] lazy val state = StateCodec[KState](Encoders.product[KState].schema,
+    s => row(s.stateIndex, vector(s.mean), vector(s.cov), nullable(s.residualMean)(vector),
+      nullable(s.residualCov)(vector), vector(s.slidingLL.toArray), nullable(s.adaptiveQ)(vector)),
+    r => KState(r.getLong(0), readVector(r, 1), readVector(r, 2), optVector(r, 3), optVector(r, 4),
+      readVector(r, 5).toList, optVector(r, 6)))
 
   private def encode(o: KalmanOut): GenericInternalRow = new GenericInternalRow(Array[Any](
     null, o.stateIndex, o.stepIndex, null,

@@ -68,7 +68,7 @@ class RecursiveLeastSquaresFilter(val featuresSize: Int)
 
   override protected def defaultStateKey: String = "rls.default"
 
-  /** Input of the encoder engine: the streaming path and the batch reference. */
+  /** Input of the encoder engine, the batch reference. */
   private def encoderInput(df: DataFrame): Dataset[RlsIn] = {
     val spark = df.sparkSession
     import spark.implicits._
@@ -89,32 +89,28 @@ class RecursiveLeastSquaresFilter(val featuresSize: Int)
   private def spec = new RlsSpec(forgettingFactor, featuresSize)
 
   def transform(df: DataFrame): DataFrame = {
-    val spark = df.sparkSession
-    import spark.implicits._
-    val out = if (df.isStreaming) {
-      StatefulStage.run(encoderInput(df), spec, stageConf).toDF()
-    } else {
-      // InternalRow kernel: constant init/regularization live in the kernel
-      // closure, NOT as typedLit columns shuffled with every row (the
-      // encoder path ships ~(n + n²) doubles of constants per row).
-      val imExpr = initialStateDistributionCol.map(c => col(c).getField("mean").cast("array<double>"))
-        .orElse(initialEstimateCol.map(c => col(c).cast("array<double>")))
-      val icExpr = initialStateDistributionCol.map(c => MatrixColumn(col(c).getField("covariance")))
-        .orElse(regularizationMatrixCol.map(c => MatrixColumn(col(c))))
-      val cols = scala.collection.mutable.ArrayBuffer(
-        keyExpr.as("stateKey"),
-        timeExpr.as("eventTime"),
-        col(labelCol).cast("double").as("label"),
-        col(featuresCol).cast("array<double>").as("features"))
-      if (imExpr.isDefined || icExpr.isDefined)
-        cols += imExpr.getOrElse(lit(null).cast("array<double>")).as("initialMean")
-      icExpr.foreach(e => cols += e.as("initialCovariance"))
-      val kernel = new RlsRowKernel(forgettingFactor, featuresSize,
-        initialEstimate, regularizationMatrix,
-        hasIM = imExpr.isDefined, hasIC = icExpr.isDefined)
-      StatefulStage.batchRows(df.select(cols.toSeq: _*), RlsRowKernel.outputSchema, stageConf, kernel)
-    }
-    userColumns(out)
+    // constant init/regularization live in the kernel, NOT as typedLit
+    // columns shuffled with every row (the encoder path ships ~(n + n²)
+    // doubles of constants per row)
+    val imExpr = initialStateDistributionCol.map(c => col(c).getField("mean").cast("array<double>"))
+      .orElse(initialEstimateCol.map(c => col(c).cast("array<double>")))
+    val icExpr = initialStateDistributionCol.map(c => MatrixColumn(col(c).getField("covariance")))
+      .orElse(regularizationMatrixCol.map(c => MatrixColumn(col(c))))
+    val cols = scala.collection.mutable.ArrayBuffer(
+      keyExpr.as("stateKey"),
+      timeExpr.as("eventTime"),
+      col(labelCol).cast("double").as("label"),
+      col(featuresCol).cast("array<double>").as("features"))
+    if (imExpr.isDefined || icExpr.isDefined)
+      cols += imExpr.getOrElse(lit(null).cast("array<double>")).as("initialMean")
+    icExpr.foreach(e => cols += e.as("initialCovariance"))
+    val kernel = new RlsRowKernel(forgettingFactor, featuresSize,
+      initialEstimate, regularizationMatrix,
+      hasIM = imExpr.isDefined, hasIC = icExpr.isDefined)
+    val in = df.select(cols.toSeq: _*)
+    userColumns(
+      if (df.isStreaming) StatefulStage.stream(in, RlsRowKernel.outputSchema, stageConf, kernel, RlsRowKernel.state)
+      else StatefulStage.batchRows(in, RlsRowKernel.outputSchema, stageConf, kernel))
   }
 
   /** Encoder-path batch execution kept as the pin-spec reference. */
@@ -198,7 +194,7 @@ class LeastMeanSquaresFilter(val featuresSize: Int)
 
   override protected def defaultStateKey: String = "lms.default"
 
-  /** Input of the encoder engine: the streaming path and the batch reference. */
+  /** Input of the encoder engine, the batch reference. */
   private def encoderInput(df: DataFrame): Dataset[LmsIn] = {
     val spark = df.sparkSession
     import spark.implicits._
@@ -214,22 +210,18 @@ class LeastMeanSquaresFilter(val featuresSize: Int)
   private def spec = new LmsSpec(learningRate, regularization)
 
   def transform(df: DataFrame): DataFrame = {
-    val spark = df.sparkSession
-    import spark.implicits._
-    val out = if (df.isStreaming) {
-      StatefulStage.run(encoderInput(df), spec, stageConf).toDF()
-    } else {
-      val cols = scala.collection.mutable.ArrayBuffer(
-        keyExpr.as("stateKey"),
-        timeExpr.as("eventTime"),
-        col(labelCol).cast("double").as("label"),
-        col(featuresCol).cast("array<double>").as("features"))
-      initialEstimateCol.foreach(c => cols += col(c).cast("array<double>").as("initialMean"))
-      val kernel = new LmsRowKernel(learningRate, regularization,
-        initialEstimate, hasIM = initialEstimateCol.isDefined)
-      StatefulStage.batchRows(df.select(cols.toSeq: _*), LmsRowKernel.outputSchema, stageConf, kernel)
-    }
-    userColumns(out)
+    val cols = scala.collection.mutable.ArrayBuffer(
+      keyExpr.as("stateKey"),
+      timeExpr.as("eventTime"),
+      col(labelCol).cast("double").as("label"),
+      col(featuresCol).cast("array<double>").as("features"))
+    initialEstimateCol.foreach(c => cols += col(c).cast("array<double>").as("initialMean"))
+    val kernel = new LmsRowKernel(learningRate, regularization,
+      initialEstimate, hasIM = initialEstimateCol.isDefined)
+    val in = df.select(cols.toSeq: _*)
+    userColumns(
+      if (df.isStreaming) StatefulStage.stream(in, LmsRowKernel.outputSchema, stageConf, kernel, LmsRowKernel.state)
+      else StatefulStage.batchRows(in, LmsRowKernel.outputSchema, stageConf, kernel))
   }
 
   /** Encoder-path batch execution kept as the pin-spec reference. */

@@ -6,10 +6,10 @@ import org.apache.spark.sql.types.StructType
 
 import graft.linalg.DMat
 import graft.state.RowCodec._
-import graft.state.SpecKernel
+import graft.state.{SpecKernel, StateCodec}
 
 /**
- * Batch row kernels of RLS and LMS: [[RlsSpec]] and [[LmsSpec]] driven over
+ * Row kernels of RLS and LMS: [[RlsSpec]] and [[LmsSpec]] driven over
  * the lean (stateKey, eventTime, label, features[, initialMean]
  * [, initialCovariance]) projection. Unlike the encoder path, constant
  * initial state and regularization ride in the kernel instead of being
@@ -31,6 +31,10 @@ final class RlsRowKernel(
 
 object RlsRowKernel {
   val outputSchema: StructType = Encoders.product[RlsOut].schema
+
+  private[graft] lazy val state = StateCodec[RlsState](Encoders.product[RlsState].schema,
+    s => row(s.stateIndex, vector(s.mean), vector(s.cov)),
+    r => RlsState(r.getLong(0), readVector(r, 1), readVector(r, 2)))
 }
 
 final class LmsRowKernel(
@@ -44,4 +48,8 @@ final class LmsRowKernel(
 
 object LmsRowKernel {
   val outputSchema: StructType = Encoders.product[LmsOut].schema
+
+  private[graft] lazy val state = StateCodec[LmsState](Encoders.product[LmsState].schema,
+    s => row(s.stateIndex, vector(s.mean)),
+    r => LmsState(r.getLong(0), readVector(r, 1)))
 }

@@ -91,7 +91,7 @@ private[mixture] case class MixIn(
     initialWeights: Option[Array[Double]] = None,
     initialParams: Option[Array[Array[Double]]] = None) extends KeyedIn
 
-private[mixture] case class MixState(
+private[graft] case class MixState(
     stateIndex: Long,
     buffer: List[Array[Double]],
     summaryWeights: Array[Double],
@@ -323,13 +323,13 @@ abstract class MixtureBase[Impl <: MixtureBase[Impl]](val mixtureCount: Int)
       StatefulStage.batch(mixProjection(df).as[MixIn],
         new BatchEmSpec(family, mixtureCount, initialWeights, initialParams,
           batchTrainMaxIter, batchTrainTol), stageConf).toDF()
-    } else if (df.isStreaming) {
-      StatefulStage.run(mixProjection(df).as[MixIn],
-        new MixtureSpec(family, mixtureCount, initialWeights, initialParams), stageConf).toDF()
     } else {
       // the same MixtureSpec, driven over InternalRows
       val kernel = new MixtureRowKernel(family, mixtureCount, initialWeights, initialParams)
-      StatefulStage.batchRows(mixProjection(df), MixtureRowKernel.outputSchema, stageConf, kernel)
+      if (df.isStreaming)
+        StatefulStage.stream(mixProjection(df), MixtureRowKernel.outputSchema, stageConf, kernel,
+          MixtureRowKernel.state)
+      else StatefulStage.batchRows(mixProjection(df), MixtureRowKernel.outputSchema, stageConf, kernel)
     })
     userColumns(out)
   }

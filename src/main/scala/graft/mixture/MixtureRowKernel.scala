@@ -1,16 +1,14 @@
 package graft.mixture
 
 import org.apache.spark.sql.Encoders
-import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
-import org.apache.spark.sql.catalyst.util.GenericArrayData
 import org.apache.spark.sql.types.StructType
 
-import graft.state.{FoldKernel, SpecKernel}
+import graft.state.{SpecKernel, StateCodec}
 import graft.state.RowCodec._
 
 /**
- * Batch row kernel of the online (stochastic-EM) mixtures: [[MixtureSpec]]
+ * Row kernel of the online (stochastic-EM) mixtures: [[MixtureSpec]]
  * driven over the canonical 9-column MixIn projection, writing MixtureOut
  * rows with no Dataset-encoder round trip. The batch-EM variant
  * (`setEnableBatchTrain`) stays on the encoder engine, which runs its
@@ -22,24 +20,21 @@ final class MixtureRowKernel(
     family: MixtureFamily,
     k: Int,
     initWeights: Array[Double],
-    initParams: Array[Array[Double]]) extends FoldKernel {
-
-  private val fold = new SpecKernel[MixIn, MixState, MixtureOut](
-    new MixtureSpec(family, k, initWeights, initParams),
+    initParams: Array[Array[Double]])
+  extends SpecKernel[MixIn, MixState, MixtureOut](new MixtureSpec(family, k, initWeights, initParams),
     row => MixIn(null, None, readVector(row, 2), row.getDouble(3), row.getDouble(4),
       row.getInt(5), row.getInt(6),
       if (row.isNullAt(7)) None else Some(readVector(row, 7)),
-      if (row.isNullAt(8)) None else {
-        val outer = row.getArray(8)
-        Some(Array.tabulate(outer.numElements())(j => outer.getArray(j).toDoubleArray))
-      }),
+      if (row.isNullAt(8)) None else Some(readVectors(row, 8))),
     o => new GenericInternalRow(Array[Any](
-      null, o.stateIndex, null, vector(o.weights),
-      new GenericArrayData(o.params.map(p => vector(p): Any)), o.loglikelihood)))
-
-  def run(rows: Iterator[InternalRow]): Iterator[InternalRow] = fold.run(rows)
-}
+      null, o.stateIndex, null, vector(o.weights), vectors(o.params), o.loglikelihood)))
 
 object MixtureRowKernel {
   val outputSchema: StructType = Encoders.product[MixtureOut].schema
+
+  private[graft] lazy val state = StateCodec[MixState](Encoders.product[MixState].schema,
+    s => row(s.stateIndex, vectors(s.buffer.toArray), vector(s.summaryWeights), vectors(s.summaryMoments),
+      vector(s.weights), vectors(s.params), s.loglikelihood),
+    r => MixState(r.getLong(0), readVectors(r, 1).toList, readVector(r, 2), readVectors(r, 3),
+      readVector(r, 4), readVectors(r, 5), r.getDouble(6)))
 }

@@ -7,7 +7,7 @@ import org.apache.spark.sql.functions._
 
 import graft.filter.{KalmanIn, LinearKalmanCompute, LinearKalmanFilter}
 import graft.linalg.{DMat, Dense}
-import graft.state.{KeyedIn, StateSpec, StatefulStage}
+import graft.state.{KeyedIn, StageConf, StateSpec, StatefulStage}
 
 /** Forward-pass record: filtered + predicted moments and the process model,
   * everything the RTS backward recursion needs. */
@@ -114,7 +114,7 @@ private[smoother] object BackwardSpec {
   }
 }
 
-private[smoother] case class FwdState(
+private[graft] case class FwdState(
     stateIndex: Long, mean: Array[Double], cov: Array[Double]) extends Serializable
 
 /** LKF forward pass that keeps the predicted moments alongside the filtered
@@ -163,17 +163,61 @@ class LinearKalmanSmoother(stateSize: Int, measurementSize: Int)
   /** Switch to fixed-lag smoothing (bounded state; streaming-capable). */
   def setFixedLag(v: Int): this.type = { require(v > 1); fixedLag = Some(v); this }
 
-  /** Fixed-lag smoothing: forward filter chained into a bounded-window
-    * backward replay; both stages run on the shared stateful engine, so the
-    * same code serves batch and streaming. */
+  /** Fixed-lag smoothing: the forward fold chained into a bounded-window
+    * backward replay ([[RtsLagRowKernel]]), each a row fold in batch and in
+    * streaming, where the states are the forward `FwdState` and the lag
+    * window. The window takes each key's forward records in the order the
+    * forward fold made them, stateIndex order: records of tied or null
+    * times have no other order that the backward step can pair. */
   def smoothFixedLag(df: DataFrame, lag: Int): DataFrame = {
+    val lagKernel = new RtsLagRowKernel(lag, stateSize)
+    val conf = StageConf()
+    val in = kalmanProjection(df)
+    val lagged = if (df.isStreaming) {
+      val fwd = StatefulStage.stream(in, RtsForwardRowKernel.outputSchema, conf, forwardKernel,
+        RtsForwardRowKernel.state)
+      StatefulStage.streamFold(fwd, Seq("stateIndex"), RtsLagRowKernel.outputSchema, conf, lagKernel,
+        RtsLagRowKernel.state)
+    } else {
+      val fwd = StatefulStage.batchRows(in, RtsForwardRowKernel.outputSchema, conf, forwardKernel)
+      StatefulStage.fold(fwd, Seq(col("stateKey"), col("stateIndex")), RtsLagRowKernel.outputSchema, lagKernel)
+    }
+    userColumns(lagged)
+  }
+
+  /** Encoder-path fixed-lag smoothing kept as the pin-spec reference: the
+    * forward pass, then [[FixedLagSpec]] over each key's records in
+    * stateIndex order. */
+  private[graft] def smoothFixedLagEncoderBatch(df: DataFrame, lag: Int): DataFrame = {
     val spark = df.sparkSession
     import spark.implicits._
     val fwdSpec = new ForwardSpec(new LinearKalmanCompute(stateSize, measurementSize, 1.0), defaults)
-    val fwd: Dataset[FiltRecord] = StatefulStage.run(toKalmanInput(df), fwdSpec)
-    val lagged = StatefulStage.run(fwd, new FixedLagSpec(lag, stateSize))
+    val lagSpec = new FixedLagSpec(lag, stateSize)
+    val lagged = StatefulStage.batch(toKalmanInput(df), fwdSpec)
+      .repartition(col("stateKey"))
+      .sortWithinPartitions(col("stateKey"), col("stateIndex"))
+      .mapPartitions { rows =>
+        var curKey: String = null
+        var window: Option[List[FiltRecord]] = None
+        rows.flatMap { r =>
+          if (r.stateKey != curKey) { curKey = r.stateKey; window = None }
+          window = lagSpec.update(r.stateKey, r, window)
+          lagSpec.output(r.stateKey, r, window.get)
+        }
+      }
     userColumns(lagged.toDF())
   }
+
+  private def forwardKernel = new RtsForwardRowKernel(
+    new LinearKalmanCompute(stateSize, measurementSize, 1.0), defaults,
+    hasMM = measurementModelCol.isDefined,
+    hasMN = measurementNoiseCol.isDefined,
+    hasPM = processModelCol.isDefined,
+    hasPN = processNoiseCol.isDefined,
+    hasCtl = controlCol.isDefined,
+    hasCtlFn = controlFunctionCol.isDefined,
+    hasIM = initialStateDistributionCol.isDefined || initialStateMeanCol.isDefined,
+    hasIC = initialStateDistributionCol.isDefined || initialStateCovarianceCol.isDefined)
 
   /** Full-pass RTS at InternalRow level: the forward fold (one exchange on
     * stateKey + sort), then the backward fold over its output ordered
@@ -185,18 +229,8 @@ class LinearKalmanSmoother(stateSize: Int, measurementSize: Int)
   def smooth(df: DataFrame): DataFrame = {
     require(!df.isStreaming,
       "full-pass RTS smoothing needs a batch DataFrame; use setFixedLag to smooth a stream")
-    val compute = new LinearKalmanCompute(stateSize, measurementSize, 1.0)
-    val fwdKernel = new RtsForwardRowKernel(compute, defaults,
-      hasMM = measurementModelCol.isDefined,
-      hasMN = measurementNoiseCol.isDefined,
-      hasPM = processModelCol.isDefined,
-      hasPN = processNoiseCol.isDefined,
-      hasCtl = controlCol.isDefined,
-      hasCtlFn = controlFunctionCol.isDefined,
-      hasIM = initialStateDistributionCol.isDefined || initialStateMeanCol.isDefined,
-      hasIC = initialStateDistributionCol.isDefined || initialStateCovarianceCol.isDefined)
     val fwdDF = StatefulStage.batchRows(kalmanProjection(df),
-      RtsForwardRowKernel.outputSchema, stageConf, fwdKernel)
+      RtsForwardRowKernel.outputSchema, stageConf, forwardKernel)
     val smoothed = StatefulStage.fold(fwdDF, Seq(col("stateKey"), col("stateIndex").desc),
       RtsBackwardRowKernel.outputSchema, new RtsBackwardRowKernel(stateSize))
     userColumns(smoothed)

@@ -1,62 +1,88 @@
 package graft.state
 
+import java.sql.Timestamp
+
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{GenericInternalRow, UnsafeArrayData}
+import org.apache.spark.sql.catalyst.util.{DateTimeUtils, GenericArrayData}
+import org.apache.spark.sql.types.StructType
 import org.apache.spark.unsafe.types.UTF8String
 
 import graft.linalg.DMat
 
 /**
- * The batch row driver of a [[StateSpec]]: folds one partition of
- * key-sorted InternalRows with the family's own `update` and `output`, the
- * functions the encoder reference ([[StatefulStage.batch]]) and the
- * streaming path run. `decode` reads an input row into the spec's input;
- * its key and time may be left empty, because the driver passes the key to
- * the spec and writes the key (ordinal 0) and the input row's time (input
- * ordinal `timeIn`, output ordinal `timeOut`) into every row `encode`
- * makes. The driver never calls `finish`, so a spec that emits at the end
- * of a key (`BatchEmSpec`) stays on [[StatefulStage.batch]].
+ * The row driver of a [[StateSpec]], run by both the batch fold and the
+ * streaming one ([[StatefulStage.stream]]): folds InternalRows with the
+ * family's own `update` and `output`, the functions the encoder reference
+ * ([[StatefulStage.batch]]) runs. `decode` reads an input row into the
+ * spec's input; its key and time may be left empty, because the driver
+ * passes the key to the spec and writes the key (ordinal 0) into every row
+ * `encode` makes, and the input row's time (input ordinal `timeIn`) at
+ * output ordinal `timeOut`; with `timeOut` None, `encode` writes the
+ * output's own time. The driver never calls `finish`, so a spec that emits
+ * at the end of a key (`BatchEmSpec`) stays on [[StatefulStage.batch]].
  */
 class SpecKernel[I <: KeyedIn, S, O](
     spec: StateSpec[I, S, O],
     decode: InternalRow => I,
     encode: O => GenericInternalRow,
-    timeIn: Int = 1,
-    timeOut: Int = 2) extends FoldKernel {
+    val timeIn: Int = 1,
+    timeOut: Option[Int] = Some(2)) extends FoldKernel {
 
+  /** Folds one partition of key-sorted rows, each key from no state. */
   def run(rows: Iterator[InternalRow]): Iterator[InternalRow] = new Iterator[InternalRow] {
     private val keys = new KeyRun
-    private var key: String = null
-    private var state: Option[S] = None
-    private var time: Any = null
-    private var pending: List[O] = Nil
+    private var fold: KeyFold = null
 
     def hasNext: Boolean = {
-      while (pending.isEmpty && rows.hasNext) fold(rows.next())
-      pending.nonEmpty
+      while ((fold == null || !fold.hasOutput) && rows.hasNext) {
+        val row = rows.next()
+        if (keys.starts(row)) fold = start(keys.key, None)
+        fold.step(row)
+      }
+      fold != null && fold.hasOutput
     }
 
     def next(): InternalRow = {
       if (!hasNext) throw new NoSuchElementException
-      val out = encode(pending.head)
-      pending = pending.tail
-      out.update(0, keys.key)
-      out.update(timeOut, time)
-      out
+      fold.output()
     }
+  }
 
-    private def fold(row: InternalRow): Unit = {
-      if (keys.starts(row)) {
-        key = if (keys.key == null) null else keys.key.toString
-        state = None
-      }
+  /** The fold of one key (null for the null key, which the caller copied
+    * off the row) from `state`. */
+  def start(key: UTF8String, state: Option[S]): KeyFold = new KeyFold(key, state)
+
+  /** One key's fold: [[step]] folds an input row into [[state]], then its
+    * output rows are taken with [[output]] while [[hasOutput]]. */
+  final class KeyFold private[SpecKernel] (keyUtf: UTF8String, private var current: Option[S]) {
+    private val key = if (keyUtf == null) null else keyUtf.toString
+    private var time: Any = null
+    private var pending: List[O] = Nil
+
+    def state: Option[S] = current
+
+    def step(row: InternalRow): Unit = {
       val in = decode(row)
       time = if (row.isNullAt(timeIn)) null else row.getLong(timeIn)
-      state = spec.update(key, in, state)
-      pending = state match {
+      current = spec.update(key, in, current)
+      pending = current match {
         case Some(s) => spec.output(key, in, s)
         case None => Nil
       }
+    }
+
+    def hasOutput: Boolean = pending.nonEmpty
+
+    def output(): InternalRow = {
+      val out = encode(pending.head)
+      pending = pending.tail
+      out.update(0, keyUtf)
+      timeOut match {
+        case Some(i) => out.update(i, time)
+        case None =>
+      }
+      out
     }
   }
 }
@@ -77,8 +103,24 @@ private[state] final class KeyRun {
   }
 }
 
+/** A state's row form: the struct [[StatefulStage.stream]] stores a key's
+  * state as (the schema of the state case class), and the conversions. */
+final case class StateCodec[S](schema: StructType, encode: S => InternalRow, decode: InternalRow => S)
+
 /** Field codecs shared by the families' row `decode`/`encode` functions. */
 object RowCodec {
+  def row(values: Any*): GenericInternalRow = new GenericInternalRow(values.toArray)
+
+  def vectors(vs: Array[Array[Double]]): GenericArrayData = new GenericArrayData(vs.map(v => vector(v): Any))
+
+  def readVectors(row: InternalRow, i: Int): Array[Array[Double]] = {
+    val a = row.getArray(i)
+    Array.tabulate(a.numElements())(j => a.getArray(j).toDoubleArray)
+  }
+
+  def optVector(row: InternalRow, i: Int): Option[Array[Double]] =
+    if (row.isNullAt(i)) None else Some(readVector(row, i))
+
   def vector(v: Array[Double]): UnsafeArrayData = UnsafeArrayData.fromPrimitiveArray(v)
 
   /** A `DMat` as its (numRows, numCols, values) struct. */
@@ -86,6 +128,12 @@ object RowCodec {
     new GenericInternalRow(Array[Any](m.numRows, m.numCols, vector(m.values)))
 
   def readVector(row: InternalRow, i: Int): Array[Double] = row.getArray(i).toDoubleArray
+
+  /** A timestamp column (microseconds) as the encoders decode it. */
+  def readTime(row: InternalRow, i: Int): Option[Timestamp] =
+    if (row.isNullAt(i)) None else Some(DateTimeUtils.toJavaTimestamp(row.getLong(i)))
+
+  def time(t: Option[Timestamp]): Any = nullable(t)(DateTimeUtils.fromJavaTimestamp)
 
   def readMatrix(row: InternalRow, i: Int): DMat = {
     val st = row.getStruct(i, 3)

@@ -3,11 +3,12 @@ package graft.state
 import java.sql.Timestamp
 
 import org.apache.spark.sql.{Column, DataFrame, Dataset, Encoder}
+import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.AttributeReference
 import org.apache.spark.sql.catalyst.plans.logical.Sort
 import org.apache.spark.sql.functions.{col, xxhash64}
 import org.apache.spark.sql.graftbridge.Bridge
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
+import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout}
 import org.apache.spark.sql.types.StructType
 
 /** Input rows to a stateful stage carry a grouping key and optional event time. */
@@ -42,44 +43,42 @@ final case class StageConf(
     timeoutDuration: Option[String] = None,
     watermarkDuration: Option[String] = None,
     /** Caller-declared invariant: (stateKey, eventTime) is unique in the
-      * input, so the batch path's deterministic-tiebreak column (a full-row
-      * xxhash64 appended to every sort key) is unnecessary and skipped —
-      * 8 bytes/row off the external sort key on every stateful query that
-      * pre-aggregates to unique (key, time), which is all the estimator
-      * queries. Leave false when duplicates on (key, time) are possible:
+      * input, so the deterministic-tiebreak column both drivers sort by (a
+      * full-row xxhash64 appended to every sort key) is unnecessary and
+      * skipped — 8 bytes/row off the external sort key on every stateful
+      * query that pre-aggregates to unique (key, time), which is all the
+      * estimator queries. Leave false when duplicates on (key, time) are possible:
       * with the flag set their relative order is whatever the sort merge
       * yields that run. */
     assumeUniqueKeyTime: Boolean = false)
 
 /**
- * One [[StateSpec]] per family, three drivers:
+ * One [[StateSpec]] per family and one row driver of it ([[SpecKernel]]),
+ * run in two places:
  *
- * - **Batch**: the key exchange and `sortWithinPartitions(stateKey,
- *   eventTime)`, then a sequential fold with key-boundary detection.
- *   Exactly one shuffle; ordering comes from Spark's external (spilling)
- *   sort, so a key with billions of rows never has to fit in memory —
- *   unlike `groupByKey.flatMapGroups`, which materializes each group.
- *   This is the 100 TB path: hash-partition by key across executors,
- *   sequential O(rows) compute per partition. Transforms run [[batchRows]]:
- *   a [[StatefulFold]] plan node whose kernel is the spec's row driver
- *   ([[SpecKernel]]). [[batch]] drives the spec through Dataset encoders
- *   and is the reference the kernels are pinned to.
+ * - **Batch** ([[batchRows]]): the key exchange and a sort by (stateKey,
+ *   eventTime[, __rowSeq]), then a sequential fold with key-boundary
+ *   detection in a [[StatefulFold]] plan node. Exactly one shuffle; ordering
+ *   comes from Spark's external (spilling) sort, so a key with billions of
+ *   rows never has to fit in memory. This is the 100 TB path:
+ *   hash-partition by key across executors, sequential O(rows) compute per
+ *   partition.
  *
- * - **Streaming**: `groupByKey.flatMapGroupsWithState` in Append mode with
- *   optional watermark + state timeout (none / processing-time / event-time),
- *   sorting each micro-batch's rows per key by event time.
+ * - **Streaming** ([[stream]]): `flatMapGroupsWithState` in Append mode
+ *   over the same projection, grouped on its stateKey column, with optional
+ *   watermark and state timeout (none / processing-time / event-time). Each
+ *   key's micro-batch rows are sorted as batch sorts them and folded from
+ *   the key's stored state, which is kept as the struct of the spec's
+ *   state case class, readable with Spark's state data source.
  *
- * Capability parity with the reference's stateful transformer
- * (/root/reference/src/main/scala/com/github/ozancicek/artan/ml/state/StatefulTransformer.scala:103),
- * re-expressed with Spark-native Product encoders for inputs and outputs;
- * the streaming state is stored as a Kryo blob (see [[stream]]).
+ * [[batch]] drives the spec through Dataset encoders: it is the reference
+ * the row kernels are pinned to, and the driver of batch EM, whose spec
+ * emits at the end of a key.
+ *
+ * Capability parity with artan's stateful transformer
+ * (ml/state/StatefulTransformer.scala).
  */
 object StatefulStage {
-
-  def run[I <: KeyedIn, S, O](ds: Dataset[I], spec: StateSpec[I, S, O], conf: StageConf = StageConf())(
-      implicit ie: Encoder[I], oe: Encoder[O]): Dataset[O] = {
-    if (ds.isStreaming) stream(ds, spec, conf) else batch(ds, spec, conf)
-  }
 
   def batch[I <: KeyedIn, S, O](
       ds: Dataset[I], spec: StateSpec[I, S, O], conf: StageConf = StageConf())(
@@ -144,16 +143,20 @@ object StatefulStage {
    * Tiebreak note: __rowSeq is xxhash64 over THIS projection's columns, so
    * a kernel projection that drops constant columns carried by the encoder
    * path yields a different (still deterministic, still
-   * input-repartitioning-stable) permutation of duplicate (key, time) rows.
-   * Rows that tie on (key, time) and differ elsewhere have no defined fold
-   * order in either path.
+   * input-repartitioning-stable) permutation of duplicate (key, time) rows
+   * than the encoder reference. [[stream]] sorts by the same hash, so batch
+   * and streaming fold tied rows in the same order.
    */
   def batchRows(in: DataFrame, outSchema: StructType, conf: StageConf,
-      kernel: FoldKernel): DataFrame =
-    if (conf.assumeUniqueKeyTime) fold(in, Seq(col("stateKey"), col("eventTime")), outSchema, kernel)
-    else
-      fold(in.withColumn("__rowSeq", xxhash64(in.columns.map(col): _*)),
-        Seq(col("stateKey"), col("eventTime"), col("__rowSeq")), outSchema, kernel)
+      kernel: FoldKernel): DataFrame = {
+    val rows = sequenced(in, conf)
+    fold(rows, Seq("stateKey", "eventTime", "__rowSeq").filter(rows.columns.contains).map(col), outSchema, kernel)
+  }
+
+  /** `in` with the tiebreak column `__rowSeq` (xxhash64 over its columns)
+    * appended, unless (key, time) is declared unique. */
+  private def sequenced(in: DataFrame, conf: StageConf): DataFrame =
+    if (conf.assumeUniqueKeyTime) in else in.withColumn("__rowSeq", xxhash64(in.columns.map(col): _*))
 
   /** Folds `in` with `kernel`, clustered on stateKey (the first column of
     * `in` and `outSchema`) and sorted by `order` within each partition. */
@@ -173,57 +176,95 @@ object StatefulStage {
     * drops the sub-millisecond part. */
   private[graft] def micros(t: Timestamp): Long = t.getTime * 1000L + (t.getNanos / 1000) % 1000
 
-  /** Rejects a state timeout that is only half configured: Spark would
-    * never fire a mode without a duration, and a duration without a mode
-    * would be dropped. */
-  def stream[I <: KeyedIn, S, O](ds: Dataset[I], spec: StateSpec[I, S, O], conf: StageConf)(
-      implicit ie: Encoder[I], oe: Encoder[O]): Dataset[O] = {
+  /**
+   * The streaming driver: [[SpecKernel]] `kernel` folds each key's rows of a
+   * micro-batch, from the key's stored state, in a `flatMapGroupsWithState`
+   * node grouped on stateKey. `in` is the family's canonical projection,
+   * the one [[batchRows]] folds. Its rows reach the kernel undecoded; each
+   * key's rows are copied off Spark's reused row buffer and sorted by
+   * (eventTime µs, __rowSeq), the order batch folds them in, so tied
+   * (key, time) rows fold alike in both modes (`__rowSeq` is the same
+   * xxhash64 over `in`, skipped when (key, time) is declared unique). The
+   * state is stored in `state`'s row form, the struct of its case class.
+   *
+   * A state timeout needs both a mode and a duration: Spark would never
+   * fire a mode without a duration, and a duration without a mode would be
+   * dropped.
+   */
+  def stream[S](in: DataFrame, outSchema: StructType, conf: StageConf,
+      kernel: SpecKernel[_, S, _], state: StateCodec[S]): DataFrame = {
+    val rows = sequenced(in, conf)
+    streamFold(rows, Seq("eventTime", "__rowSeq").filter(rows.columns.contains), outSchema, conf, kernel, state)
+  }
+
+  /** [[stream]] with each key's micro-batch rows sorted by the `order`
+    * columns of `in` (long or timestamp, nulls first) instead: the
+    * streaming form of [[fold]]. */
+  def streamFold[S](in: DataFrame, order: Seq[String], outSchema: StructType, conf: StageConf,
+      kernel: SpecKernel[_, S, _], state: StateCodec[S]): DataFrame = {
     require(conf.timeoutMode == NoTimeout || conf.timeoutDuration.isDefined,
       s"state timeout mode ${conf.timeoutMode} needs setStateTimeoutDuration")
     require(conf.timeoutMode != NoTimeout || conf.timeoutDuration.isEmpty,
       s"state timeout duration ${conf.timeoutDuration.get} needs setStateTimeoutMode(\"process\" or \"event\")")
-    import org.apache.spark.sql.{Encoders => Encs}
-    // Kryo state-store encoding: ~5-10x smaller/faster than Java
-    // serialization for the array-heavy filter states (the output rows still
-    // use Spark-native Product encoders; only the opaque state blob is Kryo,
-    // matching the reference's choice, StatefulTransformer.scala:117).
-    implicit val stateEnc: Encoder[Wrapped[S]] = Encs.kryo[Wrapped[S]]
-    implicit val keyEnc: Encoder[String] = Encs.STRING
-
-    val withWm = conf.watermarkDuration match {
-      case Some(d) => ds.withWatermark("eventTime", d)
-      case None => ds
-    }
-
-    val func = (key: String, rows: Iterator[I], gs: GroupState[Wrapped[S]]) => {
-      if (gs.hasTimedOut) {
-        gs.remove()
-        Iterator.empty
-      } else {
-        var state: Option[S] = gs.getOption.map(_.value)
-        val out = List.newBuilder[O]
-        rows.toSeq.sortBy(_.eventTime.map(micros).getOrElse(Long.MinValue)).foreach { row =>
-          state = spec.update(key, row, state)
-          state.foreach { s =>
-            gs.update(Wrapped(s))
-            conf.timeoutMode match {
-              case EventTimeout =>
-                row.eventTime.foreach(ts => gs.setTimeoutTimestamp(ts.getTime, conf.timeoutDuration.get))
-              case ProcessTimeout => gs.setTimeoutDuration(conf.timeoutDuration.get)
-              case NoTimeout =>
-            }
-            out ++= spec.output(key, row, s)
-          }
-        }
-        out.result().iterator
-      }
-    }
-
-    withWm
-      .groupByKey(_.stateKey)
-      .flatMapGroupsWithState(OutputMode.Append, conf.timeoutMode.conf)(func)
+    val rows = conf.watermarkDuration.fold(in)(in.withWatermark("eventTime", _))
+    val ordinals = order.map(c => rows.columns.indexOf(c)).toArray
+    require(!ordinals.contains(-1), s"order columns ${order.mkString(", ")} not all in ${rows.columns.mkString(", ")}")
+    val byOrder = new MicroBatchOrder(ordinals)
+    Bridge.flatMapGroupsWithState(rows, "stateKey", new StreamFold(kernel, state, byOrder, conf), state.schema,
+      outSchema, conf.timeoutMode.conf)
   }
 }
 
-/** Serializable box so arbitrary state types ride in the state store. */
-final case class Wrapped[S](value: S) extends Serializable
+/** One key's micro-batch in [[StatefulStage.stream]]: its rows, sorted,
+  * folded from the stored state; the new state is stored, and the timeout
+  * set from the last row with a time. */
+private final class StreamFold[S](kernel: SpecKernel[_, S, _], state: StateCodec[S],
+    order: java.util.Comparator[InternalRow], conf: StageConf)
+  extends ((InternalRow, Iterator[InternalRow], GroupState[InternalRow]) => Iterator[InternalRow]) with Serializable {
+
+  def apply(key: InternalRow, values: Iterator[InternalRow], gs: GroupState[InternalRow]): Iterator[InternalRow] =
+    if (gs.hasTimedOut) {
+      gs.remove()
+      Iterator.empty
+    } else {
+      val rows = values.map(_.copy()).toArray
+      java.util.Arrays.sort(rows, order)
+      val fold = kernel.start(if (key.isNullAt(0)) null else key.getUTF8String(0).copy(),
+        gs.getOption.map(state.decode))
+      val out = Array.newBuilder[InternalRow]
+      rows.foreach { r =>
+        fold.step(r)
+        while (fold.hasOutput) out += fold.output()
+      }
+      fold.state.foreach { s =>
+        gs.update(state.encode(s))
+        conf.timeoutMode match {
+          case EventTimeout =>
+            rows.reverseIterator.find(!_.isNullAt(kernel.timeIn)).foreach { r =>
+              gs.setTimeoutTimestamp(Math.floorDiv(r.getLong(kernel.timeIn), 1000L), conf.timeoutDuration.get)
+            }
+          case ProcessTimeout => gs.setTimeoutDuration(conf.timeoutDuration.get)
+          case NoTimeout =>
+        }
+      }
+      out.result().iterator
+    }
+}
+
+/** A fold order of one key's rows: by the long columns at `ordinals`, in
+  * turn, a null before any value. */
+private final class MicroBatchOrder(ordinals: Array[Int])
+  extends java.util.Comparator[InternalRow] with Serializable {
+  def compare(a: InternalRow, b: InternalRow): Int = {
+    var c = 0
+    var i = 0
+    while (c == 0 && i < ordinals.length) {
+      val o = ordinals(i)
+      c = if (a.isNullAt(o)) { if (b.isNullAt(o)) 0 else -1 }
+          else if (b.isNullAt(o)) 1
+          else java.lang.Long.compare(a.getLong(o), b.getLong(o))
+      i += 1
+    }
+    c
+  }
+}

@@ -1,8 +1,14 @@
 package graft
 
+import java.sql.Timestamp
+
+import org.apache.spark.sql.catalyst.plans.logical.{AppendColumns, DeserializeToObject, FlatMapGroupsWithState}
+import org.apache.spark.sql.execution.streaming.runtime.{MemoryStream, StreamingQueryWrapper}
+import org.apache.spark.sql.functions.{array, col, lit}
+import org.apache.spark.sql.types.{ArrayType, BinaryType, DataType, MapType, ObjectType, StructType}
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.filter.SparkTestSession
+import graft.filter.{LinearKalmanFilter, RecursiveLeastSquaresFilter, SparkTestSession}
 
 /**
  * Guards the physical-plan properties the 100 TB design depends on:
@@ -63,6 +69,43 @@ class PlanQualitySpec extends AnyFunSuite with SparkTestSession {
     assert(p.contains("StatefulFold") && !p.contains("Scan ExistingRDD"), p.take(3000))
     assert("Exchange hashpartitioning\\(stateKey".r.findAllIn(p).size == 1, p.take(3000))
     assert(!p.contains("__rowSeq"), p.take(3000))
+  }
+
+  test("streaming LKF and RLS fold rows in flatMapGroupsWithState, with struct state and no object decode") {
+    import spark.implicits._
+    implicit val sqlCtx = spark.sqlContext
+    def binary(t: DataType): Boolean = t match {
+      case BinaryType => true
+      case s: StructType => s.fields.exists(f => binary(f.dataType))
+      case a: ArrayType => binary(a.elementType)
+      case m: MapType => binary(m.keyType) || binary(m.valueType)
+      case _ => false
+    }
+    val stream = MemoryStream[(String, Timestamp, Double, Double)]
+    val in = stream.toDF().toDF("key", "t", "z", "x")
+    val lkf = new LinearKalmanFilter(1, 1).setStateKeyCol("key").setEventTimeCol("t")
+      .setMeasurementCol("meas").transform(in.withColumn("meas", array(col("z"))))
+    val rls = new RecursiveLeastSquaresFilter(2).setStateKeyCol("key").setEventTimeCol("t")
+      .setLabelCol("z").setFeaturesCol("f").transform(in.withColumn("f", array(lit(1.0), col("x"))))
+    for ((name, df) <- Seq("lkf" -> lkf, "rls" -> rls)) {
+      val sq = df.writeStream.format("memory").queryName(s"plan_guard_$name").outputMode("append").start()
+      stream.addData(("a", new Timestamp(1700000000000L), 1.0, 2.0))
+      sq.processAllAvailable()
+      val execution = sq.asInstanceOf[StreamingQueryWrapper].streamingQuery.lastExecution
+      sq.stop()
+      val logical = execution.optimizedPlan
+      val folds = logical.collect { case f: FlatMapGroupsWithState => f }
+      assert(folds.size == 1, s"$name: $logical")
+      assert(logical.collect { case a: AppendColumns => a }.isEmpty, s"$name: $logical")
+      val graftDecodes = logical.collect {
+        case d: DeserializeToObject => d.deserializer.dataType
+      }.collect { case ObjectType(c) if c.getName.startsWith("graft.") => c.getName }
+      assert(graftDecodes.isEmpty, s"$name decodes ${graftDecodes.mkString(", ")}")
+      assert(!binary(folds.head.stateEncoder.schema), s"$name state: ${folds.head.stateEncoder.schema}")
+      val executed = execution.executedPlan.toString
+      assert(executed.contains("FlatMapGroupsWithState"), executed)
+      assert(!executed.contains("AppendColumns") && !executed.contains("DeserializeToObject"), executed)
+    }
   }
 
   test("LSH bucketing is a map-side projection (bucket computed before the join shuffle)") {

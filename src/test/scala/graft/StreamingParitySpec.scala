@@ -172,4 +172,72 @@ class StreamingParitySpec extends AnyFunSuite with SparkTestSession {
     assert(batch.map(_._2) == Seq(at(100), at(900)))
     assert(streamed == batch)
   }
+
+  private def lkf = new LinearKalmanFilter(1, 1)
+    .setStateKeyCol("key").setEventTimeCol("t").setMeasurementCol("meas")
+    .setInitialStateCovariance(DMat.of(1, 1, 10.0))
+    .setProcessNoise(DMat.of(1, 1, 1.0))
+    .setMeasurementNoise(DMat.of(1, 1, 1.0))
+
+  /** The fields of a filter's output [[rawStates]] reads; a stream selects
+    * them in the query, so the optimizer prunes the covariance struct. */
+  private def stateFields(df: org.apache.spark.sql.DataFrame) =
+    df.select(col("key"), col("stateIndex"), col("stateMean"), col("stateCovariance.values").as("cov"))
+
+  /** (key, stateIndex) -> raw bits of the state mean and covariance, of
+    * [[stateFields]] rows. */
+  private def rawStates(df: org.apache.spark.sql.DataFrame): Map[(String, Long), Seq[Long]] = {
+    import spark.implicits._
+    df.as[(String, Long, Array[Double], Array[Double])].collect()
+      .map { case (k, i, m, c) => (k, i) -> (m ++ c).map(java.lang.Double.doubleToRawLongBits).toSeq }
+      .toMap
+  }
+
+  test("tied (key, time) rows fold in batch order within a micro-batch") {
+    import spark.implicits._
+    implicit val sqlCtx = spark.sqlContext
+    val tied = Seq(("k", ts(1), Array(1.0)), ("k", ts(1), Array(7.0)))
+    val batch = rawStates(stateFields(lkf.transform(tied.toDF("key", "t", "meas"))))
+    // the row batch folds first is the one whose state alone is batch's first state
+    val firstAlone = rawStates(stateFields(lkf.transform(tied.take(1).toDF("key", "t", "meas"))))
+    val batchOrder = if (firstAlone(("k", 1L)) == batch(("k", 1L))) tied else tied.reverse
+    // the two rows alone give different states, so the fold order shows
+    assert(rawStates(stateFields(lkf.transform(tied.drop(1).toDF("key", "t", "meas")))) != firstAlone)
+
+    val stream = MemoryStream[(String, Timestamp, Array[Double])]
+    val sq = stateFields(lkf.transform(stream.toDS().toDF("key", "t", "meas")))
+      .writeStream.format("memory").queryName("lkf_tied_parity").outputMode("append").start()
+    stream.addData(batchOrder.reverse)
+    sq.processAllAvailable()
+    val streamed = rawStates(spark.table("lkf_tied_parity"))
+    sq.stop()
+    assert(streamed == batch)
+  }
+
+  test("streamed LKF state reads back from the checkpoint with the state data source") {
+    import spark.implicits._
+    implicit val sqlCtx = spark.sqlContext
+    val rng = new scala.util.Random(5)
+    val data = for (i <- 1 to 8; k <- Seq("a", "b", "c")) yield (k, ts(i), Array(rng.nextGaussian() * 3))
+    val ckpt = java.nio.file.Files.createTempDirectory("lkf-state").toString
+    val stream = MemoryStream[(String, Timestamp, Array[Double])]
+    val sq = stateFields(lkf.transform(stream.toDS().toDF("key", "t", "meas")))
+      .writeStream.format("memory").queryName("lkf_state_readback").outputMode("append")
+      .option("checkpointLocation", ckpt).start()
+    stream.addData(data.take(10))
+    sq.processAllAvailable()
+    stream.addData(data.drop(10))
+    sq.processAllAvailable()
+    sq.stop()
+    val out = rawStates(spark.table("lkf_state_readback"))
+    val last = out.groupBy(_._1._1).map { case (k, s) => k -> s.maxBy(_._1._2)._2 }
+
+    val state = spark.read.format("statestore").load(ckpt)
+    val stored = state
+      .select(col("key.stateKey"), col("value.groupState.mean"), col("value.groupState.cov"))
+      .as[(String, Array[Double], Array[Double])].collect()
+      .map { case (k, m, c) => k -> (m ++ c).map(java.lang.Double.doubleToRawLongBits).toSeq }.toMap
+    assert(stored.keySet == Set("a", "b", "c"))
+    assert(stored == last)
+  }
 }

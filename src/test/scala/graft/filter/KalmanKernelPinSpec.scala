@@ -257,4 +257,98 @@ class KalmanKernelPinSpec extends AnyFunSuite with SparkTestSession {
     assertBitIdentical(build(true).transform(df), build(false).transform(df),
       Seq("key", "stateIndex", "stepIndex"))
   }
+
+  private def fixedLag(lag: Int = 3) = {
+    val sm = new LinearKalmanSmoother(1, 1).setFixedLag(lag)
+    sm.setStateKeyCol("key").setEventTimeCol("t").setMeasurementCol("meas")
+      .setInitialStateMean(Array(0.0))
+      .setInitialStateCovariance(DMat.of(1, 1, 10.0))
+      .setProcessNoise(DMat.of(1, 1, 1.0))
+      .setMeasurementNoise(DMat.of(1, 1, 4.0))
+    sm
+  }
+
+  test("fixed-lag RTS kernels == encoder path, null key and null times included") {
+    val df = measurements(12)
+    assertBitIdentical(fixedLag().transform(df), fixedLag().smoothFixedLagEncoderBatch(df, 3),
+      Seq("key", "stateIndex", "stepIndex"))
+  }
+
+  test("fixed-lag output rows carry the time of the record they smooth") {
+    val df = measurements(13, nullTimes = false)
+    val filtered = new LinearKalmanFilter(1, 1)
+      .setStateKeyCol("key").setEventTimeCol("t").setMeasurementCol("meas").transform(df)
+      .select(col("key"), col("stateIndex"), col("t").as("recordTime"))
+    val lagged = fixedLag().transform(df)
+    assert(lagged.where(col("stepIndex") === 0).count() > 0)
+    val joined = lagged.join(filtered, lagged("key") <=> filtered("key") &&
+      lagged("stateIndex") === filtered("stateIndex"))
+    assert(joined.count() == lagged.count())
+    assert(joined.where(!(col("t") <=> col("recordTime"))).count() == 0)
+  }
+
+  test("fixed-lag RTS stream == batch across two micro-batches") {
+    import spark.implicits._
+    implicit val sqlCtx = spark.sqlContext
+    val rows = measurements(14, nullTimes = false).as[(String, Timestamp, Array[Double], Double, Double)]
+      .collect().toSeq.map { case (k, t, z, _, _) => (k, t, z) }
+    val (early, late) = rows.partition(_._2.before(ts(30)))
+    val stream = org.apache.spark.sql.execution.streaming.runtime.MemoryStream[(String, Timestamp, Array[Double])]
+    val sq = fixedLag().transform(stream.toDS().toDF("key", "t", "meas"))
+      .writeStream.format("memory").queryName("fixed_lag_parity").outputMode("append").start()
+    stream.addData(early)
+    sq.processAllAvailable()
+    stream.addData(late)
+    sq.processAllAvailable()
+    sq.stop()
+    val batch = fixedLag().transform(rows.toDF("key", "t", "meas"))
+    val streamed = spark.table("fixed_lag_parity")
+    assert(streamed.where(col("stateIndex") > 30).count() > 0)
+    assertBitIdentical(streamed, batch.select(streamed.columns.map(col): _*),
+      Seq("key", "stateIndex", "stepIndex"))
+  }
+
+  /** Six rows per key, null key included, two at a null time and two at
+    * one time, measurements all distinct. With a lag of six, each key's
+    * one window is the whole key, so its smoothed rows are the full-pass
+    * RTS of the key, which pairs records by stateIndex alone. */
+  private def tiedTimes(seed: Int): Seq[(String, Timestamp, Array[Double])] = {
+    val rnd = new scala.util.Random(seed)
+    for (k <- Seq("a", "b", "c", "d", null); t <- Seq(null, ts(1), null, ts(0), ts(1), ts(2)))
+      yield (k, t, Array(rnd.nextDouble() * 10 - 5))
+  }
+
+  private def fullPass(rows: Seq[(String, Timestamp, Array[Double])]): DataFrame = {
+    import spark.implicits._
+    fixedLag(6).smooth(rows.toDF("key", "t", "meas"))
+  }
+
+  test("fixed-lag RTS over tied and null times == full-pass RTS when the window spans each key") {
+    import spark.implicits._
+    val rows = tiedTimes(15)
+    val full = fullPass(rows)
+    val lagged = fixedLag(6).transform(rows.toDF("key", "t", "meas"))
+    assert(lagged.count() == rows.size)
+    assertBitIdentical(lagged.select(full.columns.map(col): _*), full, Seq("key", "stateIndex"))
+  }
+
+  test("fixed-lag RTS stream over tied and null times == full-pass RTS when the window spans each key") {
+    import spark.implicits._
+    implicit val sqlCtx = spark.sqlContext
+    val rows = tiedTimes(16)
+    // the null and tied times in the first micro-batch, in reverse, the last time in the second
+    val (early, late) = rows.partition(r => r._2 == null || !r._2.after(ts(1)))
+    val stream = org.apache.spark.sql.execution.streaming.runtime.MemoryStream[(String, Timestamp, Array[Double])]
+    val sq = fixedLag(6).transform(stream.toDS().toDF("key", "t", "meas"))
+      .writeStream.format("memory").queryName("fixed_lag_ties").outputMode("append").start()
+    stream.addData(early.reverse)
+    sq.processAllAvailable()
+    stream.addData(late)
+    sq.processAllAvailable()
+    sq.stop()
+    val full = fullPass(rows)
+    val streamed = spark.table("fixed_lag_ties")
+    assert(streamed.count() == rows.size)
+    assertBitIdentical(streamed.select(full.columns.map(col): _*), full, Seq("key", "stateIndex"))
+  }
 }
