@@ -153,15 +153,19 @@ class LinearKalmanCompute(val stateSize: Int, val measurementSize: Int, val fadi
 
   def estimate(mean: Array[Double], cov: Array[Double], in: KalmanIn)
     : (Array[Double], Array[Double], Array[Double], Array[Double]) = {
+    val h = in.measurementModel.get.values
+    // residual = z - H x
+    val resid = Dense.sub(in.measurement.get, Dense.matvec(h, mean, measurementSize, stateSize))
+    josephUpdate(mean, cov, resid, h, in.measurementNoise.get.values)
+  }
+
+  /** The measurement update of (mean, cov) by the residual `resid`, through
+    * the measurement matrix (or jacobian) `h` and noise `r`: the gain, then
+    * the Joseph-form covariance. Returns (newMean, newCov, resid, S). */
+  protected final def josephUpdate(mean: Array[Double], cov: Array[Double], resid: Array[Double],
+      h: Array[Double], r: Array[Double]): (Array[Double], Array[Double], Array[Double], Array[Double]) = {
     val s = stateSize
     val m = measurementSize
-    val h = in.measurementModel.get.values
-    val r = in.measurementNoise.get.values
-    val z = in.measurement.get
-
-    // residual = z - H x
-    val hx = Dense.matvec(h, mean, m, s)
-    val resid = Dense.sub(z, hx)
     // S = H P H^T + R
     val pht = Dense.matmulNT(cov, h, s, s, m) // P H^T (s x m)
     val hpht = Dense.matmul(h, pht, m, s, m)
@@ -404,12 +408,7 @@ abstract class KalmanFilterBase[Impl <: KalmanFilterBase[Impl]](
       hasCtlFn = controlFunctionCol.isDefined,
       hasIM = initialStateDistributionCol.isDefined || initialStateMeanCol.isDefined,
       hasIC = initialStateDistributionCol.isDefined || initialStateCovarianceCol.isDefined)
-    val in = kalmanProjection(df)
-    val out0 =
-      if (df.isStreaming)
-        StatefulStage.stream(in, KalmanRowKernel.outputSchema, stageConf, kernel, KalmanRowKernel.state)
-      else StatefulStage.batchRows(in, KalmanRowKernel.outputSchema, stageConf, kernel)
-    val out = finalizeColumns(out0)
+    val out = finalizeColumns(StatefulStage.run(kalmanProjection(df), stageConf, kernel))
     if (mmaeEnabled) mmaeAggregate(out) else out
   }
 

@@ -33,6 +33,8 @@ final class KalmanRowKernel(
       computeLL, computeMaha, computeSliding, emitSystemMatrices),
     new KalmanRowInput(hasMM, hasMN, hasPM, hasPN, hasCtl, hasCtlFn, hasIM, hasIC).decode,
     KalmanRowKernel.encode,
+    KalmanRowKernel.outputSchema,
+    Some(KalmanRowKernel.state),
     timeOut = Some(3))
 
 /** Decodes the canonical 11-column Kalman input projection shared by the

@@ -62,22 +62,7 @@ class EkfCompute(
         Dense.matmulNT(jr, j.values, m, r.numCols, m)
       case None => r.values.clone()
     }
-    // standard joseph update with hj / rProj
-    val pht = Dense.matmulNT(cov, hj, s, s, m)
-    val hpht = Dense.matmul(hj, pht, m, s, m)
-    val sMat = Dense.add(hpht, rProj)
-    val sInv = Dense.inverse(sMat.clone(), m)
-    val gain = Dense.matmul(pht, sInv, s, m, m)
-    val newMean = mean.clone()
-    Dense.axpy(1.0, Dense.matvec(gain, resid, s, m), newMean)
-    val ikh = Dense.eye(s)
-    Dense.axpy(-1.0, Dense.matmul(gain, hj, s, m, s), ikh)
-    val ikhP = Dense.matmul(ikh, cov, s, s, s)
-    val joseph = Dense.matmulNT(ikhP, ikh, s, s, s)
-    val kr = Dense.matmul(gain, rProj, s, m, m)
-    val krkt = Dense.matmulNT(kr, gain, s, m, s)
-    val newCov = Dense.add(joseph, krkt)
-    (newMean, Dense.symmetrize(newCov, s), resid, sMat)
+    josephUpdate(mean, cov, resid, hj, rProj)
   }
 }
 

@@ -107,10 +107,7 @@ class RecursiveLeastSquaresFilter(val featuresSize: Int)
     val kernel = new RlsRowKernel(forgettingFactor, featuresSize,
       initialEstimate, regularizationMatrix,
       hasIM = imExpr.isDefined, hasIC = icExpr.isDefined)
-    val in = df.select(cols.toSeq: _*)
-    userColumns(
-      if (df.isStreaming) StatefulStage.stream(in, RlsRowKernel.outputSchema, stageConf, kernel, RlsRowKernel.state)
-      else StatefulStage.batchRows(in, RlsRowKernel.outputSchema, stageConf, kernel))
+    userColumns(StatefulStage.run(df.select(cols.toSeq: _*), stageConf, kernel))
   }
 
   /** Encoder-path batch execution kept as the pin-spec reference. */
@@ -218,10 +215,7 @@ class LeastMeanSquaresFilter(val featuresSize: Int)
     initialEstimateCol.foreach(c => cols += col(c).cast("array<double>").as("initialMean"))
     val kernel = new LmsRowKernel(learningRate, regularization,
       initialEstimate, hasIM = initialEstimateCol.isDefined)
-    val in = df.select(cols.toSeq: _*)
-    userColumns(
-      if (df.isStreaming) StatefulStage.stream(in, LmsRowKernel.outputSchema, stageConf, kernel, LmsRowKernel.state)
-      else StatefulStage.batchRows(in, LmsRowKernel.outputSchema, stageConf, kernel))
+    userColumns(StatefulStage.run(df.select(cols.toSeq: _*), stageConf, kernel))
   }
 
   /** Encoder-path batch execution kept as the pin-spec reference. */

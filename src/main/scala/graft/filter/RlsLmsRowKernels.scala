@@ -27,7 +27,9 @@ final class RlsRowKernel(
       if (hasIM && !row.isNullAt(4)) readVector(row, 4) else constMean,
       if (hasIC && !row.isNullAt(5)) readMatrix(row, 5) else constCov),
     o => new GenericInternalRow(Array[Any](
-      null, o.stateIndex, null, vector(o.stateMean), matrix(o.stateCovariance))))
+      null, o.stateIndex, null, vector(o.stateMean), matrix(o.stateCovariance))),
+    RlsRowKernel.outputSchema,
+    Some(RlsRowKernel.state))
 
 object RlsRowKernel {
   val outputSchema: StructType = Encoders.product[RlsOut].schema
@@ -44,7 +46,9 @@ final class LmsRowKernel(
     new LmsSpec(mu, eps),
     row => LmsIn(null, None, row.getDouble(2), readVector(row, 3),
       if (hasIM && !row.isNullAt(4)) readVector(row, 4) else constMean),
-    o => new GenericInternalRow(Array[Any](null, o.stateIndex, null, vector(o.stateMean))))
+    o => new GenericInternalRow(Array[Any](null, o.stateIndex, null, vector(o.stateMean))),
+    LmsRowKernel.outputSchema,
+    Some(LmsRowKernel.state))
 
 object LmsRowKernel {
   val outputSchema: StructType = Encoders.product[LmsOut].schema

@@ -31,6 +31,36 @@ private[mixture] trait MixtureFamily extends Serializable {
   def accumulate(pK: Array[Double], momentsK: Array[Double], w: Double, x: Array[Double]): Unit
   /** component params from blended moments (divide-by-weight M-step). */
   def fromMoments(moments: Array[Double], weight: Double): Array[Double] = moments.map(_ / weight)
+
+  /** The E-step of a `k`-component mixture (`weights`, `params`) over
+    * `samples`, shared by the online step and batch EM: each sample's
+    * responsibilities r_ik over `n`, summed into component weights and,
+    * through [[accumulate]], moments. Returns (Σ_i log Σ_k w_k f_k(x_i),
+    * weights, moments). */
+  final def eStep(k: Int, weights: Array[Double], params: Array[Array[Double]],
+      samples: List[Array[Double]], n: Int): (Double, Array[Double], Array[Array[Double]]) = {
+    var ll = 0.0
+    val sumW = new Array[Double](k)
+    val sumM = Array.fill(k)(new Array[Double](paramSize))
+    samples.foreach { x =>
+      val wl = new Array[Double](k)
+      var i = 0
+      while (i < k) { wl(i) = logpdf(params(i), x) + math.log(weights(i)); i += 1 }
+      val mx = wl.max
+      var z = 0.0
+      i = 0
+      while (i < k) { wl(i) = math.exp(wl(i) - mx); z += wl(i); i += 1 }
+      ll += mx + math.log(z)
+      i = 0
+      while (i < k) {
+        val r = wl(i) / z
+        sumW(i) += r / n
+        accumulate(params(i), sumM(i), r / n, x)
+        i += 1
+      }
+    }
+    (ll, sumW, sumM)
+  }
 }
 
 /** params layout: mean (s) ++ covariance row-major (s*s). */
@@ -135,26 +165,7 @@ private[mixture] class MixtureSpec(
         if (row.decayRate >= 0) math.pow(2.0 + cur.stateIndex, -row.decayRate)
         else row.stepSize
       val b = buf.length
-      var llSum = 0.0
-      val sumWeights = new Array[Double](k)
-      val sumMoments = Array.fill(k)(new Array[Double](family.paramSize))
-      buf.foreach { x =>
-        val wl = new Array[Double](k)
-        var i = 0
-        while (i < k) { wl(i) = family.logpdf(cur.params(i), x) + math.log(cur.weights(i)); i += 1 }
-        val mx = wl.max
-        var z = 0.0
-        i = 0
-        while (i < k) { wl(i) = math.exp(wl(i) - mx); z += wl(i); i += 1 }
-        llSum += mx + math.log(z)
-        i = 0
-        while (i < k) {
-          val r = wl(i) / z
-          sumWeights(i) += r / b
-          family.accumulate(cur.params(i), sumMoments(i), r / b, x)
-          i += 1
-        }
-      }
+      val (llSum, sumWeights, sumMoments) = family.eStep(k, cur.weights, cur.params, buf, b)
       val newW = new Array[Double](k)
       val newM = Array.tabulate(k) { i =>
         newW(i) = (1 - gamma) * cur.summaryWeights(i) + gamma * sumWeights(i)
@@ -178,8 +189,8 @@ private[mixture] class MixtureSpec(
 /**
  * Full-batch EM per key: buffers the key's samples, then at end-of-key runs
  * classic EM iterations until the mean loglikelihood improves by less than
- * `tol` or `maxIter` is reached. Emits one model per key. Batch-only (uses
- * the engine's end-of-key flush) — mirrors the reference's batch train mode
+ * `tol` or `maxIter` is reached. Emits one model per key, from `finish`, so
+ * batch only ([[BatchEmRowKernel]]) — mirrors the reference's batch train mode
  * (/root/reference/src/main/scala/com/github/ozancicek/artan/ml/mixture/MixtureParams.scala:1).
  */
 private[mixture] class BatchEmSpec(
@@ -201,41 +212,21 @@ private[mixture] class BatchEmSpec(
     val samples = state._1.reverse
     val n = samples.length
     if (n == 0) return Nil
-    val row0 = state._2.get
-    var weights = row0.initialWeights.getOrElse(initWeights).clone()
-    var params = row0.initialParams.getOrElse(initParams).map(_.clone())
+    // the key's last row: its warm start and its time
+    val lastRow = state._2.get
+    var weights = lastRow.initialWeights.getOrElse(initWeights).clone()
+    var params = lastRow.initialParams.getOrElse(initParams).map(_.clone())
     var prevLL = Double.MinValue
     var iter = 0
     var done = false
-    var ll = 0.0
     while (iter < maxIter && !done) {
-      ll = 0.0
-      val sumW = new Array[Double](k)
-      val sumM = Array.fill(k)(new Array[Double](family.paramSize))
-      samples.foreach { x =>
-        val wl = new Array[Double](k)
-        var i = 0
-        while (i < k) { wl(i) = family.logpdf(params(i), x) + math.log(weights(i)); i += 1 }
-        val mx = wl.max
-        var z = 0.0
-        i = 0
-        while (i < k) { wl(i) = math.exp(wl(i) - mx); z += wl(i); i += 1 }
-        ll += mx + math.log(z)
-        i = 0
-        while (i < k) {
-          val r = wl(i) / z
-          sumW(i) += r / n
-          family.accumulate(params(i), sumM(i), r / n, x)
-          i += 1
-        }
-      }
+      val (ll, sumW, sumM) = family.eStep(k, weights, params, samples, n)
       weights = sumW
       params = sumW.zip(sumM).map { case (w, m) => family.fromMoments(m, math.max(w, 1e-12)) }
       if ((ll - prevLL) / n < tol) done = true
       prevLL = ll
       iter += 1
     }
-    val lastRow = state._2.get
     List(MixtureOut(key, iter.toLong, lastRow.eventTime, weights, params, prevLL / n))
   }
 }
@@ -315,32 +306,34 @@ abstract class MixtureBase[Impl <: MixtureBase[Impl]](val mixtureCount: Int)
         .getOrElse(lit(null).cast("array<array<double>>")).as("initialParams")
     )
 
+  /** Online stochastic EM ([[MixtureRowKernel]]) over batch or streaming
+    * input, or batch EM ([[BatchEmRowKernel]]) over batch input: one row
+    * fold of [[mixProjection]] either way. */
   def transform(df: DataFrame): DataFrame = {
-    val spark = df.sparkSession
-    import spark.implicits._
-    val out = (if (batchTrainEnabled) {
-      require(!df.isStreaming, "batch EM training requires a batch DataFrame")
-      StatefulStage.batch(mixProjection(df).as[MixIn],
-        new BatchEmSpec(family, mixtureCount, initialWeights, initialParams,
-          batchTrainMaxIter, batchTrainTol), stageConf).toDF()
-    } else {
-      // the same MixtureSpec, driven over InternalRows
-      val kernel = new MixtureRowKernel(family, mixtureCount, initialWeights, initialParams)
-      if (df.isStreaming)
-        StatefulStage.stream(mixProjection(df), MixtureRowKernel.outputSchema, stageConf, kernel,
-          MixtureRowKernel.state)
-      else StatefulStage.batchRows(mixProjection(df), MixtureRowKernel.outputSchema, stageConf, kernel)
-    })
-    userColumns(out)
+    require(!(batchTrainEnabled && df.isStreaming), "batch EM training requires a batch DataFrame")
+    val in = mixProjection(df)
+    userColumns(
+      if (batchTrainEnabled)
+        StatefulStage.run(in, stageConf, new BatchEmRowKernel(family, mixtureCount, initialWeights,
+          initialParams, batchTrainMaxIter, batchTrainTol))
+      else StatefulStage.run(in, stageConf, new MixtureRowKernel(family, mixtureCount, initialWeights,
+        initialParams)))
   }
 
-  /** Encoder-path batch execution kept as the pin-spec reference. */
+  /** Encoder-path batch execution kept as the pin-spec reference, of batch
+    * EM ([[BatchEmSpec]]) when it is enabled, of the online
+    * [[MixtureSpec]] otherwise. */
   private[graft] def transformEncoderBatch(df: DataFrame): DataFrame = {
     val spark = df.sparkSession
     import spark.implicits._
-    require(!batchTrainEnabled && !df.isStreaming)
-    userColumns(StatefulStage.batch(mixProjection(df).as[MixIn],
-      new MixtureSpec(family, mixtureCount, initialWeights, initialParams), stageConf).toDF())
+    require(!df.isStreaming)
+    val in = mixProjection(df).as[MixIn]
+    val out =
+      if (batchTrainEnabled)
+        StatefulStage.batch(in, new BatchEmSpec(family, mixtureCount, initialWeights, initialParams,
+          batchTrainMaxIter, batchTrainTol), stageConf)
+      else StatefulStage.batch(in, new MixtureSpec(family, mixtureCount, initialWeights, initialParams), stageConf)
+    userColumns(out.toDF())
   }
 }
 

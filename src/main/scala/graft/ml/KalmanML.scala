@@ -188,49 +188,15 @@ abstract class KalmanTransformer[T <: KalmanTransformer[T]](override val uid: St
   }
 
   override def transform(dataset: Dataset[_]): DataFrame = {
-    transformSchema(dataset.schema)
+    require(isSet(stateSize) && isSet(measurementSize),
+      s"$uid: stateSize and measurementSize must be set")
     // VectorAssembler & friends hand MLlib vectors; the core speaks arrays
     val prepared = MLConv.vectorColsToArrays(dataset.toDF(),
       Seq(Some($(measurementCol)), get(initialStateMeanCol), get(controlCol)).flatten)
     core().transform(prepared)
   }
 
-  override def transformSchema(schema: StructType): StructType = {
-    require(isSet(stateSize) && isSet(measurementSize),
-      s"$uid: stateSize and measurementSize must be set")
-    if (isSet(measurementCol) || schema.fieldNames.contains($(measurementCol))) ()
-    outputSchema
-  }
-
-  protected final def matStruct: StructType = StructType(Seq(
-    StructField("numRows", IntegerType, nullable = false),
-    StructField("numCols", IntegerType, nullable = false),
-    StructField("values", ArrayType(DoubleType, containsNull = false))))
-
-  protected def outputSchema: StructType = {
-    val b = Seq.newBuilder[StructField]
-    b += StructField(get(stateKeyCol).getOrElse("stateKey"), StringType)
-    b += StructField("stateIndex", LongType)
-    b += StructField("stepIndex", IntegerType)
-    get(eventTimeCol).foreach(c => b += StructField(c, TimestampType))
-    b += StructField("stateMean", ArrayType(DoubleType, containsNull = false))
-    b += StructField("stateCovariance", matStruct)
-    val storeResid = $(calculateLoglikelihood) || $(calculateMahalanobis) || $(calculateSlidingLikelihood)
-    if (storeResid) {
-      b += StructField("residualMean", ArrayType(DoubleType, containsNull = false))
-      b += StructField("residualCovariance", matStruct)
-    }
-    if ($(calculateLoglikelihood)) b += StructField("loglikelihood", DoubleType)
-    if ($(calculateMahalanobis)) b += StructField("mahalanobis", DoubleType)
-    if ($(calculateSlidingLikelihood)) b += StructField("slidingLikelihood", DoubleType)
-    if ($(outputSystemMatrices)) {
-      b += StructField("processModel", matStruct)
-      b += StructField("processNoise", matStruct)
-      b += StructField("measurementModel", matStruct)
-      b += StructField("measurementNoise", matStruct)
-    }
-    StructType(b.result())
-  }
+  override def transformSchema(schema: StructType): StructType = MLConv.schemaOf(schema)(transform)
 
   override def copy(extra: ParamMap): T = defaultCopy(extra)
 }
@@ -492,17 +458,6 @@ class LinearKalmanSmoother(override val uid: String)
     // dispatches virtually), so configure through the filter self-type
     configure[graft.filter.LinearKalmanFilter](s)
     s
-  }
-
-  override protected def outputSchema: StructType = {
-    val b = Seq.newBuilder[StructField]
-    b += StructField(get(stateKeyCol).getOrElse("stateKey"), StringType)
-    b += StructField("stateIndex", LongType)
-    if (isSet(fixedLag)) b += StructField("stepIndex", LongType)
-    get(eventTimeCol).foreach(c => b += StructField(c, TimestampType))
-    b += StructField("stateMean", ArrayType(DoubleType, containsNull = false))
-    b += StructField("stateCovariance", matStruct)
-    StructType(b.result())
   }
 }
 

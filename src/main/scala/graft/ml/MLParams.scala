@@ -2,6 +2,8 @@ package graft.ml
 
 import org.apache.spark.ml.linalg.{Matrix, Vector}
 import org.apache.spark.ml.param._
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.types.StructType
 
 import graft.linalg.DMat
 
@@ -50,6 +52,12 @@ private[ml] object MLConv {
         case _ => d
       }
     }
+
+  /** The schema `transform` gives an input of `schema`: the schema of its
+    * output over an empty frame of `schema`, so an ML stage declares
+    * exactly what its core emits, and a missing input column fails here. */
+  def schemaOf(schema: StructType)(transform: DataFrame => DataFrame): StructType =
+    transform(SparkSession.active.createDataFrame(java.util.Collections.emptyList[Row](), schema)).schema
 }
 
 /** Params shared by every transformer running on the stateful engine

@@ -77,22 +77,24 @@ private[ml] trait MixtureMLParams extends StatefulEngineParams {
     b.setBatchTrainTol($(batchTrainTol))
     b
   }
+}
 
-  protected final def mixtureOutputSchema: StructType = {
-    val b = Seq.newBuilder[StructField]
-    b += StructField(get(stateKeyCol).getOrElse("stateKey"), StringType)
-    b += StructField("stateIndex", LongType)
-    get(eventTimeCol).foreach(c => b += StructField(c, TimestampType))
-    b += StructField("weights", ArrayType(DoubleType, containsNull = false))
-    b += StructField("params", ArrayType(ArrayType(DoubleType, containsNull = false)))
-    b += StructField("loglikelihood", DoubleType)
-    StructType(b.result())
-  }
+/** Base of the mixture ML transformers: the configured core's `transform`,
+  * and its output schema as `transformSchema`. */
+abstract class MixtureTransformer(override val uid: String)
+  extends Transformer with MixtureMLParams with DefaultParamsWritable {
+
+  /** The configured plain-Scala core this transformer delegates to. */
+  protected def core(): CoreMixtureBase[_]
+
+  override def transform(dataset: Dataset[_]): DataFrame =
+    core().transform(MLConv.vectorColsToArrays(dataset.toDF(), Seq($(sampleCol))))
+
+  override def transformSchema(schema: StructType): StructType = MLConv.schemaOf(schema)(transform)
 }
 
 /** Online multivariate gaussian mixture as an ML Pipeline stage. */
-class MultivariateGaussianMixture(override val uid: String)
-    extends Transformer with MixtureMLParams with DefaultParamsWritable {
+class MultivariateGaussianMixture(override val uid: String) extends MixtureTransformer(uid) {
 
   def this() = this(Identifiable.randomUID("multivariateGaussianMixture"))
   def this(mixtureCount: Int, sampleSize: Int) = {
@@ -113,17 +115,12 @@ class MultivariateGaussianMixture(override val uid: String)
     "initialCovariances", "initial component covariances, row-major (mixtureCount x sampleSize^2)")
   def setInitialCovariances(value: Array[Array[Double]]): this.type = set(initialCovariances, value)
 
-  override def transform(dataset: Dataset[_]): DataFrame = {
-    transformSchema(dataset.schema)
+  protected def core(): CoreMixtureBase[_] = {
+    require(isSet(mixtureCount) && isSet(sampleSize), s"$uid: mixtureCount and sampleSize must be set")
     val b = new graft.mixture.MultivariateGaussianMixture($(mixtureCount), $(sampleSize))
     if (isSet(initialMeans)) b.setInitialMeans($(initialMeans))
     if (isSet(initialCovariances)) b.setInitialCovariances($(initialCovariances))
-    configureMixture(b).transform(MLConv.vectorColsToArrays(dataset.toDF(), Seq($(sampleCol))))
-  }
-
-  override def transformSchema(schema: StructType): StructType = {
-    require(isSet(mixtureCount) && isSet(sampleSize), s"$uid: mixtureCount and sampleSize must be set")
-    mixtureOutputSchema
+    configureMixture(b)
   }
 
   override def copy(extra: ParamMap): MultivariateGaussianMixture = defaultCopy(extra)
@@ -132,8 +129,7 @@ class MultivariateGaussianMixture(override val uid: String)
 object MultivariateGaussianMixture extends DefaultParamsReadable[MultivariateGaussianMixture]
 
 /** Online Poisson mixture as an ML Pipeline stage. */
-class PoissonMixture(override val uid: String)
-    extends Transformer with MixtureMLParams with DefaultParamsWritable {
+class PoissonMixture(override val uid: String) extends MixtureTransformer(uid) {
 
   def this() = this(Identifiable.randomUID("poissonMixture"))
   def this(mixtureCount: Int) = {
@@ -145,16 +141,11 @@ class PoissonMixture(override val uid: String)
     "initial component rates")
   def setInitialRates(value: Array[Double]): this.type = set(initialRates, value)
 
-  override def transform(dataset: Dataset[_]): DataFrame = {
-    transformSchema(dataset.schema)
+  protected def core(): CoreMixtureBase[_] = {
+    require(isSet(mixtureCount), s"$uid: mixtureCount must be set")
     val b = new graft.mixture.PoissonMixture($(mixtureCount))
     if (isSet(initialRates)) b.setInitialRates($(initialRates))
-    configureMixture(b).transform(MLConv.vectorColsToArrays(dataset.toDF(), Seq($(sampleCol))))
-  }
-
-  override def transformSchema(schema: StructType): StructType = {
-    require(isSet(mixtureCount), s"$uid: mixtureCount must be set")
-    mixtureOutputSchema
+    configureMixture(b)
   }
 
   override def copy(extra: ParamMap): PoissonMixture = defaultCopy(extra)
@@ -163,8 +154,7 @@ class PoissonMixture(override val uid: String)
 object PoissonMixture extends DefaultParamsReadable[PoissonMixture]
 
 /** Online Bernoulli mixture as an ML Pipeline stage. */
-class BernoulliMixture(override val uid: String)
-    extends Transformer with MixtureMLParams with DefaultParamsWritable {
+class BernoulliMixture(override val uid: String) extends MixtureTransformer(uid) {
 
   def this() = this(Identifiable.randomUID("bernoulliMixture"))
   def this(mixtureCount: Int) = {
@@ -176,16 +166,11 @@ class BernoulliMixture(override val uid: String)
     "initialProbabilities", "initial component probabilities")
   def setInitialProbabilities(value: Array[Double]): this.type = set(initialProbabilities, value)
 
-  override def transform(dataset: Dataset[_]): DataFrame = {
-    transformSchema(dataset.schema)
+  protected def core(): CoreMixtureBase[_] = {
+    require(isSet(mixtureCount), s"$uid: mixtureCount must be set")
     val b = new graft.mixture.BernoulliMixture($(mixtureCount))
     if (isSet(initialProbabilities)) b.setInitialProbabilities($(initialProbabilities))
-    configureMixture(b).transform(MLConv.vectorColsToArrays(dataset.toDF(), Seq($(sampleCol))))
-  }
-
-  override def transformSchema(schema: StructType): StructType = {
-    require(isSet(mixtureCount), s"$uid: mixtureCount must be set")
-    mixtureOutputSchema
+    configureMixture(b)
   }
 
   override def copy(extra: ParamMap): BernoulliMixture = defaultCopy(extra)

@@ -30,19 +30,6 @@ private[ml] trait OnlineRegressionParams extends StatefulEngineParams {
   def setInitialEstimateCol(value: String): this.type = set(initialEstimateCol, value)
 
   setDefault(labelCol -> "label", featuresCol -> "features")
-
-  protected final def regressionOutputSchema(withCov: Boolean): StructType = {
-    val b = Seq.newBuilder[StructField]
-    b += StructField(get(stateKeyCol).getOrElse("stateKey"), StringType)
-    b += StructField("stateIndex", LongType)
-    get(eventTimeCol).foreach(c => b += StructField(c, TimestampType))
-    b += StructField("stateMean", ArrayType(DoubleType, containsNull = false))
-    if (withCov) b += StructField("stateCovariance", StructType(Seq(
-      StructField("numRows", IntegerType, nullable = false),
-      StructField("numCols", IntegerType, nullable = false),
-      StructField("values", ArrayType(DoubleType, containsNull = false)))))
-    StructType(b.result())
-  }
 }
 
 /** Recursive least squares as an ML Pipeline stage. */
@@ -74,7 +61,7 @@ class RecursiveLeastSquaresFilter(override val uid: String)
   setDefault(forgettingFactor -> 1.0)
 
   override def transform(dataset: Dataset[_]): DataFrame = {
-    transformSchema(dataset.schema)
+    require(isSet(featuresSize), s"$uid: featuresSize must be set")
     val b = new graft.filter.RecursiveLeastSquaresFilter($(featuresSize))
     configureEngine(b)
     b.setLabelCol($(labelCol))
@@ -89,10 +76,7 @@ class RecursiveLeastSquaresFilter(override val uid: String)
       Seq(Some($(featuresCol)), get(initialEstimateCol)).flatten))
   }
 
-  override def transformSchema(schema: StructType): StructType = {
-    require(isSet(featuresSize), s"$uid: featuresSize must be set")
-    regressionOutputSchema(withCov = true)
-  }
+  override def transformSchema(schema: StructType): StructType = MLConv.schemaOf(schema)(transform)
 
   override def copy(extra: ParamMap): RecursiveLeastSquaresFilter = defaultCopy(extra)
 }
@@ -120,7 +104,7 @@ class LeastMeanSquaresFilter(override val uid: String)
   setDefault(learningRate -> 1.0, regularization -> 1.0)
 
   override def transform(dataset: Dataset[_]): DataFrame = {
-    transformSchema(dataset.schema)
+    require(isSet(featuresSize), s"$uid: featuresSize must be set")
     val b = new graft.filter.LeastMeanSquaresFilter($(featuresSize))
     configureEngine(b)
     b.setLabelCol($(labelCol))
@@ -133,10 +117,7 @@ class LeastMeanSquaresFilter(override val uid: String)
       Seq(Some($(featuresCol)), get(initialEstimateCol)).flatten))
   }
 
-  override def transformSchema(schema: StructType): StructType = {
-    require(isSet(featuresSize), s"$uid: featuresSize must be set")
-    regressionOutputSchema(withCov = false)
-  }
+  override def transformSchema(schema: StructType): StructType = MLConv.schemaOf(schema)(transform)
 
   override def copy(extra: ParamMap): LeastMeanSquaresFilter = defaultCopy(extra)
 }

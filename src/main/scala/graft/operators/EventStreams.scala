@@ -27,10 +27,56 @@ import graft.state.StatefulStage.micros
  *    batch and stream share one formulation. Event-time-ordered delivery
  *    per user (the watermarked shape) makes the running min the true min —
  *    the same assumption every first-touch streaming attribution makes.
+ *
+ * Every operator stores its state with Spark's own encoder of the state's
+ * value (a long array, a tuple), so the state reads back from a checkpoint
+ * with `spark.read.format("statestore")`. A checkpoint written while the
+ * state was a Kryo blob does not restore into that schema: such a query
+ * restarts from a fresh checkpoint.
  */
 object EventStreams {
 
   private val None_ = Long.MaxValue
+
+  /** The per-user fold of the funnel operators: the first-occurrence
+    * millis per stage (None_ for a stage not yet seen), and the stages
+    * reached from them. */
+  private final class Funnel(stages: Seq[String], typeCol: String, tsCol: String) extends Serializable {
+    require(stages.nonEmpty)
+    private val stageIdx = stages.zipWithIndex.toMap
+    private val n = stages.length
+
+    def start(): Array[Long] = Array.fill(n)(None_)
+
+    /** Folds a micro-batch of one user's events into `firsts`; returns the
+      * batch's latest event time (Long.MinValue with none). */
+    def fold(firsts: Array[Long], rows: Iterator[Row]): Long = {
+      var batchMax = Long.MinValue
+      rows.foreach { r =>
+        val ts = r.getAs[Timestamp](tsCol)
+        if (ts != null) {
+          val t = ts.getTime
+          if (t > batchMax) batchMax = t
+          stageIdx.get(String.valueOf(r.getAs[Any](typeCol))).foreach { i =>
+            if (t < firsts(i)) firsts(i) = t
+          }
+        }
+      }
+      batchMax
+    }
+
+    /** The largest k such that stages 1..k all occurred, each no earlier
+      * than the one before. */
+    def reached(firsts: Array[Long]): Long = {
+      var reached = 0L
+      var prev = Long.MinValue
+      var k = 0
+      while (k < n && firsts(k) != None_ && firsts(k) >= prev) {
+        reached += 1; prev = firsts(k); k += 1
+      }
+      reached
+    }
+  }
 
   /**
    * Per-user consecutive-stage funnel reach as a stream: emits
@@ -42,32 +88,19 @@ object EventStreams {
   def funnelStages(
       df: DataFrame, userCol: String, typeCol: String, tsCol: String,
       stages: Seq[String]): DataFrame = {
-    require(stages.nonEmpty)
-    val stageIdx = stages.zipWithIndex.toMap
-    val n = stages.length
+    val funnel = new Funnel(stages, typeCol, tsCol)
     implicit val rowEnc = Encoders.row(df.schema)
     implicit val strEnc = Encoders.STRING
-    implicit val stateEnc = Encoders.kryo[Array[Long]]
+    implicit val stateEnc = df.sparkSession.implicits.newLongArrayEncoder
     implicit val outEnc = Encoders.tuple(Encoders.STRING, Encoders.scalaLong)
     df.groupByKey((r: Row) => String.valueOf(r.getAs[Any](userCol)))
       .flatMapGroupsWithState[Array[Long], (String, Long)](
         OutputMode.Update, GroupStateTimeout.NoTimeout) {
         (user: String, rows: Iterator[Row], state: GroupState[Array[Long]]) =>
-          val firsts = state.getOption.getOrElse(Array.fill(n)(None_))
-          rows.foreach { r =>
-            stageIdx.get(String.valueOf(r.getAs[Any](typeCol))).foreach { i =>
-              val t = r.getAs[Timestamp](tsCol).getTime
-              if (t < firsts(i)) firsts(i) = t
-            }
-          }
+          val firsts = state.getOption.getOrElse(funnel.start())
+          funnel.fold(firsts, rows)
           state.update(firsts)
-          var reached = 0L
-          var prev = Long.MinValue
-          var k = 0
-          while (k < n && firsts(k) != None_ && firsts(k) >= prev) {
-            reached += 1; prev = firsts(k); k += 1
-          }
-          Iterator((user, reached))
+          Iterator((user, funnel.reached(firsts)))
       }
       .toDF(userCol, "reached")
   }
@@ -89,17 +122,15 @@ object EventStreams {
   def funnelStagesWatermarked(
       df: DataFrame, userCol: String, typeCol: String, tsCol: String,
       stages: Seq[String], delay: String, ttlMs: Long = 86400000L): DataFrame = {
-    require(stages.nonEmpty)
     // fail at call time, not inside a streaming batch: ttlMs <= 0 makes
     // setTimeoutTimestamp land at/behind the watermark, which throws
     // IllegalArgumentException mid-micro-batch at runtime
     require(ttlMs > 0, s"ttlMs must be positive, got $ttlMs")
-    val stageIdx = stages.zipWithIndex.toMap
-    val n = stages.length
+    val funnel = new Funnel(stages, typeCol, tsCol)
     val wm = df.withWatermark(tsCol, delay)
     implicit val rowEnc = Encoders.row(wm.schema)
     implicit val strEnc = Encoders.STRING
-    implicit val stateEnc = Encoders.kryo[Array[Long]]
+    implicit val stateEnc = df.sparkSession.implicits.newLongArrayEncoder
     implicit val outEnc = Encoders.tuple(Encoders.STRING, Encoders.scalaLong)
     wm.groupByKey((r: Row) => String.valueOf(r.getAs[Any](userCol)))
       .flatMapGroupsWithState[Array[Long], (String, Long)](
@@ -109,28 +140,15 @@ object EventStreams {
             state.remove()
             Iterator.empty
           } else {
-            val firsts = state.getOption.getOrElse(Array.fill(n)(None_))
-            var batchMax = Long.MinValue
-            rows.foreach { r =>
-              val t = r.getAs[Timestamp](tsCol).getTime
-              if (t > batchMax) batchMax = t
-              stageIdx.get(String.valueOf(r.getAs[Any](typeCol))).foreach { i =>
-                if (t < firsts(i)) firsts(i) = t
-              }
-            }
+            val firsts = state.getOption.getOrElse(funnel.start())
+            val batchMax = funnel.fold(firsts, rows)
             state.update(firsts)
             // anchor the ttl at max(watermark, this batch's event time):
             // on the FIRST batch the watermark is still 0, and an epoch-
             // anchored timeout would expire every user at the next advance
             state.setTimeoutTimestamp(
               math.max(state.getCurrentWatermarkMs(), batchMax) + ttlMs)
-            var reached = 0L
-            var prev = Long.MinValue
-            var k = 0
-            while (k < n && firsts(k) != None_ && firsts(k) >= prev) {
-              reached += 1; prev = firsts(k); k += 1
-            }
-            Iterator((user, reached))
+            Iterator((user, funnel.reached(firsts)))
           }
       }
       .toDF(userCol, "reached")
@@ -178,7 +196,7 @@ object EventStreams {
       tsCol: String, idCol: String, convType: String): DataFrame = {
     implicit val rowEnc = Encoders.row(df.schema)
     implicit val strEnc = Encoders.STRING
-    implicit val stateEnc = Encoders.kryo[(Boolean, String, String)]
+    implicit val stateEnc = Encoders.product[(Boolean, String, String)]
     implicit val outEnc =
       Encoders.tuple(Encoders.STRING, Encoders.STRING, Encoders.STRING)
     df.groupByKey((r: Row) => String.valueOf(r.getAs[Any](userCol)))
@@ -224,7 +242,7 @@ object EventStreams {
   def burstinessProfile(df: DataFrame, userCol: String, tsCol: String): DataFrame = {
     implicit val rowEnc = Encoders.row(df.schema)
     implicit val strEnc = Encoders.STRING
-    implicit val stateEnc = Encoders.kryo[(Long, Long, Long, BigInt)]
+    implicit val stateEnc = Encoders.product[(Long, Long, Long, BigInt)]
     implicit val outEnc = Encoders.tuple(
       Encoders.STRING, Encoders.scalaLong, Encoders.scalaLong, Encoders.scalaLong)
     df.groupByKey((r: Row) => String.valueOf(r.getAs[Any](userCol)))
@@ -284,7 +302,7 @@ object EventStreams {
       gapSec: Long = 1800L): DataFrame = {
     implicit val rowEnc = Encoders.row(df.schema)
     implicit val strEnc = Encoders.STRING
-    implicit val stateEnc = Encoders.kryo[(Long, Long, Long, Long)]
+    implicit val stateEnc = Encoders.product[(Long, Long, Long, Long)]
     implicit val outEnc = Encoders.tuple(Encoders.STRING, Encoders.scalaLong,
       Encoders.scalaLong, Encoders.scalaLong, Encoders.scalaLong)
     val gapUs = gapSec * 1000000L
@@ -316,7 +334,7 @@ object EventStreams {
       tsCol: String, idCol: String): DataFrame = {
     implicit val rowEnc = Encoders.row(df.schema)
     implicit val strEnc = Encoders.STRING
-    implicit val stateEnc = Encoders.kryo[(Long, Long, String)]
+    implicit val stateEnc = Encoders.product[(Long, Long, String)]
     implicit val outEnc = Encoders.tuple(Encoders.STRING, Encoders.STRING)
     df.groupByKey((r: Row) => String.valueOf(r.getAs[Any](userCol)))
       .flatMapGroupsWithState[(Long, Long, String), (String, String)](

@@ -2,12 +2,12 @@ package graft.smoother
 
 import java.sql.Timestamp
 
-import org.apache.spark.sql.{DataFrame, Dataset}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 import graft.filter.{KalmanIn, LinearKalmanCompute, LinearKalmanFilter}
 import graft.linalg.{DMat, Dense}
-import graft.state.{KeyedIn, StageConf, StateSpec, StatefulStage}
+import graft.state.{EventTimeout, KeyedIn, StateSpec, StatefulStage}
 
 /** Forward-pass record: filtered + predicted moments and the process model,
   * everything the RTS backward recursion needs. */
@@ -166,23 +166,19 @@ class LinearKalmanSmoother(stateSize: Int, measurementSize: Int)
   /** Fixed-lag smoothing: the forward fold chained into a bounded-window
     * backward replay ([[RtsLagRowKernel]]), each a row fold in batch and in
     * streaming, where the states are the forward `FwdState` and the lag
-    * window. The window takes each key's forward records in the order the
-    * forward fold made them, stateIndex order: records of tied or null
-    * times have no other order that the backward step can pair. */
+    * window; both stages run on the estimator's [[StageConf]], the lag
+    * stage's watermark on the forward records' times. The window takes
+    * each key's forward records in the order the forward fold made them,
+    * stateIndex order: records of tied or null times have no other order
+    * that the backward step can pair. A stream cannot take an event-time
+    * state timeout: Spark rejects one on a stage that feeds another, as the
+    * forward stage feeds the lag stage. */
   def smoothFixedLag(df: DataFrame, lag: Int): DataFrame = {
-    val lagKernel = new RtsLagRowKernel(lag, stateSize)
-    val conf = StageConf()
-    val in = kalmanProjection(df)
-    val lagged = if (df.isStreaming) {
-      val fwd = StatefulStage.stream(in, RtsForwardRowKernel.outputSchema, conf, forwardKernel,
-        RtsForwardRowKernel.state)
-      StatefulStage.streamFold(fwd, Seq("stateIndex"), RtsLagRowKernel.outputSchema, conf, lagKernel,
-        RtsLagRowKernel.state)
-    } else {
-      val fwd = StatefulStage.batchRows(in, RtsForwardRowKernel.outputSchema, conf, forwardKernel)
-      StatefulStage.fold(fwd, Seq(col("stateKey"), col("stateIndex")), RtsLagRowKernel.outputSchema, lagKernel)
-    }
-    userColumns(lagged)
+    require(!df.isStreaming || stageConf.timeoutMode != EventTimeout,
+      "fixed-lag smoothing of a stream cannot use the event-time state timeout (setStateTimeoutMode(\"event\")): " +
+        "Spark rejects an event-time timeout on the forward stage, which feeds the lag stage")
+    val fwd = StatefulStage.run(kalmanProjection(df), stageConf, forwardKernel)
+    userColumns(StatefulStage.run(fwd, stageConf, new RtsLagRowKernel(lag, stateSize), Seq("stateIndex")))
   }
 
   /** Encoder-path fixed-lag smoothing kept as the pin-spec reference: the
@@ -192,20 +188,8 @@ class LinearKalmanSmoother(stateSize: Int, measurementSize: Int)
     val spark = df.sparkSession
     import spark.implicits._
     val fwdSpec = new ForwardSpec(new LinearKalmanCompute(stateSize, measurementSize, 1.0), defaults)
-    val lagSpec = new FixedLagSpec(lag, stateSize)
-    val lagged = StatefulStage.batch(toKalmanInput(df), fwdSpec)
-      .repartition(col("stateKey"))
-      .sortWithinPartitions(col("stateKey"), col("stateIndex"))
-      .mapPartitions { rows =>
-        var curKey: String = null
-        var window: Option[List[FiltRecord]] = None
-        rows.flatMap { r =>
-          if (r.stateKey != curKey) { curKey = r.stateKey; window = None }
-          window = lagSpec.update(r.stateKey, r, window)
-          lagSpec.output(r.stateKey, r, window.get)
-        }
-      }
-    userColumns(lagged.toDF())
+    val fwd = StatefulStage.batch(toKalmanInput(df), fwdSpec, stageConf)
+    userColumns(StatefulStage.batch(fwd, new FixedLagSpec(lag, stateSize), stageConf, Seq(col("stateIndex"))).toDF())
   }
 
   private def forwardKernel = new RtsForwardRowKernel(
@@ -229,41 +213,20 @@ class LinearKalmanSmoother(stateSize: Int, measurementSize: Int)
   def smooth(df: DataFrame): DataFrame = {
     require(!df.isStreaming,
       "full-pass RTS smoothing needs a batch DataFrame; use setFixedLag to smooth a stream")
-    val fwdDF = StatefulStage.batchRows(kalmanProjection(df),
-      RtsForwardRowKernel.outputSchema, stageConf, forwardKernel)
-    val smoothed = StatefulStage.fold(fwdDF, Seq(col("stateKey"), col("stateIndex").desc),
-      RtsBackwardRowKernel.outputSchema, new RtsBackwardRowKernel(stateSize))
-    userColumns(smoothed)
+    val fwd = StatefulStage.run(kalmanProjection(df), stageConf, forwardKernel)
+    userColumns(StatefulStage.fold(fwd, Seq(col("stateKey"), col("stateIndex").desc),
+      new RtsBackwardRowKernel(stateSize)))
   }
 
   /** Encoder-path RTS kept as the pin-spec reference (pre-kernel plan:
-    * two exchanges, Dataset-encoder boundary on both passes). */
+    * two exchanges, Dataset-encoder boundary on both passes): the forward
+    * pass, then [[BackwardSpec]] over each key's records newest first. */
   private[graft] def smoothEncoderBatch(df: DataFrame): DataFrame = {
     val spark = df.sparkSession
     import spark.implicits._
     val fwdSpec = new ForwardSpec(new LinearKalmanCompute(stateSize, measurementSize, 1.0), defaults)
-    val fwd: Dataset[FiltRecord] = StatefulStage.batch(toKalmanInput(df), fwdSpec, stageConf)
-    val s = stateSize
-
-    val smoothed = fwd
-      .repartition(col("stateKey"))
-      .sortWithinPartitions(col("stateKey"), col("stateIndex").desc)
-      .mapPartitions { rows =>
-        var curKey: String = null
-        var nextSm: Array[Double] = null // smoothed mean of k+1
-        var nextSmCov: Array[Double] = null
-        var nextRec: FiltRecord = null // record of k+1 (pred moments + F)
-        rows.map { r =>
-          val (sm, sc) =
-            if (r.stateKey != curKey || nextRec == null) (r.filtMean, r.filtCov)
-            else BackwardSpec.step(s, r, nextRec, nextSm, nextSmCov)
-          curKey = r.stateKey
-          nextSm = sm; nextSmCov = sc; nextRec = r
-          SmoothedOut(r.stateKey, r.stateIndex, r.eventTime, sm, DMat(s, s, sc))
-        }
-      }
-
-    userColumns(smoothed.toDF())
+    val fwd = StatefulStage.batch(toKalmanInput(df), fwdSpec, stageConf)
+    userColumns(StatefulStage.batch(fwd, new BackwardSpec(stateSize), stageConf, Seq(col("stateIndex").desc)).toDF())
   }
 
   /** Smoothing replaces filtering as this transformer's output: full-pass

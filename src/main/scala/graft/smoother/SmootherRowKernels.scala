@@ -27,7 +27,9 @@ final class RtsForwardRowKernel(
     hasCtl: Boolean, hasCtlFn: Boolean, hasIM: Boolean, hasIC: Boolean)
   extends SpecKernel[KalmanIn, (FwdState, FiltRecord), FiltRecord](new ForwardSpec(compute, defaults),
     new KalmanRowInput(hasMM, hasMN, hasPM, hasPN, hasCtl, hasCtlFn, hasIM, hasIC).decode,
-    FiltRecordRow.encode(_, withTime = false))
+    FiltRecordRow.encode(_, withTime = false),
+    RtsForwardRowKernel.outputSchema,
+    Some(RtsForwardRowKernel.state))
 
 object RtsForwardRowKernel {
   val outputSchema: StructType = Encoders.product[FiltRecord].schema
@@ -45,6 +47,8 @@ final class RtsBackwardRowKernel(s: Int)
     FiltRecordRow.decode(_, withTime = false),
     o => new GenericInternalRow(Array[Any](
       null, o.stateIndex, null, vector(o.stateMean), matrix(o.stateCovariance))),
+    RtsBackwardRowKernel.outputSchema,
+    None,
     timeIn = 2)
 
 object RtsBackwardRowKernel {
@@ -58,6 +62,8 @@ private[smoother] final class RtsLagRowKernel(lag: Int, s: Int)
     FiltRecordRow.decode(_, withTime = true),
     o => new GenericInternalRow(Array[Any](
       null, o.stateIndex, o.stepIndex, time(o.eventTime), vector(o.stateMean), matrix(o.stateCovariance))),
+    RtsLagRowKernel.outputSchema,
+    Some(RtsLagRowKernel.state),
     timeIn = 2, timeOut = None)
 
 private[graft] object RtsLagRowKernel {

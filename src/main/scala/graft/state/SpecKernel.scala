@@ -11,34 +11,59 @@ import org.apache.spark.unsafe.types.UTF8String
 import graft.linalg.DMat
 
 /**
- * The row driver of a [[StateSpec]], run by both the batch fold and the
- * streaming one ([[StatefulStage.stream]]): folds InternalRows with the
- * family's own `update` and `output`, the functions the encoder reference
- * ([[StatefulStage.batch]]) runs. `decode` reads an input row into the
- * spec's input; its key and time may be left empty, because the driver
- * passes the key to the spec and writes the key (ordinal 0) into every row
- * `encode` makes, and the input row's time (input ordinal `timeIn`) at
- * output ordinal `timeOut`; with `timeOut` None, `encode` writes the
- * output's own time. The driver never calls `finish`, so a spec that emits
- * at the end of a key (`BatchEmSpec`) stays on [[StatefulStage.batch]].
+ * A stateful family's one handle: the row driver of its [[StateSpec]], run
+ * by [[StatefulStage.run]] in batch and in streaming, with the schema of
+ * the rows it writes (`outputSchema`, stateKey first) and, where the family
+ * streams, the row form its state is stored in (`state`). It folds
+ * InternalRows with the family's own `update`, `output` and `finish`, the
+ * functions the encoder reference ([[StatefulStage.batch]]) runs. `decode`
+ * reads an input row into the spec's input; its key and time may be left
+ * empty, because the kernel passes the key to the spec and writes the key
+ * (ordinal 0) into every row `encode` makes, and the input row's time
+ * (input ordinal `timeIn`; for `finish`, the key's last row's) at output
+ * ordinal `timeOut`; with `timeOut` None, `encode` writes the output's own
+ * time. The batch loop calls `finish` at the end of each key; a stream has
+ * no end, so a kernel with no `state` folds batch input only.
  */
 class SpecKernel[I <: KeyedIn, S, O](
     spec: StateSpec[I, S, O],
     decode: InternalRow => I,
     encode: O => GenericInternalRow,
+    val outputSchema: StructType,
+    val state: Option[StateCodec[S]],
     val timeIn: Int = 1,
     timeOut: Option[Int] = Some(2)) extends FoldKernel {
 
-  /** Folds one partition of key-sorted rows, each key from no state. */
+  /** Folds one partition of key-sorted rows, each key from no state, and
+    * emits each key's `finish` rows after its last row's. */
   def run(rows: Iterator[InternalRow]): Iterator[InternalRow] = new Iterator[InternalRow] {
     private val keys = new KeyRun
     private var fold: KeyFold = null
+    // the first row of a key, held while the previous key's finish rows go out
+    private var held: InternalRow = null
+    private var ended = false
 
     def hasNext: Boolean = {
-      while ((fold == null || !fold.hasOutput) && rows.hasNext) {
-        val row = rows.next()
-        if (keys.starts(row)) fold = start(keys.key, None)
-        fold.step(row)
+      while ((fold == null || !fold.hasOutput) && !ended) {
+        if (held != null) {
+          fold = start(keys.key, None)
+          fold.step(held)
+          held = null
+        } else if (rows.hasNext) {
+          val row = rows.next()
+          if (!keys.starts(row)) fold.step(row)
+          else {
+            if (fold != null) fold.finish()
+            if (fold != null && fold.hasOutput) held = row
+            else {
+              fold = start(keys.key, None)
+              fold.step(row)
+            }
+          }
+        } else {
+          if (fold != null) fold.finish()
+          ended = true
+        }
       }
       fold != null && fold.hasOutput
     }
@@ -54,7 +79,8 @@ class SpecKernel[I <: KeyedIn, S, O](
   def start(key: UTF8String, state: Option[S]): KeyFold = new KeyFold(key, state)
 
   /** One key's fold: [[step]] folds an input row into [[state]], then its
-    * output rows are taken with [[output]] while [[hasOutput]]. */
+    * output rows are taken with [[output]] while [[hasOutput]]; [[finish]]
+    * queues the key's end-of-input rows the same way. */
   final class KeyFold private[SpecKernel] (keyUtf: UTF8String, private var current: Option[S]) {
     private val key = if (keyUtf == null) null else keyUtf.toString
     private var time: Any = null
@@ -70,6 +96,11 @@ class SpecKernel[I <: KeyedIn, S, O](
         case Some(s) => spec.output(key, in, s)
         case None => Nil
       }
+    }
+
+    def finish(): Unit = pending = current match {
+      case Some(s) => spec.finish(key, s)
+      case None => Nil
     }
 
     def hasOutput: Boolean = pending.nonEmpty
@@ -103,8 +134,8 @@ private[state] final class KeyRun {
   }
 }
 
-/** A state's row form: the struct [[StatefulStage.stream]] stores a key's
-  * state as (the schema of the state case class), and the conversions. */
+/** A state's row form: the struct a streaming fold stores a key's state
+  * as (the schema of the state case class), and the conversions. */
 final case class StateCodec[S](schema: StructType, encode: S => InternalRow, decode: InternalRow => S)
 
 /** Field codecs shared by the families' row `decode`/`encode` functions. */

@@ -8,10 +8,12 @@ import org.apache.spark.sql.catalyst.plans.logical.{LogicalPlan, UnaryNode}
 import org.apache.spark.sql.catalyst.plans.physical.{ClusteredDistribution, Distribution, Partitioning}
 import org.apache.spark.sql.execution.{InputRDDCodegen, SparkPlan, SparkStrategy, UnaryExecNode}
 import org.apache.spark.sql.internal.SQLConf
+import org.apache.spark.sql.types.StructType
 
-/** Folds one partition, sorted by the fold's ordering, into output rows;
-  * column 0 (`stateKey`) of input and output is the key. */
+/** Folds one partition, sorted by the fold's ordering, into output rows
+  * of `outputSchema`; column 0 (`stateKey`) of input and output is the key. */
 trait FoldKernel extends Serializable {
+  def outputSchema: StructType
   def run(rows: Iterator[InternalRow]): Iterator[InternalRow]
 }
 

@@ -9,7 +9,6 @@ import org.apache.spark.sql.catalyst.plans.logical.Sort
 import org.apache.spark.sql.functions.{col, xxhash64}
 import org.apache.spark.sql.graftbridge.Bridge
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout}
-import org.apache.spark.sql.types.StructType
 
 /** Input rows to a stateful stage carry a grouping key and optional event time. */
 trait KeyedIn extends Serializable {
@@ -26,10 +25,11 @@ trait StateSpec[I <: KeyedIn, S, O] extends Serializable {
   def update(key: String, row: I, state: Option[S]): Option[S]
   def output(key: String, row: I, state: S): List[O]
 
-  /** Emitted when a key's rows are exhausted (encoder batch path only:
-    * streams have no end, and [[SpecKernel]] does not call it). Default:
-    * nothing. Lets specs run whole-group computations (e.g. batch EM)
-    * without a second shuffle. */
+  /** Emitted when a key's rows are exhausted, after the output of its last
+    * row, by both batch folds ([[SpecKernel]]'s loop and the encoder
+    * reference [[StatefulStage.batch]]); a stream has no end, so the
+    * streaming fold never calls it. Default: nothing. Lets specs run
+    * whole-group computations (batch EM) without a second shuffle. */
   def finish(key: String, state: S): List[O] = Nil
 }
 
@@ -54,34 +54,40 @@ final case class StageConf(
 
 /**
  * One [[StateSpec]] per family and one row driver of it ([[SpecKernel]]),
- * run in two places:
+ * which [[run]] drives in two places, picked by whether the input streams:
  *
- * - **Batch** ([[batchRows]]): the key exchange and a sort by (stateKey,
- *   eventTime[, __rowSeq]), then a sequential fold with key-boundary
- *   detection in a [[StatefulFold]] plan node. Exactly one shuffle; ordering
- *   comes from Spark's external (spilling) sort, so a key with billions of
- *   rows never has to fit in memory. This is the 100 TB path:
- *   hash-partition by key across executors, sequential O(rows) compute per
- *   partition.
+ * - **Batch**: the key exchange and a sort by (stateKey, eventTime
+ *   [, __rowSeq]), then a sequential fold with key-boundary detection in a
+ *   [[StatefulFold]] plan node. Exactly one shuffle; ordering comes from
+ *   Spark's external (spilling) sort, so a key with billions of rows never
+ *   has to fit in memory. This is the 100 TB path: hash-partition by key
+ *   across executors, sequential O(rows) compute per partition.
  *
- * - **Streaming** ([[stream]]): `flatMapGroupsWithState` in Append mode
- *   over the same projection, grouped on its stateKey column, with optional
- *   watermark and state timeout (none / processing-time / event-time). Each
- *   key's micro-batch rows are sorted as batch sorts them and folded from
- *   the key's stored state, which is kept as the struct of the spec's
- *   state case class, readable with Spark's state data source.
+ * - **Streaming**: `flatMapGroupsWithState` in Append mode over the same
+ *   projection, grouped on its stateKey column, with optional watermark
+ *   and state timeout (none / processing-time / event-time). Each key's
+ *   micro-batch rows are sorted as batch sorts them and folded from the
+ *   key's stored state, which is kept in the kernel's [[StateCodec]] form,
+ *   the struct of the spec's state case class, readable with Spark's state
+ *   data source.
  *
- * [[batch]] drives the spec through Dataset encoders: it is the reference
- * the row kernels are pinned to, and the driver of batch EM, whose spec
- * emits at the end of a key.
+ * [[batch]] drives a spec through Dataset encoders. It is the reference
+ * the row kernels are pinned to, and only the families' encoder references
+ * (`transformEncoderBatch`, `smoothEncoderBatch`,
+ * `smoothFixedLagEncoderBatch`) call it.
  *
  * Capability parity with artan's stateful transformer
  * (ml/state/StatefulTransformer.scala).
  */
 object StatefulStage {
 
+  /**
+   * The encoder reference: `spec` over `ds`, clustered on stateKey, each
+   * key's rows in `order`, or, with no `order`, by (eventTime, __rowSeq)
+   * as [[run]] folds them; `finish` runs at the end of each key.
+   */
   def batch[I <: KeyedIn, S, O](
-      ds: Dataset[I], spec: StateSpec[I, S, O], conf: StageConf = StageConf())(
+      ds: Dataset[I], spec: StateSpec[I, S, O], conf: StageConf = StageConf(), order: Seq[Column] = Nil)(
       implicit ie: Encoder[I], oe: Encoder[O]): Dataset[O] = {
     // __rowSeq: deterministic tiebreaker for equal/null event times. A full-row
     // hash (not monotonically_increasing_id: Spark rejects that expression
@@ -93,79 +99,76 @@ object StatefulStage {
     // when the caller declares (key, time) unique (conf.assumeUniqueKeyTime):
     // no ties exist, so the narrower sort key is equally deterministic.
     val ordered =
-      if (conf.assumeUniqueKeyTime)
+      if (order.nonEmpty)
+        ds.repartition(col("stateKey")).sortWithinPartitions(col("stateKey") +: order: _*)
+      else if (conf.assumeUniqueKeyTime)
         ds.repartition(col("stateKey"))
           .sortWithinPartitions(col("stateKey"), col("eventTime"))
       else
-        ds.withColumn("__rowSeq",
-            org.apache.spark.sql.functions.xxhash64(ds.columns.map(col): _*))
+        ds.withColumn("__rowSeq", xxhash64(ds.columns.map(col): _*))
           .repartition(col("stateKey"))
           .sortWithinPartitions(col("stateKey"), col("eventTime"), col("__rowSeq"))
           .drop("__rowSeq")
     ordered.as[I](ie)
       .mapPartitions { rows =>
+        // a null key is a key of its own, as in [[SpecKernel]]
+        var started = false
         var curKey: String = null
         var state: Option[S] = None
+        def finish(): List[O] = if (started) state.map(s => spec.finish(curKey, s)).getOrElse(Nil) else Nil
         val perRow = rows.flatMap { r =>
           val k = r.stateKey
-          val boundary =
-            if (k != curKey && curKey != null) state.map(s => spec.finish(curKey, s)).getOrElse(Nil)
-            else Nil
-          if (k != curKey) { curKey = k; state = None }
+          val boundary = if (started && k != curKey) finish() else Nil
+          if (!started || k != curKey) { curKey = k; state = None; started = true }
           state = spec.update(k, r, state)
           boundary ++ (state match {
             case Some(s) => spec.output(k, r, s)
             case None => Nil
           })
         }
-        // flush the final key after the partition's rows are exhausted
-        perRow ++ new Iterator[O] {
-          private var done = false
-          private var pending: List[O] = Nil
-          private def materialize(): Unit = if (!done) {
-            done = true
-            pending = if (curKey != null) state.map(s => spec.finish(curKey, s)).getOrElse(Nil) else Nil
-          }
-          def hasNext: Boolean = { materialize(); pending.nonEmpty }
-          def next(): O = { materialize(); val h = pending.head; pending = pending.tail; h }
-        }
+        // the last key's finish, once the partition's rows are exhausted
+        perRow ++ finish()
       }
   }
 
   /**
-   * InternalRow-level batch path: [[batch]]'s partitioning and ordering
-   * contract (tiebreak hash unless (key, time) is declared unique) as a
-   * [[StatefulFold]] node, folding Tungsten rows with no per-row encoder
-   * round trip. `in` is the canonical input projection, starting with
-   * (stateKey, eventTime); the kernels are [[SpecKernel]]s, running the
-   * family's own StateSpec over decoded rows.
+   * Folds `in`, the family's canonical projection starting with (stateKey,
+   * eventTime), with `kernel`: a [[StatefulFold]] node over a batch input,
+   * a `flatMapGroupsWithState` node over a stream. Each key's rows fold in
+   * [[batch]]'s order, by (eventTime, __rowSeq), where `__rowSeq` is an
+   * xxhash64 over `in`'s columns, skipped when (key, time) is declared
+   * unique; so batch and streaming fold tied (key, time) rows alike.
    *
-   * Tiebreak note: __rowSeq is xxhash64 over THIS projection's columns, so
-   * a kernel projection that drops constant columns carried by the encoder
-   * path yields a different (still deterministic, still
+   * Tiebreak note: a kernel projection that drops constant columns carried
+   * by the encoder path yields a different (still deterministic, still
    * input-repartitioning-stable) permutation of duplicate (key, time) rows
-   * than the encoder reference. [[stream]] sorts by the same hash, so batch
-   * and streaming fold tied rows in the same order.
+   * than the encoder reference.
    */
-  def batchRows(in: DataFrame, outSchema: StructType, conf: StageConf,
-      kernel: FoldKernel): DataFrame = {
+  def run[S](in: DataFrame, conf: StageConf, kernel: SpecKernel[_, S, _]): DataFrame = {
     val rows = sequenced(in, conf)
-    fold(rows, Seq("stateKey", "eventTime", "__rowSeq").filter(rows.columns.contains).map(col), outSchema, kernel)
+    run(rows, conf, kernel, Seq("eventTime", "__rowSeq").filter(rows.columns.contains))
   }
+
+  /** [[run]] with each key's rows in the `order` columns of `in` (long or
+    * timestamp, ascending, nulls first) instead. */
+  def run[S](in: DataFrame, conf: StageConf, kernel: SpecKernel[_, S, _], order: Seq[String]): DataFrame =
+    if (in.isStreaming) streamFold(in, order, conf, kernel)
+    else fold(in, col("stateKey") +: order.map(col), kernel)
 
   /** `in` with the tiebreak column `__rowSeq` (xxhash64 over its columns)
     * appended, unless (key, time) is declared unique. */
   private def sequenced(in: DataFrame, conf: StageConf): DataFrame =
     if (conf.assumeUniqueKeyTime) in else in.withColumn("__rowSeq", xxhash64(in.columns.map(col): _*))
 
-  /** Folds `in` with `kernel`, clustered on stateKey (the first column of
-    * `in` and `outSchema`) and sorted by `order` within each partition. */
-  def fold(in: DataFrame, order: Seq[Column], outSchema: StructType,
-      kernel: FoldKernel): DataFrame = {
+  /** Folds batch `in` with `kernel`, clustered on stateKey (the first
+    * column of `in` and of the kernel's output) and sorted by `order`
+    * within each partition. */
+  def fold(in: DataFrame, order: Seq[Column], kernel: FoldKernel): DataFrame = {
     val session = in.sparkSession
     StatefulFoldStrategy.register(session)
     val sorted = in.sortWithinPartitions(order: _*).queryExecution.analyzed.asInstanceOf[Sort]
     val key = sorted.child.output.head
+    val outSchema = kernel.outputSchema
     require(key.name == "stateKey" && outSchema.head.dataType == key.dataType,
       s"fold input and output must start with stateKey: ${key.name} / ${outSchema.head}")
     val output = key +: outSchema.tail.map(f => AttributeReference(f.name, f.dataType, f.nullable)())
@@ -177,31 +180,24 @@ object StatefulStage {
   private[graft] def micros(t: Timestamp): Long = t.getTime * 1000L + (t.getNanos / 1000) % 1000
 
   /**
-   * The streaming driver: [[SpecKernel]] `kernel` folds each key's rows of a
-   * micro-batch, from the key's stored state, in a `flatMapGroupsWithState`
-   * node grouped on stateKey. `in` is the family's canonical projection,
-   * the one [[batchRows]] folds. Its rows reach the kernel undecoded; each
-   * key's rows are copied off Spark's reused row buffer and sorted by
-   * (eventTime µs, __rowSeq), the order batch folds them in, so tied
-   * (key, time) rows fold alike in both modes (`__rowSeq` is the same
-   * xxhash64 over `in`, skipped when (key, time) is declared unique). The
-   * state is stored in `state`'s row form, the struct of its case class.
+   * The streaming fold: `kernel` folds each key's rows of a micro-batch,
+   * from the key's stored state, in a `flatMapGroupsWithState` node grouped
+   * on stateKey. The rows reach the kernel undecoded; each key's rows are
+   * copied off Spark's reused row buffer and sorted by the `order` columns
+   * of `in`, the order batch folds them in. The state is stored in the
+   * kernel's [[StateCodec]] form, the struct of its case class. The
+   * watermark, when set, is put on `in`'s eventTime column, and rows at or
+   * behind it are dropped before the fold, whatever the timeout mode
+   * (Spark drops them itself only under an event-time timeout).
    *
    * A state timeout needs both a mode and a duration: Spark would never
    * fire a mode without a duration, and a duration without a mode would be
    * dropped.
    */
-  def stream[S](in: DataFrame, outSchema: StructType, conf: StageConf,
-      kernel: SpecKernel[_, S, _], state: StateCodec[S]): DataFrame = {
-    val rows = sequenced(in, conf)
-    streamFold(rows, Seq("eventTime", "__rowSeq").filter(rows.columns.contains), outSchema, conf, kernel, state)
-  }
-
-  /** [[stream]] with each key's micro-batch rows sorted by the `order`
-    * columns of `in` (long or timestamp, nulls first) instead: the
-    * streaming form of [[fold]]. */
-  def streamFold[S](in: DataFrame, order: Seq[String], outSchema: StructType, conf: StageConf,
-      kernel: SpecKernel[_, S, _], state: StateCodec[S]): DataFrame = {
+  private def streamFold[S](in: DataFrame, order: Seq[String], conf: StageConf,
+      kernel: SpecKernel[_, S, _]): DataFrame = {
+    val state = kernel.state.getOrElse(throw new IllegalArgumentException(
+      s"${kernel.getClass.getSimpleName} folds batch input only"))
     require(conf.timeoutMode == NoTimeout || conf.timeoutDuration.isDefined,
       s"state timeout mode ${conf.timeoutMode} needs setStateTimeoutDuration")
     require(conf.timeoutMode != NoTimeout || conf.timeoutDuration.isEmpty,
@@ -211,13 +207,14 @@ object StatefulStage {
     require(!ordinals.contains(-1), s"order columns ${order.mkString(", ")} not all in ${rows.columns.mkString(", ")}")
     val byOrder = new MicroBatchOrder(ordinals)
     Bridge.flatMapGroupsWithState(rows, "stateKey", new StreamFold(kernel, state, byOrder, conf), state.schema,
-      outSchema, conf.timeoutMode.conf)
+      kernel.outputSchema, conf.timeoutMode.conf)
   }
 }
 
-/** One key's micro-batch in [[StatefulStage.stream]]: its rows, sorted,
-  * folded from the stored state; the new state is stored, and the timeout
-  * set from the last row with a time. */
+/** One key's micro-batch in [[StatefulStage.streamFold]]: its rows, less
+  * those at or behind the watermark, sorted and folded from the stored
+  * state; the new state is stored, and the timeout set from the last row
+  * with a time. */
 private final class StreamFold[S](kernel: SpecKernel[_, S, _], state: StateCodec[S],
     order: java.util.Comparator[InternalRow], conf: StageConf)
   extends ((InternalRow, Iterator[InternalRow], GroupState[InternalRow]) => Iterator[InternalRow]) with Serializable {
@@ -227,7 +224,12 @@ private final class StreamFold[S](kernel: SpecKernel[_, S, _], state: StateCodec
       gs.remove()
       Iterator.empty
     } else {
-      val rows = values.map(_.copy()).toArray
+      val time = kernel.timeIn
+      // rows at or behind the watermark are late: dropped in every timeout
+      // mode, as Spark drops them before the fold under an event-time one
+      val watermarkUs = if (conf.watermarkDuration.isEmpty) 0L else gs.getCurrentWatermarkMs() * 1000L
+      val rows = (if (watermarkUs == 0L) values
+        else values.filter(r => r.isNullAt(time) || r.getLong(time) > watermarkUs)).map(_.copy()).toArray
       java.util.Arrays.sort(rows, order)
       val fold = kernel.start(if (key.isNullAt(0)) null else key.getUTF8String(0).copy(),
         gs.getOption.map(state.decode))
@@ -240,8 +242,8 @@ private final class StreamFold[S](kernel: SpecKernel[_, S, _], state: StateCodec
         gs.update(state.encode(s))
         conf.timeoutMode match {
           case EventTimeout =>
-            rows.reverseIterator.find(!_.isNullAt(kernel.timeIn)).foreach { r =>
-              gs.setTimeoutTimestamp(Math.floorDiv(r.getLong(kernel.timeIn), 1000L), conf.timeoutDuration.get)
+            rows.reverseIterator.find(!_.isNullAt(time)).foreach { r =>
+              gs.setTimeoutTimestamp(Math.floorDiv(r.getLong(time), 1000L), conf.timeoutDuration.get)
             }
           case ProcessTimeout => gs.setTimeoutDuration(conf.timeoutDuration.get)
           case NoTimeout =>

@@ -180,14 +180,47 @@ class MLPipelineSpec extends AnyFunSuite with SparkTestSession {
   }
 
   test("transformSchema matches the actual transform output schema") {
-    val df = measurements
-    val stage = new ml.LinearKalmanFilter(1, 1)
-      .setStateKeyCol("key").setEventTimeCol("t").setMeasurementCol("meas")
-      .setCalculateLoglikelihood().setCalculateMahalanobis()
-    val declared = stage.transformSchema(df.schema)
-    val actual = stage.transform(df).schema
-    assert(declared.fieldNames.sameElements(actual.fieldNames),
-      s"declared=${declared.fieldNames.mkString(",")} actual=${actual.fieldNames.mkString(",")}")
+    val kalmanIn = measurements
+    val vectorIn = kalmanIn.withColumn("meas", org.apache.spark.ml.functions.array_to_vector(col("meas")))
+    val regressionIn = kalmanIn.select(col("key"), col("t"), col("meas")(0).as("y"),
+      array(lit(1.0), col("meas")(0)).as("f"))
+    val mixtureIn = kalmanIn.select(col("key"), col("t"), col("meas").as("s"), col("meas")(0).as("x"))
+    def kalman[T <: ml.KalmanTransformer[T]](stage: T): T =
+      stage.setStateKeyCol("key").setEventTimeCol("t").setMeasurementCol("meas")
+    def allOutputs[T <: ml.KalmanTransformer[T]](stage: T): T =
+      stage.setCalculateLoglikelihood().setCalculateMahalanobis().setSlidingLikelihoodWindow(2)
+        .setOutputSystemMatrices().setMultiStepPredict(1)
+    def rls = new ml.RecursiveLeastSquaresFilter(2).setStateKeyCol("key").setLabelCol("y").setFeaturesCol("f")
+    def lms = new ml.LeastMeanSquaresFilter(2).setStateKeyCol("key").setLabelCol("y").setFeaturesCol("f")
+    def gmm = new ml.MultivariateGaussianMixture(2, 1).setStateKeyCol("key").setEventTimeCol("t").setSampleCol("s")
+    def poisson = new ml.PoissonMixture(2).setStateKeyCol("key").setSampleCol("x")
+    val stages: Seq[(org.apache.spark.ml.Transformer, DataFrame)] = Seq(
+      kalman(new ml.LinearKalmanFilter(1, 1)) -> kalmanIn,
+      allOutputs(kalman(new ml.LinearKalmanFilter(1, 1))) -> vectorIn,
+      new ml.LinearKalmanFilter(1, 1).setStateKeyCol("key").setMeasurementCol("meas") -> kalmanIn,
+      kalman(new ml.ExtendedKalmanFilter(1, 1)) -> kalmanIn,
+      allOutputs(kalman(new ml.ExtendedKalmanFilter(1, 1))) -> kalmanIn,
+      kalman(new ml.UnscentedKalmanFilter(1, 1)) -> kalmanIn,
+      allOutputs(kalman(new ml.CubatureKalmanFilter(1, 1))) -> kalmanIn,
+      kalman(new ml.LinearKalmanSmoother(1, 1)) -> kalmanIn,
+      kalman(new ml.LinearKalmanSmoother(1, 1)).setFixedLag(2) -> vectorIn,
+      rls -> regressionIn,
+      rls.setEventTimeCol("t") -> regressionIn,
+      lms -> regressionIn,
+      lms.setEventTimeCol("t") -> regressionIn,
+      gmm -> mixtureIn,
+      gmm.setEnableBatchTrain() -> mixtureIn,
+      poisson -> mixtureIn,
+      poisson.setEventTimeCol("t").setEnableBatchTrain() -> mixtureIn,
+      new ml.BernoulliMixture(2).setStateKeyCol("key").setEventTimeCol("t").setSampleCol("x") -> mixtureIn)
+    stages.foreach { case (stage, df) =>
+      val declared = stage.transformSchema(df.schema)
+      val actual = stage.transform(df).schema
+      assert(declared == actual, s"${stage.uid}:\n${declared.treeString}\nvs\n${actual.treeString}")
+    }
+    // a missing input column fails at transformSchema, as at transform
+    intercept[org.apache.spark.sql.AnalysisException](
+      kalman(new ml.LinearKalmanFilter(1, 1)).transformSchema(kalmanIn.drop("meas").schema))
   }
 
   test("outputSystemMatrices emits the resolved H/F/Q/R per row") {

@@ -71,6 +71,18 @@ class PlanQualitySpec extends AnyFunSuite with SparkTestSession {
     assert(!p.contains("__rowSeq"), p.take(3000))
   }
 
+  test("batch EM folds rows in a StatefulFold, with no object decode") {
+    import spark.implicits._
+    val in = (0 until 12).map(i => ("k" + i % 3, new Timestamp(1700000000000L + i * 1000L), i.toDouble))
+      .toDF("key", "t", "x")
+    val out = new graft.mixture.PoissonMixture(2).setStateKeyCol("key").setEventTimeCol("t").setSampleCol("x")
+      .setEnableBatchTrain().transform(in)
+    val p = out.queryExecution.executedPlan.toString
+    assert(p.contains("StatefulFold BatchEmRowKernel"), p)
+    assert(!p.contains("DeserializeToObject") && !p.contains("MapPartitions"), p)
+    assert(out.count() == 3)
+  }
+
   test("streaming LKF and RLS fold rows in flatMapGroupsWithState, with struct state and no object decode") {
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext

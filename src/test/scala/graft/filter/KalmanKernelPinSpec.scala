@@ -14,7 +14,7 @@ import graft.smoother.LinearKalmanSmoother
  * (KalmanRowKernel / RlsRowKernel / LmsRowKernel / Rts*RowKernel) must
  * produce BITWISE-identical output to the Dataset-encoder path they
  * replaced (`transformEncoderBatch` / `smoothEncoderBatch`), which remains
- * the streaming engine and the executable reference. Doubles are compared
+ * as the executable reference. Doubles are compared
  * on raw IEEE bits — same FP op order is the contract, not "close enough".
  */
 class KalmanKernelPinSpec extends AnyFunSuite with SparkTestSession {
@@ -350,5 +350,52 @@ class KalmanKernelPinSpec extends AnyFunSuite with SparkTestSession {
     val streamed = spark.table("fixed_lag_ties")
     assert(streamed.count() == rows.size)
     assertBitIdentical(streamed.select(full.columns.map(col): _*), full, Seq("key", "stateIndex"))
+  }
+
+  test("batch fixed-lag with unique event times sorts without the tiebreak hash") {
+    val df = measurements(17, nullTimes = false)
+    val lagged = fixedLag().setAssumeUniqueEventTimes().transform(df)
+    val plan = lagged.queryExecution.executedPlan.toString
+    assert(plan.contains("StatefulFold") && !plan.contains("__rowSeq"), plan)
+    assertBitIdentical(lagged, fixedLag().transform(df), Seq("key", "stateIndex", "stepIndex"))
+  }
+
+  test("fixed-lag stream with a watermark drops a row behind it, as the filter does") {
+    import spark.implicits._
+    implicit val sqlCtx = spark.sqlContext
+    val onTime = for (i <- 61 to 68) yield ("a", ts(i), Array(i.toDouble))
+    // 58 minutes behind the latest time: behind the 10-minute watermark
+    val late = Seq(("a", ts(10), Array(100.0)))
+    val next = Seq(("a", ts(69), Array(3.0)))
+    def feed(name: String, build: DataFrame => DataFrame): DataFrame = {
+      val stream = org.apache.spark.sql.execution.streaming.runtime.MemoryStream[(String, Timestamp, Array[Double])]
+      val sq = build(stream.toDS().toDF("key", "t", "meas"))
+        .writeStream.format("memory").queryName(name).outputMode("append").start()
+      Seq(onTime, late, next).foreach { rows => stream.addData(rows); sq.processAllAvailable() }
+      sq.stop()
+      spark.table(name)
+    }
+    val filtered = feed("late_row_filter", new LinearKalmanFilter(1, 1)
+      .setStateKeyCol("key").setEventTimeCol("t").setMeasurementCol("meas")
+      .setWatermarkDuration("10 minutes").transform)
+    val lagged = feed("late_row_fixed_lag", fixedLag().setWatermarkDuration("10 minutes").transform)
+    val admitted = onTime ++ next
+    assert(filtered.count() == admitted.size && filtered.where(col("t") === ts(10)).isEmpty)
+    assert(lagged.where(col("t") === ts(10)).isEmpty)
+    assert(lagged.agg(max("stateIndex")).head().getLong(0) == admitted.size)
+    val batch = fixedLag().transform(admitted.toDF("key", "t", "meas"))
+    assertBitIdentical(lagged, batch.select(lagged.columns.map(col): _*), Seq("key", "stateIndex", "stepIndex"))
+  }
+
+  test("fixed-lag stream rejects an event-time state timeout, which Spark rejects on chained stages") {
+    import spark.implicits._
+    implicit val sqlCtx = spark.sqlContext
+    val stream = org.apache.spark.sql.execution.streaming.runtime.MemoryStream[(String, Timestamp, Array[Double])]
+    val smoother = fixedLag().setWatermarkDuration("10 minutes")
+      .setStateTimeoutMode("event").setStateTimeoutDuration("1 hour")
+    val e = intercept[IllegalArgumentException](smoother.transform(stream.toDS().toDF("key", "t", "meas")))
+    assert(e.getMessage.contains("event-time state timeout"), e.getMessage)
+    // batch input has no timeouts to reject
+    assert(smoother.transform(measurements(18)).count() > 0)
   }
 }

@@ -9,13 +9,13 @@ import org.scalatest.funsuite.AnyFunSuite
 import graft.filter.SparkTestSession
 
 /**
- * Round-14 bit-exactness pins for the online-mixture InternalRow kernel:
- * `transform` (kernel) must be BITWISE identical to
- * `transformEncoderBatch` (the encoder engine, which remains the
- * streaming/batch-EM implementation) — raw IEEE bits, not tolerances.
- * Covers all three families, minibatching, decay, holdout, per-key warm
- * start, and duplicate-(key, time) tie order (same projection → same
- * __rowSeq hash domain on both paths).
+ * Bit-exactness pins for the mixture InternalRow kernels, online and
+ * batch EM: `transform` (kernel) must be BITWISE identical to
+ * `transformEncoderBatch` (the encoder engine, kept as the reference) —
+ * raw IEEE bits, not tolerances. Covers all three families, minibatching,
+ * decay, holdout, per-key warm start, batch EM's end-of-key model, and
+ * duplicate-(key, time) tie order (same projection → same __rowSeq hash
+ * domain on both paths).
  */
 class MixtureKernelPinSpec extends AnyFunSuite with SparkTestSession {
 
@@ -95,6 +95,34 @@ class MixtureKernelPinSpec extends AnyFunSuite with SparkTestSession {
     def build() = new BernoulliMixture(2)
       .setStateKeyCol("key").setEventTimeCol("t").setSampleCol("x")
       .setStepSize(0.05).setMinibatchSize(4)
+    assertBitIdentical(build().transform(df), build().transformEncoderBatch(df))
+  }
+
+  test("batch EM kernel == encoder: null-key group and duplicate (key,time) rows") {
+    val rnd = new scala.util.Random(25)
+    // two rows per timestamp: batch EM sums each key's samples in fold
+    // order, so both paths must fold tied rows alike for the bits to match
+    val rows = for (k <- Seq("a", "b", null); i <- 0 until 40; _ <- 0 until 2)
+      yield (k, ts(i), Array(rnd.nextGaussian() + (if (i % 2 == 0) -2.0 else 2.0), rnd.nextGaussian()))
+    val df = spark.createDataFrame(rows).toDF("key", "t", "sample")
+    def build() = new MultivariateGaussianMixture(2, 2)
+      .setStateKeyCol("key").setEventTimeCol("t").setSampleCol("sample")
+      .setInitialMeans(Array(Array(-1.0, 0.0), Array(1.0, 0.0)))
+      .setEnableBatchTrain().setBatchTrainMaxIter(20).setBatchTrainTol(1e-6)
+    val kernel = build().transform(df)
+    assert(kernel.count() == 3, "one model per key, the null key's included")
+    assertBitIdentical(kernel, build().transformEncoderBatch(df))
+  }
+
+  test("batch EM kernel == encoder: Poisson with per-key warm start") {
+    val rnd = new scala.util.Random(26)
+    val rows = for (k <- Seq("a", "b"); i <- 0 until 50)
+      yield (k, ts(i), (rnd.nextInt(4) + (if (i % 3 == 0) 8 else 0)).toDouble,
+        Array(1.0 + (if (k == "a") 0.5 else 2.0), 7.0))
+    val df = spark.createDataFrame(rows).toDF("key", "t", "k0", "rates")
+    def build() = new PoissonMixture(2)
+      .setStateKeyCol("key").setEventTimeCol("t").setSampleCol("k0")
+      .setInitialRatesCol("rates").setEnableBatchTrain()
     assertBitIdentical(build().transform(df), build().transformEncoderBatch(df))
   }
 }
