@@ -35,7 +35,9 @@ import Harness.{jsonString => jq}
   * Per-stage attribution: bench_raw.json's `stages` holds every completed
   * stage of each query's fastest rep (wall, tasks, run and CPU time, shuffle
   * read/write bytes and records, input, spill), and bench.json's
-  * `queries_layers` their per-query sums. For one query's stages alone:
+  * `queries_layers` their per-query sums, with `persisted_after`: the
+  * persisted RDDs left after the query and its cache release, so a leaked
+  * cache shows against the query that left it. For one query's stages alone:
   * SPARK_GRAFT_BENCH_ONLY=q_a SPARK_GRAFT_BENCH_REPS=1 sbt "runMain graft.Bench"
   */
 object Bench {
@@ -64,7 +66,8 @@ object Bench {
     val recorder = new Harness.StageRecorder(spark)
     val cpuTimes = scala.collection.mutable.Map[String, List[Double]]().withDefaultValue(Nil)
     val jobCounts = scala.collection.mutable.Map[String, Int]()
-    val fastestStages = scala.collection.mutable.Map[String, Seq[Harness.StageRow]]()
+    // per query, the fastest rep's stage rows and the persisted RDDs after it
+    val fastest = scala.collection.mutable.Map[String, (Seq[Harness.StageRow], Int)]()
     val t0 = System.nanoTime()
     def elapsedS: Double = (System.nanoTime() - t0) / 1e9
 
@@ -202,9 +205,9 @@ object Bench {
         .map(n => jq(n) + ":" + r4(cpuTimes(n).min)).mkString("{", ",", "}")
       val jobsJson = measured.filter(jobCounts.contains)
         .map(n => jq(n) + ":" + jobCounts(n)).mkString("{", ",", "}")
-      val layersJson = measured.map(n => jq(n) + ":" + Harness.layersJson(fastestStages(n)))
+      val layersJson = measured.map(n => jq(n) + ":" + Harness.layersJson(fastest(n)._1, fastest(n)._2))
         .mkString("{", ",", "}")
-      val stagesJson = measured.map(n => jq(n) + ":" + fastestStages(n).map(_.json).mkString("[", ",", "]"))
+      val stagesJson = measured.map(n => jq(n) + ":" + fastest(n)._1.map(_.json).mkString("[", ",", "]"))
         .mkString("{", ",", "}")
       val reasonsJson = contendedReasons.toSeq.map(jq).mkString("[", ",", "]")
       val fullLine =
@@ -232,14 +235,14 @@ object Bench {
     }
 
     /** One timed rep: only the query's action sits inside the clock; the
-      * recorder's drains and the bookkeeping run outside it. */
+      * cache release, the recorder's drains and the bookkeeping run outside
+      * it. */
     def timedRep(name: String): Double = {
       recorder.mark()
-      val s0 = System.nanoTime()
-      Harness.run(spark, name, sfDir)
-      val dt = (System.nanoTime() - s0) / 1e9
+      val (dt, _) = Harness.run(spark, name, sfDir)
+      val persisted = spark.sparkContext.getPersistentRDDs.size
       val rec = recorder.since()
-      if (times(name).forall(dt < _)) fastestStages(name) = rec.stages
+      if (times(name).forall(dt < _)) fastest(name) = (rec.stages, persisted)
       times(name) = dt :: times(name)
       cpuTimes(name) = rec.cpuS :: cpuTimes(name)
       jobCounts(name) = rec.jobs

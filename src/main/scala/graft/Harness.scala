@@ -5,8 +5,9 @@ import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 
 /** What the driver mains (Bench, Soak, Verify, PlanDump) share: the session,
-  * the timed action, the timer, the stage recorder, the JSON string escape
-  * and the ONLY-subset parser. One copy each, so the mains cannot drift. */
+  * the timed action and its cache release, the timer, the stage recorder,
+  * the JSON string escape and the ONLY-subset parser. One copy each, so the
+  * mains cannot drift. */
 private[graft] object Harness {
 
   /** `SPARK_GRAFT_CPUS`, else the host's cores capped at 32. */
@@ -31,18 +32,27 @@ private[graft] object Harness {
 
   /** Execute the query's OWN optimized plan (all output columns
     * materialized). A plain .count() lets Catalyst prune projection-only
-    * work — scan-and-project queries were silently measured as row counts. */
-  def run(spark: SparkSession, name: String, dir: String): Long =
-    SparkEntry.queries(name)(spark, dir).queryExecution.toRdd.count()
+    * work — scan-and-project queries were silently measured as row counts.
+    * Returns the wall seconds and the row count (see [[timedQuery]]). */
+  def run(spark: SparkSession, name: String, dir: String): (Double, Long) =
+    timedQuery(SparkEntry.queries(name)(spark, dir).queryExecution.toRdd.count())
 
-  /** Minimum wall seconds of `reps` runs of `f`, and the first run's result:
+  /** Wall seconds of `f`, and its result. */
+  def timed[T](f: => T): (Double, T) = {
+    val t0 = System.nanoTime()
+    val r = f
+    ((System.nanoTime() - t0) / 1e9, r)
+  }
+
+  /** [[timed]], then [[FrameCache.clear]] after the clock stops, also on a
+    * failure: every driver query ends with no graft cache entries, so the
+    * next one starts cold. */
+  def timedQuery[T](f: => T): (Double, T) = try timed(f) finally FrameCache.clear()
+
+  /** Minimum wall seconds of `reps` timed runs, and the first run's result:
     * contention only ever adds time, so the minimum is the quiet estimate. */
-  def minOf[T](reps: Int)(f: => T): (Double, T) = {
-    val samples = (1 to reps).map { _ =>
-      val t0 = System.nanoTime()
-      val r = f
-      ((System.nanoTime() - t0) / 1e9, r)
-    }
+  def minOf[T](reps: Int)(f: => (Double, T)): (Double, T) = {
+    val samples = (1 to reps).map(_ => f)
     (samples.map(_._1).min, samples.head._2)
   }
 
@@ -82,9 +92,10 @@ private[graft] object Harness {
       s"""{"id":$id,"name":${jsonString(name)},"wall_ms":$wallMs,"tasks":$tasks,"run_ms":$runMs,"cpu_ms":${cpuNs / 1000000},"shuffle_read_bytes":$shuffleReadBytes,"shuffle_write_bytes":$shuffleWriteBytes,"shuffle_read_records":$shuffleReadRecords,"shuffle_write_records":$shuffleWriteRecords,"input_bytes":$inputBytes,"spill_bytes":$spillBytes}"""
   }
 
-  /** Per-query sums of a run's stage rows: bench.json's `queries_layers`. */
-  def layersJson(rows: Seq[StageRow]): String =
-    s"""{"stages":${rows.size},"tasks":${rows.map(_.tasks.toLong).sum},"shuffle_read_bytes":${rows.map(_.shuffleReadBytes).sum},"shuffle_write_bytes":${rows.map(_.shuffleWriteBytes).sum},"spill_bytes":${rows.map(_.spillBytes).sum},"input_bytes":${rows.map(_.inputBytes).sum}}"""
+  /** Per-query sums of a run's stage rows, and the persisted RDDs left
+    * after the query and its release: bench.json's `queries_layers`. */
+  def layersJson(rows: Seq[StageRow], persistedAfter: Int): String =
+    s"""{"stages":${rows.size},"tasks":${rows.map(_.tasks.toLong).sum},"shuffle_read_bytes":${rows.map(_.shuffleReadBytes).sum},"shuffle_write_bytes":${rows.map(_.shuffleWriteBytes).sum},"spill_bytes":${rows.map(_.spillBytes).sum},"input_bytes":${rows.map(_.inputBytes).sum},"persisted_after":$persistedAfter}"""
 
   /** Jobs started and stages completed since the last `mark()`. */
   final case class Recorded(jobs: Int, stages: Vector[StageRow]) {

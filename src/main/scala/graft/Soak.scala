@@ -224,7 +224,7 @@ object Soak {
     val reps = sys.env.getOrElse("SPARK_GRAFT_SOAK_REPS", "2").toInt
     /** One soak row: `run(dir, k)` timed at the base and the soak scale;
       * `k` is 32 at the base and 32·scale at the soak (the k ∝ N extras). */
-    def soakRow(name: String)(run: (String, Int) => Long) = {
+    def soakRow(name: String)(run: (String, Int) => (Double, Long)) = {
       val (bs, brows) = Harness.minOf(reps)(run(baseDir, 32))
       val (ss, srows) = Harness.minOf(reps)(run(soakDir, 32 * scale))
       val ratio = ss / bs
@@ -243,11 +243,11 @@ object Soak {
     val rows = if (!only.contains("q_semdedup_kscaled")) rows0 else rows0 :+ {
       // hierAssign: flat nearest-centroid is O(N·k) per pass — with k ∝ N
       // that's the hidden quadratic; two-level routing is O(N·sqrt(k))
-      def semdedup(dir: String, k: Int): Long =
+      def semdedup(dir: String, k: Int): (Double, Long) = Harness.timedQuery(
         graft.sim.Similarity.semDedup(
             spark.read.parquet(s"$dir/embeddings.parquet"), "vec_id", "embedding",
             k = k, iters = 2, threshold = 0.42, hierAssign = true)
-          .queryExecution.toRdd.count()
+          .queryExecution.toRdd.count())
       semdedup(baseDir, 32) // warm
       soakRow("q_semdedup_kscaled")(semdedup)
     }
@@ -260,7 +260,7 @@ object Soak {
     // co-partition-join instead of broadcasting).
     val rows2 = if (!only.contains("q_ann_inc_kscaled_hiertrain")) rows else rows :+ {
       import org.apache.spark.sql.functions.col
-      def annInc(dir: String, k: Int): Long = {
+      def annInc(dir: String, k: Int): (Double, Long) = Harness.timedQuery {
         val emb = spark.read.parquet(s"$dir/embeddings.parquet")
         val history = emb.where(col("vec_id") % 3 =!= 0)
         val batch = emb.where(col("vec_id") % 3 === 0)

@@ -91,7 +91,7 @@ object Verify {
         System.err.println(f"[verify] $name SKIPPED (budget ${budgetS}%.0fs exceeded at ${elapsedS}%.1fs)")
       } else {
         try {
-          val (s, _) = Harness.minOf(1)(SparkEntry.queries(name)(spark, sfDir)
+          val (s, _) = Harness.timedQuery(SparkEntry.queries(name)(spark, sfDir)
             .coalesce(1).write.mode("overwrite").parquet(s"$outDir/$name"))
           System.err.println(f"[verify] $name ok in ${s}%.1fs (total ${elapsedS}%.1fs)")
         } catch { case e: Throwable =>

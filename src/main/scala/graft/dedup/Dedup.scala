@@ -3,6 +3,7 @@ package graft.dedup
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
+import graft.FrameCache
 import graft.text.TextFunctions._
 
 /**
@@ -128,7 +129,7 @@ class MinHashLSH(val numHashes: Int = 32, val bands: Int = 8, val shingleSize: I
   def candidatePairs(df: DataFrame, idCol: String, textCol: String): DataFrame = {
     // persisted: both self-join sides read one computation of the banding
     // (a broadcast side would otherwise re-derive it — see pairsFromSets)
-    val b = CachedProjections.swap("banded_cands_raw",
+    val b = FrameCache.persist(
       banded(df.select(col(idCol), col(textCol)), textCol)
         .select(col(idCol), col("band"), col("bucket")))
     val l = b.select(col(idCol).as("a"), col("band"), col("bucket"))
@@ -143,8 +144,7 @@ class MinHashLSH(val numHashes: Int = 32, val bands: Int = 8, val shingleSize: I
     * back for every subsequent dedup run (the petabyte-scale path). */
   def candidatePairsFromSigs(sigs: DataFrame, idCol: String): DataFrame = {
     // persisted: see candidatePairs — one banding computation, two readers
-    val b = CachedProjections.swap("banded_cands",
-      bandedFromSigs(sigs, idCol))
+    val b = FrameCache.persist(bandedFromSigs(sigs, idCol))
     val l = b.select(col(idCol).as("a"), col("band"), col("bucket"))
     val r = b.select(col(idCol).as("b"), col("band"), col("bucket"))
     l.join(r, Seq("band", "bucket"))
@@ -189,7 +189,7 @@ class MinHashLSH(val numHashes: Int = 32, val bands: Int = 8, val shingleSize: I
   def nearDuplicatesAgainst(
       historySigs: DataFrame, newDocs: DataFrame,
       idCol: String, textCol: String, threshold: Double): DataFrame = {
-    val newSigs = CachedProjections.swap("minhash_incr", signatures(newDocs, idCol, textCol))
+    val newSigs = FrameCache.persist(signatures(newDocs, idCol, textCol))
     val history = historySigs.select(col(idCol), col("sset"), col("sig"))
       .join(newSigs.select(col(idCol)), Seq(idCol), "left_anti")
     val allSigs = history.unionAll(newSigs)
@@ -222,15 +222,18 @@ class MinHashLSH(val numHashes: Int = 32, val bands: Int = 8, val shingleSize: I
    * between one corpus pass and four).
    */
   def nearDuplicates(df: DataFrame, idCol: String, textCol: String, threshold: Double): DataFrame =
-    // Materialize (id, sset, sig) ONCE: column pruning specializes each
-    // consuming branch to different columns, so exchange reuse can't kick in
-    // — persist is the correct materialization point (disk-backed; ~2 KB/doc
-    // regardless of document size). SignatureStore keys the persisted
-    // projection by (corpus plan, LSH params), so every MinHash operator in
-    // the same session — pairs, star groups, components, pipeline, split —
-    // derives signatures from raw text exactly once per corpus.
-    nearDuplicatesFromSigs(SignatureStore.sigs(df, idCol, textCol, this),
-      idCol, threshold)
+    nearDuplicatesFromSigs(cachedSignatures(df, idCol, textCol), idCol, threshold)
+
+  /** `signatures` of `df`'s (id, text) projection, persisted ONCE: column
+    * pruning specializes each consuming branch to different columns, so
+    * exchange reuse can't kick in — persist is the correct materialization
+    * point (disk-backed; ~2 KB/doc regardless of document size). The frame
+    * cache keys it by plan, which carries the corpus and the hash
+    * parameters, so every MinHash operator over one corpus — pairs, star
+    * groups, components, pipeline, split — derives signatures from raw text
+    * once. */
+  private def cachedSignatures(df: DataFrame, idCol: String, textCol: String): DataFrame =
+    FrameCache.persist(signatures(df.select(col(idCol), col(textCol)), idCol, textCol))
 
   /** `nearDuplicates` over a PRECOMPUTED (id, sset, sig) projection — from
     * `signatures()` with the same params, either live or read back from a
@@ -240,8 +243,7 @@ class MinHashLSH(val numHashes: Int = 32, val bands: Int = 8, val shingleSize: I
     * owns materialization of `sigs`. */
   def nearDuplicatesFromSigs(sigs: DataFrame, idCol: String, threshold: Double): DataFrame = {
     // persisted: see candidatePairs — one banding computation, two readers
-    val bandedBase = CachedProjections.swap("banded_pairs",
-      bandedFromSigs(sigs, idCol))
+    val bandedBase = FrameCache.persist(bandedFromSigs(sigs, idCol))
     val cands = bandedBase.select(col(idCol).as("a"), col("band"), col("bucket"))
       .join(bandedBase.select(col(idCol).as("b"), col("band"), col("bucket")), Seq("band", "bucket"))
       .where(col("a") < col("b"))
@@ -276,12 +278,12 @@ class MinHashLSH(val numHashes: Int = 32, val bands: Int = 8, val shingleSize: I
    * jaccard is undefined).
    */
   def thresholdCurve(df: DataFrame, idCol: String, textCol: String): DataFrame =
-    thresholdCurveFromSigs(SignatureStore.sigs(df, idCol, textCol, this), idCol)
+    thresholdCurveFromSigs(cachedSignatures(df, idCol, textCol), idCol)
 
   /** `thresholdCurve` over a precomputed (id, sset, sig) projection. */
   def thresholdCurveFromSigs(sigs: DataFrame, idCol: String): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    val keyed = CachedProjections.swap("curve_sigs",
+    val keyed = FrameCache.persist(
       sigs.where(size(col("sset")) > 0)
         .withColumn("_rep",
           min(col(idCol)).over(Window.partitionBy(sort_array(col("sset"))))))
@@ -289,8 +291,7 @@ class MinHashLSH(val numHashes: Int = 32, val bands: Int = 8, val shingleSize: I
     val repSigs = keyed.where(col(idCol) === col("_rep"))
       .select(col(idCol), col("sset"), col("sig"))
     // persisted: see candidatePairs — one banding computation, two readers
-    val bandedBase = CachedProjections.swap("banded_curve",
-      bandedFromSigs(repSigs, idCol))
+    val bandedBase = FrameCache.persist(bandedFromSigs(repSigs, idCol))
     val cands = bandedBase.select(col(idCol).as("a"), col("band"), col("bucket"))
       .join(bandedBase.select(col(idCol).as("b"), col("band"), col("bucket")), Seq("band", "bucket"))
       .where(col("a") < col("b"))
@@ -339,7 +340,7 @@ class MinHashLSH(val numHashes: Int = 32, val bands: Int = 8, val shingleSize: I
   def recallCurve(df: DataFrame, idCol: String, textCol: String,
       tauMilliFloor: Long = 100L): DataFrame = {
     require(tauMilliFloor >= 0 && tauMilliFloor <= 1000)
-    val sigs = CachedProjections.swap("recall_sigs",
+    val sigs = FrameCache.persist(
       signatures(df, idCol, textCol).where(size(col("sset")) > 0))
     // sort_array canonicalizes for the merge-count verify kernel (round 13)
     val sets = sigs.select(col(idCol).as("sid"), sort_array(col("sset")).as("sset"))
@@ -388,16 +389,14 @@ class MinHashLSH(val numHashes: Int = 32, val bands: Int = 8, val shingleSize: I
    * required.
    */
   def duplicateGroups(df: DataFrame, idCol: String, textCol: String, threshold: Double): DataFrame =
-    duplicateGroupsFromSigs(SignatureStore.sigs(df, idCol, textCol, this),
-      idCol, threshold)
+    duplicateGroupsFromSigs(cachedSignatures(df, idCol, textCol), idCol, threshold)
 
   /** `duplicateGroups` over a precomputed (id, sset, sig) projection — the
     * signature-table twin (see `nearDuplicatesFromSigs`). */
   def duplicateGroupsFromSigs(base: DataFrame, idCol: String, threshold: Double): DataFrame = {
     // persisted: the bucket-min aggregation AND the probe join both read
     // the banding — one computation (see candidatePairs)
-    val bandedBase = CachedProjections.swap("banded_groups",
-      bandedFromSigs(base, idCol))
+    val bandedBase = FrameCache.persist(bandedFromSigs(base, idCol))
 
     val bucketMin = bandedBase.groupBy(col("band"), col("bucket"))
       .agg(min(col(idCol)).as("a"))
@@ -446,7 +445,7 @@ class MinHashLSH(val numHashes: Int = 32, val bands: Int = 8, val shingleSize: I
     require(threshold > 0.0 && threshold <= 1.0,
       "threshold must be in (0, 1] — the exact-set collapse merges identical sets, which verify at exactly 1.0")
     import org.apache.spark.sql.expressions.Window
-    val sigs = SignatureStore.sigs(df, idCol, textCol, this)
+    val sigs = cachedSignatures(df, idCol, textCol)
     // (id, rep): min id over the doc's canonicalized shingle set; empty
     // sets keep themselves. ONE shuffle on the sorted-set key. Eager
     // localCheckpoint (not persist): the CC loop's per-iteration plans
@@ -545,9 +544,8 @@ object Dedup {
    *
    * Returns (id, parent) with parent fully resolved to the root. One Spark
    * action per round (change count folded into the materializing
-   * aggregate). OWNERSHIP: result is persisted; the caller should
-   * `unpersist()` it, and the CachedProjections slot bounds accumulation
-   * otherwise.
+   * aggregate). OWNERSHIP: result is persisted in [[FrameCache]], which
+   * releases it on eviction or `clear()`.
    */
   def resolveForest(
       mapping: DataFrame, idCol: String, parentCol: String,
@@ -571,8 +569,7 @@ object Dedup {
       cur = next
       it += 1
     }
-    val result = CachedProjections.swap("forest_result",
-      cur.select(col("id"), col("parent")))
+    val result = FrameCache.persist(cur.select(col("id"), col("parent")))
     result.count()
     cur.unpersist(blocking = false)
     result
@@ -593,11 +590,9 @@ object Dedup {
    * chains never accumulate a deep recursive plan.
    *
    * `ids`: one column of node ids. `edges`: columns (a, b), undirected.
-   * Returns (id, label). OWNERSHIP: the returned DataFrame is persisted —
-   * the caller should release it with `unpersist()` once consumed; if it
-   * does not, accumulation is still bounded because the cache slot is
-   * CachedProjections-managed (the next call on the same thread releases
-   * the previous result).
+   * Returns (id, label). OWNERSHIP: the returned DataFrame is persisted in
+   * [[FrameCache]], which releases it on eviction or `clear()`; a caller
+   * done with it early may `unpersist()` it.
    */
   def connectedComponents(ids: DataFrame, edges: DataFrame, maxIters: Int = 20): DataFrame = {
     import org.apache.spark.storage.StorageLevel
@@ -635,7 +630,7 @@ object Dedup {
       // unpersist() on a derived projection would not release the frontier
       // cache, so the handed-off Dataset must itself be the persisted one;
       // materialize it, then drop the final frontier (possibly a checkpoint)
-      val result = CachedProjections.swap("cc_result", labels.select(col("id"), col("label")))
+      val result = FrameCache.persist(labels.select(col("id"), col("label")))
       result.count()
       labels.unpersist(blocking = false)
       result
@@ -643,142 +638,10 @@ object Dedup {
   }
 }
 
-/** Bounds cached-block accumulation across repeated dedup invocations (e.g.
-  * a bench loop): each operator keeps ONE live cached projection PER CALLING
-  * THREAD; persisting a new one unpersists the previous (non-blocking).
-  * Thread-scoping matters for concurrent deployments — two incremental-dedup
-  * jobs submitted from different threads of one Spark application must not
-  * unpersist each other's live projection mid-job (concurrent Spark jobs run
-  * from distinct caller threads). Sequential re-invocations from one thread
-  * (the bench loop) still reuse the tag, so accumulation stays bounded by
-  * (#tags x #threads). A caller that needs two live projections of the same
-  * operator on one thread should persist/unpersist itself.
-  *
-  * Known cross-TAG aliasing (round-13 advice, accepted + documented):
-  * plan-identical frames registered under different tags (banded_cands /
-  * banded_pairs / banded_groups are all bandedFromSigs(sigs)) share ONE
-  * CacheManager entry keyed by canonical plan; a later swap on one tag
-  * unpersists that shared entry and silently un-caches the other live
-  * tag. Strictly perf-only (the orphaned handle recomputes lazily), and
-  * only when one query composes two such operators — the declared queries
-  * each use one. Operators composing several banded consumers must not
-  * rely on both caches surviving; use the signatures() external table. */
-private[graft] object CachedProjections {
-  private val live = new java.util.concurrent.ConcurrentHashMap[String, DataFrame]()
-  private val order = new java.util.concurrent.ConcurrentHashMap[String, java.util.ArrayDeque[String]]()
-  /** Two live projections per (tag, thread): one query composing TWO
-    * invocations of the same operator over DIFFERENT inputs (e.g. bm25 on
-    * two corpora) keeps both caches live — round-13 advice: the single
-    * slot dropped the first invocation's cache at build time. Bounded at
-    * SlotsPerTag × #tags × #threads. */
-  private val SlotsPerTag = 2
-  def swap(tag: String, df: DataFrame): DataFrame = {
-    val bucket = tag + "@" + Thread.currentThread().getId
-    // slot key includes the canonical-plan hash (round 14): distinct
-    // inputs get distinct slots, so a second same-operator invocation in
-    // one query no longer evicts the first's cache. A 32-bit semanticHash
-    // collision merely merges two slots (recompute, never wrong data —
-    // the returned frame is always the caller's own).
-    val key = bucket + "#" + java.lang.Integer.toHexString(df.queryExecution.analyzed.semanticHash())
-    // ORDER MATTERS (round-13 fix): a re-invocation of the same operator
-    // builds a plan-identical projection, and CacheManager matches cache
-    // entries by canonical plan — persisting the new frame FIRST reuses the
-    // old entry, so the subsequent unpersist of the old handle dropped the
-    // shared entry and every re-execution ran fully UNCACHED (the
-    // q_jaccard_join plan showed the corpus shingle pass computed 4×).
-    // Unpersist the previous holder BEFORE registering the new one.
-    Option(live.remove(key)).foreach(_.unpersist(blocking = false))
-    val dq = order.computeIfAbsent(bucket, _ => new java.util.ArrayDeque[String]())
-    dq.synchronized {
-      dq.remove(key)
-      dq.addLast(key)
-      while (dq.size > SlotsPerTag) {
-        Option(live.remove(dq.removeFirst())).foreach(_.unpersist(blocking = false))
-      }
-    }
-    val cached = df.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    live.put(key, cached)
-    cached
-  }
-}
-
-/**
- * Session-scoped cache of persisted MinHash signature projections, keyed by
- * (canonicalized corpus plan, LSH params). CachedProjections keys by
- * operator tag, so two OPERATORS on the same corpus (e.g. the dedup
- * pipeline and the near-dup-safe split) each re-derived signatures from raw
- * text; this store recognizes "same corpus, same hash family" across
- * operators and hands back the already-persisted (id, sset, sig) frame —
- * the expensive tokenize→shingle→md5→minhash pass runs once per corpus per
- * session. Bounded: a 4-slot LRU; evicted entries are unpersisted (callers
- * only ever read, so eviction mid-use just recomputes lazily).
- *
- * This is the in-session twin of the externalized signature TABLE
- * (`signatures()` written to parquet, read back through the `FromSigs`
- * entry points) — at petabyte scale prefer the table: it survives sessions
- * and incremental runs pay only the new batch (`nearDuplicatesAgainst`).
- */
+/** `clear()` drops every frame graft's operators persisted (perfbench's
+  * `BookMix` calls it by this name); the frames live in [[FrameCache]]. */
 private[graft] object SignatureStore {
-  import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
-
-  /** The FULL canonicalized plan is part of the key (round 10; r9 advice):
-    * keying by the 32-bit semanticHash alone meant a hash collision between
-    * two different corpus plans silently returned the other corpus's
-    * signatures. Plan nodes are case classes, so equality is structural —
-    * a collision now falls through to a rebuild instead of a wrong answer. */
-  private case class Key(plan: LogicalPlan, numHashes: Int, bands: Int, shingle: Int)
-  private val MaxEntries = 4
-  private val live = new java.util.LinkedHashMap[Key, DataFrame](8, 0.75f, true) {
-    override def removeEldestEntry(e: java.util.Map.Entry[Key, DataFrame]): Boolean = {
-      val evict = size() > MaxEntries
-      if (evict) e.getValue.unpersist(blocking = false)
-      evict
-    }
-  }
-  private val hitCount = new java.util.concurrent.atomic.AtomicLong
-  private val missCount = new java.util.concurrent.atomic.AtomicLong
-
-  def sigs(df: DataFrame, idCol: String, textCol: String, lsh: MinHashLSH): DataFrame = {
-    val projected = df.select(col(idCol), col(textCol))
-    val key = Key(projected.queryExecution.analyzed.canonicalized,
-      lsh.numHashes, lsh.bands, lsh.shingleSize)
-    synchronized {
-      // entries bound to a stopped SparkSession are unusable (their cached
-      // blocks died with the context) — drop them before lookup so a new
-      // session never receives a dead frame
-      val it = live.entrySet().iterator()
-      while (it.hasNext) {
-        val e = it.next()
-        if (e.getValue.sparkSession.sparkContext.isStopped) {
-          try e.getValue.unpersist(blocking = false) catch { case _: Throwable => () }
-          it.remove()
-        }
-      }
-      val hit = live.get(key)
-      if (hit != null) { hitCount.incrementAndGet(); hit }
-      else {
-        missCount.incrementAndGet()
-        val built = lsh.signatures(projected, idCol, textCol)
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        live.put(key, built)
-        built
-      }
-    }
-  }
-
-  /** (hits, misses) since the last reset — the witness that two operators
-    * on the same corpus derive signatures from raw text exactly once. */
-  private[graft] def stats: (Long, Long) = (hitCount.get, missCount.get)
-  private[graft] def resetStats(): Unit = { hitCount.set(0L); missCount.set(0L) }
-
-  /** Test hook: drop every cached projection. */
-  private[graft] def clear(): Unit = synchronized {
-    val it = live.values().iterator()
-    while (it.hasNext) {
-      try it.next().unpersist(blocking = false) catch { case _: Throwable => () }
-      it.remove()
-    }
-  }
+  def clear(): Unit = FrameCache.clear()
 }
 
 object MinHashLSH {
@@ -836,7 +699,7 @@ object SimHash {
     * projection materializes once behind a reusable exchange (one corpus
     * pass; both join branches read the exchange). */
   def nearDuplicates(df: DataFrame, idCol: String, textCol: String, maxHamming: Int): DataFrame = {
-    val base = CachedProjections.swap("simhash", df
+    val base = FrameCache.persist(df
       .select(col(idCol), graft.functions.HashExpressions.tokenHashes(col(textCol), Bits).as("_toks"))
       .select(col(idCol), simhashFromToks(col("_toks")).as("simhash"))) // 16 bytes/doc; one corpus pass
     val chunks = array((0 until Chunks).map { c =>
@@ -921,7 +784,7 @@ object PrefixFilterJoin {
     // sort_array canonicalizes the set for the merge-count verify kernel
     // (round 13) — every downstream consumer (explode/df agg, rank window,
     // verify counts) is element-order-insensitive, so this is free semantics
-    val sets = CachedProjections.swap("jaccard",
+    val sets = FrameCache.persist(
       df.select(col(idCol).as("sid"), sort_array(array_distinct(elems)).as("tset"))
         .where(size(col("tset")) > 0))
     pairsFromSets(sets, tauMilli)
@@ -949,7 +812,7 @@ object PrefixFilterJoin {
     // + window pipeline would otherwise execute twice (broadcast subtrees
     // cannot reuse the streamed side's plan — round-13 profiling caught the
     // duplicated window stage)
-    val prefix = CachedProjections.swap("jaccard_prefix", ex.join(dfreq, Seq("tok"))
+    val prefix = FrameCache.persist(ex.join(dfreq, Seq("tok"))
       .withColumn("rn", row_number().over(byDoc.orderBy(col("df"), col("tok"))))
       .withColumn("len", count(lit(1)).over(byDoc))
       .where(col("rn") <=
@@ -1018,7 +881,7 @@ object PrefixFilterJoin {
     val elems = graft.functions.HashExpressions.wordNGrams(col(textCol), shingle)
     // one hash-agg collapses exact-set cliques; sort_array canonicalizes
     // the grouping key so element order never splits a clique
-    val reps = CachedProjections.swap("jaccard_collapsed",
+    val reps = FrameCache.persist(
       df.select(col(idCol).as("sid"), sort_array(array_distinct(elems)).as("tset"))
         .where(size(col("tset")) > 0)
         .groupBy(col("tset"))
@@ -1038,7 +901,7 @@ object ContainmentIndex {
       shingleSize: Int = 3, maxDocFreq: Int = 8, minShared: Int = 8,
       threshold: Double = 0.8): DataFrame = {
     require(maxDocFreq >= 2 && minShared >= 1 && threshold > 0.0)
-    val base = CachedProjections.swap("containment",
+    val base = FrameCache.persist(
       df.select(col(idCol),
         graft.functions.HashExpressions.shingleHashSet(col(textCol), shingleSize).as("sset")))
     val ex = base.select(col(idCol), explode(col("sset")).as("sh"))
@@ -1047,8 +910,7 @@ object ContainmentIndex {
       .select(col("sh"))
     // persisted: the inverted index feeds both self-join sides (see
     // PrefixFilterJoin.pairsFromSets — a broadcast side re-derives it)
-    val indexed = CachedProjections.swap("containment_indexed",
-      ex.join(rare, Seq("sh")))
+    val indexed = FrameCache.persist(ex.join(rare, Seq("sh")))
     val cands = indexed.select(col("sh"), col(idCol).as("a"))
       .join(indexed.select(col("sh"), col(idCol).as("b")), Seq("sh"))
       .where(col("a") < col("b"))

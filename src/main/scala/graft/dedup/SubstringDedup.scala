@@ -24,7 +24,7 @@ import org.apache.spark.sql.functions._
  * transforms plus allocations per position — measured 100x slower at
  * sf0.1). Selection happens inside the kernel, so only len/rate longs per
  * document ever leave the expression or reach an exchange. The kept-window
- * stream is materialized ONCE (CachedProjections slot) and feeds two hash
+ * stream is materialized ONCE (a FrameCache entry) and feeds two hash
  * aggregations: the duplicated-hash table (shuffle bounded by the distinct
  * window vocabulary, map-side partial aggregation) and the per-doc
  * profile. The join back is on the 40-bit-range hash — uniformly
@@ -44,7 +44,7 @@ object SubstringDedup {
       df: DataFrame, idCol: String, textCol: String,
       width: Int = 40, rate: Int = 10): DataFrame = {
     require(width >= 8 && rate >= 1)
-    val wins = CachedProjections.swap("substr_wins",
+    val wins = graft.FrameCache.persist(
       df.select(col(idCol),
         explode(graft.functions.HashExpressions
           .winnowedHashes(col(textCol), width, rate)).as("h")))

@@ -305,26 +305,6 @@ object DatasetSplit {
           .otherwise("test"))
   }
 
-  /** STREAMING twin of `capPerGroup`: admission-control cap. The batch cap's
-    * deterministic lowest-hash selection needs the whole group in hand, so
-    * it cannot stream; the streaming-natural semantics is "admit the first k
-    * rows per group, then drop" — state is ONE counter per group key
-    * (bounded by #groups, never by row volume), carried across micro-batches
-    * by flatMapGroupsWithState. Works identically on a batch Dataset (the
-    * per-group iterator then sees the whole group at once). Append-mode
-    * safe: admitted rows are emitted exactly once and never retracted. */
-  /**
-   * Deterministic per-group k-sample — the reproducible replacement for
-   * reservoir sampling: keep each group's k rows with the SMALLEST
-   * md5(id). The bottom-k-of-a-hash set is a uniform sample in
-   * distribution, yet (a) identical run-to-run and cluster-size-
-   * independent, (b) MERGEABLE — bottom-k of a union is the bottom-k of
-   * each side's bottom-k, so partial samples from shards/days combine
-   * without resampling, and (c) replayable for audits.
-   *
-   * One window per group (rank by hash), same shape as the per-source
-   * cap. Output: input columns + `sample_rank` (1..k by hash order).
-   */
   /**
    * Draw the rows an allocation table prescribes: deterministic
    * bottom-quota-by-md5 per stratum, quotas from a tiny (stratum, quota)
@@ -354,6 +334,18 @@ object DatasetSplit {
       .drop("_quota")
   }
 
+  /**
+   * Deterministic per-group k-sample — the reproducible replacement for
+   * reservoir sampling: keep each group's k rows with the SMALLEST
+   * md5(id). The bottom-k-of-a-hash set is a uniform sample in
+   * distribution, yet (a) identical run-to-run and cluster-size-
+   * independent, (b) MERGEABLE — bottom-k of a union is the bottom-k of
+   * each side's bottom-k, so partial samples from shards/days combine
+   * without resampling, and (c) replayable for audits.
+   *
+   * One window per group (rank by hash), same shape as the per-source
+   * cap. Output: input columns + `sample_rank` (1..k by hash order).
+   */
   def bottomKSample(df: DataFrame, groupCol: String, idCol: String, k: Int): DataFrame = {
     require(k > 0)
     import org.apache.spark.sql.expressions.Window
@@ -413,12 +405,21 @@ object DatasetSplit {
       }.toDF(groupCol, idCol, "skey", "sample_rank")
   }
 
+  /** STREAMING twin of `capPerGroup`: admission-control cap. The batch cap's
+    * deterministic lowest-hash selection needs the whole group in hand, so
+    * it cannot stream; the streaming-natural semantics is "admit the first k
+    * rows per group, then drop" — state is ONE counter per group key
+    * (bounded by #groups, never by row volume), carried across micro-batches
+    * by flatMapGroupsWithState. Works identically on a batch Dataset (the
+    * per-group iterator then sees the whole group at once). Append-mode
+    * safe: admitted rows are emitted exactly once and never retracted. A
+    * null group is a group of its own, never merged with a group "null". */
   def capPerGroupStreaming(df: DataFrame, groupCol: String, k: Int): DataFrame = {
     require(k > 0)
     implicit val rowEnc = Encoders.row(df.schema)
     implicit val longEnc = Encoders.scalaLong
     implicit val strEnc = Encoders.STRING
-    df.groupByKey((r: Row) => String.valueOf(r.getAs[Any](groupCol)))
+    df.groupByKey(EventStreams.userKey(groupCol))
       .flatMapGroupsWithState[Long, Row](OutputMode.Append, GroupStateTimeout.NoTimeout) {
         (_: String, rows: Iterator[Row], state: GroupState[Long]) =>
           val admitted = state.getOption.getOrElse(0L)

@@ -28,6 +28,12 @@ import graft.state.StatefulStage.micros
  *    per user (the watermarked shape) makes the running min the true min —
  *    the same assumption every first-touch streaming attribution makes.
  *
+ * Nulls: a null user is a key of its own, emitted as null, never merged
+ * with a user named "null". A row with a null event time is skipped by the
+ * time-ordered twins (retention, attribution, burstiness, sessions,
+ * transitions) and by the funnel's fold, as the batch twins leave it out of
+ * their orderings; it never fails the micro-batch.
+ *
  * Every operator stores its state with Spark's own encoder of the state's
  * value (a long array, a tuple), so the state reads back from a checkpoint
  * with `spark.read.format("statestore")`. A checkpoint written while the
@@ -37,6 +43,13 @@ import graft.state.StatefulStage.micros
 object EventStreams {
 
   private val None_ = Long.MaxValue
+
+  /** The grouping key of every twin: the user's string form, with a null
+    * user kept as its own key and emitted as null, as the batch twins'
+    * grouping does (`String.valueOf` alone would merge it with a user
+    * named "null"). */
+  private[operators] def userKey(userCol: String): Row => String =
+    r => r.getAs[Any](userCol) match { case null => null; case u => String.valueOf(u) }
 
   /** The per-user fold of the funnel operators: the first-occurrence
     * millis per stage (None_ for a stage not yet seen), and the stages
@@ -93,7 +106,7 @@ object EventStreams {
     implicit val strEnc = Encoders.STRING
     implicit val stateEnc = df.sparkSession.implicits.newLongArrayEncoder
     implicit val outEnc = Encoders.tuple(Encoders.STRING, Encoders.scalaLong)
-    df.groupByKey((r: Row) => String.valueOf(r.getAs[Any](userCol)))
+    df.groupByKey(userKey(userCol))
       .flatMapGroupsWithState[Array[Long], (String, Long)](
         OutputMode.Update, GroupStateTimeout.NoTimeout) {
         (user: String, rows: Iterator[Row], state: GroupState[Array[Long]]) =>
@@ -132,7 +145,7 @@ object EventStreams {
     implicit val strEnc = Encoders.STRING
     implicit val stateEnc = df.sparkSession.implicits.newLongArrayEncoder
     implicit val outEnc = Encoders.tuple(Encoders.STRING, Encoders.scalaLong)
-    wm.groupByKey((r: Row) => String.valueOf(r.getAs[Any](userCol)))
+    wm.groupByKey(userKey(userCol))
       .flatMapGroupsWithState[Array[Long], (String, Long)](
         OutputMode.Update, GroupStateTimeout.EventTimeTimeout) {
         (user: String, rows: Iterator[Row], state: GroupState[Array[Long]]) =>
@@ -166,7 +179,7 @@ object EventStreams {
     implicit val stateEnc = Encoders.scalaLong
     implicit val outEnc =
       Encoders.tuple(Encoders.STRING, Encoders.TIMESTAMP, Encoders.TIMESTAMP)
-    df.groupByKey((r: Row) => String.valueOf(r.getAs[Any](userCol)))
+    df.where(col(tsCol).isNotNull).groupByKey(userKey(userCol))
       .flatMapGroupsWithState[Long, (String, Timestamp, Timestamp)](
         OutputMode.Update, GroupStateTimeout.NoTimeout) {
         (user: String, rows: Iterator[Row], state: GroupState[Long]) =>
@@ -199,7 +212,7 @@ object EventStreams {
     implicit val stateEnc = Encoders.product[(Boolean, String, String)]
     implicit val outEnc =
       Encoders.tuple(Encoders.STRING, Encoders.STRING, Encoders.STRING)
-    df.groupByKey((r: Row) => String.valueOf(r.getAs[Any](userCol)))
+    df.where(col(tsCol).isNotNull).groupByKey(userKey(userCol))
       .flatMapGroupsWithState[(Boolean, String, String), (String, String, String)](
         OutputMode.Update, GroupStateTimeout.NoTimeout) {
         (user: String, rows: Iterator[Row], state: GroupState[(Boolean, String, String)]) =>
@@ -245,7 +258,7 @@ object EventStreams {
     implicit val stateEnc = Encoders.product[(Long, Long, Long, BigInt)]
     implicit val outEnc = Encoders.tuple(
       Encoders.STRING, Encoders.scalaLong, Encoders.scalaLong, Encoders.scalaLong)
-    df.groupByKey((r: Row) => String.valueOf(r.getAs[Any](userCol)))
+    df.where(col(tsCol).isNotNull).groupByKey(userKey(userCol))
       .flatMapGroupsWithState[(Long, Long, Long, BigInt), (String, Long, Long, Long)](
         OutputMode.Update, GroupStateTimeout.NoTimeout) {
         (user: String, rows: Iterator[Row], state: GroupState[(Long, Long, Long, BigInt)]) =>
@@ -272,16 +285,6 @@ object EventStreams {
   }
 
   /**
-   * Transition pairs as a stream: per user, each arriving event emits one
-   * (from_type, to_type) adjacency against its predecessor under (ts, id)
-   * order — the exact pair set q_transitions aggregates. In-batch rows are
-   * sorted by (event-time micros, id) before the fold, so intra-batch
-   * arrival order never matters; cross-batch, event-time-ordered delivery
-   * per user (the watermarked shape, as in retentionCells) makes the
-   * carried last event the true predecessor. State: one
-   * (micros, id, type) triple per user — bounded, never event history.
-   */
-  /**
    * 30-min-gap sessionization as a stream — the q_sessionize twin keeping
    * the BATCH semantics: a gap STRICTLY greater than `gapSec` opens a new
    * session (Spark's native session_window treats the exact boundary as a
@@ -306,7 +309,7 @@ object EventStreams {
     implicit val outEnc = Encoders.tuple(Encoders.STRING, Encoders.scalaLong,
       Encoders.scalaLong, Encoders.scalaLong, Encoders.scalaLong)
     val gapUs = gapSec * 1000000L
-    val out = df.groupByKey((r: Row) => String.valueOf(r.getAs[Any](userCol)))
+    val out = df.where(col(tsCol).isNotNull).groupByKey(userKey(userCol))
       .flatMapGroupsWithState[(Long, Long, Long, Long), (String, Long, Long, Long, Long)](
         OutputMode.Update, GroupStateTimeout.NoTimeout) {
         (user: String, rows: Iterator[Row], state: GroupState[(Long, Long, Long, Long)]) =>
@@ -330,13 +333,23 @@ object EventStreams {
       col("n_events"), col("dur_sec"))
   }
 
+  /**
+   * Transition pairs as a stream: per user, each arriving event emits one
+   * (from_type, to_type) adjacency against its predecessor under (ts, id)
+   * order — the exact pair set q_transitions aggregates. In-batch rows are
+   * sorted by (event-time micros, id) before the fold, so intra-batch
+   * arrival order never matters; cross-batch, event-time-ordered delivery
+   * per user (the watermarked shape, as in retentionCells) makes the
+   * carried last event the true predecessor. State: one
+   * (micros, id, type) triple per user — bounded, never event history.
+   */
   def transitionPairs(df: DataFrame, userCol: String, typeCol: String,
       tsCol: String, idCol: String): DataFrame = {
     implicit val rowEnc = Encoders.row(df.schema)
     implicit val strEnc = Encoders.STRING
     implicit val stateEnc = Encoders.product[(Long, Long, String)]
     implicit val outEnc = Encoders.tuple(Encoders.STRING, Encoders.STRING)
-    df.groupByKey((r: Row) => String.valueOf(r.getAs[Any](userCol)))
+    df.where(col(tsCol).isNotNull).groupByKey(userKey(userCol))
       .flatMapGroupsWithState[(Long, Long, String), (String, String)](
         OutputMode.Append, GroupStateTimeout.NoTimeout) {
         (_, rows: Iterator[Row], state: GroupState[(Long, Long, String)]) =>

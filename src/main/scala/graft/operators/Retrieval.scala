@@ -105,7 +105,7 @@ object Retrieval {
     // persisted: dl, dfreq and the score join all consume the tf table —
     // uncached, each re-ran the corpus tokenize+explode+agg (round-13
     // profiling: the 256k-record token stage appeared 4x per bm25 call)
-    val tf = graft.dedup.CachedProjections.swap("bm25_tf",
+    val tf = graft.FrameCache.persist(
       toks.groupBy(col(idCol), col("term")).agg(count(lit(1)).as("tf")))
     val dl = tf.groupBy(col(idCol)).agg(sum(col("tf")).as("dl"))
     val dfreq = tf.groupBy(col("term")).agg(count(lit(1)).as("dfc"))
@@ -196,7 +196,7 @@ object Retrieval {
     // consume `common`; uncached, each re-ran BOTH input rankings from
     // scratch (a full BM25 pass per branch in q_rank_eval). common is <= k
     // rows by construction — the cache is bounded at any corpus scale.
-    val common = graft.dedup.CachedProjections.swap("rank_common",
+    val common = graft.FrameCache.persist(
       a.select(col(idCol), col("rank").as("rank_a"))
         .join(b.select(col(idCol), col("rank").as("rank_b")), Seq(idCol)))
     val x = common.select(col(idCol).as("_i"), col("rank_a").as("ra1"), col("rank_b").as("rb1"))

@@ -412,7 +412,7 @@ object Similarity {
   /**
    * The PERSISTABLE IVF index table: (idCol, cv, cell) — the corpus with its
    * nearest-centroid assignment materialized. This is the embedding twin of
-   * the dedup SignatureStore: write it (plus the k-row centroid table) to
+   * the MinHash signature table: write it (plus the k-row centroid table) to
    * parquet partitioned by `cell` once, then score every future ingest batch
    * with [[ivfProbeIndex]] against the TABLE — no re-assignment pass over
    * history, and partition pruning means a probe reads only the nprobe cells

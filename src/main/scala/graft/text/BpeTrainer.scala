@@ -86,11 +86,6 @@ object BpeTrainer {
       docs: DataFrame, textCol: String, nMerges: Int,
       minPairCount: Long = 2L): (Seq[Merge], DataFrame) = {
     require(nMerges >= 1 && minPairCount >= 1)
-    // Release the previous invocation's trained table BEFORE building the
-    // new chain (round-13 fix: the old tail entry is plan-identical to the
-    // new one, and unpersisting it AFTER the new cache registers drops the
-    // shared CacheManager entry — the dedup.CachedProjections bug).
-    releaseLive()
     // Lazy-materialization loop (round 13): each iteration's pair-count
     // aggregation is the action that fills the CURRENT table's cache, so no
     // separate count() job runs per merge — the predecessor stays persisted
@@ -120,9 +115,8 @@ object BpeTrainer {
       }
     }
     if (prev != null) { cur.count(); prev.unpersist(blocking = false) }
-    // keep exactly one trained word table cached per thread across calls
-    live.put("bpe@" + Thread.currentThread().getId, cur)
-    (merges.result(), cur)
+    // the returned table stays cached for the caller's query
+    (merges.result(), graft.FrameCache.persist(cur))
   }
 
   /**
@@ -159,7 +153,6 @@ object BpeTrainer {
     require(nMerges >= 1 && batch >= 1 && minPairCount >= 1)
     // same lazy-materialization loop as [[train]]: the pool aggregation
     // fills the current cache; no per-round count() job
-    releaseLive()
     var cur = wordTable(docs, textCol).cache()
     var prev: DataFrame = null
     val merges = Seq.newBuilder[Merge]
@@ -199,16 +192,8 @@ object BpeTrainer {
       round += 1
     }
     if (prev != null) { cur.count(); prev.unpersist(blocking = false) }
-    live.put("bpe@" + Thread.currentThread().getId, cur)
-    (merges.result(), cur)
+    (merges.result(), graft.FrameCache.persist(cur))
   }
-
-  private val live = new java.util.concurrent.ConcurrentHashMap[String, DataFrame]()
-
-  /** Unpersist this thread's previous trained table (see [[train]]). */
-  private def releaseLive(): Unit =
-    Option(live.remove("bpe@" + Thread.currentThread().getId))
-      .foreach(_.unpersist(blocking = false))
 
   /**
    * Per-doc BPE token counts under a trained word tokenization: join each

@@ -51,8 +51,9 @@ class HarnessSpec extends AnyFunSuite with SparkTestSession {
     }
     assert(rows.map(_.shuffleWriteBytes).sum > 0, "a shuffle query writes shuffle bytes")
     implicit val fmts: Formats = DefaultFormats
-    val layers = parse(Harness.layersJson(rows)).extract[Map[String, Long]]
+    val layers = parse(Harness.layersJson(rows, 3)).extract[Map[String, Long]]
     assert(layers == Map(
+      "persisted_after" -> 3L,
       "stages" -> rows.size.toLong,
       "tasks" -> rows.map(_.tasks.toLong).sum,
       "shuffle_read_bytes" -> rows.map(_.shuffleReadBytes).sum,
@@ -74,4 +75,5 @@ class HarnessSpec extends AnyFunSuite with SparkTestSession {
       Seq("q_lkf_llt", "q_rts"))
     assert(Harness.only("ONLY", universe, Map.empty) == universe)
   }
+
 }

@@ -317,6 +317,22 @@ class PlanQualitySpec extends AnyFunSuite with SparkTestSession {
     assert(out.count() <= 20)
   }
 
+  test("a driver query leaves no persisted RDD behind") {
+    // the three book queries that persist through the frame cache: the
+    // collapsed τ-join's projections, MinHash signatures and banding, and
+    // the BPE trainer's returned word table. Earlier suites' store entries
+    // are released first: the run's own release would drop them too.
+    FrameCache.clear()
+    val before = spark.sparkContext.getPersistentRDDs.keySet
+    for (q <- Seq("q_jaccard_collapsed", "q_dedup_minhash", "q_bpe_segment")) {
+      val (seconds, rows) = Harness.run(spark, q, dir)
+      assert(seconds > 0 && rows > 0, q)
+      val leaked = spark.sparkContext.getPersistentRDDs.keySet -- before
+      assert(leaked.isEmpty, s"$q left persisted RDDs ${leaked.mkString(",")}")
+    }
+    assert(spark.sparkContext.getPersistentRDDs.keySet == before)
+  }
+
   test("semantic decontamination: eval broadcasts; threshold filters BEFORE the window shuffle") {
     val p = plan("q_semantic_decontaminate")
     // dense scoring against a constant-size eval set is a broadcast nested
