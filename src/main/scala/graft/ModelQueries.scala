@@ -20,27 +20,7 @@ import graft.smoother.LinearKalmanSmoother
  */
 object ModelQueries {
 
-  import Tables.{t, events}
-
-  /** unique (user_id, ts) measurement stream, z = avg event value. */
-  private def userStream(s: SparkSession, dir: String): DataFrame =
-    events(s, dir).groupBy(col("user_id"), col("ts")).agg(avg(col("value")).as("z"))
-
-  private val userStreamSql =
-    """SELECT user_id, ts, avg(value) AS z,
-      |       row_number() OVER (PARTITION BY user_id ORDER BY ts) AS rn
-      |FROM events GROUP BY user_id, ts""".stripMargin
-
-  private val regressionStreamSql =
-    """SELECT l_suppkey AS key, l_shipdate AS ts,
-      |       avg(l_quantity) AS x, avg(l_extendedprice)/1000 AS y,
-      |       row_number() OVER (PARTITION BY l_suppkey ORDER BY l_shipdate) AS rn
-      |FROM lineitem GROUP BY l_suppkey, l_shipdate""".stripMargin
-
-  private def regressionStream(s: SparkSession, dir: String): DataFrame =
-    t(s, dir, "lineitem")
-      .groupBy(col("l_suppkey"), col("l_shipdate"))
-      .agg(avg(col("l_quantity")).as("x"), (avg(col("l_extendedprice")) / 1000).as("y"))
+  import Tables.{t, events, regressionStream, regressionStreamSql, userStream, userStreamSql}
 
   // ================================================================= queries
 

@@ -107,7 +107,7 @@ object Soak {
       // would hide from single-pass soaks — PageRank's per-iteration
       // co-partitioned join + agg over the kNN graph (5 fixed rounds, each
       // one action), k-center's k map-side scans + 1-row fetch per round,
-      // and real BPE training's per-merge pair-count shuffle + 1-row argmax
+      // and real BPE training's per-merge pair-count shuffle + 4-row argmax
       // (merge count fixed; the DISTINCT-WORD table grows sublinearly)
       "q_centrality", "q_kcenter", "q_bpe_train",
       // round 9: the HLL stickiness twin — register rows, not users, must

@@ -9,23 +9,7 @@ import graft.linalg.DMat
 /** Driver contract — see /root/repo/SURVEY.md §2 for the inventory. */
 object SparkEntry {
 
-  import Tables.{t, events}
-
-  /**
-   * Measurement stream with a unique (key, ts) so the sequential filters and
-   * the DuckDB oracle replay rows in the same order: lineitem collapsed per
-   * (suppkey, shipdate) to features x = avg quantity, label y = avg price/1000.
-   */
-  private def regressionStream(s: SparkSession, dir: String): DataFrame =
-    t(s, dir, "lineitem")
-      .groupBy(col("l_suppkey"), col("l_shipdate"))
-      .agg((avg(col("l_quantity"))).as("x"), (avg(col("l_extendedprice")) / 1000).as("y"))
-
-  private val regressionStreamSql =
-    """SELECT l_suppkey AS key, l_shipdate AS ts,
-      |       avg(l_quantity) AS x, avg(l_extendedprice)/1000 AS y,
-      |       row_number() OVER (PARTITION BY l_suppkey ORDER BY l_shipdate) AS rn
-      |FROM lineitem GROUP BY l_suppkey, l_shipdate""".stripMargin
+  import Tables.{regressionStream, regressionStreamSql, userStream, userStreamSql}
 
   /** Flagship query on /root/testdata/sf0.001; driver smoke-checks rows>0. */
   def entry(spark: SparkSession): DataFrame =
@@ -44,9 +28,7 @@ object SparkEntry {
       // Mahalanobis-gated outlier detection on the local-level filter: per
       // key, how many measurements breach the gate and the worst breach.
       // (The reference exposes mahalanobis for exactly this workflow.)
-      val ev = events(s, dir)
-        .groupBy(col("user_id"), col("ts")).agg(avg(col("value")).as("z"))
-        .withColumn("meas", array(col("z")))
+      val ev = userStream(s, dir).withColumn("meas", array(col("z")))
       val lkf = new LinearKalmanFilter(1, 1)
         .setStateKeyCol("user_id")
         .setEventTimeCol("ts")
@@ -70,9 +52,7 @@ object SparkEntry {
 
     "q_lkf_llt" -> ((s, dir) => {
       // Local-level Kalman filter per user over event values; final state per key.
-      val ev = events(s, dir)
-        .groupBy(col("user_id"), col("ts")).agg(avg(col("value")).as("z"))
-        .withColumn("meas", array(col("z")))
+      val ev = userStream(s, dir).withColumn("meas", array(col("z")))
       val lkf = new LinearKalmanFilter(1, 1)
         .setStateKeyCol("user_id")
         .setEventTimeCol("ts")
@@ -194,9 +174,7 @@ object SparkEntry {
     val (bm, bp) = step(s"$m0", s"$p0", "z")
     val (rm, rp) = step("f.m", "f.p", "s.z")
     s"""WITH RECURSIVE meas AS (
-       |  SELECT user_id, ts, avg(value) AS z,
-       |         row_number() OVER (PARTITION BY user_id ORDER BY ts) AS rn
-       |  FROM events GROUP BY user_id, ts
+       |$userStreamSql
        |),
        |filt AS (
        |  SELECT user_id, rn, $bm AS m, $bp AS p FROM meas WHERE rn = 1
@@ -226,9 +204,7 @@ object SparkEntry {
     val (bm, bp, bmaha) = step(s"$m0", s"$p0", "z")
     val (rm, rp, rmaha) = step("f.m", "f.p", "s.z")
     s"""WITH RECURSIVE meas AS (
-       |  SELECT user_id, ts, avg(value) AS z,
-       |         row_number() OVER (PARTITION BY user_id ORDER BY ts) AS rn
-       |  FROM events GROUP BY user_id, ts
+       |$userStreamSql
        |),
        |filt AS (
        |  SELECT user_id, rn, $bm AS m, $bp AS p, $bmaha AS maha FROM meas WHERE rn = 1

@@ -87,13 +87,12 @@ object TokenizerQueries {
     "q_bpe_train" -> ((s, dir) => {
       // REAL distributed BPE training (Sennrich et al. 2016): 8 merges
       // learned at the word-frequency table — per merge one pair-count
-      // shuffle + a 1-row argmax fetch + a map-side fold apply. The
+      // shuffle + a 4-row argmax fetch + a map-side fold apply. The
       // learned merge table IS the output (the auditable tokenizer
       // artifact); the oracle replays all 8 stages including the
       // tie-broken argmax and the positional merge walk.
-      val (merges, words) = BpeTrainer.train(
+      val (merges, _) = BpeTrainer.train(
         t(s, dir, "documents"), "text", BpeMerges, BpeMinPair)
-      words.unpersist()
       import s.implicits._
       merges.map(m => (m.step.toLong, m.left, m.right, m.merged, m.pairCount))
         .toDF("step", "lft", "rgt", "merged", "pair_count")
@@ -109,9 +108,8 @@ object TokenizerQueries {
       // The oracle replays the full grid: per round the ranked 12-pair
       // pool, the greedy symbol-disjoint acceptance walk, and one
       // positional merge walk per accepted slot, applied in rank order.
-      val (merges, words) = BpeTrainer.trainBatched(
+      val (merges, _) = BpeTrainer.trainBatched(
         t(s, dir, "documents"), "text", BpeMerges, BpeBatch, BpeMinPair)
-      words.unpersist()
       import s.implicits._
       merges.map(m => (m.step.toLong, m.left, m.right, m.merged, m.pairCount))
         .toDF("step", "lft", "rgt", "merged", "pair_count")

@@ -544,35 +544,24 @@ object Dedup {
    *
    * Returns (id, parent) with parent fully resolved to the root. One Spark
    * action per round (change count folded into the materializing
-   * aggregate). OWNERSHIP: result is persisted in [[FrameCache]], which
-   * releases it on eviction or `clear()`.
+   * aggregate). Throws `IllegalStateException` when pointers still change
+   * after `maxIters` rounds.
+   *
+   * OWNERSHIP: the result is persisted in [[FrameCache]] (query lifetime),
+   * which releases it on eviction or `clear()`; the per-round frontiers are
+   * this call's own and are released before it returns.
    */
   def resolveForest(
       mapping: DataFrame, idCol: String, parentCol: String,
-      maxIters: Int = 20): DataFrame = {
-    import org.apache.spark.storage.StorageLevel
-    var cur = mapping.select(col(idCol).as("id"), col(parentCol).as("parent"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    var changed = 1L
-    var it = 0
-    while (changed > 0 && it < maxIters) {
+      maxIters: Int = 20): DataFrame = FrameCache.scoped { s =>
+    val start = mapping.select(col(idCol).as("id"), col(parentCol).as("parent"))
+    fixedPoint(s, "resolveForest", start, maxIters, "parent") { cur =>
       val l = cur.as("l")
       val r = cur.as("r")
-      val nextRaw = l.join(r, col("l.parent") === col("r.id"))
+      l.join(r, col("l.parent") === col("r.id"))
         .select(col("l.id").as("id"), col("r.parent").as("parent"),
           when(col("r.parent") < col("l.parent"), 1L).otherwise(0L).as("_chg"))
-      val next =
-        if ((it + 1) % 10 == 0) nextRaw.localCheckpoint(false)
-        else nextRaw.persist(StorageLevel.MEMORY_AND_DISK)
-      changed = next.agg(coalesce(sum(col("_chg")), lit(0L))).first().getLong(0)
-      cur.unpersist(blocking = false)
-      cur = next
-      it += 1
     }
-    val result = FrameCache.persist(cur.select(col("id"), col("parent")))
-    result.count()
-    cur.unpersist(blocking = false)
-    result
   }
 
   /**
@@ -584,57 +573,68 @@ object Dedup {
    * change-detection join per round is real money). The standard scalable
    * CC shape for edge lists far beyond memory. Near-dup components have
    * tiny diameters (docs chain through shared buckets), so `maxIters` ~ 20
-   * is generous; iteration stops early at the first fixed point.
-   *
-   * Lineage is truncated with `localCheckpoint` every 10 iterations so long
-   * chains never accumulate a deep recursive plan.
+   * is generous; iteration stops early at the first fixed point, and throws
+   * `IllegalStateException` when labels still change after `maxIters`.
    *
    * `ids`: one column of node ids. `edges`: columns (a, b), undirected.
-   * Returns (id, label). OWNERSHIP: the returned DataFrame is persisted in
-   * [[FrameCache]], which releases it on eviction or `clear()`; a caller
-   * done with it early may `unpersist()` it.
+   * Returns (id, label).
+   *
+   * OWNERSHIP: the returned DataFrame is persisted in [[FrameCache]] (query
+   * lifetime), which releases it on eviction or `clear()`; a caller done
+   * with it early may unpersist it. The symmetrized edges and the
+   * frontiers are this call's own and are released before it returns.
    */
-  def connectedComponents(ids: DataFrame, edges: DataFrame, maxIters: Int = 20): DataFrame = {
-    import org.apache.spark.storage.StorageLevel
-    val idName = ids.columns.head
-    val sym = edges.select(col("a").as("x"), col("b").as("y"))
-      .unionAll(edges.select(col("b").as("x"), col("a").as("y")))
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    var labels = ids.select(col(idName).as("id"), col(idName).as("label"),
-        lit(0L).as("_chg"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    try {
-      var changed = 1L
-      var it = 0
-      while (changed > 0 && it < maxIters) {
+  def connectedComponents(ids: DataFrame, edges: DataFrame, maxIters: Int = 20): DataFrame =
+    FrameCache.scoped { s =>
+      val idName = ids.columns.head
+      val sym = s.persist(edges.select(col("a").as("x"), col("b").as("y"))
+        .unionAll(edges.select(col("b").as("x"), col("a").as("y"))))
+      val start = ids.select(col(idName).as("id"), col(idName).as("label"), lit(0L).as("_chg"))
+      fixedPoint(s, "connectedComponents", start, maxIters, "label") { labels =>
         val neighborMin = sym.join(labels, sym("y") === labels("id"))
           .groupBy(col("x")).agg(min(col("label")).as("nlabel"))
-        val nextRaw = labels.join(neighborMin, labels("id") === neighborMin("x"), "left")
+        labels.join(neighborMin, labels("id") === neighborMin("x"), "left")
           .select(labels("id"),
             least(labels("label"), coalesce(col("nlabel"), labels("label"))).as("label"),
-            // did this node's label improve this round? summed below in the
-            // SAME action that fills the cache — no second pass
             when(col("nlabel") < labels("label"), 1L).otherwise(0L).as("_chg"))
-        // every 10th frontier: truncate lineage instead of stacking another
-        // cache layer on a 10-join-deep plan (lazy checkpoint — the agg
-        // below is the single materializing action either way)
-        val next =
-          if ((it + 1) % 10 == 0) nextRaw.localCheckpoint(false)
-          else nextRaw.persist(StorageLevel.MEMORY_AND_DISK)
-        changed = next.agg(coalesce(sum(col("_chg")), lit(0L))).first().getLong(0)
-        labels.unpersist(blocking = false)
-        labels = next
-        it += 1
       }
-      // re-persist the clean (id, label) projection as the RETURNED frame —
-      // unpersist() on a derived projection would not release the frontier
-      // cache, so the handed-off Dataset must itself be the persisted one;
-      // materialize it, then drop the final frontier (possibly a checkpoint)
-      val result = FrameCache.persist(labels.select(col("id"), col("label")))
-      result.count()
-      labels.unpersist(blocking = false)
-      result
-    } finally sym.unpersist(blocking = false)
+    }
+
+  /**
+   * The fixed-point frontier loop of [[resolveForest]] and
+   * [[connectedComponents]]: `step` maps a frontier (id, `valueCol`, ...)
+   * to the next one with a per-row `_chg` flag. Each frontier is persisted
+   * in `s`, or every 10th is lazily `localCheckpoint`ed to truncate the
+   * lineage instead of stacking another cache layer on a 10-join-deep plan;
+   * the change count is summed in the one action that materializes it, and
+   * the previous frontier is then released. The loop stops at the first
+   * round that changes nothing, and throws when `maxIters` rounds all
+   * changed something: the labels would be unfinished. The result, (id,
+   * `valueCol`), is handed to the [[FrameCache]] store and materialized
+   * before the last frontier is released (releasing a derived projection
+   * would not release the frontier it was cut from).
+   */
+  private def fixedPoint(s: FrameCache.Scope, op: String, start: DataFrame, maxIters: Int,
+      valueCol: String)(step: DataFrame => DataFrame): DataFrame = {
+    var cur = s.persist(start)
+    var changed = 1L
+    var it = 0
+    while (changed > 0 && it < maxIters) {
+      val nextRaw = step(cur)
+      val next =
+        if ((it + 1) % 10 == 0) nextRaw.localCheckpoint(false)
+        else s.persist(nextRaw)
+      changed = next.agg(coalesce(sum(col("_chg")), lit(0L))).first().getLong(0)
+      s.release(cur)
+      cur = next
+      it += 1
+    }
+    if (changed > 0)
+      throw new IllegalStateException(s"$op: still changing after maxIters = $maxIters rounds")
+    val result = FrameCache.persist(cur.select(col("id"), col(valueCol)))
+    result.count()
+    s.release(cur)
+    result
   }
 }
 

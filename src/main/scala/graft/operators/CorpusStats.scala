@@ -295,10 +295,9 @@ object CorpusStats {
     // persisted so the totals aggregate reads the vocab table instead of
     // re-scanning the corpus (vocab-sized — the same footprint class as a
     // dedup signature projection)
-    val counts = toks.groupBy(col("token"))
-      .agg(sum(lit(1L) - col("_side")).as("n_a"), sum(col("_side")).as("n_b"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
+    graft.FrameCache.scoped { s =>
+      val counts = s.persist(toks.groupBy(col("token"))
+        .agg(sum(lit(1L) - col("_side")).as("n_a"), sum(col("_side")).as("n_b")))
       val t = counts.agg(sum(col("n_a")), sum(col("n_b"))).collect()(0)
       // null sums ⟺ empty vocab (no tokens on either side) → totals 0
       val ta = if (t.isNullAt(0)) 0L else t.getLong(0)
@@ -311,7 +310,7 @@ object CorpusStats {
       val rows = ranked.collect()
       df.sparkSession.createDataFrame(
         java.util.Arrays.asList(rows: _*), ranked.schema)
-    } finally counts.unpersist()
+    }
   }
 
   /**

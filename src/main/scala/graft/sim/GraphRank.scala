@@ -2,7 +2,8 @@ package graft.sim
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import org.apache.spark.storage.StorageLevel
+
+import graft.FrameCache
 
 /**
  * Integer-exact PageRank power iteration over an edge table — document
@@ -45,39 +46,34 @@ object GraphRank {
     require(k >= 1, "k must be positive")
     require(dampMicro >= 0L && dampMicro <= 1000000L, "dampMicro in [0, 1e6]")
     val deg = edges.groupBy(col(srcCol)).agg(count(lit(1)).as("_deg"))
-    val e = edges.select(col(srcCol).as("_src"), col(dstCol).as("_dst"))
-      .join(deg.select(col(srcCol).as("_src"), col("_deg")), Seq("_src"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    val n = nodes.select(col(idCol).as("_id")).persist(StorageLevel.MEMORY_AND_DISK)
-    val base = 1000000L - dampMicro
-    var ranks = n.select(col("_id"), lit(1000000L).as("_r"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    // Deferred-materialization loop (round 13): the iteration count is data-
-    // independent, so no per-iteration action is semantically required — the
-    // final top-k collect computes the whole chain in one job (each level
-    // still persists, so task retries recompute from the nearest cache). A
-    // checkpoint action every 4th level bounds BOTH plan depth and peak
-    // cache residency (levels older than the last materialized one are
-    // released there — at 1e9 nodes, holding every level live is real
-    // memory). Previously every level ran its own count() job: 6 barrier
-    // jobs per call, each a full pass over the rank table at any scale.
-    val live = scala.collection.mutable.Buffer[DataFrame]()
-    try {
+    FrameCache.scoped { s =>
+      val e = s.persist(edges.select(col(srcCol).as("_src"), col(dstCol).as("_dst"))
+        .join(deg.select(col(srcCol).as("_src"), col("_deg")), Seq("_src")))
+      val n = s.persist(nodes.select(col(idCol).as("_id")))
+      val base = 1000000L - dampMicro
+      var ranks = s.persist(n.select(col("_id"), lit(1000000L).as("_r")))
+      // Deferred-materialization loop (round 13): the iteration count is
+      // data-independent, so no per-iteration action is semantically
+      // required — the final top-k collect computes the whole chain in one
+      // job (each level still persists, so task retries recompute from the
+      // nearest cache). A checkpoint action every 4th level bounds BOTH plan
+      // depth and peak cache residency (levels older than the last
+      // materialized one are released there — at 1e9 nodes, holding every
+      // level live is real memory). Previously every level ran its own
+      // count() job: 6 barrier jobs per call, each a full pass over the
+      // rank table at any scale.
       for (it <- 1 to iters) {
         val contrib = e.join(ranks.withColumnRenamed("_id", "_src"), Seq("_src"))
           .select(col("_dst"), expr("_r div _deg").as("_c"))
           .groupBy(col("_dst")).agg(sum(col("_c")).as("_s"))
-        val next = n
+        ranks = s.persist(n
           .join(contrib.withColumnRenamed("_dst", "_id"), Seq("_id"), "left")
           .select(col("_id"),
             (lit(base) + expr(s"$dampMicro * coalesce(_s, 0L) div 1000000"))
-              .cast("long").as("_r"))
-          .persist(StorageLevel.MEMORY_AND_DISK)
-        live += ranks
-        ranks = next
+              .cast("long").as("_r")))
         if (it % 4 == 0 && it < iters) {
           ranks.count()
-          live.foreach(_.unpersist(blocking = false)); live.clear()
+          s.retain(e, n, ranks)
         }
       }
       val top = ranks
@@ -87,9 +83,6 @@ object GraphRank {
       val rows = top.collect() // k rows — TakeOrderedAndProject upstream
       nodes.sparkSession.createDataFrame(
         java.util.Arrays.asList(rows: _*), top.schema)
-    } finally {
-      e.unpersist(); n.unpersist()
-      live.foreach(_.unpersist(blocking = false)); ranks.unpersist()
     }
   }
 }

@@ -3,7 +3,8 @@ package graft.sim
 import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DoubleType, LongType, StructField, StructType}
-import org.apache.spark.storage.StorageLevel
+
+import graft.FrameCache
 
 /**
  * Greedy farthest-first k-center selection over an embedding column — the
@@ -84,43 +85,39 @@ object KCenter {
   /** The greedy walk without the exact-path k cap (callers bound the
     * input themselves). */
   private def selectGreedy(corpus: DataFrame, idCol: String, vecCol: String,
-      k: Int, roundTo: Int): DataFrame = {
+      k: Int, roundTo: Int): DataFrame = FrameCache.scoped { s =>
     val spark = corpus.sparkSession
-    var cur = corpus
+    var cur = s.persist(corpus
       .select(col(idCol).cast("long").as("_id"),
         col(vecCol).cast("array<double>").as("_v"),
-        lit(-1.0).as("_maxsim"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    try {
-      cur.count()
-      val seed = cur.orderBy(col("_id").asc).limit(1).collect()(0)
-      var chosen =
-        Vector[(Long, Seq[Double], Double)]((seed.getLong(0), seed.getSeq[Double](1), 1.0))
-      var exhausted = false
-      while (chosen.size < k && !exhausted) {
-        val cvec = chosen.last._2
-        val next = cur
-          .withColumn("_maxsim",
-            greatest(col("_maxsim"),
-              round(Similarity.cosine(col("_v"), typedLit(cvec)), roundTo)))
-          .persist(StorageLevel.MEMORY_AND_DISK)
-        next.count()
-        cur.unpersist()
-        cur = next
-        val sel = cur.where(!col("_id").isInCollection(chosen.map(_._1)))
-          .orderBy(col("_maxsim").asc, col("_id").asc)
-          .limit(1).collect()
-        if (sel.isEmpty) exhausted = true
-        else chosen :+= ((sel(0).getLong(0), sel(0).getSeq[Double](1), sel(0).getDouble(2)))
-      }
-      val schema = StructType(Seq(
-        StructField("rank", LongType, nullable = false),
-        StructField(idCol, LongType, nullable = false),
-        StructField("sel_sim", DoubleType, nullable = false)))
-      val rows = chosen.zipWithIndex.map { case ((id, _, s), i) =>
-        Row((i + 1).toLong, id, s)
-      }
-      spark.createDataFrame(java.util.Arrays.asList(rows: _*), schema)
-    } finally cur.unpersist()
+        lit(-1.0).as("_maxsim")))
+    cur.count()
+    val seed = cur.orderBy(col("_id").asc).limit(1).collect()(0)
+    var chosen =
+      Vector[(Long, Seq[Double], Double)]((seed.getLong(0), seed.getSeq[Double](1), 1.0))
+    var exhausted = false
+    while (chosen.size < k && !exhausted) {
+      val cvec = chosen.last._2
+      val next = s.persist(cur
+        .withColumn("_maxsim",
+          greatest(col("_maxsim"),
+            round(Similarity.cosine(col("_v"), typedLit(cvec)), roundTo))))
+      next.count()
+      s.release(cur)
+      cur = next
+      val sel = cur.where(!col("_id").isInCollection(chosen.map(_._1)))
+        .orderBy(col("_maxsim").asc, col("_id").asc)
+        .limit(1).collect()
+      if (sel.isEmpty) exhausted = true
+      else chosen :+= ((sel(0).getLong(0), sel(0).getSeq[Double](1), sel(0).getDouble(2)))
+    }
+    val schema = StructType(Seq(
+      StructField("rank", LongType, nullable = false),
+      StructField(idCol, LongType, nullable = false),
+      StructField("sel_sim", DoubleType, nullable = false)))
+    val rows = chosen.zipWithIndex.map { case ((id, _, sim), i) =>
+      Row((i + 1).toLong, id, sim)
+    }
+    spark.createDataFrame(java.util.Arrays.asList(rows: _*), schema)
   }
 }

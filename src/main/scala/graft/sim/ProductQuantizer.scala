@@ -53,9 +53,8 @@ object ProductQuantizer {
     var cbs: Array[Array[(Long, Array[Double])]] = Array.tabulate(m) { s =>
       sampled.zipWithIndex.map { case ((_, v), i) => (i.toLong, v.slice(s * ds, s * ds + ds)) }
     }
-    val vecs = corpus.select(col(vecCol).cast("array<double>").as("cv"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
+    graft.FrameCache.scoped { scope =>
+      val vecs = scope.persist(corpus.select(col(vecCol).cast("array<double>").as("cv")))
       var it = 0
       while (it < iters) {
         val parts = array((0 until m).map { s =>
@@ -81,7 +80,7 @@ object ProductQuantizer {
         it += 1
       }
       cbs
-    } finally vecs.unpersist(blocking = false)
+    }
   }
 
   /** Adds integer code columns code_0..code_{m-1} — one map-side

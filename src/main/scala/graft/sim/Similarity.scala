@@ -3,6 +3,8 @@ package graft.sim
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
+import graft.FrameCache
+
 /**
  * Similarity search over embedding columns (array<float> / array<double>).
  * Dot products, norms and cosines are native codegen'd expressions
@@ -229,7 +231,7 @@ object Similarity {
    */
   def ivfTrainKMeans(
       corpus: DataFrame, idCol: String, vecCol: String, k: Int,
-      iters: Int = 3, hierAssign: Boolean = false): Array[(Long, Array[Double])] = {
+      iters: Int = 3, hierAssign: Boolean = false): Array[(Long, Array[Double])] = FrameCache.scoped { s =>
     var cents = ivfTrain(corpus, idCol, vecCol, k).zipWithIndex
       .map { case ((_, v), i) => (i.toLong, v) } // re-key 0..k-1: stable cell ids
     val trainDim = cents.head._2.length
@@ -238,32 +240,28 @@ object Similarity {
     // Ragged vectors are dropped loudly-consistently (same guard Pca uses):
     // the per-coordinate sums would otherwise throw INVALID_ARRAY_INDEX
     // mid-aggregation on the first short row.
-    val vecs = corpus.select(col(vecCol).cast("array<double>").as("cv"))
-      .where(size(col("cv")) === trainDim)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
-      val dim = trainDim
-      var it = 0
-      while (it < iters) {
-        val means = vecs
-          .withColumn("cell",
-            if (hierAssign) ivfCellExprHier(col("cv"), cents) else ivfCellExpr(col("cv"), cents))
-          .groupBy(col("cell"))
-          .agg(
-            count(lit(1)).as("n"),
-            array((0 until dim).map(d =>
-              sum(floor(col("cv")(d) * KMeansShift + 0.5))): _*).as("sums"))
-          .collect()
-          .map { r =>
-            val n = r.getLong(1).toDouble
-            r.getLong(0) -> r.getSeq[Long](2).map(s => s.toDouble / (n * KMeansShift)).toArray
-          }
-          .toMap
-        cents = cents.map { case (cid, old) => (cid, means.getOrElse(cid, old)) }
-        it += 1
-      }
-      cents
-    } finally vecs.unpersist(blocking = false)
+    val vecs = s.persist(corpus.select(col(vecCol).cast("array<double>").as("cv"))
+      .where(size(col("cv")) === trainDim))
+    var it = 0
+    while (it < iters) {
+      val means = vecs
+        .withColumn("cell",
+          if (hierAssign) ivfCellExprHier(col("cv"), cents) else ivfCellExpr(col("cv"), cents))
+        .groupBy(col("cell"))
+        .agg(
+          count(lit(1)).as("n"),
+          array((0 until trainDim).map(d =>
+            sum(floor(col("cv")(d) * KMeansShift + 0.5))): _*).as("sums"))
+        .collect()
+        .map { r =>
+          val n = r.getLong(1).toDouble
+          r.getLong(0) -> r.getSeq[Long](2).map(x => x.toDouble / (n * KMeansShift)).toArray
+        }
+        .toMap
+      cents = cents.map { case (cid, old) => (cid, means.getOrElse(cid, old)) }
+      it += 1
+    }
+    cents
   }
 
   /**
@@ -526,47 +524,54 @@ object Similarity {
    * Cost per pass: one corpus shuffle on `coarse` + one on the row id
    * (both ≈ N·dim), against the flat trainer's N·k assignment flops and
    * O(k·dim) driver residency. Fine tables persist per pass; the chain
-   * materializes in the caller's single action (round 13 — no per-pass
-   * count() barrier).
+   * materializes in one action (round 13 — no per-pass count() barrier).
+   *
+   * OWNERSHIP: the returned model's `fine` table is persisted in
+   * [[FrameCache]] (query lifetime), which releases it on eviction or
+   * `clear()`; the earlier passes' fine tables and the corpus routing are
+   * this call's own and are released before it returns.
    */
   def ivfTrainKMeansDist(
       corpus: DataFrame, idCol: String, vecCol: String, k: Int,
-      iters: Int = 2, coarseIters: Int = 2, nRows: Option[Long] = None): IvfDistModel = {
-    val (model, routed, liveFine) = trainDistCore(corpus, idCol, vecCol, k, iters, coarseIters, nRows)
-    model.fine.count() // materialize the lazy Lloyd chain in one job
-    liveFine.foreach(_.unpersist(blocking = false))
-    routed.unpersist(blocking = false)
-    model
-  }
+      iters: Int = 2, coarseIters: Int = 2, nRows: Option[Long] = None): IvfDistModel =
+    FrameCache.scoped { s =>
+      val (model, _) = trainDistCore(s, corpus, idCol, vecCol, k, iters, coarseIters, nRows)
+      FrameCache.persist(model.fine).count() // materialize the lazy Lloyd chain in one job
+      model
+    }
 
   /** [[ivfTrainKMeansDist]] + [[ivfIndexDist]] fused: the corpus coarse
     * routing computed for training is REUSED for the index assignment
     * (one corpus×√k routing pass saved — at train-then-index time there is
-    * no reason to route the same rows twice). Index is materialized before
-    * the internal routing cache is dropped. */
+    * no reason to route the same rows twice). One materializing job
+    * computes the whole lazy Lloyd chain and the index (round 13: each
+    * Lloyd pass used to run its own count() barrier), before the
+    * intermediate fine tables and the routing are released, so nothing
+    * recomputes from the raw corpus.
+    *
+    * OWNERSHIP: the index and the model's `fine` table are persisted in
+    * [[FrameCache]] (query lifetime), which releases them on eviction or
+    * `clear()`; the rest is released before this call returns. */
   def ivfTrainIndexDist(
       corpus: DataFrame, idCol: String, vecCol: String, k: Int,
-      iters: Int = 2, coarseIters: Int = 2, nRows: Option[Long] = None): (IvfDistModel, DataFrame) = {
-    val (model, routed, liveFine) = trainDistCore(corpus, idCol, vecCol, k, iters, coarseIters, nRows)
-    val index = assignFine(routed, model.fine, "_rid")
-      .select(col("_rid").as(idCol), col("cv"), col("cell"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    // ONE materializing job computes the whole lazy Lloyd chain + the index
-    // (round 13: each Lloyd pass used to run its own count() barrier);
-    // intermediate fine tables release only after their successors (and the
-    // index) are on disk/memory, so nothing ever recomputes from raw corpus.
-    index.count()
-    liveFine.foreach(_.unpersist(blocking = false))
-    routed.unpersist(blocking = false)
-    (model, index)
-  }
+      iters: Int = 2, coarseIters: Int = 2, nRows: Option[Long] = None): (IvfDistModel, DataFrame) =
+    FrameCache.scoped { s =>
+      val (model, routed) = trainDistCore(s, corpus, idCol, vecCol, k, iters, coarseIters, nRows)
+      FrameCache.persist(model.fine)
+      val index = FrameCache.persist(assignFine(routed, model.fine, "_rid")
+        .select(col("_rid").as(idCol), col("cv"), col("cell")))
+      index.count()
+      (model, index)
+    }
 
+  /** The distributed quantizer's Lloyd chain, left lazy: every fine table
+    * and the corpus routing (returned beside the model) persist in `s`. */
   private def trainDistCore(
-      corpus: DataFrame, idCol: String, vecCol: String, k: Int,
+      s: FrameCache.Scope, corpus: DataFrame, idCol: String, vecCol: String, k: Int,
       iters: Int, coarseIters: Int,
       // callers that already counted the corpus (k ∝ N sizing) pass it in —
       // the recount was a whole extra corpus scan per train (round 14)
-      nRows: Option[Long] = None): (IvfDistModel, DataFrame, Seq[DataFrame]) = {
+      nRows: Option[Long]): (IvfDistModel, DataFrame) = {
     require(k >= 1)
     val kc = math.max(1, math.ceil(math.sqrt(k.toDouble)).toInt)
     val coarse = ivfTrainKMeans(corpus, idCol, vecCol, kc, coarseIters)
@@ -576,28 +581,24 @@ object Similarity {
     val dim = coarse.head._2.length
     // ragged vectors dropped loudly-consistently (the ivfTrainKMeans/Pca
     // guard): the scaled-integer sums would throw INVALID_ARRAY_INDEX
-    var fine = corpus
+    var fine = s.persist(corpus
       .select(col(idCol).cast("long").as("cell"), col(vecCol).cast("array<double>").as("fvec"))
       .where(size(col("fvec")) === dim)
       .where(lcgv < thresh)
-      .withColumn("coarse", ivfCellExpr(col("fvec"), coarse))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .withColumn("coarse", ivfCellExpr(col("fvec"), coarse)))
     // corpus-side coarse routing is iteration-invariant (the coarse level
     // is frozen after its own Lloyd): compute once, reuse every pass and
     // the fused index build. Materialized by the first Lloyd action — no
     // separate count job.
-    val routed = corpus
+    val routed = s.persist(corpus
       .select(col(idCol).cast("long").as("_rid"), col(vecCol).cast("array<double>").as("cv"))
       .where(size(col("cv")) === dim)
-      .withColumn("coarse", ivfCellExpr(col("cv"), coarse))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .withColumn("coarse", ivfCellExpr(col("cv"), coarse)))
     // Deferred materialization (round 13): the pass count is fixed, so the
-    // loop builds the persisted chain lazily — the CALLER's single
-    // materializing action computes every pass in one job and then releases
-    // the returned intermediate (liveFine) handles. At 2 passes the peak
-    // residency is 3 k-row tables; a longer schedule should checkpoint
+    // loop builds the persisted chain lazily — the caller's single
+    // materializing action computes every pass in one job. At 2 passes the
+    // peak residency is 3 k-row tables; a longer schedule should checkpoint
     // every few passes (the GraphRank discipline).
-    val liveFine = scala.collection.mutable.Buffer[DataFrame]()
     var it = 0
     while (it < iters) {
       val assigned = assignFine(routed, fine, "_rid")
@@ -609,15 +610,12 @@ object Similarity {
         .select(col("cell"),
           expr(s"transform(_sums, s -> CAST(s AS DOUBLE) / (CAST(_n AS DOUBLE) * $KMeansShift))")
             .as("_mean"))
-      val next = fine.join(means, Seq("cell"), "left")
+      fine = s.persist(fine.join(means, Seq("cell"), "left")
         .select(col("cell"), coalesce(col("_mean"), col("fvec")).as("fvec"))
-        .withColumn("coarse", ivfCellExpr(col("fvec"), coarse))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      liveFine += fine
-      fine = next
+        .withColumn("coarse", ivfCellExpr(col("fvec"), coarse)))
       it += 1
     }
-    (IvfDistModel(coarse, fine), routed, liveFine.toSeq)
+    (IvfDistModel(coarse, fine), routed)
   }
 
   /** Shared assignment kernel: rows (idAlias, cv, coarse) × fine table →

@@ -12,8 +12,9 @@ import org.apache.spark.sql.functions._
  *
  *   1. one aggregation shuffle: adjacent-pair counts weighted by word
  *      frequency (map-side partial agg),
- *   2. a 1-ROW driver fetch: the argmax pair, ties broken (count desc,
- *      left asc, right asc) so the learned merge table is deterministic,
+ *   2. a bounded driver fetch (4 rows): the argmax pair, ties broken
+ *      (count desc, left asc, right asc) so the learned merge table is
+ *      deterministic,
  *   3. a map-side merge apply: greedy left-to-right non-overlapping
  *      replacement as a left fold (`aggregate`) over each word's token
  *      array — "merge with the accumulator's last token when it equals
@@ -78,58 +79,32 @@ object BpeTrainer {
       .withColumn("toks", chars(col("w")))
 
   /**
-   * Learn `nMerges` merges. Returns the merge table and the final word
-   * tokenization (w, cnt, toks) — ready for `segmentCounts`. Stops early
-   * when no adjacent pair occurs at least `minPairCount` times.
+   * Learn `nMerges` merges, one per pair-count shuffle: [[trainBatched]]
+   * at `batch = 1`, whose greedy walk then accepts exactly the argmax pair
+   * (count desc, left asc, right asc) of each round. Returns the merge
+   * table and the final word tokenization (w, cnt, toks) — ready for
+   * `segmentCounts`. Stops early when no adjacent pair occurs at least
+   * `minPairCount` times.
+   *
+   * OWNERSHIP: as [[trainBatched]].
    */
   def train(
       docs: DataFrame, textCol: String, nMerges: Int,
-      minPairCount: Long = 2L): (Seq[Merge], DataFrame) = {
-    require(nMerges >= 1 && minPairCount >= 1)
-    // Lazy-materialization loop (round 13): each iteration's pair-count
-    // aggregation is the action that fills the CURRENT table's cache, so no
-    // separate count() job runs per merge — the predecessor stays persisted
-    // until its successor has materialized (two cached word tables at peak,
-    // half the Spark jobs per merge at every scale).
-    var cur = wordTable(docs, textCol).cache()
-    var prev: DataFrame = null
-    val merges = Seq.newBuilder[Merge]
-    var step = 1
-    var exhausted = false
-    while (step <= nMerges && !exhausted) {
-      // adjacent pairs weighted by word frequency; argmax fetched as 1 row
-      val best = pairCounts(cur, minPairCount)
-        .orderBy(col("c").desc, col("l").asc, col("r").asc)
-        .limit(1)
-        .collect()
-      if (prev != null) { prev.unpersist(blocking = false); prev = null }
-      if (best.isEmpty) exhausted = true
-      else {
-        val row = best.head
-        val (l, r, c) = (row.getString(0), row.getString(1), row.getLong(2))
-        merges += Merge(step, l, r, l + r, c)
-        val next = cur.withColumn("toks", applyMerge(col("toks"), l, r)).cache()
-        prev = cur
-        cur = next
-        step += 1
-      }
-    }
-    if (prev != null) { cur.count(); prev.unpersist(blocking = false) }
-    // the returned table stays cached for the caller's query
-    (merges.result(), graft.FrameCache.persist(cur))
-  }
+      minPairCount: Long = 2L): (Seq[Merge], DataFrame) =
+    trainBatched(docs, textCol, nMerges, batch = 1, minPairCount)
 
   /**
    * k-BATCHED BPE training (round 13; the scale path to realistic 32k-50k
-   * vocabularies): [[train]] costs one pair-count shuffle + one driver
-   * round-trip PER merge — 32k sequential Spark jobs at a real vocabulary
-   * size. Standard batched BPE instead learns up to `batch` merges per
-   * shuffle: rank the pair table once, then greedily accept pairs in rank
-   * order that share NO symbol with an already-accepted pair of the round
-   * (symbol-disjoint merges can't compete for the same token instance, so
-   * their stale counts stay exact; acceptance order = application order
-   * covers the corner where one merge's OUTPUT string equals another's
-   * input symbol). 32k merges then cost ~32k/batch shuffles.
+   * vocabularies): sequential training costs one pair-count shuffle + one
+   * driver round-trip PER merge — 32k sequential Spark jobs at a real
+   * vocabulary size. Standard batched BPE instead learns up to `batch`
+   * merges per shuffle: rank the pair table once, then greedily accept
+   * pairs in rank order that share NO symbol with an already-accepted pair
+   * of the round (symbol-disjoint merges can't compete for the same token
+   * instance, so their stale counts stay exact; acceptance order =
+   * application order covers the corner where one merge's OUTPUT string
+   * equals another's input symbol). 32k merges then cost ~32k/batch
+   * shuffles.
    *
    * Contract (fixed grid, exactly replayable):
    *  - rounds = ceil(nMerges / batch); round i wants min(batch,
@@ -142,19 +117,26 @@ object BpeTrainer {
    *  - stops early only when the pool is empty (the first pool entry is
    *    always acceptable, so every non-empty round makes progress).
    *
-   * `batch = 1` reduces exactly to [[train]] (BpeTrainerSpec pins it);
-   * at `batch > 1` the merge TABLE can differ from sequential training
-   * where a merge-created token immediately dominates the pair table —
-   * the standard, documented batched-BPE tradeoff.
+   * `batch = 1` is exactly sequential training, [[train]]; at `batch > 1`
+   * the merge TABLE can differ from it where a merge-created token
+   * immediately dominates the pair table — the standard, documented
+   * batched-BPE tradeoff.
+   *
+   * Lazy-materialization loop (round 13): each round's pool aggregation is
+   * the action that fills the CURRENT word table's cache, so no separate
+   * count() job runs per round — the predecessor stays persisted until its
+   * successor has materialized (two cached word tables at peak).
+   *
+   * OWNERSHIP: the returned word table is persisted in
+   * [[graft.FrameCache]] (query lifetime), which releases it on eviction or
+   * `clear()`; the per-round tables are this call's own and are released
+   * before it returns.
    */
   def trainBatched(
       docs: DataFrame, textCol: String, nMerges: Int, batch: Int,
-      minPairCount: Long = 2L): (Seq[Merge], DataFrame) = {
+      minPairCount: Long = 2L): (Seq[Merge], DataFrame) = graft.FrameCache.scoped { s =>
     require(nMerges >= 1 && batch >= 1 && minPairCount >= 1)
-    // same lazy-materialization loop as [[train]]: the pool aggregation
-    // fills the current cache; no per-round count() job
-    var cur = wordTable(docs, textCol).cache()
-    var prev: DataFrame = null
+    var cur = s.persist(wordTable(docs, textCol))
     val merges = Seq.newBuilder[Merge]
     var step = 1
     var exhausted = false
@@ -166,7 +148,7 @@ object BpeTrainer {
         .orderBy(col("c").desc, col("l").asc, col("r").asc)
         .limit(4 * batch)
         .collect()
-      if (prev != null) { prev.unpersist(blocking = false); prev = null }
+      s.retain(cur) // the pool's action filled cur: its predecessor can go
       if (pool.isEmpty) exhausted = true
       else {
         val used = scala.collection.mutable.Set[String]()
@@ -185,13 +167,12 @@ object BpeTrainer {
         val newToks = accepted.foldLeft(col("toks")) {
           case (t, (l, r, _)) => applyMerge(t, l, r)
         }
-        val next = cur.withColumn("toks", newToks).cache()
-        prev = cur
-        cur = next
+        cur = s.persist(cur.withColumn("toks", newToks))
       }
       round += 1
     }
-    if (prev != null) { cur.count(); prev.unpersist(blocking = false) }
+    // the last round's table is materialized before its predecessor goes
+    if (!exhausted) cur.count()
     (merges.result(), graft.FrameCache.persist(cur))
   }
 

@@ -80,6 +80,24 @@ class ConnectedComponentsSpec extends AnyFunSuite with SparkTestSession {
     assert(resolved == cc, s"resolveForest=$resolved cc=$cc")
   }
 
+  test("both loops throw, naming the operator and maxIters, when a 30-node path cannot settle in 3 rounds") {
+    import spark.implicits._
+    val ids = (1L to 30L).toDF("id")
+    val edges = (1L until 30L).map(i => (i, i + 1)).toDF("a", "b")
+    val forest = (1L to 30L).map(i => (i, math.max(1L, i - 1))).toDF("id", "parent")
+    val before = spark.sparkContext.getPersistentRDDs.keySet
+    val cc = intercept[IllegalStateException](Dedup.connectedComponents(ids, edges, maxIters = 3))
+    assert(cc.getMessage.contains("connectedComponents") && cc.getMessage.contains("maxIters = 3"),
+      cc.getMessage)
+    val rf = intercept[IllegalStateException](Dedup.resolveForest(forest, "id", "parent", maxIters = 3))
+    assert(rf.getMessage.contains("resolveForest") && rf.getMessage.contains("maxIters = 3"),
+      rf.getMessage)
+    assert(spark.sparkContext.getPersistentRDDs.keySet == before, "a failed loop releases its frames")
+    // the same path settles when the rounds suffice (log2(30) + 1 for the forest)
+    val roots = Dedup.resolveForest(forest, "id", "parent", maxIters = 6).as[(Long, Long)].collect()
+    assert(roots.length == 30 && roots.forall(_._2 == 1L))
+  }
+
   test("nearDuplicateComponents closes a text chain a~b~c with a!~c") {
     import spark.implicits._
     // b shares a long prefix with a and gains tokens; c extends b further:

@@ -318,13 +318,16 @@ class PlanQualitySpec extends AnyFunSuite with SparkTestSession {
   }
 
   test("a driver query leaves no persisted RDD behind") {
-    // the three book queries that persist through the frame cache: the
-    // collapsed τ-join's projections, MinHash signatures and banding, and
-    // the BPE trainer's returned word table. Earlier suites' store entries
-    // are released first: the run's own release would drop them too.
+    // book queries that persist through the frame cache (the collapsed
+    // τ-join's projections, MinHash signatures and banding, the BPE word
+    // table, the resolved forest, the distributed IVF index and fine table)
+    // or keep loop frames in an operator scope (GraphRank, KCenter,
+    // tokenDrift, the PQ and IVF Lloyd passes). Earlier suites' store
+    // entries are released first: the run's own release would drop them too.
     FrameCache.clear()
     val before = spark.sparkContext.getPersistentRDDs.keySet
-    for (q <- Seq("q_jaccard_collapsed", "q_dedup_minhash", "q_bpe_segment")) {
+    for (q <- Seq("q_jaccard_collapsed", "q_dedup_minhash", "q_bpe_segment", "q_ann_incremental_dist",
+        "q_centrality", "q_kcenter", "q_corpus_drift", "q_ann_pq", "q_dedup_pipeline")) {
       val (seconds, rows) = Harness.run(spark, q, dir)
       assert(seconds > 0 && rows > 0, q)
       val leaked = spark.sparkContext.getPersistentRDDs.keySet -- before

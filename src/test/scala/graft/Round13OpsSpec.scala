@@ -134,6 +134,21 @@ class Round13OpsSpec extends AnyFunSuite with SparkTestSession {
     model.fine.unpersist(blocking = false)
   }
 
+  test("dist k-means hands only its fine table to the frame store and releases its passes") {
+    import graft.sim.Similarity
+    val emb = spark.range(300).select(col("id").as("vec_id"),
+      array((0 until 4).map(d => pmod(col("id") * (d + 5) + d, lit(89)).cast("double")): _*)
+        .as("embedding"))
+    FrameCache.clear()
+    val before = spark.sparkContext.getPersistentRDDs.keySet
+    val model = Similarity.ivfTrainKMeansDist(emb, "vec_id", "embedding", 16, iters = 2, coarseIters = 1)
+    assert(model.fine.storageLevel.useMemory, "the returned fine table is cached")
+    assert((spark.sparkContext.getPersistentRDDs.keySet -- before).size == 1,
+      "only the final fine table outlives the call")
+    FrameCache.clear()
+    assert(spark.sparkContext.getPersistentRDDs.keySet == before)
+  }
+
   test("calibrationBinsHist plan: no window over the unaggregated doc table") {
     import spark.implicits._
     val scored = (1L to 50L).map(i => (i, i % 2, i % 5)).toDF("doc_id", "y", "score")

@@ -5,6 +5,7 @@ import java.sql.Timestamp
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
+import org.apache.spark.sql.streaming.Trigger
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.filter.{CubatureKalmanFilter, ExtendedKalmanFilter, LeastMeanSquaresFilter, LinearKalmanFilter,
@@ -123,5 +124,35 @@ class StatefulTransformerSpec extends AnyFunSuite with SparkTestSession {
       .transform(kalmanIn).isStreaming)
     assert(rls.setStateTimeoutMode("process").setStateTimeoutDuration("2 minutes")
       .transform(regressionIn).isStreaming)
+  }
+
+  test("a processing-time timeout evicts an idle key's state on an interval trigger") {
+    // Spark runs a no-data batch after every batch of a stage with this
+    // timeout; the interval trigger spaces them, and one of them evicts
+    import spark.implicits._
+    implicit val sqlCtx = spark.sqlContext
+    val in = MemoryStream[(String, Timestamp, Array[Double])]
+    val lkf = new LinearKalmanFilter(1, 1).setStateKeyCol("key").setEventTimeCol("t")
+      .setStateTimeoutMode("process").setStateTimeoutDuration("1 second")
+    val q = lkf.transform(in.toDF().toDF("key", "t", "measurement"))
+      .writeStream.format("memory").queryName("process_timeout")
+      .trigger(Trigger.ProcessingTime("200 milliseconds")).start()
+    try {
+      in.addData(("k", new Timestamp(0L), Array(1.0)))
+      var seen = false
+      var rows = -1L
+      val deadline = System.nanoTime() + 60L * 1000000000L
+      while (!(seen && rows == 0L) && System.nanoTime() < deadline) {
+        Thread.sleep(100)
+        Option(q.lastProgress).flatMap(_.stateOperators.headOption).foreach { op =>
+          rows = op.numRowsTotal
+          seen ||= rows == 1L
+        }
+      }
+      assert(q.exception.isEmpty, q.exception)
+      assert(seen, "the key's state was never stored")
+      assert(rows == 0L, s"the key's state was not evicted within 60 s: $rows rows")
+      assert(spark.table("process_timeout").count() == 1L)
+    } finally q.stop()
   }
 }
