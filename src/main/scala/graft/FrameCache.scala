@@ -1,7 +1,9 @@
 package graft
 
+import org.apache.spark.SparkContext
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
+import org.apache.spark.sql.execution.LogicalRDD
 import org.apache.spark.storage.StorageLevel
 
 /**
@@ -22,7 +24,8 @@ import org.apache.spark.storage.StorageLevel
  * plan-identical input reuses the live entry.
  *
  * The store holds at most [[MaxEntries]] plans and unpersists the least
- * recently persisted one past that; `clear()` unpersists them all. The book
+ * recently persisted one past that; `clear()` unpersists them all, and the
+ * lineage leaves of [[checkpoint]] with them. The book
  * drivers (Bench, Soak, Verify) call it after each query, so every query
  * starts and ends with no graft entries.
  *
@@ -60,10 +63,31 @@ object FrameCache {
     df
   }
 
-  /** Unpersists every recorded frame. */
+  /** The RDDs behind [[checkpoint]]'s leaves, by id only: a leaf whose
+    * frame is dropped unreleased is still cleaned by Spark's ContextCleaner. */
+  private val leaves = scala.collection.mutable.Set[(SparkContext, Int)]()
+
+  /** `df` computed now into a lineage leaf (an eager local checkpoint) of
+    * query lifetime: `clear()` releases its blocks. For a loop's inputs,
+    * whose plans the loop would otherwise nest round over round. */
+  def checkpoint(df: DataFrame): DataFrame = {
+    val leaf = df.localCheckpoint()
+    synchronized {
+      leaves.filterInPlace { case (sc, id) => sc.getPersistentRDDs.contains(id) }
+      leaf.queryExecution.analyzed.foreach {
+        case r: LogicalRDD => leaves += ((r.rdd.context, r.rdd.id))
+        case _ =>
+      }
+    }
+    leaf
+  }
+
+  /** Unpersists every recorded frame and checkpoint leaf. */
   def clear(): Unit = synchronized {
     live.values.forEach(unpersist)
     live.clear()
+    for ((sc, id) <- leaves if !sc.isStopped) sc.getPersistentRDDs.get(id).foreach(_.unpersist(blocking = false))
+    leaves.clear()
   }
 
   /**

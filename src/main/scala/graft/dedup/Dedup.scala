@@ -447,21 +447,20 @@ class MinHashLSH(val numHashes: Int = 32, val bands: Int = 8, val shingleSize: I
     import org.apache.spark.sql.expressions.Window
     val sigs = cachedSignatures(df, idCol, textCol)
     // (id, rep): min id over the doc's canonicalized shingle set; empty
-    // sets keep themselves. ONE shuffle on the sorted-set key. Eager
-    // localCheckpoint (not persist): the CC loop's per-iteration plans
+    // sets keep themselves. ONE shuffle on the sorted-set key. A
+    // checkpoint leaf (not persist): the CC loop's per-iteration plans
     // nest their inputs ~3× per round, so the inputs must be lineage
     // LEAVES or planning cost (and plan-string memory) goes exponential.
-    val repMap = sigs.select(col(idCol).as("_mid"),
+    val repMap = FrameCache.checkpoint(sigs.select(col(idCol).as("_mid"),
         when(size(col("sset")) === 0, col(idCol))
           .otherwise(min(col(idCol)).over(Window.partitionBy(sort_array(col("sset")))))
-          .as("_rep"))
-      .localCheckpoint()
+          .as("_rep")))
     val repSigs = sigs.join(
       repMap.where(col("_mid") === col("_rep")).select(col("_mid").as(idCol)), Seq(idCol))
     // the tiny verified-pair list computes once and becomes a leaf (it is
     // consumed by the symmetrized CC edges AND the linked-id seed)
-    val pairs = nearDuplicatesFromSigs(repSigs, idCol, threshold)
-      .select(col("a"), col("b")).localCheckpoint()
+    val pairs = FrameCache.checkpoint(nearDuplicatesFromSigs(repSigs, idCol, threshold)
+      .select(col("a"), col("b")))
     // iterate CC over the linked subgraph only (see Dedup.pipeline): nodes
     // without a near-dup pair can never change label
     val linkedIds = pairs.select(col("a").as("id"))

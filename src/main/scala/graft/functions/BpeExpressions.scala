@@ -2,12 +2,10 @@ package graft.functions
 
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, CodeGenerator, ExprCode, FalseLiteral}
-import org.apache.spark.sql.catalyst.expressions.codegen.Block._
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
+import org.apache.spark.sql.functions.lit
 import org.apache.spark.sql.graftbridge.Bridge
-import org.apache.spark.sql.types.{ArrayType, DataType, StringType, StructField, StructType}
+import org.apache.spark.sql.types.{ArrayType, StringType, StructField, StructType}
 import org.apache.spark.unsafe.types.UTF8String
 
 /**
@@ -68,8 +66,10 @@ object BpeKernels extends Serializable {
 
   /** Every character window of length 2..maxLen of a word, length-major
     * (all 2-grams, then all 3-grams, ...) — the subword-vocab candidate
-    * generator. Character indexing matches SQL substring (code points). */
+    * generator. Character indexing matches SQL substring (code points).
+    * EMPTY for a null word. */
   def charGrams(w: UTF8String, maxLen: Int): ArrayData = {
+    if (w == null) return new GenericArrayData(Array.empty[AnyRef])
     val len = w.numChars()
     var total = 0
     var l = 2
@@ -94,90 +94,24 @@ object BpeKernels extends Serializable {
   }
 }
 
-/** One BPE merge applied to an array<string> token column, as a native
-  * kernel call inside whole-stage codegen. */
-case class ApplyMergeExpr(child: Expression, left: String, right: String)
-    extends UnaryExpression {
-
-  override def dataType: DataType = ArrayType(StringType, containsNull = false)
-  override def prettyName: String = "bpe_apply_merge"
-
-  @transient private lazy val l8 = UTF8String.fromString(left)
-  @transient private lazy val r8 = UTF8String.fromString(right)
-  @transient private lazy val m8 = UTF8String.fromString(left + right)
-
-  override def nullSafeEval(input: Any): Any =
-    BpeKernels.applyMerge(input.asInstanceOf[ArrayData], l8, r8, m8)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val lRef = ctx.addReferenceObj("bpeLeft", l8, "org.apache.spark.unsafe.types.UTF8String")
-    val rRef = ctx.addReferenceObj("bpeRight", r8, "org.apache.spark.unsafe.types.UTF8String")
-    val mRef = ctx.addReferenceObj("bpeMerged", m8, "org.apache.spark.unsafe.types.UTF8String")
-    nullSafeCodeGen(ctx, ev, c =>
-      s"${ev.value} = graft.functions.BpeKernels.applyMerge($c, $lRef, $rRef, $mRef);")
-  }
-
-  override protected def withNewChildInternal(newChild: Expression): ApplyMergeExpr =
-    copy(child = newChild)
-}
-
-/** Adjacent token pairs array<struct<l,r>> of an array<string> column. */
-case class AdjacentPairsExpr(child: Expression) extends UnaryExpression {
-
-  override def dataType: DataType = ArrayType(
-    StructType(Seq(StructField("l", StringType), StructField("r", StringType))),
-    containsNull = false)
-  override def prettyName: String = "adjacent_pairs"
-
-  override def nullSafeEval(input: Any): Any =
-    BpeKernels.adjacentPairs(input.asInstanceOf[ArrayData])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c =>
-      s"${ev.value} = graft.functions.BpeKernels.adjacentPairs($c);")
-
-  override protected def withNewChildInternal(newChild: Expression): AdjacentPairsExpr =
-    copy(child = newChild)
-}
-
-/** All 2..maxLen character windows of a string column (length-major). */
-case class CharGramsExpr(child: Expression, maxLen: Int) extends UnaryExpression {
-  require(maxLen >= 2, s"maxLen must be >= 2, got $maxLen")
-
-  override def dataType: DataType = ArrayType(StringType, containsNull = false)
-  override def nullable: Boolean = false
-  override def prettyName: String = "char_grams"
-
-  override def eval(input: InternalRow): Any = {
-    val v = child.eval(input)
-    if (v == null) new GenericArrayData(Array.empty[AnyRef])
-    else BpeKernels.charGrams(v.asInstanceOf[UTF8String], maxLen)
-  }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val childGen = child.genCode(ctx)
-    val javaType = CodeGenerator.javaType(dataType)
-    ev.copy(
-      code = code"""
-        ${childGen.code}
-        $javaType ${ev.value} = ${childGen.isNull}
-          ? new org.apache.spark.sql.catalyst.util.GenericArrayData(new Object[0])
-          : graft.functions.BpeKernels.charGrams(${childGen.value}, $maxLen);
-      """,
-      isNull = FalseLiteral)
-  }
-
-  override protected def withNewChildInternal(newChild: Expression): CharGramsExpr =
-    copy(child = newChild)
-}
-
 object BpeExpressions {
+  private val strings = ArrayType(StringType, containsNull = false)
+
+  /** One BPE merge (left, right) applied to an array<string> token column. */
   def applyMerge(toks: Column, left: String, right: String): Column =
-    Bridge.column(ApplyMergeExpr(Bridge.expression(toks), left, right))
+    Bridge.invoke(BpeKernels, "applyMerge", strings,
+      Seq(toks, lit(left), lit(right), lit(left + right)))
 
+  /** Adjacent token pairs array<struct<l,r>> of an array<string> column. */
   def adjacentPairs(toks: Column): Column =
-    Bridge.column(AdjacentPairsExpr(Bridge.expression(toks)))
+    Bridge.invoke(BpeKernels, "adjacentPairs", ArrayType(
+      StructType(Seq(StructField("l", StringType), StructField("r", StringType))),
+      containsNull = false), Seq(toks))
 
-  def charGrams(w: Column, maxLen: Int): Column =
-    Bridge.column(CharGramsExpr(Bridge.expression(w), maxLen))
+  /** All 2..maxLen character windows of a string column (length-major);
+    * EMPTY for a null word. */
+  def charGrams(w: Column, maxLen: Int): Column = {
+    require(maxLen >= 2, s"maxLen must be >= 2, got $maxLen")
+    Bridge.invoke(BpeKernels, "charGrams", strings, Seq(w, lit(maxLen)), nullSafe = false)
+  }
 }

@@ -1,11 +1,9 @@
 package graft.functions
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.expressions.{Expression, TernaryExpression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.graftbridge.Bridge
-import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType}
+import org.apache.spark.sql.types.{ArrayType, DoubleType}
 
 /**
  * Native kernels for per-row-parameter gaussian sampling. These replace the
@@ -13,7 +11,8 @@ import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType}
  * a graft hot path: q_rand_gaussian runs the scale step on EVERY event row,
  * and a Scala UDF there forces deserialization out of Tungsten rows plus a
  * boxed Seq[Double] round trip per row. The kernel call stays inside
- * whole-stage codegen like the vector/centroid kernels.
+ * whole-stage codegen like the vector/centroid kernels. Null in any input
+ * gives null, and so does a covariance that is not positive definite.
  *
  * FP semantics are identical to the UDFs they replace (same
  * graft.linalg.Dense.cholesky, same accumulation order), so
@@ -49,55 +48,14 @@ object GaussKernel {
   }
 }
 
-/** out = mean + cholesky(cov) * z, one kernel call per row in codegen. */
-case class GaussianScale(first: Expression, second: Expression, third: Expression)
-    extends TernaryExpression {
-  override def dataType: DataType = ArrayType(DoubleType, containsNull = false)
-  override def nullable: Boolean = true
-  override def prettyName: String = "gaussian_scale"
-
-  override def nullSafeEval(mean: Any, cov: Any, z: Any): Any =
-    GaussKernel.scale(mean.asInstanceOf[ArrayData], cov.asInstanceOf[ArrayData],
-      z.asInstanceOf[ArrayData])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (m, c, z) =>
-      s"""
-         |${ev.value} = graft.functions.GaussKernel.scale($m, $c, $z);
-         |${ev.isNull} = ${ev.value} == null;
-       """.stripMargin)
-
-  override protected def withNewChildrenInternal(
-      f: Expression, s: Expression, t: Expression): GaussianScale =
-    copy(first = f, second = s, third = t)
-}
-
-/** Per-row Cholesky factor of a square row-major SPD matrix values array. */
-case class CholeskyValues(child: Expression) extends UnaryExpression {
-  override def dataType: DataType = ArrayType(DoubleType, containsNull = false)
-  override def nullable: Boolean = true
-  override def prettyName: String = "cholesky_values"
-
-  override def nullSafeEval(values: Any): Any =
-    GaussKernel.chol(values.asInstanceOf[ArrayData])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, v =>
-      s"""
-         |${ev.value} = graft.functions.GaussKernel.chol($v);
-         |${ev.isNull} = ${ev.value} == null;
-       """.stripMargin)
-
-  override protected def withNewChildInternal(newChild: Expression): CholeskyValues =
-    copy(child = newChild)
-}
-
 object GaussianExpressions {
+  private val doubles = ArrayType(DoubleType, containsNull = false)
+
   /** mean + cholesky(cov) * normal — per-row distribution parameters. */
   def gaussianScale(mean: Column, covValues: Column, normal: Column): Column =
-    Bridge.column(GaussianScale(
-      Bridge.expression(mean), Bridge.expression(covValues), Bridge.expression(normal)))
+    Bridge.invoke(GaussKernel, "scale", doubles, Seq(mean, covValues, normal), nullableResult = true)
 
+  /** Per-row Cholesky factor of a square row-major SPD matrix values array. */
   def choleskyValues(values: Column): Column =
-    Bridge.column(CholeskyValues(Bridge.expression(values)))
+    Bridge.invoke(GaussKernel, "chol", doubles, Seq(values), nullableResult = true)
 }

@@ -1,14 +1,21 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSessionExtensions
+import org.apache.spark.sql.{Column, SparkSessionExtensions}
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo, Literal}
+import org.apache.spark.sql.graftbridge.Bridge
+
+import graft.text.TextFunctions
 
 /**
- * SparkSessionExtensions registering graft's native expressions in the
+ * SparkSessionExtensions registering graft's native functions in the
  * function registry, so the SQL surface can use them directly:
  *
  *   spark.sql("SELECT shingle_hash_set(text, 3) FROM docs")
+ *
+ * Each SQL name calls the Column builder of the same function, so SQL and
+ * the Column API build the same plan. To add one, add its usage line and
+ * builder to `functions`.
  *
  * Enable with:
  *   SparkSession.builder()
@@ -17,92 +24,41 @@ import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo, Li
  */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
 
-  private def intArg(e: Expression, fn: String): Int = e match {
-    case Literal(v: Int, _) => v
-    case other => throw new IllegalArgumentException(
-      s"$fn expects a literal integer argument, got $other")
+  /** The arguments of one SQL call: columns, or literal integers. */
+  private class Args(fn: String, args: Seq[Expression]) {
+    def col(i: Int): Column = Bridge.column(args(i))
+    def int(i: Int): Int = args(i) match {
+      case Literal(v: Int, _) => v
+      case other => throw new IllegalArgumentException(
+        s"$fn expects a literal integer argument, got $other")
+    }
   }
 
-  override def apply(ext: SparkSessionExtensions): Unit = {
-    ext.injectFunction((
-      new FunctionIdentifier("shingle_hash_set"),
-      new ExpressionInfo(classOf[ShingleHashSetExpr].getName, "shingle_hash_set"),
-      (args: Seq[Expression]) => {
-        require(args.size == 2, "shingle_hash_set(text, n)")
-        ShingleHashSetExpr(args.head, intArg(args(1), "shingle_hash_set"))
-      }))
+  /** Usage (the SQL name, then one name per argument) and builder. */
+  private val functions: Seq[(String, Args => Column)] = Seq(
+    "shingle_hash_set(text, n)" -> (a => HashExpressions.shingleHashSet(a.col(0), a.int(1))),
+    "token_hash_array(text, bits)" -> (a => HashExpressions.tokenHashes(a.col(0), a.int(1))),
+    "minhash_signature(sset, numHashes)" -> (a => HashExpressions.minhashSignature(a.col(0), a.int(1))),
+    "simhash_fingerprint(toks, bits)" -> (a => HashExpressions.simhashFingerprint(a.col(0), a.int(1))),
+    "word_ngrams(text, n)" -> (a => HashExpressions.wordNGrams(a.col(0), a.int(1))),
+    "ngram_stats(text)" -> (a => HashExpressions.ngramStats(a.col(0))),
+    "rolling_hash(hashes)" -> (a => HashExpressions.rollingHash(a.col(0))),
+    "winnowed_hashes(text, width, rate)" ->
+      (a => HashExpressions.winnowedHashes(a.col(0), a.int(1), a.int(2))),
+    // builtin RegExpReplace nodes, the fixed redaction contract of
+    // TextFunctions.redactPii
+    "redact_pii(text)" -> (a => TextFunctions.redactPii(a.col(0))))
 
-    ext.injectFunction((
-      new FunctionIdentifier("token_hash_array"),
-      new ExpressionInfo(classOf[TokenHashArrayExpr].getName, "token_hash_array"),
-      (args: Seq[Expression]) => {
-        require(args.size == 2, "token_hash_array(text, bits)")
-        TokenHashArrayExpr(args.head, intArg(args(1), "token_hash_array"))
-      }))
-
-    ext.injectFunction((
-      new FunctionIdentifier("minhash_signature"),
-      new ExpressionInfo(classOf[MinHashSignature].getName, "minhash_signature"),
-      (args: Seq[Expression]) => {
-        require(args.size == 2, "minhash_signature(sset, numHashes)")
-        MinHashSignature(args.head, intArg(args(1), "minhash_signature"))
-      }))
-
-    ext.injectFunction((
-      new FunctionIdentifier("simhash_fingerprint"),
-      new ExpressionInfo(classOf[SimHashFingerprint].getName, "simhash_fingerprint"),
-      (args: Seq[Expression]) => {
-        require(args.size == 2, "simhash_fingerprint(toks, bits)")
-        SimHashFingerprint(args.head, intArg(args(1), "simhash_fingerprint"))
-      }))
-
-    ext.injectFunction((
-      new FunctionIdentifier("word_ngrams"),
-      new ExpressionInfo(classOf[WordNGramsExpr].getName, "word_ngrams"),
-      (args: Seq[Expression]) => {
-        require(args.size == 2, "word_ngrams(text, n)")
-        WordNGramsExpr(args.head, intArg(args(1), "word_ngrams"))
-      }))
-
-    ext.injectFunction((
-      new FunctionIdentifier("ngram_stats"),
-      new ExpressionInfo(classOf[NGramStatsExpr].getName, "ngram_stats"),
-      (args: Seq[Expression]) => {
-        require(args.size == 1, "ngram_stats(text)")
-        NGramStatsExpr(args.head)
-      }))
-
-    ext.injectFunction((
-      new FunctionIdentifier("rolling_hash"),
-      new ExpressionInfo(classOf[RollingHashExpr].getName, "rolling_hash"),
-      (args: Seq[Expression]) => {
-        require(args.size == 1, "rolling_hash(hashes)")
-        RollingHashExpr(args.head)
-      }))
-
-    ext.injectFunction((
-      new FunctionIdentifier("winnowed_hashes"),
-      new ExpressionInfo(classOf[WinnowedHashesExpr].getName, "winnowed_hashes"),
-      (args: Seq[Expression]) => {
-        require(args.size == 3, "winnowed_hashes(text, width, rate)")
-        WinnowedHashesExpr(args.head, intArg(args(1), "winnowed_hashes"),
-          intArg(args(2), "winnowed_hashes"))
-      }))
-
-    // composition of builtin codegen'd RegExpReplace nodes (not a custom
-    // kernel) — registered so SQL users get the same fixed redaction
-    // contract as TextFunctions.redactPii
-    ext.injectFunction((
-      new FunctionIdentifier("redact_pii"),
-      new ExpressionInfo(classOf[org.apache.spark.sql.catalyst.expressions.RegExpReplace].getName,
-        "redact_pii"),
-      (args: Seq[Expression]) => {
-        require(args.size == 1, "redact_pii(text)")
-        import org.apache.spark.sql.catalyst.expressions.RegExpReplace
-        RegExpReplace(
-          RegExpReplace(args.head,
-            Literal(graft.text.TextFunctions.EmailPattern), Literal("<EMAIL>")),
-          Literal(graft.text.TextFunctions.LongDigitRunPattern), Literal("<ID>"))
-      }))
-  }
+  override def apply(ext: SparkSessionExtensions): Unit =
+    for ((usage, build) <- functions) {
+      val name = usage.takeWhile(_ != '(')
+      val arity = usage.count(_ == ',') + 1
+      ext.injectFunction((
+        new FunctionIdentifier(name),
+        new ExpressionInfo(classOf[GraftExtensions].getName, name),
+        (args: Seq[Expression]) => {
+          require(args.size == arity, usage)
+          Bridge.expression(build(new Args(name, args)))
+        }))
+    }
 }

@@ -1,416 +1,82 @@
 package graft.functions
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, CodeGenerator, ExprCode, FalseLiteral}
-import org.apache.spark.sql.catalyst.expressions.codegen.Block._
-import org.apache.spark.sql.catalyst.util.ArrayData
-import org.apache.spark.sql.catalyst.expressions.UnsafeArrayData
+import org.apache.spark.sql.catalyst.expressions.Literal
+import org.apache.spark.sql.functions.lit
 import org.apache.spark.sql.graftbridge.Bridge
-import org.apache.spark.sql.types.{ArrayType, DataType, IntegerType, LongType}
-import org.apache.spark.unsafe.types.UTF8String
-
-import graft.text.TextFunctions.P
+import org.apache.spark.sql.types.{ArrayType, IntegerType, LongType, StringType, StructField, StructType}
 
 /**
- * Native codegen'd folds for the dedup hot paths. Spark's higher-order
- * functions (aggregate/zip_with/transform) are CodegenFallback — the per-
- * element lambdas run interpreted with a fresh accumulator array per step.
- * At 100 TB the signature fold runs per shingle per document, so these two
- * expressions generate tight primitive loops instead (no allocation inside
- * the loop, stays inside whole-stage codegen).
+ * Native folds for the dedup hot paths. Spark's higher-order functions
+ * (aggregate/zip_with/transform) are CodegenFallback — the per-element
+ * lambdas run interpreted with a fresh accumulator array per step. At
+ * 100 TB the signature fold runs per shingle per document, so each column
+ * here is one call of a [[HashKernels]] method: a tight primitive loop
+ * inside whole-stage codegen, the same method when codegen is off.
  *
  * Semantics are bit-identical to the HOF formulations they replace
- * (local_verify's exact oracles prove it): the DuckDB replay SQL in the
- * oracles is unchanged.
+ * (HashExpressionsSpec, and local_verify's exact oracles): the DuckDB
+ * replay SQL in the oracles is unchanged. Null text gives null unless a
+ * builder says otherwise.
  */
-
-/** k min-hashes of a shingle-hash set in one pass: sig_j = min over x of
-  * (A_j * x + B_j) mod P, sentinel P for empty sets. Coefficients derive
-  * deterministically from j (MinHashLSH.coefA/coefB), so equal expressions
-  * canonicalize equal. */
-case class MinHashSignature(child: Expression, numHashes: Int)
-    extends UnaryExpression {
-
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-  override def prettyName: String = "minhash_signature"
-
-  @transient private lazy val as: Array[Long] = Array.tabulate(numHashes)(graft.dedup.MinHashLSH.coefA)
-  @transient private lazy val bs: Array[Long] = Array.tabulate(numHashes)(graft.dedup.MinHashLSH.coefB)
-
-  override def nullSafeEval(input: Any): Any = {
-    val arr = input.asInstanceOf[ArrayData]
-    val sig = Array.fill(numHashes)(P)
-    var i = 0
-    val n = arr.numElements()
-    while (i < n) {
-      val x = arr.getLong(i)
-      var j = 0
-      while (j < numHashes) {
-        val v = (as(j) * x + bs(j)) % P
-        if (v < sig(j)) sig(j) = v
-        j += 1
-      }
-      i += 1
-    }
-    UnsafeArrayData.fromPrimitiveArray(sig)
-  }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val aRef = ctx.addReferenceObj("minhashA", as, "long[]")
-    val bRef = ctx.addReferenceObj("minhashB", bs, "long[]")
-    val (numEl, sig, i, j, x, v) = (ctx.freshName("numEl"), ctx.freshName("sig"),
-      ctx.freshName("i"), ctx.freshName("j"), ctx.freshName("x"), ctx.freshName("v"))
-    nullSafeCodeGen(ctx, ev, c => {
-      s"""
-         |int $numEl = $c.numElements();
-         |long[] $sig = new long[$numHashes];
-         |java.util.Arrays.fill($sig, ${P}L);
-         |for (int $i = 0; $i < $numEl; $i++) {
-         |  long $x = $c.getLong($i);
-         |  for (int $j = 0; $j < $numHashes; $j++) {
-         |    long $v = ($aRef[$j] * $x + $bRef[$j]) % ${P}L;
-         |    if ($v < $sig[$j]) $sig[$j] = $v;
-         |  }
-         |}
-         |${ev.value} = org.apache.spark.sql.catalyst.expressions.UnsafeArrayData.fromPrimitiveArray($sig);
-       """.stripMargin
-    })
-  }
-
-  override protected def withNewChildInternal(newChild: Expression): MinHashSignature =
-    copy(child = newChild)
-}
-
-/** 60-bit simhash of a token-hash array in one pass: bit j of the result is
-  * set when the count of tokens with bit j set exceeds half (signed-sum
-  * formulation folded into one counter array). */
-case class SimHashFingerprint(child: Expression, bits: Int)
-    extends UnaryExpression {
-
-  override def dataType: DataType = LongType
-  override def prettyName: String = "simhash_fingerprint"
-
-  override def nullSafeEval(input: Any): Any = {
-    val arr = input.asInstanceOf[ArrayData]
-    val counts = new Array[Long](bits)
-    var i = 0
-    val n = arr.numElements()
-    while (i < n) {
-      val h = arr.getLong(i)
-      var j = 0
-      while (j < bits) {
-        counts(j) += (if ((h & (1L << j)) != 0L) 1L else -1L)
-        j += 1
-      }
-      i += 1
-    }
-    var out = 0L
-    var j = 0
-    while (j < bits) {
-      if (counts(j) > 0L) out |= (1L << j)
-      j += 1
-    }
-    out
-  }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val (numEl, counts, i, j, j2, h, res) = (ctx.freshName("numEl"), ctx.freshName("counts"),
-      ctx.freshName("i"), ctx.freshName("j"), ctx.freshName("j2"), ctx.freshName("h"), ctx.freshName("res"))
-    nullSafeCodeGen(ctx, ev, c => {
-      s"""
-         |int $numEl = $c.numElements();
-         |long[] $counts = new long[$bits];
-         |for (int $i = 0; $i < $numEl; $i++) {
-         |  long $h = $c.getLong($i);
-         |  for (int $j = 0; $j < $bits; $j++) {
-         |    $counts[$j] += (($h & (1L << $j)) != 0L) ? 1L : -1L;
-         |  }
-         |}
-         |long $res = 0L;
-         |for (int $j2 = 0; $j2 < $bits; $j2++) {
-         |  if ($counts[$j2] > 0L) $res |= (1L << $j2);
-         |}
-         |${ev.value} = $res;
-       """.stripMargin
-    })
-  }
-
-  override protected def withNewChildInternal(newChild: Expression): SimHashFingerprint =
-    copy(child = newChild)
-}
-
-/** Distinct word-n-gram shingle hashes of a text column, computed by a JVM
-  * kernel (HashKernels.shingleHashSet) inside whole-stage codegen. Returns an
-  * EMPTY array (never null) for null text or docs shorter than n tokens,
-  * matching TextFunctions.shingleHashSet exactly. */
-/** All word n-grams of a text column as strings (in order, with duplicates)
-  * in one kernel pass — the heavy-hitter / n-gram LM input. The declarative
-  * transform(sequence(...), concat_ws(slice(...))) formulation runs its
-  * lambdas interpreted per gram; this stays in whole-stage codegen. */
-case class WordNGramsExpr(child: Expression, n: Int) extends UnaryExpression {
-
-  override def dataType: DataType = ArrayType(org.apache.spark.sql.types.StringType, containsNull = false)
-  override def nullable: Boolean = false
-  override def prettyName: String = "word_ngrams"
-
-  override def eval(input: InternalRow): Any = {
-    val v = child.eval(input)
-    HashKernels.INSTANCE.wordNGrams(v.asInstanceOf[UTF8String], n)
-  }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val kernels = ctx.addReferenceObj("hashKernels", HashKernels.INSTANCE, "graft.functions.HashKernels")
-    val childGen = child.genCode(ctx)
-    val javaType = CodeGenerator.javaType(dataType)
-    ev.copy(
-      code = code"""
-        ${childGen.code}
-        $javaType ${ev.value} = $kernels.wordNGrams(
-          ${childGen.isNull} ? null : ${childGen.value}, $n);
-      """,
-      isNull = FalseLiteral)
-  }
-
-  override protected def withNewChildInternal(newChild: Expression): WordNGramsExpr =
-    copy(child = newChild)
-}
-
-case class ShingleHashSetExpr(child: Expression, n: Int) extends UnaryExpression {
-
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-  override def nullable: Boolean = false
-  override def prettyName: String = "shingle_hash_set"
-
-  override def eval(input: InternalRow): Any = {
-    val v = child.eval(input)
-    HashKernels.INSTANCE.shingleHashSet(v.asInstanceOf[UTF8String], n)
-  }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val kernels = ctx.addReferenceObj("hashKernels", HashKernels.INSTANCE, "graft.functions.HashKernels")
-    val childGen = child.genCode(ctx)
-    val javaType = CodeGenerator.javaType(dataType)
-    ev.copy(
-      code = code"""
-        ${childGen.code}
-        $javaType ${ev.value} = $kernels.shingleHashSet(
-          ${childGen.isNull} ? null : ${childGen.value}, $n);
-      """,
-      isNull = FalseLiteral)
-  }
-
-  override protected def withNewChildInternal(newChild: Expression): ShingleHashSetExpr =
-    copy(child = newChild)
-}
-
-/** Per-token md5-derived hashes (31-bit mod-P or top-60-bit) of a text
-  * column via the JVM kernel; null text stays null, matching
-  * `transform(tokens(text), hash)`. */
-case class TokenHashArrayExpr(child: Expression, bits: Int) extends UnaryExpression {
-  require(bits == 31 || bits == 60, "bits must be 31 or 60")
-
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-  override def prettyName: String = "token_hash_array"
-
-  override def nullSafeEval(input: Any): Any =
-    HashKernels.INSTANCE.tokenHashes(input.asInstanceOf[UTF8String], bits)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val kernels = ctx.addReferenceObj("hashKernels", HashKernels.INSTANCE, "graft.functions.HashKernels")
-    nullSafeCodeGen(ctx, ev, c => s"${ev.value} = $kernels.tokenHashes($c, $bits);")
-  }
-
-  override protected def withNewChildInternal(newChild: Expression): TokenHashArrayExpr =
-    copy(child = newChild)
-}
-
-/** {ntoks, lensum, hits[]} token statistics of a text column in one kernel
-  * pass; `lists` are the stopword lists counted into `hits` (by position).
-  * Null text stays null (each declarative formula's null behavior is then
-  * identical, since every downstream comparison also nulls out). */
-case class TokenStatsExpr(child: Expression, lists: Seq[Seq[String]]) extends UnaryExpression {
-  import org.apache.spark.sql.types.{StructField, StructType}
-
-  override def dataType: DataType = StructType(Seq(
-    StructField("ntoks", LongType, nullable = false),
-    StructField("lensum", LongType, nullable = false),
-    StructField("hits", ArrayType(LongType, containsNull = false), nullable = false)))
-  override def prettyName: String = "token_stats"
-
-  @transient private lazy val kernel = new TokenStatsKernel(lists)
-
-  override def nullSafeEval(input: Any): Any =
-    kernel.stats(input.asInstanceOf[UTF8String])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val ref = ctx.addReferenceObj("tokenStatsKernel", kernel, "graft.functions.TokenStatsKernel")
-    nullSafeCodeGen(ctx, ev, c => s"${ev.value} = $ref.stats($c);")
-  }
-
-  override protected def withNewChildInternal(newChild: Expression): TokenStatsExpr =
-    copy(child = newChild)
-}
-
-/** Polynomial rolling hash over an array<long>: fold (acc * 31 + h) mod P
-  * from 0 — the document fingerprint fold, natively. */
-case class RollingHashExpr(child: Expression) extends UnaryExpression {
-  override def dataType: DataType = LongType
-  override def prettyName: String = "rolling_hash"
-
-  override def nullSafeEval(input: Any): Any = {
-    val arr = input.asInstanceOf[ArrayData]
-    var acc = 0L
-    var i = 0
-    val n = arr.numElements()
-    while (i < n) { acc = (acc * 31L + arr.getLong(i)) % P; i += 1 }
-    acc
-  }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val (n, i, acc) = (ctx.freshName("n"), ctx.freshName("i"), ctx.freshName("acc"))
-    nullSafeCodeGen(ctx, ev, c => {
-      s"""
-         |int $n = $c.numElements();
-         |long $acc = 0L;
-         |for (int $i = 0; $i < $n; $i++) {
-         |  $acc = ($acc * 31L + $c.getLong($i)) % ${P}L;
-         |}
-         |${ev.value} = $acc;
-       """.stripMargin
-    })
-  }
-
-  override protected def withNewChildInternal(newChild: Expression): RollingHashExpr =
-    copy(child = newChild)
-}
-
-/** Winnowed window hashes of a text column: rolling-hash every
-  * width-codepoint window, keep iff the hash selects itself (h % rate == 0).
-  * The repeated-substring detection hot path — one kernel call per document,
-  * only ~len/rate longs ever leave the expression. */
-case class WinnowedHashesExpr(child: Expression, width: Int, rate: Int)
-    extends UnaryExpression {
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-  override def nullable: Boolean = false
-  override def prettyName: String = "winnowed_hashes"
-
-  override def eval(input: InternalRow): Any = {
-    val v = child.eval(input)
-    HashKernels.INSTANCE.winnowedHashes(v.asInstanceOf[UTF8String], width, rate)
-  }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val kernels = ctx.addReferenceObj("hashKernels", HashKernels.INSTANCE, "graft.functions.HashKernels")
-    val childGen = child.genCode(ctx)
-    val javaType = CodeGenerator.javaType(dataType)
-    ev.copy(
-      code = code"""
-        ${childGen.code}
-        $javaType ${ev.value} = $kernels.winnowedHashes(
-          ${childGen.isNull} ? null : ${childGen.value}, $width, $rate);
-      """,
-      isNull = FalseLiteral)
-  }
-
-  override protected def withNewChildInternal(newChild: Expression): WinnowedHashesExpr =
-    copy(child = newChild)
-}
-
-/** Bloom-probe hit count over an array<long> gram column: how many grams
-  * have all k probe bits set in the (driver-built, codegen-referenced)
-  * bitset. Bit-identical to `filter(grams, bloomMightContain)` + size —
-  * which runs interpreted (HOF lambda) with a fresh 3×md5 expression walk
-  * per gram. */
-case class BloomHitsExpr(child: Expression, words: Array[Long], k: Int, m: Int)
-    extends UnaryExpression {
-  override def dataType: DataType = IntegerType
-  override def prettyName: String = "bloom_hits"
-
-  override def nullSafeEval(input: Any): Any =
-    HashKernels.INSTANCE.bloomHits(input.asInstanceOf[ArrayData], words, k, m)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val kernels = ctx.addReferenceObj("hashKernels", HashKernels.INSTANCE, "graft.functions.HashKernels")
-    val wordsRef = ctx.addReferenceObj("bloomWords", words, "long[]")
-    nullSafeCodeGen(ctx, ev, c =>
-      s"${ev.value} = $kernels.bloomHits($c, $wordsRef, $k, $m);")
-  }
-
-  override protected def withNewChildInternal(newChild: Expression): BloomHitsExpr =
-    copy(child = newChild)
-}
-
-/** {n1,d1,n2,d2,n3,d3}: total and distinct word-n-gram counts for
-  * n = 1, 2, 3 in ONE kernel pass (the declarative sequence+transform
-  * formulation runs interpreted and re-evaluates the gram array once per
-  * derived metric — 5 O(tokens) allocation storms per row). */
-case class NGramStatsExpr(child: Expression) extends UnaryExpression {
-  import org.apache.spark.sql.types.{LongType, StructField, StructType}
-
-  override def dataType: DataType = StructType(Seq(
-    StructField("n1", LongType, nullable = false),
-    StructField("d1", LongType, nullable = false),
-    StructField("n2", LongType, nullable = false),
-    StructField("d2", LongType, nullable = false),
-    StructField("n3", LongType, nullable = false),
-    StructField("d3", LongType, nullable = false)))
-  override def prettyName: String = "ngram_stats"
-
-  @transient private lazy val kernel = new HashKernels
-
-  override def nullSafeEval(input: Any): Any =
-    kernel.ngramStats(input.asInstanceOf[UTF8String])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val ref = ctx.addReferenceObj("ngramStatsKernel", kernel, "graft.functions.HashKernels")
-    nullSafeCodeGen(ctx, ev, c => s"${ev.value} = $ref.ngramStats($c);")
-  }
-
-  override protected def withNewChildInternal(newChild: Expression): NGramStatsExpr =
-    copy(child = newChild)
-}
-
 object HashExpressions {
-  /** Column wrapper: distinct word-n-gram shingle-hash set of a text column. */
+  private val kernels = HashKernels.INSTANCE
+  private val longs = ArrayType(LongType, containsNull = false)
+
+  /** Distinct word-n-gram shingle hashes of a text column; EMPTY (never
+    * null) for null text or docs shorter than n tokens, matching
+    * TextFunctions.shingleHashSet exactly. */
   def shingleHashSet(text: Column, n: Int): Column =
-    Bridge.column(ShingleHashSetExpr(Bridge.expression(text), n))
+    Bridge.invoke(kernels, "shingleHashSet", longs, Seq(text, lit(n)), nullSafe = false)
 
-  /** Column wrapper: all word n-grams (in order, with duplicates). */
+  /** All word n-grams as strings (in order, with duplicates) in one pass —
+    * the heavy-hitter / n-gram LM input; EMPTY for null text. */
   def wordNGrams(text: Column, n: Int): Column =
-    Bridge.column(WordNGramsExpr(Bridge.expression(text), n))
+    Bridge.invoke(kernels, "wordNGrams", ArrayType(StringType, containsNull = false),
+      Seq(text, lit(n)), nullSafe = false)
 
-  /** Column wrapper: one-pass duplicate-n-gram stats {n1,d1,n2,d2,n3,d3}. */
+  /** {n1,d1,n2,d2,n3,d3}: total and distinct word-n-gram counts for
+    * n = 1, 2, 3 in ONE pass (the declarative sequence+transform form
+    * re-evaluates the gram array once per derived metric). */
   def ngramStats(text: Column): Column =
-    Bridge.column(NGramStatsExpr(Bridge.expression(text)))
+    Bridge.invoke(kernels, "ngramStats",
+      StructType(Seq("n1", "d1", "n2", "d2", "n3", "d3").map(StructField(_, LongType, nullable = false))),
+      Seq(text))
 
-  /** Column wrapper: {ntoks, lensum, hits[]} token statistics. */
+  /** {ntoks, lensum, hits[]} token statistics in one pass; `lists` are the
+    * stopword lists counted into `hits` (by position). */
   def tokenStats(text: Column, lists: Seq[Seq[String]]): Column =
-    Bridge.column(TokenStatsExpr(Bridge.expression(text), lists))
+    Bridge.invoke(TokenStatsKernel(lists), "stats", StructType(Seq(
+      StructField("ntoks", LongType, nullable = false),
+      StructField("lensum", LongType, nullable = false),
+      StructField("hits", longs, nullable = false))), Seq(text))
 
-  /** Column wrapper: polynomial rolling hash of an array<long> column. */
+  /** Polynomial rolling hash of an array<long> column. */
   def rollingHash(hashes: Column): Column =
-    Bridge.column(RollingHashExpr(Bridge.expression(hashes)))
+    Bridge.invoke(HashKernels, "rollingHash", LongType, Seq(hashes))
 
-  /** Column wrapper: winnowed (content-selected) window hashes of a text
-    * column — the repeated-substring detection projection. */
+  /** Winnowed (content-selected) window hashes of a text column — the
+    * repeated-substring detection projection; EMPTY for null text. */
   def winnowedHashes(text: Column, width: Int, rate: Int): Column =
-    Bridge.column(WinnowedHashesExpr(Bridge.expression(text), width, rate))
+    Bridge.invoke(kernels, "winnowedHashes", longs, Seq(text, lit(width), lit(rate)), nullSafe = false)
 
-  /** Column wrapper: per-token hash array (bits = 31 or 60) of a text column. */
-  def tokenHashes(text: Column, bits: Int): Column =
-    Bridge.column(TokenHashArrayExpr(Bridge.expression(text), bits))
+  /** Per-token hash array (bits = 31 or 60) of a text column. */
+  def tokenHashes(text: Column, bits: Int): Column = {
+    require(bits == 31 || bits == 60, "bits must be 31 or 60")
+    Bridge.invoke(kernels, "tokenHashes", longs, Seq(text, lit(bits)))
+  }
 
-  /** Column wrapper: k-minhash signature of an array<long> shingle-hash set. */
+  /** k-minhash signature of an array<long> shingle-hash set. */
   def minhashSignature(sset: Column, numHashes: Int): Column =
-    Bridge.column(MinHashSignature(Bridge.expression(sset), numHashes))
+    Bridge.invoke(MinHashKernel(numHashes), "signature", longs, Seq(sset))
 
-  /** Column wrapper: simhash fingerprint of an array<long> token-hash column. */
+  /** Simhash fingerprint of an array<long> token-hash column. */
   def simhashFingerprint(toks: Column, bits: Int): Column =
-    Bridge.column(SimHashFingerprint(Bridge.expression(toks), bits))
+    Bridge.invoke(HashKernels, "simhash", LongType, Seq(toks, lit(bits)))
 
-  /** Column wrapper: count of grams whose k Bloom probes are all set. */
+  /** Count of grams whose k Bloom probes are all set in `words` (which
+    * rides the plan as one object, not as literal sub-expressions). */
   def bloomHits(grams: Column, words: Array[Long], k: Int, m: Int): Column =
-    Bridge.column(BloomHitsExpr(Bridge.expression(grams), words, k, m))
+    Bridge.invoke(kernels, "bloomHits", IntegerType,
+      Seq(grams, Bridge.column(Literal.fromObject(words)), lit(k), lit(m)))
 }

@@ -32,6 +32,11 @@ class HashKernels extends Serializable {
     override def initialValue(): MessageDigest = MessageDigest.getInstance("MD5")
   }
 
+  /** The one shared instance prints as its class, so the plans that call it
+    * (and the names Spark gives their unaliased columns) read the same in
+    * every JVM. */
+  override def toString: String = "HashKernels"
+
   private def tokenize(text: UTF8String): Array[String] =
     text.toLowerCase.toString.split("[^a-z0-9]+").filter(_.nonEmpty)
 
@@ -216,6 +221,40 @@ class HashKernels extends Serializable {
 object HashKernels {
   val INSTANCE = new HashKernels
 
+  /** Simhash of a token-hash array: bit j of the result is set when more
+    * tokens have bit j set than clear (one signed counter per bit). */
+  def simhash(arr: ArrayData, bits: Int): Long = {
+    val counts = new Array[Long](bits)
+    var i = 0
+    val n = arr.numElements()
+    while (i < n) {
+      val h = arr.getLong(i)
+      var j = 0
+      while (j < bits) {
+        counts(j) += (if ((h & (1L << j)) != 0L) 1L else -1L)
+        j += 1
+      }
+      i += 1
+    }
+    var out = 0L
+    var j = 0
+    while (j < bits) {
+      if (counts(j) > 0L) out |= (1L << j)
+      j += 1
+    }
+    out
+  }
+
+  /** Polynomial rolling hash of an array<long>: fold (acc * 31 + h) mod P
+    * from 0, the document fingerprint fold. */
+  def rollingHash(arr: ArrayData): Long = {
+    var acc = 0L
+    var i = 0
+    val n = arr.numElements()
+    while (i < n) { acc = (acc * 31L + arr.getLong(i)) % P; i += 1 }
+    acc
+  }
+
   /** Winnowed-window rolling-hash constants: the first prime above 1e12
     * (keeps cp*M and the replay's 40-term sums inside int64 in ANY engine)
     * and an odd base well above the codepoint alphabet's bit-mixing needs. */
@@ -223,15 +262,44 @@ object HashKernels {
   val WinnowB = 131L
 }
 
+/** k min-hashes of a shingle-hash set in one pass: sig_j = min over x of
+  * (A_j * x + B_j) mod P, sentinel P for an empty set. The coefficients
+  * derive from j (MinHashLSH.coefA/coefB), so kernels of equal size are
+  * equal and so are the plans that call them. */
+case class MinHashKernel(numHashes: Int) {
+  @transient private lazy val as = Array.tabulate(numHashes)(graft.dedup.MinHashLSH.coefA)
+  @transient private lazy val bs = Array.tabulate(numHashes)(graft.dedup.MinHashLSH.coefB)
+
+  def signature(arr: ArrayData): ArrayData = {
+    val a = as
+    val b = bs
+    val k = numHashes
+    val sig = new Array[Long](k)
+    java.util.Arrays.fill(sig, P)
+    var i = 0
+    val n = arr.numElements()
+    while (i < n) {
+      val x = arr.getLong(i)
+      var j = 0
+      while (j < k) {
+        val v = (a(j) * x + b(j)) % P
+        if (v < sig(j)) sig(j) = v
+        j += 1
+      }
+      i += 1
+    }
+    UnsafeArrayData.fromPrimitiveArray(sig)
+  }
+}
+
 /** Per-document token statistics in ONE tokenize pass: token count, sum of
   * token lengths, and per-stopword-list hit counts. Powers stopwordRatio /
   * meanTokenLen / qualityScore / langId without interpreted per-token
-  * lambdas. Tokenization is identical to HashKernels (lower + regex split). */
-class TokenStatsKernel(listsSeq: Seq[Seq[String]]) extends Serializable {
-  private val lists: Array[Array[String]] = listsSeq.map(_.toArray).toArray
-
+  * lambdas. Tokenization is identical to HashKernels (lower + regex split).
+  * Equal lists give equal kernels. */
+case class TokenStatsKernel(lists: Seq[Seq[String]]) {
   @transient private lazy val sets: Array[java.util.HashSet[String]] =
-    lists.map { l =>
+    lists.toArray.map { l =>
       val s = new java.util.HashSet[String](l.length * 2)
       l.foreach(s.add)
       s
@@ -240,8 +308,9 @@ class TokenStatsKernel(listsSeq: Seq[Seq[String]]) extends Serializable {
   /** Returns {ntoks, lensum, hits[]} as an InternalRow. */
   def stats(text: UTF8String): org.apache.spark.sql.catalyst.InternalRow = {
     val toks = text.toLowerCase.toString.split("[^a-z0-9]+").filter(_.nonEmpty)
+    val sets = this.sets
     var lensum = 0L
-    val hits = new Array[Long](lists.length)
+    val hits = new Array[Long](sets.length)
     var i = 0
     while (i < toks.length) {
       val t = toks(i)

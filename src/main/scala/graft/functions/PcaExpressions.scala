@@ -1,12 +1,10 @@
 package graft.functions
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.catalyst.expressions.{Literal, UnsafeArrayData}
 import org.apache.spark.sql.catalyst.util.ArrayData
-import org.apache.spark.sql.catalyst.expressions.UnsafeArrayData
 import org.apache.spark.sql.graftbridge.Bridge
-import org.apache.spark.sql.types.{ArrayType, DataType, LongType}
+import org.apache.spark.sql.types.{ArrayType, LongType}
 
 /**
  * Native kernels for the PCA covariance scan (optimization round 13). The
@@ -15,7 +13,7 @@ import org.apache.spark.sql.types.{ArrayType, DataType, LongType}
  * allocating index sequences and running every product through an
  * interpreted lambda; at dim 64 that is 2 080 lambda evaluations per row.
  * These kernels are one primitive pass inside whole-stage codegen with
- * identical integer semantics (PcaSpec pins kernel ≡ HOF; the unchanged
+ * identical integer semantics (NativeFunctionsSpec pins kernel ≡ HOF; the unchanged
  * DuckDB oracles prove it end-to-end).
  */
 object PcaKernels extends Serializable {
@@ -58,44 +56,12 @@ object PcaKernels extends Serializable {
   }
 }
 
-/** Flat covariance stats of a quantized vector in one pass. */
-case class PcaMomentStatsExpr(child: Expression) extends UnaryExpression {
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-  override def prettyName: String = "pca_moment_stats"
-
-  override def nullSafeEval(input: Any): Any =
-    PcaKernels.momentStats(input.asInstanceOf[ArrayData])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c =>
-      s"${ev.value} = graft.functions.PcaKernels.momentStats($c);")
-
-  override protected def withNewChildInternal(newChild: Expression): PcaMomentStatsExpr =
-    copy(child = newChild)
-}
-
-/** Integer dot against a fixed (reference-object) component vector. */
-case class DotWithExpr(child: Expression, comp: Array[Long]) extends UnaryExpression {
-  override def dataType: DataType = LongType
-  override def prettyName: String = "dot_with"
-
-  override def nullSafeEval(input: Any): Any =
-    PcaKernels.dotWith(input.asInstanceOf[ArrayData], comp)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val cRef = ctx.addReferenceObj("dotComp", comp, "long[]")
-    nullSafeCodeGen(ctx, ev, c =>
-      s"${ev.value} = graft.functions.PcaKernels.dotWith($c, $cRef);")
-  }
-
-  override protected def withNewChildInternal(newChild: Expression): DotWithExpr =
-    copy(child = newChild)
-}
-
 object PcaExpressions {
+  /** Flat covariance stats of a quantized vector in one pass. */
   def momentStats(q: Column): Column =
-    Bridge.column(PcaMomentStatsExpr(Bridge.expression(q)))
+    Bridge.invoke(PcaKernels, "momentStats", ArrayType(LongType, containsNull = false), Seq(q))
 
+  /** Integer dot against a fixed component vector (one plan object). */
   def dotWith(q: Column, comp: Array[Long]): Column =
-    Bridge.column(DotWithExpr(Bridge.expression(q), comp))
+    Bridge.invoke(PcaKernels, "dotWith", LongType, Seq(q, Bridge.column(Literal.fromObject(comp))))
 }

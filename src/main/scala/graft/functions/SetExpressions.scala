@@ -1,8 +1,10 @@
 package graft.functions
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
+import org.apache.spark.sql.catalyst.expressions.{Expression, RuntimeReplaceable}
+import org.apache.spark.sql.catalyst.expressions.objects.StaticInvoke
+import org.apache.spark.sql.catalyst.trees.BinaryLike
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.graftbridge.Bridge
 import org.apache.spark.sql.types.{ArrayType, DataType, LongType, StringType}
@@ -21,7 +23,7 @@ import org.apache.spark.sql.types.{ArrayType, DataType, LongType, StringType}
  * elements and no nulls — exactly what the verify projections feed after
  * their sort_array(array_distinct(...)) / sort_array(sset) canonicalization.
  * On such inputs the count is bit-identical to size(array_intersect(a, b));
- * R13KernelPinSpec pins it.
+ * NativeFunctionsSpec pins it.
  */
 object SetKernels extends Serializable {
 
@@ -55,51 +57,41 @@ object SetKernels extends Serializable {
   }
 }
 
-/** |a ∩ b| of two sorted deduplicated arrays (array<long> or array<string>). */
-case class IntersectCountSortedExpr(left: Expression, right: Expression)
-    extends BinaryExpression {
+/** |a ∩ b| of two sorted deduplicated arrays (array<long> or array<string>):
+  * the optimizer replaces it by the call of the SetKernels method for the
+  * resolved element type. Other element types fail at ANALYSIS time, before
+  * any job starts, not mid-job at execution. The sorted+deduplicated
+  * input contract stays at the call sites, which canonicalize with
+  * sort_array(array_distinct(...)). */
+case class IntersectCountSorted(left: Expression, right: Expression)
+    extends RuntimeReplaceable with BinaryLike[Expression] {
 
   override def dataType: DataType = LongType
+  override def nullable: Boolean = left.nullable || right.nullable
   override def prettyName: String = "intersect_count_sorted"
 
-  /** Reject unsupported element types at ANALYSIS time (round-13 advice:
-    * the lazy-val check surfaced mid-job as IllegalArgumentException). The
-    * sorted+deduplicated input contract stays at the call sites, which
-    * canonicalize with sort_array(array_distinct(...)). */
-  override def checkInputDataTypes(): org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
-    (left.dataType, right.dataType) match {
-      case (ArrayType(LongType, _), ArrayType(LongType, _)) |
-           (ArrayType(StringType, _), ArrayType(StringType, _)) =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-      case (l, r) =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-          s"$prettyName requires two array<long> or two array<string> arguments, " +
-            s"got ${l.simpleString(100)} and ${r.simpleString(100)}")
+  override def checkInputDataTypes(): TypeCheckResult = (left.dataType, right.dataType) match {
+    case (ArrayType(LongType, _), ArrayType(LongType, _)) |
+         (ArrayType(StringType, _), ArrayType(StringType, _)) => TypeCheckResult.TypeCheckSuccess
+    case (l, r) => TypeCheckResult.TypeCheckFailure(
+      s"$prettyName requires two array<long> or two array<string> arguments, " +
+        s"got ${l.simpleString} and ${r.simpleString}")
+  }
+
+  override lazy val replacement: Expression = {
+    val method = left.dataType match {
+      case ArrayType(LongType, _) => "intersectCountLong"
+      case _ => "intersectCountString"
     }
-
-  private lazy val isLong: Boolean = left.dataType match {
-    case ArrayType(LongType, _) => true
-    case ArrayType(StringType, _) => false
-    case t => throw new IllegalArgumentException(
-      s"intersect_count_sorted supports array<long>/array<string>, got $t")
+    StaticInvoke(SetKernels.getClass, LongType, method, Seq(left, right), returnNullable = false)
   }
 
-  override def nullSafeEval(a: Any, b: Any): Any =
-    if (isLong) SetKernels.intersectCountLong(a.asInstanceOf[ArrayData], b.asInstanceOf[ArrayData])
-    else SetKernels.intersectCountString(a.asInstanceOf[ArrayData], b.asInstanceOf[ArrayData])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val fn = if (isLong) "intersectCountLong" else "intersectCountString"
-    nullSafeCodeGen(ctx, ev, (a, b) =>
-      s"${ev.value} = graft.functions.SetKernels.$fn($a, $b);")
-  }
-
-  override protected def withNewChildrenInternal(l: Expression, r: Expression): IntersectCountSortedExpr =
+  override protected def withNewChildrenInternal(l: Expression, r: Expression): IntersectCountSorted =
     copy(left = l, right = r)
 }
 
 object SetExpressions {
   /** Count of common elements; both columns must be sorted + deduplicated. */
   def intersectCountSorted(a: Column, b: Column): Column =
-    Bridge.column(IntersectCountSortedExpr(Bridge.expression(a), Bridge.expression(b)))
+    Bridge.column(IntersectCountSorted(Bridge.expression(a), Bridge.expression(b)))
 }

@@ -3,11 +3,9 @@ package graft.functions
 import java.text.Normalizer
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.UnsafeArrayData
 import org.apache.spark.sql.graftbridge.Bridge
-import org.apache.spark.sql.types.{ArrayType, DataType, LongType, StringType}
+import org.apache.spark.sql.types.{ArrayType, LongType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
 
 /**
@@ -200,66 +198,20 @@ object UnicodeKernels extends Serializable {
   }
 }
 
-/** NFC normalization of a string column (null in → null out). */
-case class NfcNormalizeExpr(child: Expression) extends UnaryExpression {
-  override def dataType: DataType = StringType
-  override def prettyName: String = "nfc_normalize"
-
-  override def nullSafeEval(input: Any): Any =
-    UnicodeKernels.nfc(input.asInstanceOf[UTF8String])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c =>
-      s"${ev.value} = graft.functions.UnicodeKernels.nfc($c);")
-
-  override protected def withNewChildInternal(newChild: Expression): NfcNormalizeExpr =
-    copy(child = newChild)
-}
-
-/** Per-script codepoint histogram of a string column:
-  * array<long>[UnicodeKernels.NumBuckets] in bucket order (null → null). */
-case class ScriptHistogramExpr(child: Expression) extends UnaryExpression {
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-  override def prettyName: String = "script_histogram"
-
-  override def nullSafeEval(input: Any): Any =
-    UnicodeKernels.scriptHistogram(input.asInstanceOf[UTF8String])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c =>
-      s"${ev.value} = graft.functions.UnicodeKernels.scriptHistogram($c);")
-
-  override protected def withNewChildInternal(newChild: Expression): ScriptHistogramExpr =
-    copy(child = newChild)
-}
-
-/** One-pass Unicode token statistics: array<long>[n_tokens, n_distinct,
-  * cp_len_sum] (null → null). */
-case class UTokenStatsExpr(child: Expression) extends UnaryExpression {
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-  override def prettyName: String = "utoken_stats"
-
-  override def nullSafeEval(input: Any): Any =
-    UnicodeKernels.uTokenStats(input.asInstanceOf[UTF8String])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c =>
-      s"${ev.value} = graft.functions.UnicodeKernels.uTokenStats($c);")
-
-  override protected def withNewChildInternal(newChild: Expression): UTokenStatsExpr =
-    copy(child = newChild)
-}
-
+/** Null text gives null from each builder. */
 object UnicodeExpressions {
+  private val longs = ArrayType(LongType, containsNull = false)
+
   /** Column wrapper: NFC normalization. */
   def nfcNormalize(text: Column): Column =
-    Bridge.column(NfcNormalizeExpr(Bridge.expression(text)))
+    Bridge.invoke(UnicodeKernels, "nfc", StringType, Seq(text))
 
-  /** Column wrapper: per-script codepoint histogram. */
+  /** Column wrapper: per-script codepoint histogram,
+    * array<long>[UnicodeKernels.NumBuckets] in bucket order. */
   def scriptHistogram(text: Column): Column =
-    Bridge.column(ScriptHistogramExpr(Bridge.expression(text)))
+    Bridge.invoke(UnicodeKernels, "scriptHistogram", longs, Seq(text))
 
   /** Column wrapper: one-pass [n_tokens, n_distinct, cp_len_sum]. */
   def uTokenStats(text: Column): Column =
-    Bridge.column(UTokenStatsExpr(Bridge.expression(text)))
+    Bridge.invoke(UnicodeKernels, "uTokenStats", longs, Seq(text))
 }

@@ -1,30 +1,24 @@
 package graft.functions
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.graftbridge.Bridge
-import org.apache.spark.sql.types.{DataType, DoubleType, LongType}
+import org.apache.spark.sql.types.{DoubleType, LongType, StructField, StructType}
 
 /**
- * Native codegen'd vector similarity for embedding columns. The zip_with/
- * aggregate formulations these replace are CodegenFallback (interpreted
- * lambdas, boxed accumulators) — at corpus scale the cosine IS the workload
- * of every ANN/near-dup query, so it must be a tight primitive loop.
+ * Native vector similarity for embedding columns. The zip_with/aggregate
+ * formulations these replace are CodegenFallback (interpreted lambdas, boxed
+ * accumulators) — at corpus scale the cosine IS the workload of every
+ * ANN/near-dup query, so it must be a tight primitive loop.
  *
  * FP semantics are replayed exactly: each accumulator folds left-to-right in
  * element order, matching `aggregate(zip_with(...))` — oracle results are
  * bit-identical (VectorExpressionsSpec + the exact ANN oracles prove it).
  */
+object VectorKernels {
 
-/** Left-fold dot product of two equal-dim array<double> columns. */
-case class DotProduct(left: Expression, right: Expression) extends BinaryExpression {
-  override def dataType: DataType = DoubleType
-  override def prettyName: String = "dot_product"
-
-  override def nullSafeEval(a: Any, b: Any): Any = {
-    val (x, y) = (a.asInstanceOf[ArrayData], b.asInstanceOf[ArrayData])
+  /** Left-fold dot product of two equal-dim vectors. */
+  def dot(x: ArrayData, y: ArrayData): Double = {
     val n = math.min(x.numElements(), y.numElements())
     var acc = 0.0
     var i = 0
@@ -32,31 +26,8 @@ case class DotProduct(left: Expression, right: Expression) extends BinaryExpress
     acc
   }
 
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val (n, i, acc) = (ctx.freshName("n"), ctx.freshName("i"), ctx.freshName("acc"))
-    nullSafeCodeGen(ctx, ev, (a, b) => {
-      s"""
-         |int $n = java.lang.Math.min($a.numElements(), $b.numElements());
-         |double $acc = 0.0;
-         |for (int $i = 0; $i < $n; $i++) {
-         |  $acc += $a.getDouble($i) * $b.getDouble($i);
-         |}
-         |${ev.value} = $acc;
-       """.stripMargin
-    })
-  }
-
-  override protected def withNewChildrenInternal(l: Expression, r: Expression): DotProduct =
-    copy(left = l, right = r)
-}
-
-/** L2 norm of an array<double> column (sqrt of left-fold sum of squares). */
-case class VectorNorm(child: Expression) extends UnaryExpression {
-  override def dataType: DataType = DoubleType
-  override def prettyName: String = "vector_norm"
-
-  override def nullSafeEval(input: Any): Any = {
-    val x = input.asInstanceOf[ArrayData]
+  /** L2 norm (sqrt of the left-fold sum of squares). */
+  def norm(x: ArrayData): Double = {
     var acc = 0.0
     var i = 0
     val n = x.numElements()
@@ -64,34 +35,10 @@ case class VectorNorm(child: Expression) extends UnaryExpression {
     math.sqrt(acc)
   }
 
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val (n, i, acc, v) = (ctx.freshName("n"), ctx.freshName("i"), ctx.freshName("acc"), ctx.freshName("v"))
-    nullSafeCodeGen(ctx, ev, c => {
-      s"""
-         |int $n = $c.numElements();
-         |double $acc = 0.0;
-         |for (int $i = 0; $i < $n; $i++) {
-         |  double $v = $c.getDouble($i);
-         |  $acc += $v * $v;
-         |}
-         |${ev.value} = java.lang.Math.sqrt($acc);
-       """.stripMargin
-    })
-  }
-
-  override protected def withNewChildInternal(newChild: Expression): VectorNorm =
-    copy(child = newChild)
-}
-
-/** Cosine similarity with the zero-norm guard, one pass over both arrays:
-  * dot, |a|² and |b|² fold in the same element order as the separate
-  * dot/norm/norm expressions, so results are bit-identical. */
-case class CosineSim(left: Expression, right: Expression) extends BinaryExpression {
-  override def dataType: DataType = DoubleType
-  override def prettyName: String = "cosine_sim"
-
-  override def nullSafeEval(a: Any, b: Any): Any = {
-    val (x, y) = (a.asInstanceOf[ArrayData], b.asInstanceOf[ArrayData])
+  /** Cosine similarity with the zero-norm guard, one pass over both arrays:
+    * dot, |a|² and |b|² fold in the same element order as [[dot]] and
+    * [[norm]], so results are bit-identical. */
+  def cosine(x: ArrayData, y: ArrayData): Double = {
     val n = math.min(x.numElements(), y.numElements())
     var d = 0.0; var na = 0.0; var nb = 0.0
     var i = 0
@@ -103,29 +50,6 @@ case class CosineSim(left: Expression, right: Expression) extends BinaryExpressi
     val (sa, sb) = (math.sqrt(na), math.sqrt(nb))
     if (sa > 0.0 && sb > 0.0) d / (sa * sb) else 0.0
   }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val (n, i, d, na, nb, xv, yv, sa, sb) = (ctx.freshName("n"), ctx.freshName("i"),
-      ctx.freshName("d"), ctx.freshName("na"), ctx.freshName("nb"),
-      ctx.freshName("xv"), ctx.freshName("yv"), ctx.freshName("sa"), ctx.freshName("sb"))
-    nullSafeCodeGen(ctx, ev, (a, b) => {
-      s"""
-         |int $n = java.lang.Math.min($a.numElements(), $b.numElements());
-         |double $d = 0.0; double $na = 0.0; double $nb = 0.0;
-         |for (int $i = 0; $i < $n; $i++) {
-         |  double $xv = $a.getDouble($i);
-         |  double $yv = $b.getDouble($i);
-         |  $d += $xv * $yv; $na += $xv * $xv; $nb += $yv * $yv;
-         |}
-         |double $sa = java.lang.Math.sqrt($na);
-         |double $sb = java.lang.Math.sqrt($nb);
-         |${ev.value} = ($sa > 0.0 && $sb > 0.0) ? $d / ($sa * $sb) : 0.0;
-       """.stripMargin
-    })
-  }
-
-  override protected def withNewChildrenInternal(l: Expression, r: Expression): CosineSim =
-    copy(left = l, right = r)
 }
 
 /** Broadcastable centroid table for nearest-centroid assignment. Norms are
@@ -277,7 +201,8 @@ class HierCentroidKernel(
     // centroid ranks below all probed ones for this vector
     val p = math.min(probes, kc)
     val topIdx = new Array[Int](p)
-    val topSim = Array.fill(p)(Double.NegativeInfinity)
+    val topSim = new Array[Double](p)
+    java.util.Arrays.fill(topSim, Double.NegativeInfinity)
     var c = 0
     while (c < kc) {
       var d = 0.0; var j = 0
@@ -319,88 +244,6 @@ class HierCentroidKernel(
   }
 }
 
-case class NearestCentroidHierExpr(child: Expression, kernel: HierCentroidKernel)
-    extends UnaryExpression {
-  override def dataType: DataType = LongType
-  override def prettyName: String = "nearest_centroid_hier"
-
-  override def nullSafeEval(input: Any): Any =
-    kernel.nearest(input.asInstanceOf[ArrayData])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val ref = ctx.addReferenceObj("hierCentroidKernel", kernel, "graft.functions.HierCentroidKernel")
-    nullSafeCodeGen(ctx, ev, c => s"${ev.value} = $ref.nearest($c);")
-  }
-
-  override protected def withNewChildInternal(newChild: Expression): NearestCentroidHierExpr =
-    copy(child = newChild)
-}
-
-/** Nearest-centroid cell id of a vector column against a fixed centroid set
-  * (IVF coarse quantizer assignment). One kernel call per row inside
-  * whole-stage codegen; the centroid matrix rides along as a codegen
-  * reference object, NOT as 40x64 literal sub-expressions. */
-case class NearestCentroidExpr(child: Expression, kernel: CentroidKernel) extends UnaryExpression {
-  override def dataType: DataType = LongType
-  override def prettyName: String = "nearest_centroid"
-
-  override def nullSafeEval(input: Any): Any =
-    kernel.nearest(input.asInstanceOf[ArrayData])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val ref = ctx.addReferenceObj("centroidKernel", kernel, "graft.functions.CentroidKernel")
-    nullSafeCodeGen(ctx, ev, c => s"${ev.value} = $ref.nearest($c);")
-  }
-
-  override protected def withNewChildInternal(newChild: Expression): NearestCentroidExpr =
-    copy(child = newChild)
-}
-
-/** Fused assignment + silhouette of a vector column against a fixed
-  * centroid set: ONE k·dim sweep returning struct(cell, s_micro) — the
-  * cluster-quality scan's per-row kernel (half the flops of running
-  * NearestCentroidExpr and CentroidSilhouetteExpr separately). */
-case class CentroidAssignSilhouetteExpr(child: Expression, kernel: CentroidKernel)
-    extends UnaryExpression {
-  import org.apache.spark.sql.types.{StructField, StructType}
-
-  override def dataType: DataType = StructType(Seq(
-    StructField("cell", LongType, nullable = false),
-    StructField("s_micro", LongType, nullable = false)))
-  override def prettyName: String = "centroid_assign_silhouette"
-
-  override def nullSafeEval(input: Any): Any =
-    kernel.assignAndSilhouette(input.asInstanceOf[ArrayData])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val ref = ctx.addReferenceObj("centroidKernel", kernel, "graft.functions.CentroidKernel")
-    nullSafeCodeGen(ctx, ev, c => s"${ev.value} = $ref.assignAndSilhouette($c);")
-  }
-
-  override protected def withNewChildInternal(newChild: Expression): CentroidAssignSilhouetteExpr =
-    copy(child = newChild)
-}
-
-/** Micro-quantized simplified silhouette of a vector column against a fixed
-  * centroid set — the cluster-quality gate's per-row kernel. Same reference-
-  * object pattern as NearestCentroidExpr: one tight k·dim loop per row. */
-case class CentroidSilhouetteExpr(child: Expression, kernel: CentroidKernel)
-    extends UnaryExpression {
-  override def dataType: DataType = LongType
-  override def prettyName: String = "centroid_silhouette"
-
-  override def nullSafeEval(input: Any): Any =
-    kernel.silhouetteMicro(input.asInstanceOf[ArrayData])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val ref = ctx.addReferenceObj("centroidKernel", kernel, "graft.functions.CentroidKernel")
-    nullSafeCodeGen(ctx, ev, c => s"${ev.value} = $ref.silhouetteMicro($c);")
-  }
-
-  override protected def withNewChildInternal(newChild: Expression): CentroidSilhouetteExpr =
-    copy(child = newChild)
-}
-
 /** Broadcastable hyperplane table for sign-bucket LSH. */
 class PlaneKernel(val flat: Array[Double], val planes: Int, val dim: Int) extends Serializable {
   /** Sign-bit bucket: bit j set when dot(vec, plane_j) >= 0 (left-fold). */
@@ -419,63 +262,46 @@ class PlaneKernel(val flat: Array[Double], val planes: Int, val dim: Int) extend
   }
 }
 
-/** Random-hyperplane LSH bucket of a vector column: all `planes` sign bits
-  * in one kernel call per row (the per-plane HOF dots this replaces were
-  * interpreted and generated code linear in planes x dim). */
-case class HyperplaneBucketExpr(child: Expression, kernel: PlaneKernel) extends UnaryExpression {
-  override def dataType: DataType = LongType
-  override def prettyName: String = "hyperplane_bucket"
-
-  override def nullSafeEval(input: Any): Any =
-    kernel.bucket(input.asInstanceOf[ArrayData])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val ref = ctx.addReferenceObj("planeKernel", kernel, "graft.functions.PlaneKernel")
-    nullSafeCodeGen(ctx, ev, c => s"${ev.value} = $ref.bucket($c);")
-  }
-
-  override protected def withNewChildInternal(newChild: Expression): HyperplaneBucketExpr =
-    copy(child = newChild)
-}
-
 object VectorExpressions {
   def dotProduct(a: Column, b: Column): Column =
-    Bridge.column(DotProduct(Bridge.expression(a), Bridge.expression(b)))
+    Bridge.invoke(VectorKernels, "dot", DoubleType, Seq(a, b))
 
   def vectorNorm(a: Column): Column =
-    Bridge.column(VectorNorm(Bridge.expression(a)))
+    Bridge.invoke(VectorKernels, "norm", DoubleType, Seq(a))
 
   def cosineSim(a: Column, b: Column): Column =
-    Bridge.column(CosineSim(Bridge.expression(a), Bridge.expression(b)))
+    Bridge.invoke(VectorKernels, "cosine", DoubleType, Seq(a, b))
 
-  def nearestCentroid(vec: Column, cents: Array[(Long, Array[Double])]): Column = {
+  private def centroids(cents: Array[(Long, Array[Double])]): CentroidKernel = {
     require(cents.nonEmpty, "empty centroid set")
-    val dim = cents.head._2.length
-    val kernel = new CentroidKernel(cents.map(_._1), cents.flatMap(_._2), dim)
-    Bridge.column(NearestCentroidExpr(Bridge.expression(vec), kernel))
+    new CentroidKernel(cents.map(_._1), cents.flatMap(_._2), cents.head._2.length)
   }
 
-  /** Micro-quantized simplified silhouette against a fixed centroid set. */
-  def centroidSilhouette(vec: Column, cents: Array[(Long, Array[Double])]): Column = {
-    require(cents.nonEmpty, "empty centroid set")
-    val dim = cents.head._2.length
-    val kernel = new CentroidKernel(cents.map(_._1), cents.flatMap(_._2), dim)
-    Bridge.column(CentroidSilhouetteExpr(Bridge.expression(vec), kernel))
-  }
+  /** Nearest-centroid cell id of a vector column against a fixed centroid
+    * set (IVF coarse quantizer assignment): one k·dim sweep per row, the
+    * centroid matrix riding the plan as one object, NOT as k×dim literal
+    * sub-expressions. */
+  def nearestCentroid(vec: Column, cents: Array[(Long, Array[Double])]): Column =
+    Bridge.invoke(centroids(cents), "nearest", LongType, Seq(vec))
 
-  /** Fused (cell, s_micro) struct — one sweep for the silhouette scan. */
-  def centroidAssignSilhouette(vec: Column, cents: Array[(Long, Array[Double])]): Column = {
-    require(cents.nonEmpty, "empty centroid set")
-    val dim = cents.head._2.length
-    val kernel = new CentroidKernel(cents.map(_._1), cents.flatMap(_._2), dim)
-    Bridge.column(CentroidAssignSilhouetteExpr(Bridge.expression(vec), kernel))
-  }
+  /** Micro-quantized simplified silhouette against a fixed centroid set —
+    * the cluster-quality gate's per-row kernel. */
+  def centroidSilhouette(vec: Column, cents: Array[(Long, Array[Double])]): Column =
+    Bridge.invoke(centroids(cents), "silhouetteMicro", LongType, Seq(vec))
 
-  /** Sign-bucket of `vec` against a plane matrix (row-major planes x dim). */
+  /** Fused struct(cell, s_micro) — one sweep for the silhouette scan (half
+    * the flops of [[nearestCentroid]] and [[centroidSilhouette]] apart). */
+  def centroidAssignSilhouette(vec: Column, cents: Array[(Long, Array[Double])]): Column =
+    Bridge.invoke(centroids(cents), "assignAndSilhouette", StructType(Seq(
+      StructField("cell", LongType, nullable = false),
+      StructField("s_micro", LongType, nullable = false))), Seq(vec))
+
+  /** Random-hyperplane LSH bucket of `vec` against a plane matrix
+    * (row-major planes x dim): all sign bits in one call per row. */
   def hyperplaneBucket(vec: Column, flat: Array[Double], planes: Int, dim: Int): Column =
-    Bridge.column(HyperplaneBucketExpr(Bridge.expression(vec), new PlaneKernel(flat, planes, dim)))
+    Bridge.invoke(new PlaneKernel(flat, planes, dim), "bucket", LongType, Seq(vec))
 
   /** Two-level (coarse -> fine-segment) nearest-centroid assignment. */
   def nearestCentroidHier(vec: Column, kernel: HierCentroidKernel): Column =
-    Bridge.column(NearestCentroidHierExpr(Bridge.expression(vec), kernel))
+    Bridge.invoke(kernel, "nearest", LongType, Seq(vec))
 }

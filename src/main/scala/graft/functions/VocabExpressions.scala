@@ -1,11 +1,9 @@
 package graft.functions
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.graftbridge.Bridge
-import org.apache.spark.sql.types.{DataType, LongType}
+import org.apache.spark.sql.types.LongType
 import org.apache.spark.unsafe.types.UTF8String
 
 /**
@@ -55,25 +53,6 @@ class VocabKernel(tokens: Array[String], weights: Array[Long]) extends Serializa
   }
 }
 
-/** Σ vocab-weight over an array<string> column against a fixed vocab —
-  * one kernel call per row inside whole-stage codegen; the vocab rides as
-  * a codegen reference object, never as literal sub-expressions. */
-case class VocabScoreSumExpr(child: Expression, kernel: VocabKernel) extends UnaryExpression {
-  override def dataType: DataType = LongType
-  override def prettyName: String = "vocab_score_sum"
-
-  override def nullSafeEval(input: Any): Any =
-    kernel.scoreSum(input.asInstanceOf[ArrayData])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val ref = ctx.addReferenceObj("vocabKernel", kernel, "graft.functions.VocabKernel")
-    nullSafeCodeGen(ctx, ev, c => s"${ev.value} = $ref.scoreSum($c);")
-  }
-
-  override protected def withNewChildInternal(newChild: Expression): VocabScoreSumExpr =
-    copy(child = newChild)
-}
-
 object VocabExpressions {
   /** Build a reusable kernel from a driver-held token→weight model. */
   def kernel(weights: Map[String, Long]): VocabKernel = {
@@ -81,6 +60,9 @@ object VocabExpressions {
     new VocabKernel(ks, ks.map(weights))
   }
 
+  /** Σ vocab-weight over an array<string> column against a fixed vocab —
+    * one kernel call per row; the vocab rides the plan as one object, never
+    * as literal sub-expressions. */
   def scoreSum(tokens: Column, k: VocabKernel): Column =
-    Bridge.column(VocabScoreSumExpr(Bridge.expression(tokens), k))
+    Bridge.invoke(k, "scoreSum", LongType, Seq(tokens))
 }

@@ -57,7 +57,7 @@ object Pca {
       x => round(x * 1000).cast("long"))
     // flat stat vector: pos 0..d-1 = q_i (means), pos d.. = q_i·q_j upper —
     // one native kernel pass (round 13: the nested transform/flatten HOF
-    // ran d(d+1)/2 interpreted lambdas per row; PcaSpec pins kernel ≡ HOF)
+    // ran d(d+1)/2 interpreted lambdas per row; NativeFunctionsSpec pins kernel ≡ HOF)
     val stats = corpus
       // ragged vectors would inject nulls into the product terms and sum()
       // would silently skip them, skewing the covariance — drop them loudly

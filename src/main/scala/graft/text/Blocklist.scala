@@ -1,11 +1,9 @@
 package graft.text
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.GenericArrayData
 import org.apache.spark.sql.graftbridge.Bridge
-import org.apache.spark.sql.types.{ArrayType, DataType, LongType}
+import org.apache.spark.sql.types.{ArrayType, LongType}
 import org.apache.spark.unsafe.types.UTF8String
 
 /**
@@ -87,29 +85,12 @@ class BlocklistKernel(val patterns: Array[String]) extends Serializable {
   }
 }
 
-/** `array<bigint>` of per-pattern occurrence counts for a string column —
-  * one automaton walk per row inside whole-stage codegen. */
-case class BlocklistCountsExpr(child: Expression, kernel: BlocklistKernel)
-    extends UnaryExpression {
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-  override def prettyName: String = "blocklist_counts"
-
-  override def nullSafeEval(input: Any): Any =
-    kernel.counts(input.asInstanceOf[UTF8String])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val ref = ctx.addReferenceObj("blocklistKernel", kernel, "graft.text.BlocklistKernel")
-    nullSafeCodeGen(ctx, ev, c => s"${ev.value} = $ref.counts($c);")
-  }
-
-  override protected def withNewChildInternal(newChild: Expression): BlocklistCountsExpr =
-    copy(child = newChild)
-}
-
 object Blocklist {
   def kernel(patterns: Seq[String]): BlocklistKernel =
     new BlocklistKernel(patterns.toArray)
 
+  /** `array<bigint>` of per-pattern occurrence counts for a string column —
+    * one automaton walk per row (null text gives null). */
   def counts(text: Column, k: BlocklistKernel): Column =
-    Bridge.column(BlocklistCountsExpr(Bridge.expression(text), k))
+    Bridge.invoke(k, "counts", ArrayType(LongType, containsNull = false), Seq(text))
 }

@@ -1,12 +1,10 @@
 package graft.text
 
 import org.apache.spark.sql.{Column, DataFrame}
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.graftbridge.Bridge
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{DataType, LongType}
+import org.apache.spark.sql.types.LongType
 
 /**
  * Tokenizer-faithful token counting: a corpus-trained subword vocabulary
@@ -56,8 +54,8 @@ object SubwordTokenizer {
     // every length-L window of every word, L in [2, maxLen] — the native
     // one-pass kernel (round 13: the nested transform/filter/flatten HOF
     // formulation ran every lambda interpreted and allocated a sequence
-    // array per length; CharGramsExpr emits the identical length-major
-    // window multiset inside whole-stage codegen)
+    // array per length; BpeKernels.charGrams emits the identical length-major
+    // window multiset in one kernel call)
     val grams = words.select(explode(
       graft.functions.BpeExpressions.charGrams(col("w"), maxLen)).as("gram"))
     grams.groupBy(col("gram")).agg(count(lit(1)).as("cnt"))
@@ -74,7 +72,7 @@ object SubwordTokenizer {
     * kernel — the drop-in `sizeCol` source for budgetAllocation /
     * ShardPacking / TrainingOrder. */
   def subwordCount(words: Column, k: SubwordKernel): Column =
-    Bridge.column(SubwordCountExpr(Bridge.expression(words), k))
+    Bridge.invoke(k, "countAll", LongType, Seq(words))
 
   /** Convenience (and the py4j entry point): tokenize `textCol` and append
     * its subword-token count as `outCol`. */
@@ -122,22 +120,4 @@ class SubwordKernel(grams: Array[String], val maxLen: Int) extends Serializable 
     }
     s
   }
-}
-
-/** Subword-token count of an array<string> column — one kernel call per row
-  * inside whole-stage codegen. */
-case class SubwordCountExpr(child: Expression, kernel: SubwordKernel) extends UnaryExpression {
-  override def dataType: DataType = LongType
-  override def prettyName: String = "subword_count"
-
-  override def nullSafeEval(input: Any): Any =
-    kernel.countAll(input.asInstanceOf[ArrayData])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val ref = ctx.addReferenceObj("subwordKernel", kernel, "graft.text.SubwordKernel")
-    nullSafeCodeGen(ctx, ev, c => s"${ev.value} = $ref.countAll($c);")
-  }
-
-  override protected def withNewChildInternal(newChild: Expression): SubwordCountExpr =
-    copy(child = newChild)
 }

@@ -18,8 +18,9 @@ import org.apache.spark.sql.functions._
  */
 object TextFunctions {
 
-  /** Prime modulus keeping all products within 63 bits. */
-  val P: Long = 2147483647L // 2^31 - 1
+  /** Prime modulus keeping all products within 63 bits. A constant
+    * definition: the kernels' loops compile `% P` against the literal. */
+  final val P = 2147483647L // 2^31 - 1
 
   /** Lowercased alphanumeric tokens; empty tokens dropped. */
   def tokens(text: Column): Column =

@@ -9,11 +9,12 @@ import org.apache.spark.sql.catalyst.encoders.{AgnosticEncoder, ExpressionEncode
 import org.apache.spark.sql.catalyst.expressions.{Alias, AttributeReference, BoundReference, CreateNamedStruct, Expression,
   GetStructField, If, IsNull, KnownNotNull, LeafExpression, Literal, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, CodeGenerator, ExprCode, FalseLiteral}
+import org.apache.spark.sql.catalyst.expressions.objects.{Invoke, StaticInvoke}
 import org.apache.spark.sql.catalyst.expressions.codegen.Block._
 import org.apache.spark.sql.catalyst.plans.logical.{FlatMapGroupsWithState, LocalRelation, LogicalGroupState, LogicalPlan,
   SerializeFromObject}
 import org.apache.spark.sql.catalyst.types.DataTypeUtils
-import org.apache.spark.sql.classic.ExpressionUtils
+import org.apache.spark.sql.classic.{ColumnNodeToExpressionConverter, ExpressionUtils}
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 import org.apache.spark.sql.types.{DataType, ObjectType, StructType}
 
@@ -23,7 +24,30 @@ import org.apache.spark.sql.types.{DataType, ObjectType, StructType}
   * expressions (no other Spark internals are touched). */
 object Bridge {
   def column(e: Expression): Column = ExpressionUtils.column(e)
-  def expression(c: Column): Expression = ExpressionUtils.expression(c)
+
+  /** Converted now, not when a Dataset resolves the column: a SQL function
+    * that GraftExtensions builds never passes through a Dataset. */
+  def expression(c: Column): Expression = ColumnNodeToExpressionConverter(c.node)
+
+  /** The column `target.method(args)`: one JVM method, called from
+    * whole-stage codegen and reflectively when codegen is off. A Scala
+    * `object` is called through its static forwarders (`StaticInvoke`); any
+    * other kernel rides the plan as an object literal (`Invoke`), so plans
+    * built with equal kernels are equal. `nullSafe`: a null argument gives a
+    * null result without a call; otherwise the null reaches the method.
+    * `nullableResult`: the method may return null. */
+  def invoke(target: AnyRef, method: String, dataType: DataType, args: Seq[Column],
+      nullSafe: Boolean = true, nullableResult: Boolean = false): Column = {
+    val exprs = args.map(expression)
+    column(
+      if (target.getClass.getName.endsWith("$")) {
+        StaticInvoke(target.getClass, dataType, method, exprs, propagateNull = nullSafe,
+          returnNullable = nullableResult)
+      } else {
+        Invoke(Literal.fromObject(target), method, dataType, exprs, propagateNull = nullSafe,
+          returnNullable = nullableResult)
+      })
+  }
 
   /** The DataFrame of a logical plan (classic.Dataset.ofRows is
     * private[sql]; used to wrap graft's own plan nodes). */

@@ -23,6 +23,12 @@ class PlanQualitySpec extends AnyFunSuite with SparkTestSession {
   private def plan(q: String): String =
     SparkEntry.queries(q)(spark, dir).queryExecution.executedPlan.toString
 
+  /** Does the plan call the native kernel method `target` (a regex: the
+    * kernel's printed name, then `.method`) in a projection? A join or a
+    * higher-order-function formulation prints no `invoke(...)`. */
+  private def invokes(p: String, target: String): Boolean =
+    s"(static_)?invoke\\((graft\\.[a-z.]+\\.)?$target\\(".r.findFirstIn(p).nonEmpty
+
   test("q1_pricing pushes the shipdate filter into the parquet scan") {
     val p = plan("q1_pricing")
     assert(p.contains("PushedFilters: [IsNotNull(l_shipdate), LessThanOrEqual(l_shipdate"), p.take(2000))
@@ -122,9 +128,9 @@ class PlanQualitySpec extends AnyFunSuite with SparkTestSession {
 
   test("LSH bucketing is a map-side projection (bucket computed before the join shuffle)") {
     val p = plan("q_ann_lsh")
-    // the native hyperplane_bucket expression must appear in a Project, and
+    // the native hyperplane-bucket kernel must appear in a Project, and
     // the only corpus shuffle is the bucket equi-join key
-    assert(p.contains("hyperplane_bucket"), p.take(3000))
+    assert(invokes(p, "PlaneKernel@\\w+\\.bucket"), p.take(3000))
     assert(!p.contains("CartesianProduct"), p.take(3000))
   }
 
@@ -135,12 +141,13 @@ class PlanQualitySpec extends AnyFunSuite with SparkTestSession {
 
   test("native hash kernels keep the dedup signature projection in codegen") {
     val p = plan("q_dedup_minhash")
-    assert(p.contains("shingle_hash_set") && p.contains("minhash_signature"), p.take(4000))
+    assert(invokes(p, "HashKernels\\.shingleHashSet") &&
+      invokes(p, "MinHashKernel\\(32\\)\\.signature"), p.take(4000))
   }
 
   test("q_repetition is a single pruned scan + native kernel (no shuffle before the sort)") {
     val p = plan("q_repetition")
-    assert(p.contains("ngram_stats"), p.take(3000))
+    assert(invokes(p, "HashKernels\\.ngramStats"), p.take(3000))
     // one exchange only: the output orderBy's range partitioning
     val exchanges = "Exchange [a-z]+partitioning".r.findAllIn(p).toList
     assert(exchanges.forall(_.contains("rangepartitioning")), exchanges.toString)
@@ -187,8 +194,8 @@ class PlanQualitySpec extends AnyFunSuite with SparkTestSession {
 
   test("semDedup: map-side cell assignment, corpus shuffles only on the cell key") {
     val p = plan("q_semdedup")
-    // assignment is the native nearest_centroid projection, not a join
-    assert(p.contains("nearest_centroid"), p.take(3000))
+    // assignment is the native nearest-centroid projection, not a join
+    assert(invokes(p, "CentroidKernel@\\w+\\.nearest"), p.take(3000))
     assert(!p.contains("CartesianProduct"), p.take(3000))
     // the centroid table rides as a broadcast, never a shuffled join side
     assert(p.contains("BroadcastHashJoin"), p.take(3000))
@@ -209,7 +216,7 @@ class PlanQualitySpec extends AnyFunSuite with SparkTestSession {
     // both consumers (dup-hash table and per-doc profile) must read the
     // cached kernel output — re-deriving it would hash every position twice
     assert(p.contains("InMemoryTableScan"), p.take(3000))
-    assert(p.contains("winnowed_hashes"), p.take(3000))
+    assert(invokes(p, "HashKernels\\.winnowedHashes"), p.take(3000))
     assert(!p.contains("CartesianProduct"), p.take(3000))
   }
 
@@ -235,7 +242,7 @@ class PlanQualitySpec extends AnyFunSuite with SparkTestSession {
 
   test("knn graph: bucket computed map-side, pairs join is an equi-join on bucket") {
     val p = plan("q_knn_graph")
-    assert(p.contains("hyperplane_bucket") || p.contains("HyperplaneBucket"), p.take(3000))
+    assert(invokes(p, "PlaneKernel@\\w+\\.bucket"), p.take(3000))
     assert(!p.contains("CartesianProduct") && !p.contains("BroadcastNestedLoopJoin"), p.take(3000))
   }
 
@@ -320,14 +327,15 @@ class PlanQualitySpec extends AnyFunSuite with SparkTestSession {
   test("a driver query leaves no persisted RDD behind") {
     // book queries that persist through the frame cache (the collapsed
     // τ-join's projections, MinHash signatures and banding, the BPE word
-    // table, the resolved forest, the distributed IVF index and fine table)
+    // table, the resolved forest, the distributed IVF index and fine table,
+    // the near-duplicate components' checkpoint leaves)
     // or keep loop frames in an operator scope (GraphRank, KCenter,
     // tokenDrift, the PQ and IVF Lloyd passes). Earlier suites' store
     // entries are released first: the run's own release would drop them too.
     FrameCache.clear()
     val before = spark.sparkContext.getPersistentRDDs.keySet
     for (q <- Seq("q_jaccard_collapsed", "q_dedup_minhash", "q_bpe_segment", "q_ann_incremental_dist",
-        "q_centrality", "q_kcenter", "q_corpus_drift", "q_ann_pq", "q_dedup_pipeline")) {
+        "q_centrality", "q_kcenter", "q_corpus_drift", "q_ann_pq", "q_dedup_pipeline", "q_cluster_split")) {
       val (seconds, rows) = Harness.run(spark, q, dir)
       assert(seconds > 0 && rows > 0, q)
       val leaked = spark.sparkContext.getPersistentRDDs.keySet -- before
@@ -379,7 +387,7 @@ class PlanQualitySpec extends AnyFunSuite with SparkTestSession {
 
   test("blocklist: one kernel scan, no join against a pattern table, one agg") {
     val p = plan("q_blocklist")
-    assert(p.contains("blocklist_counts"), p.take(2000))
+    assert(invokes(p, "BlocklistKernel@\\w+\\.counts"), p.take(2000))
     assert(!p.contains("Join"), p.take(3000)) // patterns ride the automaton, not a table
     val schema = "ReadSchema: [^\\n]*".r.findFirstIn(p).getOrElse("")
     assert(schema.contains("text") && !schema.contains("doc_id"), schema)

@@ -1,5 +1,7 @@
 package graft
 
+import org.apache.spark.sql.catalyst.expressions.Literal
+import org.apache.spark.sql.catalyst.expressions.objects.Invoke
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -114,11 +116,10 @@ class Round13OpsSpec extends AnyFunSuite with SparkTestSession {
         .select(col("vec_id").as("qid"), col("embedding").as("qv")),
       "vec_id", "qid", "qv", k = 5)
     val exprs = probe.queryExecution.optimizedPlan.collect { case p => p.expressions }.flatten
-    val kernelSizes = exprs.flatMap(_.collect {
-      case e: graft.functions.NearestCentroidExpr => e.kernel.cids.length })
+    val kernels = exprs.flatMap(_.collect { case Invoke(Literal(k, _), "nearest", _, _, _, _, _, _) => k })
+    val kernelSizes = kernels.collect { case k: graft.functions.CentroidKernel => k.cids.length }
     assert(kernelSizes.nonEmpty && kernelSizes.forall(_ <= 5), kernelSizes.toString)
-    assert(exprs.flatMap(_.collect {
-      case e: graft.functions.NearestCentroidHierExpr => e }).isEmpty)
+    assert(kernels.collect { case k: graft.functions.HierCentroidKernel => k }.isEmpty)
     // 5. the probe produces ranked neighbors with rank <= k
     val rows = probe.collect()
     assert(rows.nonEmpty && rows.forall(_.getLong(3) <= 5L))

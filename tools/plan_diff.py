@@ -7,9 +7,11 @@ Each directory holds the `<query>.txt` files that
 `SPARK_GRAFT_PLAN_OUT=<dir> sbt "runMain graft.PlanDump q1 q2 ..."` writes.
 Before the files are compared, each is normalized:
 
-- expression ids (`#123`, `#123L`), `plan_id=N`, RDD ids (`RDD[58]`) and
-  object identity hashes (`CentroidKernel@5680228`) are stripped, since
-  they differ from one JVM to the next;
+- expression ids (`#123`, `#123L`), `plan_id=N`, RDD ids (`RDD[58]`),
+  object identity hashes (`CentroidKernel@5680228`) and the numbers of
+  lambda classes (`AsOfJoin$$$Lambda$6087/0x00007f35dd691b60`, which shift
+  when other code loads more classes first) are stripped, since they
+  differ from one JVM to the next;
 - source call sites (`at Dedup.scala:458`) lose their line number, since
   moving code shifts it;
 - the AQE `== Final Plan ==` section of every adaptive plan that was run
@@ -32,6 +34,7 @@ _IDS = [
     (re.compile(r"#[0-9]+L?"), ""),
     (re.compile(r"plan_id=[0-9]+"), ""),
     (re.compile(r"RDD\[[0-9]+\]"), "RDD"),
+    (re.compile(r"\$Lambda\$[0-9]+/0x[0-9a-f]+"), "$Lambda"),
     (re.compile(r"([A-Za-z_$][\w$.]*)@[0-9a-f]+\b"), r"\1@"),
     (re.compile(r"(\w+\.scala):[0-9]+"), r"\1"),
 ]
