@@ -118,15 +118,7 @@ object CurationQueries {
       val corpus = PipelineQueries.nearDupCorpus(s, dir)
       val lsh = new MinHashLSH(32, 8, 3)
       val sigs = lsh.signatures(corpus, "doc_id", "text")
-      val bands = sigs.select(col("doc_id"), explode(array((0 until 8).map { bIdx =>
-        struct(lit(bIdx).as("band"),
-          concat_ws("_", (0 until 4).map(r => col("sig")(bIdx * 4 + r)): _*).as("bucket"))
-      }: _*)).as("bb"))
-        .select(col("doc_id"), col("bb.band").as("band"), col("bb.bucket").as("bucket"))
-      val cand = bands.select(col("doc_id").as("a"), col("band"), col("bucket"))
-        .join(bands.select(col("doc_id").as("b"), col("band"), col("bucket")),
-          Seq("band", "bucket"))
-        .where(col("a") < col("b")).select("a", "b").distinct()
+      val cand = lsh.bandPairs(lsh.bandedFromSigs(sigs, "doc_id"), "doc_id")
       val sa = sigs.select(col("doc_id").as("a"), col("sig").as("siga"), col("sset").as("seta"))
       val sb = sigs.select(col("doc_id").as("b"), col("sig").as("sigb"), col("sset").as("setb"))
       val inter = size(array_intersect(col("seta"), col("setb")))

@@ -111,46 +111,42 @@ class MinHashLSH(val numHashes: Int = 32, val bands: Int = 8, val shingleSize: I
   def signatureFromSet(sset: Column): Column =
     graft.functions.HashExpressions.minhashSignature(sset, numHashes)
 
+  /** The band bucket column of `sig`: one (band, bucket) struct per band,
+    * the bucket being the band's `rowsPerBand` minhashes joined by "_". */
+  private def bandBuckets: Column = array((0 until bands).map { bIdx =>
+    struct(
+      lit(bIdx).as("band"),
+      concat_ws("_", (0 until rowsPerBand).map(r => col("sig")(bIdx * rowsPerBand + r)): _*).as("bucket"))
+  }: _*)
+
   /** Adds (band, bucket) pairs, one row per band. */
-  def banded(df: DataFrame, textCol: String): DataFrame = {
-    val withSig = withSignature(df, textCol)
-    val bandCols = array((0 until bands).map { bIdx =>
-      struct(
-        lit(bIdx).as("band"),
-        concat_ws("_", (0 until rowsPerBand).map(r => col("sig")(bIdx * rowsPerBand + r)): _*).as("bucket"))
-    }: _*)
-    withSig.withColumn("bb", explode(bandCols))
+  def banded(df: DataFrame, textCol: String): DataFrame =
+    withSignature(df, textCol).withColumn("bb", explode(bandBuckets))
       .select(df.columns.map(col) :+ col("sig") :+ col("bb.band").as("band") :+ col("bb.bucket").as("bucket"): _*)
-  }
+
+  /** The band self-join: distinct id pairs (a < b) of a banding (id, band,
+    * bucket) that share at least one band bucket. Both join sides read
+    * `banding`, so a caller persists it when it is costly to derive (a
+    * broadcast side would otherwise re-derive it — see pairsFromSets). */
+  private[graft] def bandPairs(banding: DataFrame, idCol: String): DataFrame =
+    banding.select(col(idCol).as("a"), col("band"), col("bucket"))
+      .join(banding.select(col(idCol).as("b"), col("band"), col("bucket")), Seq("band", "bucket"))
+      .where(col("a") < col("b"))
+      .select("a", "b").distinct()
 
   /**
    * Distinct candidate id pairs (a < b) sharing at least one band bucket.
    */
-  def candidatePairs(df: DataFrame, idCol: String, textCol: String): DataFrame = {
-    // persisted: both self-join sides read one computation of the banding
-    // (a broadcast side would otherwise re-derive it — see pairsFromSets)
-    val b = FrameCache.persist(
+  def candidatePairs(df: DataFrame, idCol: String, textCol: String): DataFrame =
+    bandPairs(FrameCache.persist(
       banded(df.select(col(idCol), col(textCol)), textCol)
-        .select(col(idCol), col("band"), col("bucket")))
-    val l = b.select(col(idCol).as("a"), col("band"), col("bucket"))
-    val r = b.select(col(idCol).as("b"), col("band"), col("bucket"))
-    l.join(r, Seq("band", "bucket"))
-      .where(col("a") < col("b"))
-      .select("a", "b").distinct()
-  }
+        .select(col(idCol), col("band"), col("bucket"))), idCol)
 
   /** `candidatePairs` over a precomputed (id, sset, sig) projection — e.g.
     * a signature table written once per corpus by `signatures()` and read
     * back for every subsequent dedup run (the petabyte-scale path). */
-  def candidatePairsFromSigs(sigs: DataFrame, idCol: String): DataFrame = {
-    // persisted: see candidatePairs — one banding computation, two readers
-    val b = FrameCache.persist(bandedFromSigs(sigs, idCol))
-    val l = b.select(col(idCol).as("a"), col("band"), col("bucket"))
-    val r = b.select(col(idCol).as("b"), col("band"), col("bucket"))
-    l.join(r, Seq("band", "bucket"))
-      .where(col("a") < col("b"))
-      .select("a", "b").distinct()
-  }
+  def candidatePairsFromSigs(sigs: DataFrame, idCol: String): DataFrame =
+    bandPairs(FrameCache.persist(bandedFromSigs(sigs, idCol)), idCol)
 
   /** The (id, sset, sig) signature projection — 32 longs + shingle set per
     * doc, independent of document size. At petabyte scale, WRITE this to a
@@ -162,15 +158,9 @@ class MinHashLSH(val numHashes: Int = 32, val bands: Int = 8, val shingleSize: I
       .withColumn("sig", signatureFromSet(col("sset")))
 
   /** (id, band, bucket) banding of a signature projection. */
-  def bandedFromSigs(sigs: DataFrame, idCol: String): DataFrame = {
-    val bandCols = array((0 until bands).map { bIdx =>
-      struct(
-        lit(bIdx).as("band"),
-        concat_ws("_", (0 until rowsPerBand).map(r => col("sig")(bIdx * rowsPerBand + r)): _*).as("bucket"))
-    }: _*)
-    sigs.withColumn("bb", explode(bandCols))
+  def bandedFromSigs(sigs: DataFrame, idCol: String): DataFrame =
+    sigs.withColumn("bb", explode(bandBuckets))
       .select(col(idCol), col("bb.band").as("band"), col("bb.bucket").as("bucket"))
-  }
 
   /**
    * INCREMENTAL near-dup detection: match a new batch against an existing
@@ -201,15 +191,17 @@ class MinHashLSH(val numHashes: Int = 32, val bands: Int = 8, val shingleSize: I
       .where(col("x") =!= col("y"))
       .select(least(col("x"), col("y")).as("a"), greatest(col("x"), col("y")).as("b"))
       .distinct()
-    // sort_array canonicalizes for the merge-count verify kernel (round 13)
-    val sets = allSigs.select(col(idCol).as("sid"), sort_array(col("sset")).as("sset"))
-    cands
-      .join(sets.withColumnRenamed("sid", "a").withColumnRenamed("sset", "set_a"), Seq("a"))
-      .join(sets.withColumnRenamed("sid", "b").withColumnRenamed("sset", "set_b"), Seq("b"))
+    verifyJaccard(cands, allSigs, idCol, threshold)
+  }
+
+  /** (a, b, jaccard) of the candidate pairs whose exact Jaccard over the
+    * shingle sets of `sigs` reaches `threshold`. */
+  private def verifyJaccard(cands: DataFrame, sigs: DataFrame, idCol: String,
+      threshold: Double): DataFrame =
+    SetVerify.withSets(cands, SetVerify.sortedSets(sigs, idCol))
       .withColumn("jaccard", jaccardSorted(col("set_a"), col("set_b")))
       .where(col("jaccard") >= threshold)
       .select(col("a"), col("b"), col("jaccard"))
-  }
 
   /**
    * Near-duplicate pairs with exact Jaccard >= threshold on the distinct
@@ -241,23 +233,8 @@ class MinHashLSH(val numHashes: Int = 32, val bands: Int = 8, val shingleSize: I
     * regardless of document size, so persist them once per corpus and run
     * every dedup recipe against the table instead of raw text). The caller
     * owns materialization of `sigs`. */
-  def nearDuplicatesFromSigs(sigs: DataFrame, idCol: String, threshold: Double): DataFrame = {
-    // persisted: see candidatePairs — one banding computation, two readers
-    val bandedBase = FrameCache.persist(bandedFromSigs(sigs, idCol))
-    val cands = bandedBase.select(col(idCol).as("a"), col("band"), col("bucket"))
-      .join(bandedBase.select(col(idCol).as("b"), col("band"), col("bucket")), Seq("band", "bucket"))
-      .where(col("a") < col("b"))
-      .select("a", "b").distinct()
-
-    // sort_array canonicalizes for the merge-count verify kernel (round 13)
-    val sets = sigs.select(col(idCol).as("sid"), sort_array(col("sset")).as("sset"))
-    cands
-      .join(sets.withColumnRenamed("sid", "a").withColumnRenamed("sset", "set_a"), Seq("a"))
-      .join(sets.withColumnRenamed("sid", "b").withColumnRenamed("sset", "set_b"), Seq("b"))
-      .withColumn("jaccard", jaccardSorted(col("set_a"), col("set_b")))
-      .where(col("jaccard") >= threshold)
-      .select(col("a"), col("b"), col("jaccard"))
-  }
+  def nearDuplicatesFromSigs(sigs: DataFrame, idCol: String, threshold: Double): DataFrame =
+    verifyJaccard(candidatePairsFromSigs(sigs, idCol), sigs, idCol, threshold)
 
   /**
    * Dedup-TUNING dashboard: the exact-Jaccard decile histogram of every
@@ -290,21 +267,8 @@ class MinHashLSH(val numHashes: Int = 32, val bands: Int = 8, val shingleSize: I
     val mult = keyed.groupBy(col("_rep")).agg(count(lit(1)).as("n_copies"))
     val repSigs = keyed.where(col(idCol) === col("_rep"))
       .select(col(idCol), col("sset"), col("sig"))
-    // persisted: see candidatePairs — one banding computation, two readers
-    val bandedBase = FrameCache.persist(bandedFromSigs(repSigs, idCol))
-    val cands = bandedBase.select(col(idCol).as("a"), col("band"), col("bucket"))
-      .join(bandedBase.select(col(idCol).as("b"), col("band"), col("bucket")), Seq("band", "bucket"))
-      .where(col("a") < col("b"))
-      .select("a", "b").distinct()
-    // sort_array canonicalizes for the merge-count verify kernel (round 13)
-    val sets = repSigs.select(col(idCol).as("sid"), sort_array(col("sset")).as("sset"))
-    val crossPairs = cands
-      .join(sets.withColumnRenamed("sid", "a").withColumnRenamed("sset", "set_a"), Seq("a"))
-      .join(sets.withColumnRenamed("sid", "b").withColumnRenamed("sset", "set_b"), Seq("b"))
-      .withColumn("n_inter",
-        graft.functions.SetExpressions.intersectCountSorted(col("set_a"), col("set_b")))
-      .withColumn("n_union",
-        size(col("set_a")).cast("long") + size(col("set_b")) - col("n_inter"))
+    val crossPairs = SetVerify.withOverlap(SetVerify.withSets(
+        candidatePairsFromSigs(repSigs, idCol), SetVerify.sortedSets(repSigs, idCol)))
       .withColumn("bucket_lo_milli",
         expr("CAST((n_inter * 1000 div n_union) div 100 * 100 AS BIGINT)"))
       .join(mult.select(col("_rep").as("a"), col("n_copies").as("n_a")), Seq("a"))
@@ -342,15 +306,10 @@ class MinHashLSH(val numHashes: Int = 32, val bands: Int = 8, val shingleSize: I
     require(tauMilliFloor >= 0 && tauMilliFloor <= 1000)
     val sigs = FrameCache.persist(
       signatures(df, idCol, textCol).where(size(col("sset")) > 0))
-    // sort_array canonicalizes for the merge-count verify kernel (round 13)
-    val sets = sigs.select(col(idCol).as("sid"), sort_array(col("sset")).as("sset"))
-    val truth = sets.select(col("sid").as("a"), col("sset").as("set_a"))
-      .join(sets.select(col("sid").as("b"), col("sset").as("set_b")),
-        col("a") < col("b")) // bounded-slice cross join by contract
-      .withColumn("n_inter",
-        graft.functions.SetExpressions.intersectCountSorted(col("set_a"), col("set_b")))
-      .withColumn("n_union",
-        size(col("set_a")).cast("long") + size(col("set_b")) - col("n_inter"))
+    val sets = SetVerify.sortedSets(sigs, idCol)
+    val truth = SetVerify.withOverlap(sets.select(col("sid").as("a"), col("sset").as("set_a"))
+        .join(sets.select(col("sid").as("b"), col("sset").as("set_b")),
+          col("a") < col("b"))) // bounded-slice cross join by contract
       .withColumn("jaccard_milli", expr("CAST(n_inter * 1000 div n_union AS BIGINT)"))
       .where(col("jaccard_milli") >= tauMilliFloor)
       .select(col("a"), col("b"),
@@ -395,7 +354,7 @@ class MinHashLSH(val numHashes: Int = 32, val bands: Int = 8, val shingleSize: I
     * signature-table twin (see `nearDuplicatesFromSigs`). */
   def duplicateGroupsFromSigs(base: DataFrame, idCol: String, threshold: Double): DataFrame = {
     // persisted: the bucket-min aggregation AND the probe join both read
-    // the banding — one computation (see candidatePairs)
+    // the banding — one computation (see bandPairs)
     val bandedBase = FrameCache.persist(bandedFromSigs(base, idCol))
 
     val bucketMin = bandedBase.groupBy(col("band"), col("bucket"))
@@ -404,11 +363,7 @@ class MinHashLSH(val numHashes: Int = 32, val bands: Int = 8, val shingleSize: I
       .where(col("a") < col(idCol))
       .select(col("a"), col(idCol).as("b")).distinct()
 
-    // sort_array canonicalizes for the merge-count verify kernel (round 13)
-    val sets = base.select(col(idCol).as("sid"), sort_array(col("sset")).as("sset"))
-    val verified = cands
-      .join(sets.withColumnRenamed("sid", "a").withColumnRenamed("sset", "set_a"), Seq("a"))
-      .join(sets.withColumnRenamed("sid", "b").withColumnRenamed("sset", "set_b"), Seq("b"))
+    val verified = SetVerify.withSets(cands, SetVerify.sortedSets(base, idCol))
       .where(jaccardSorted(col("set_a"), col("set_b")) >= threshold)
       .select(col("a"), col("b"))
 
@@ -643,6 +598,36 @@ private[graft] object SignatureStore {
   def clear(): Unit = FrameCache.clear()
 }
 
+/**
+ * The verify steps the set-similarity operators share (MinHash LSH, the
+ * containment index and the prefix-filter τ-join): attach both sides'
+ * sorted sets to a candidate pair table, then count their overlap.
+ */
+private[dedup] object SetVerify {
+
+  /** (sid, sset) with `sset` sorted: sort_array canonicalizes the set for
+    * the merge-count verify kernel (round 13). */
+  def sortedSets(sigs: DataFrame, idCol: String): DataFrame =
+    sigs.select(col(idCol).as("sid"), sort_array(col("sset")).as("sset"))
+
+  /** `pairs` (a, b, ...) joined with `sets` (sid, sset, sorted) on each side
+    * as set_a and set_b. A caller that needs a join strategy hints `sets`:
+    * the hint reaches both joins. */
+  def withSets(pairs: DataFrame, sets: DataFrame): DataFrame =
+    pairs
+      .join(sets.withColumnRenamed("sid", "a").withColumnRenamed("sset", "set_a"), Seq("a"))
+      .join(sets.withColumnRenamed("sid", "b").withColumnRenamed("sset", "set_b"), Seq("b"))
+
+  /** Adds the overlap counts of sorted set_a and set_b: n_inter by the
+    * merge-count kernel and n_union = |set_a| + |set_b| − n_inter, longs. */
+  def withOverlap(pairs: DataFrame): DataFrame =
+    pairs
+      .withColumn("n_inter",
+        graft.functions.SetExpressions.intersectCountSorted(col("set_a"), col("set_b")))
+      .withColumn("n_union",
+        size(col("set_a")).cast("long") + size(col("set_b")) - col("n_inter"))
+}
+
 object MinHashLSH {
   import graft.text.TextFunctions.P
 
@@ -679,13 +664,18 @@ object SimHash {
   def simhash(text: Column): Column =
     simhashFromToks(graft.functions.HashExpressions.tokenHashes(text, Bits))
 
-  /** One row per chunk: (id, chunk index, 15-bit chunk value, simhash).
-    * Token hashes materialize in their own projection so the 60 per-bit
-    * aggregates share one tokenization pass. */
-  def chunked(df: DataFrame, idCol: String, textCol: String): DataFrame = {
-    val withSim = df
-      .select(col(idCol), graft.functions.HashExpressions.tokenHashes(col(textCol), Bits).as("_toks"))
+  /** One row per chunk: (id, chunk index, 15-bit chunk value, simhash). */
+  def chunked(df: DataFrame, idCol: String, textCol: String): DataFrame =
+    chunksOf(fingerprints(df, idCol, textCol), idCol)
+
+  /** (id, simhash). Token hashes materialize in their own projection so the
+    * 60 per-bit counters share one tokenization pass. */
+  private def fingerprints(df: DataFrame, idCol: String, textCol: String): DataFrame =
+    df.select(col(idCol), graft.functions.HashExpressions.tokenHashes(col(textCol), Bits).as("_toks"))
       .select(col(idCol), simhashFromToks(col("_toks")).as("simhash"))
+
+  /** The chunk layout: one row per 15-bit chunk of each (id, simhash). */
+  private def chunksOf(withSim: DataFrame, idCol: String): DataFrame = {
     val chunks = array((0 until Chunks).map { c =>
       struct(lit(c).as("chunk"),
         shiftright(col("simhash"), c * ChunkBits).bitwiseAND((1L << ChunkBits) - 1L).as("cval"))
@@ -695,18 +685,10 @@ object SimHash {
   }
 
   /** Near-dup pairs with hamming distance <= maxHamming. The simhash
-    * projection materializes once behind a reusable exchange (one corpus
-    * pass; both join branches read the exchange). */
+    * projection (16 bytes/doc) is persisted: one corpus pass feeds both
+    * join branches. */
   def nearDuplicates(df: DataFrame, idCol: String, textCol: String, maxHamming: Int): DataFrame = {
-    val base = FrameCache.persist(df
-      .select(col(idCol), graft.functions.HashExpressions.tokenHashes(col(textCol), Bits).as("_toks"))
-      .select(col(idCol), simhashFromToks(col("_toks")).as("simhash"))) // 16 bytes/doc; one corpus pass
-    val chunks = array((0 until Chunks).map { c =>
-      struct(lit(c).as("chunk"),
-        shiftright(col("simhash"), c * ChunkBits).bitwiseAND((1L << ChunkBits) - 1L).as("cval"))
-    }: _*)
-    val ch = base.withColumn("cc", explode(chunks))
-      .select(col(idCol), col("simhash"), col("cc.chunk").as("chunk"), col("cc.cval").as("cval"))
+    val ch = chunksOf(FrameCache.persist(fingerprints(df, idCol, textCol)), idCol)
     val l = ch.select(col(idCol).as("a"), col("simhash").as("sim_a"), col("chunk"), col("cval"))
     val r = ch.select(col(idCol).as("b"), col("simhash").as("sim_b"), col("chunk"), col("cval"))
     l.join(r, Seq("chunk", "cval"))
@@ -718,27 +700,6 @@ object SimHash {
   }
 }
 
-/**
- * Rare-shingle inverted-index containment detection — the excerpt/quote
- * duplication pass that banded Jaccard LSH structurally misses: a 200-char
- * excerpt of a 5000-char source has Jaccard ≈ 0.04 (no band ever collides at
- * any useful threshold) but containment ≈ 1.0. Reference scope: artan has no
- * dedup surface; this extends the LLM-pipeline family (SURVEY §2 rows 14-17).
- *
- * Candidates come from an inverted index over RARE shingles (doc frequency in
- * [2, maxDocFreq]): two docs become a candidate pair when they share at least
- * `minShared` rare shingles. The df cap bounds every per-shingle self-join at
- * maxDocFreq² pairs — the classic stop-shingle guard that keeps the index
- * join linear in the corpus — and boilerplate shingles (df > cap) never
- * generate candidates at all. Verification is exact set containment
- * |A∩B| / min(|A|,|B|) on the full shingle sets.
- *
- * Scale shape: one shingle-set projection (persisted, ~2 KB/doc), one
- * explode + doc-frequency aggregation (the exact shape of TF-IDF's df pass),
- * one co-partitioned self-join on the shingle key with bounded fanout, one
- * pair-count aggregation, and a verify join that touches candidates only.
- * No cross join, no global sort, no driver-side state.
- */
 /**
  * EXACT Jaccard set-similarity self-join via prefix filtering — the
  * SSJoin/PPJoin family (Chaudhuri et al. ICDE'06, Xiao et al. WWW'08):
@@ -840,14 +801,10 @@ object PrefixFilterJoin {
     // pair table's estimated bytes are smaller than the sets'. Building on
     // the bounded per-doc sets and STREAMING the pair table is the
     // co-partitioned shape that holds at any scale (sets never broadcast,
-    // pairs never carry arrays into a broadcast).
-    cands
-      .join(sets.select(col("sid").as("a"), col("tset").as("set_a")).hint("shuffle_hash"), Seq("a"))
-      .join(sets.select(col("sid").as("b"), col("tset").as("set_b")).hint("shuffle_hash"), Seq("b"))
-      .withColumn("n_inter",
-        graft.functions.SetExpressions.intersectCountSorted(col("set_a"), col("set_b")))
-      .withColumn("n_union",
-        size(col("set_a")).cast("long") + size(col("set_b")) - col("n_inter"))
+    // pairs never carry arrays into a broadcast). The hint on the sets
+    // frame reaches both verify joins (PrefixFilterJoinSpec pins it).
+    val hinted = sets.select(col("sid"), col("tset").as("sset")).hint("shuffle_hash")
+    SetVerify.withOverlap(SetVerify.withSets(cands, hinted))
       .withColumn("jaccard_milli",
         expr("CAST(n_inter * 1000 div n_union AS BIGINT)"))
       .where(col("jaccard_milli") >= tauMilli)
@@ -893,6 +850,27 @@ object PrefixFilterJoin {
   }
 }
 
+/**
+ * Rare-shingle inverted-index containment detection — the excerpt/quote
+ * duplication pass that banded Jaccard LSH structurally misses: a 200-char
+ * excerpt of a 5000-char source has Jaccard ≈ 0.04 (no band ever collides at
+ * any useful threshold) but containment ≈ 1.0. Reference scope: artan has no
+ * dedup surface; this extends the LLM-pipeline family (SURVEY §2 rows 14-17).
+ *
+ * Candidates come from an inverted index over RARE shingles (doc frequency in
+ * [2, maxDocFreq]): two docs become a candidate pair when they share at least
+ * `minShared` rare shingles. The df cap bounds every per-shingle self-join at
+ * maxDocFreq² pairs — the classic stop-shingle guard that keeps the index
+ * join linear in the corpus — and boilerplate shingles (df > cap) never
+ * generate candidates at all. Verification is exact set containment
+ * |A∩B| / min(|A|,|B|) on the full shingle sets.
+ *
+ * Scale shape: one shingle-set projection (persisted, ~2 KB/doc), one
+ * explode + doc-frequency aggregation (the exact shape of TF-IDF's df pass),
+ * one co-partitioned self-join on the shingle key with bounded fanout, one
+ * pair-count aggregation, and a verify join that touches candidates only.
+ * No cross join, no global sort, no driver-side state.
+ */
 object ContainmentIndex {
 
   def excerptPairs(
@@ -915,11 +893,7 @@ object ContainmentIndex {
       .where(col("a") < col("b"))
       .groupBy(col("a"), col("b")).agg(count(lit(1)).as("n_shared"))
       .where(col("n_shared") >= minShared)
-    // sort_array canonicalizes for the merge-count verify kernel (round 13)
-    val sets = base.select(col(idCol).as("sid"), sort_array(col("sset")).as("sset"))
-    cands
-      .join(sets.withColumnRenamed("sid", "a").withColumnRenamed("sset", "set_a"), Seq("a"))
-      .join(sets.withColumnRenamed("sid", "b").withColumnRenamed("sset", "set_b"), Seq("b"))
+    SetVerify.withSets(cands, SetVerify.sortedSets(base, idCol))
       .withColumn("containment",
         graft.functions.SetExpressions.intersectCountSorted(col("set_a"), col("set_b"))
           .cast("double") /

@@ -408,10 +408,6 @@ object Multimodal {
   def withImagePayload(df: DataFrame, textCol: String): DataFrame =
     df.withColumn("payload", bmpUdf(encode(col(textCol), "UTF-8")))
 
-  /** Kept name from round 1: binary payload stand-in (now a decodable BMP). */
-  def withBinaryPayload(df: DataFrame, textCol: String): DataFrame =
-    withImagePayload(df, textCol)
-
   /**
    * REAL image decode + feature extraction, batched per partition: the
    * container is parsed to a raster (contract-direct for 24-bit BMPs,
@@ -425,10 +421,6 @@ object Multimodal {
       .as[(Long, Array[Byte])](Encoders.tuple(Encoders.scalaLong, Encoders.BINARY))
       .mapPartitions { rows => rows.map { case (id, bytes) => decodeOne(id, bytes) } }
   }
-
-  /** Round-1 name, kept for source compatibility; decode is no longer a stub. */
-  def decodeStub(df: DataFrame, idCol: String, payloadCol: String)(implicit d: DummyImplicit): Dataset[MediaFeatures] =
-    decodeImages(df, idCol, payloadCol)
 
   private def decodeOne(id: Long, bytes: Array[Byte]): MediaFeatures = {
     val img: Raster = decodeRaster(bytes)

@@ -108,19 +108,6 @@ object ProductQuantizer {
   }
 
   /**
-   * ADC top-k WITH exact rerank — the production PQ search shape: the
-   * quantized scan ranks every corpus row by cosine(query, reconstruction)
-   * and keeps only a `shortlist` per query (the 99.99% pruning step, done
-   * entirely on 4-byte codes); the exact vectors of the shortlist rows are
-   * then fetched and reranked by true cosine. At 100 TB the scan side
-   * touches codes only; full floats are read for shortlist·|queries| rows.
-   *
-   * `queries` is expected to be tiny (a probe batch) — it broadcasts; the
-   * coded corpus is scanned once and never shuffled (both ranking windows
-   * partition by query id over shortlist-bounded rows). Deterministic: both
-   * stages round to `roundTo` and tie-break by corpus id.
-   */
-  /**
    * IVF-PQ search — the billion-vector composition (FAISS's IVFADC layout,
    * Jégou et al. 2011 §V): a coarse IVF quantizer routes each query to its
    * `nprobe` nearest cells, the PQ codes of ONLY those cells' rows are
@@ -151,20 +138,8 @@ object ProductQuantizer {
       .withColumn("pr", row_number().over(wProbe))
       .where(col("pr") <= nprobe)
       .select(col(qidCol), col("qv"), col("cell"))
-    val adc = coded.join(broadcast(probes), Seq("cell"))
-      .where(col(idCol) =!= col(qidCol))
-      .select(col(qidCol), col(idCol),
-        round(Similarity.cosine(reconstruction(codebooks), col("qv")), roundTo).as("adc_sim"))
-    val wAdc = Window.partitionBy(col(qidCol)).orderBy(col("adc_sim").desc, col(idCol).asc)
-    val short = adc.withColumn("adc_rank", row_number().over(wAdc))
-      .where(col("adc_rank") <= shortlist)
-      .select(col(qidCol), col(idCol))
-    val rerank = short.join(floats, Seq(idCol)).join(broadcast(q), Seq(qidCol))
-      .withColumn("sim", round(Similarity.cosine(col("cv"), col("qv")), roundTo))
-    val w = Window.partitionBy(col(qidCol)).orderBy(col("sim").desc, col(idCol).asc)
-    rerank.withColumn("rank", row_number().over(w))
-      .where(col("rank") <= k)
-      .select(col(qidCol), col(idCol), col("sim"), col("rank").cast("long").as("rank"))
+    adcRerank(coded.join(broadcast(probes), Seq("cell")), codebooks, floats, q,
+      idCol, qidCol, k, shortlist, roundTo)
   }
 
   /** Train + search in one call (the PySpark entry point — codebooks stay
@@ -178,19 +153,43 @@ object ProductQuantizer {
     adcTopK(cbs, corpus, queries, idCol, vecCol, qidCol, qvecCol, dim, k, shortlist)
   }
 
+  /**
+   * ADC top-k WITH exact rerank — the production PQ search shape: the
+   * quantized scan ranks every corpus row by cosine(query, reconstruction)
+   * and keeps only a `shortlist` per query (the 99.99% pruning step, done
+   * entirely on 4-byte codes); the exact vectors of the shortlist rows are
+   * then fetched and reranked by true cosine. At 100 TB the scan side
+   * touches codes only; full floats are read for shortlist·|queries| rows.
+   *
+   * `queries` is expected to be tiny (a probe batch) — it broadcasts; the
+   * coded corpus is scanned once and never shuffled (both ranking windows
+   * partition by query id over shortlist-bounded rows). Deterministic: both
+   * stages round to `roundTo` and tie-break by corpus id.
+   */
   def adcTopK(
       codebooks: Array[Array[(Long, Array[Double])]],
       corpus: DataFrame, queries: DataFrame,
       idCol: String, vecCol: String, qidCol: String, qvecCol: String,
       dim: Int, k: Int, shortlist: Int = 50, roundTo: Int = 6): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
     val floats = corpus.select(col(idCol), col(vecCol).cast("array<double>").as("cv"))
-    val coded = withCodes(floats, "cv", codebooks, dim)
     val q = queries.select(col(qidCol), col(qvecCol).cast("array<double>").as("qv"))
-    // ADC scan: only (qid, id, adc_sim) reaches the ranking shuffle — the
-    // float vectors are dropped before the window and re-fetched for the
-    // shortlist rows alone.
-    val adc = coded.crossJoin(broadcast(q))
+    adcRerank(withCodes(floats, "cv", codebooks, dim).crossJoin(broadcast(q)), codebooks, floats, q,
+      idCol, qidCol, k, shortlist, roundTo)
+  }
+
+  /** ADC scan then exact rerank, over the (coded corpus row, query) pairs
+    * of `scanned`: each pair scores cosine(reconstruction, qv) rounded to
+    * `roundTo`, a per-query `shortlist` survives (ties to the smaller
+    * corpus id), and the shortlist rows' exact vectors from `floats`
+    * rerank against `q` (`Similarity.exactTopK`). Only (qid, id, adc_sim)
+    * reaches the ADC ranking shuffle — the float vectors are re-fetched
+    * for the shortlist rows alone. */
+  private def adcRerank(
+      scanned: DataFrame, codebooks: Array[Array[(Long, Array[Double])]],
+      floats: DataFrame, q: DataFrame, idCol: String, qidCol: String,
+      k: Int, shortlist: Int, roundTo: Int): DataFrame = {
+    import org.apache.spark.sql.expressions.Window
+    val adc = scanned
       .where(col(idCol) =!= col(qidCol))
       .select(col(qidCol), col(idCol),
         round(Similarity.cosine(reconstruction(codebooks), col("qv")), roundTo).as("adc_sim"))
@@ -198,11 +197,7 @@ object ProductQuantizer {
     val short = adc.withColumn("adc_rank", row_number().over(wAdc))
       .where(col("adc_rank") <= shortlist)
       .select(col(qidCol), col(idCol))
-    val rerank = short.join(floats, Seq(idCol)).join(broadcast(q), Seq(qidCol))
-      .withColumn("sim", round(Similarity.cosine(col("cv"), col("qv")), roundTo))
-    val w = Window.partitionBy(col(qidCol)).orderBy(col("sim").desc, col(idCol).asc)
-    rerank.withColumn("rank", row_number().over(w))
-      .where(col("rank") <= k)
-      .select(col(qidCol), col(idCol), col("sim"), col("rank").cast("long").as("rank"))
+    Similarity.exactTopK(short.join(floats, Seq(idCol)).join(broadcast(q), Seq(qidCol)),
+      idCol, qidCol, k, roundTo)
   }
 }

@@ -31,12 +31,23 @@ object Similarity {
   def bruteForceTopK(
       corpus: DataFrame, queries: DataFrame,
       idCol: String, vecCol: String, qidCol: String, qvecCol: String,
-      k: Int, roundTo: Int = 6): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    val joined = corpus.select(col(idCol), col(vecCol).cast("array<double>").as("cv"))
+      k: Int, roundTo: Int = 6): DataFrame =
+    exactTopK(corpus.select(col(idCol), col(vecCol).cast("array<double>").as("cv"))
       .crossJoin(broadcast(queries.select(col(qidCol), col(qvecCol).cast("array<double>").as("qv"))))
-      .where(col(idCol) =!= col(qidCol))
-      .withColumn("sim", round(cosine(col("cv"), col("qv")), roundTo))
+      .where(col(idCol) =!= col(qidCol)), idCol, qidCol, k, roundTo)
+
+  /**
+   * The exact re-rank every top-k search ends in: candidate rows holding
+   * the corpus vector `cv` and the query vector `qv` score sim =
+   * round(cosine(cv, qv), roundTo), rank per query by sim desc with ties
+   * to the smaller corpus id, and keep the first k as (qid, id, sim,
+   * rank), rank a long.
+   */
+  private[sim] def exactTopK(
+      candidates: DataFrame, idCol: String, qidCol: String,
+      k: Int, roundTo: Int): DataFrame = {
+    import org.apache.spark.sql.expressions.Window
+    val joined = candidates.withColumn("sim", round(cosine(col("cv"), col("qv")), roundTo))
     val w = Window.partitionBy(col(qidCol)).orderBy(col("sim").desc, col(idCol).asc)
     joined.withColumn("rank", row_number().over(w))
       .where(col("rank") <= k)
@@ -105,16 +116,9 @@ object Similarity {
       corpus: DataFrame, queries: DataFrame,
       idCol: String, vecCol: String, qidCol: String, qvecCol: String,
       k: Int, planes: Int, dim: Int, roundTo: Int = 6): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
     val cb = withLshBucket(corpus.select(col(idCol), col(vecCol).cast("array<double>").as("cv")), "cv", planes, dim)
     val qb = withLshBucket(queries.select(col(qidCol), col(qvecCol).cast("array<double>").as("qv")), "qv", planes, dim)
-    val joined = cb.join(qb, Seq("bucket"))
-      .where(col(idCol) =!= col(qidCol))
-      .withColumn("sim", round(cosine(col("cv"), col("qv")), roundTo))
-    val w = Window.partitionBy(col(qidCol)).orderBy(col("sim").desc, col(idCol).asc)
-    joined.withColumn("rank", row_number().over(w))
-      .where(col("rank") <= k)
-      .select(col(qidCol), col(idCol), col("sim"), col("rank").cast("long").as("rank"))
+    exactTopK(cb.join(qb, Seq("bucket")).where(col(idCol) =!= col(qidCol)), idCol, qidCol, k, roundTo)
   }
 
   /**
@@ -442,13 +446,8 @@ object Similarity {
     val probes = qScored.withColumn("prank", row_number().over(wq))
       .where(col("prank") <= nprobe)
       .select(col(qidCol), col("qv"), col("cid").as("cell"))
-    val joined = index.join(broadcast(probes), Seq("cell"))
-      .where(col(idCol) =!= col(qidCol))
-      .withColumn("sim", round(cosine(col("cv"), col("qv")), roundTo))
-    val w = Window.partitionBy(col(qidCol)).orderBy(col("sim").desc, col(idCol).asc)
-    joined.withColumn("rank", row_number().over(w))
-      .where(col("rank") <= k)
-      .select(col(qidCol), col(idCol), col("sim"), col("rank").cast("long").as("rank"))
+    exactTopK(index.join(broadcast(probes), Seq("cell")).where(col(idCol) =!= col(qidCol)),
+      idCol, qidCol, k, roundTo)
   }
 
   /**
@@ -469,16 +468,9 @@ object Similarity {
       cents: Array[(Long, Array[Double])], index: DataFrame, queries: DataFrame,
       idCol: String, qidCol: String, qvecCol: String,
       k: Int, roundTo: Int = 6): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
     val probes = queries.select(col(qidCol), col(qvecCol).cast("array<double>").as("qv"))
       .withColumn("cell", ivfCellExprHier(col("qv"), cents))
-    val joined = index.join(probes, Seq("cell"))
-      .where(col(idCol) =!= col(qidCol))
-      .withColumn("sim", round(cosine(col("cv"), col("qv")), roundTo))
-    val w = Window.partitionBy(col(qidCol)).orderBy(col("sim").desc, col(idCol).asc)
-    joined.withColumn("rank", row_number().over(w))
-      .where(col("rank") <= k)
-      .select(col(qidCol), col(idCol), col("sim"), col("rank").cast("long").as("rank"))
+    exactTopK(index.join(probes, Seq("cell")).where(col(idCol) =!= col(qidCol)), idCol, qidCol, k, roundTo)
   }
 
   // ------------------------------------------------------------------ k ∝ N,
@@ -649,19 +641,12 @@ object Similarity {
       model: IvfDistModel, index: DataFrame, queries: DataFrame,
       idCol: String, qidCol: String, qvecCol: String,
       k: Int, roundTo: Int = 6): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
     val probes = assignFine(
       queries.select(col(qidCol), col(qvecCol).cast("array<double>").as("cv"))
         .withColumn("coarse", ivfCellExpr(col("cv"), model.coarse)),
       model.fine, qidCol)
       .select(col(qidCol), col("cv").as("qv"), col("cell"))
-    val joined = index.join(probes, Seq("cell"))
-      .where(col(idCol) =!= col(qidCol))
-      .withColumn("sim", round(cosine(col("cv"), col("qv")), roundTo))
-    val w = Window.partitionBy(col(qidCol)).orderBy(col("sim").desc, col(idCol).asc)
-    joined.withColumn("rank", row_number().over(w))
-      .where(col("rank") <= k)
-      .select(col(qidCol), col(idCol), col("sim"), col("rank").cast("long").as("rank"))
+    exactTopK(index.join(probes, Seq("cell")).where(col(idCol) =!= col(qidCol)), idCol, qidCol, k, roundTo)
   }
 
   /**

@@ -1,18 +1,15 @@
 package graft
 
-import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.dedup.PrefixFilterJoin
 import graft.filter.SparkTestSession
 import graft.operators.CorpusStats
 
 /**
- * Round-8 wave-8 specs: chi-square discriminative terms and the exact
- * prefix-filter Jaccard join — hand replays plus the guards behind the
- * scale claims (stopword prune keeping the integer ladder in range;
- * prefix-join completeness vs a brute-force oracle on a corpus with known
- * near-dups).
+ * Round-8 wave-8 specs: chi-square discriminative terms — hand replays plus
+ * the guard behind the scale claim (stopword prune keeping the integer
+ * ladder in range). The prefix-filter Jaccard join's specs live in
+ * `PrefixFilterJoinSpec`.
  */
 class Wave8OpsSpec extends AnyFunSuite with SparkTestSession {
 
@@ -58,72 +55,5 @@ class Wave8OpsSpec extends AnyFunSuite with SparkTestSession {
     import spark.implicits._
     val docs = Seq(("only", "a b"), ("only", "a c")).toDF("source", "text")
     assert(CorpusStats.chi2Terms(docs, "source", "text", 5).count() == 0L)
-  }
-
-  // -------------------------------------------------------- jaccard join
-
-  private def jacc(x: Set[String], y: Set[String]): Long = {
-    val i = (x & y).size.toLong
-    i * 1000L / (x.size + y.size - i)
-  }
-
-  test("jaccardPairs equals the brute-force tau-join (zero missed pairs)") {
-    import spark.implicits._
-    // a corpus with graded overlap: near-identical pairs, a 2/3 pair, and
-    // disjoint singletons
-    val texts = Seq(
-      1L -> "the quick brown fox jumps over the lazy dog",
-      2L -> "the quick brown fox jumps over the lazy cat",
-      3L -> "the quick brown fox leaps over the lazy dog today",
-      4L -> "alpha beta gamma",
-      5L -> "alpha beta delta",
-      6L -> "completely different words here")
-    val docs = texts.toDF("doc_id", "text")
-    val out = PrefixFilterJoin.jaccardPairs(docs, "doc_id", "text", 600L)
-      .collect().map(r => (r.getLong(0), r.getLong(1)) -> r.getLong(4)).toMap
-    val sets = texts.map { case (id, t) =>
-      id -> t.split(" ").toSet }.toMap
-    val expected = (for {
-      a <- sets.keys; b <- sets.keys if a < b
-      j = jacc(sets(a), sets(b)) if j >= 600L
-    } yield (a, b) -> j).toMap
-    assert(out == expected)
-    assert(out.nonEmpty, "test corpus must produce at least one pair")
-  }
-
-  test("jaccardPairs at tau=1000 finds exactly the identical-set pairs") {
-    import spark.implicits._
-    val docs = Seq(
-      (1L, "x y z"), (2L, "z y x"),     // same set, different order
-      (3L, "x y w")).toDF("doc_id", "text")
-    val out = PrefixFilterJoin.jaccardPairs(docs, "doc_id", "text", 1000L)
-      .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(4)))
-    assert(out.toSeq == Seq((1L, 2L, 1000L)))
-  }
-
-  test("jaccardPairs candidate join is an equi-join on prefix tokens (no cartesian)") {
-    import spark.implicits._
-    val docs = (1L to 20L).map(i => (i, s"tok$i common words here"))
-      .toDF("doc_id", "text")
-    val p = PrefixFilterJoin.jaccardPairs(docs, "doc_id", "text", 800L)
-      .queryExecution.executedPlan.toString
-    assert(!p.contains("CartesianProduct") &&
-      !p.contains("BroadcastNestedLoopJoin"), p.take(3000))
-  }
-
-  test("jaccardPairs prefix length replays ceil(tau*len) exactly") {
-    import spark.implicits._
-    // len=3 at tau=0.667: ceil(0.667*3)=ceil(2.001)=3 -> prefix length 1;
-    // docs sharing only their 2 NON-rarest tokens must still pair when
-    // J = 2/4 = 0.5 < tau (they are not emitted), but docs sharing the
-    // rare prefix token ARE candidates
-    val docs = Seq(
-      (1L, "rare1 common1 common2"),
-      (2L, "rare1 common1 common2"),    // identical: J=1000
-      (3L, "rare2 common1 common2"))    // shares 2/4 with 1: J=500 < 667
-    val out = PrefixFilterJoin.jaccardPairs(
-        docs.toDF("doc_id", "text"), "doc_id", "text", 667L)
-      .collect().map(r => (r.getLong(0), r.getLong(1)))
-    assert(out.toSeq == Seq((1L, 2L)))
   }
 }
