@@ -2,21 +2,24 @@
 
 Thin driver-side wrappers over the compiled Scala classes: each Python class
 holds the JVM estimator, forwards `set*` calls with py4j argument conversion
-(nested lists -> double[][], flat lists -> double[], Mat -> graft DMat), and
-returns pyspark DataFrames from `transform`. No Python-side compute — the
-JVM runs exactly the same code a Scala caller gets, so batch/streaming
-semantics and results are identical.
+(numbers coerced to the JVM parameter type, sequences -> double[] /
+double[][], Mat -> graft DMat), and returns pyspark DataFrames from
+`transform`. No Python-side compute — the JVM runs exactly the same code a
+Scala caller gets, so batch/streaming semantics and results are identical.
 
 Two binding styles ship side by side:
 
 - this module: generic forwarding proxies over the plain-Scala builders
-  (chained setters, py4j argument conversion) — zero-dependency, mirrors
-  the Scala call shape exactly;
+  (chained setters) — zero-dependency, mirrors the Scala call shape exactly;
 - ``graft.ml``: pyspark.ml-NATIVE ``Params`` estimators (the reference
   library's python contract — python/artan/filter/linear_kalman_filter.py)
   that compose in ``pyspark.ml.Pipeline``, expose get/set introspection,
-  and JSON-persist via ``save()``/``load()``. Prefer ``graft.ml`` for
-  Pipeline workflows; the proxies remain for scripting parity.
+  and JSON-persist via ``save()``/``load()``; their Params, setters and
+  defaults come from the JVM stage. Prefer ``graft.ml`` for Pipeline
+  workflows; the proxies remain for scripting parity.
+
+Both styles share one argument converter: they call the JVM through
+`_call_jvm`, which converts each argument by the JVM method's parameter type.
 
 Usage (classpath must contain target/scala-2.13/classes):
 
@@ -53,6 +56,80 @@ class Mat:
         return Mat([[scale if i == j else 0.0 for j in range(n)] for i in range(n)])
 
 
+# ---------------------------------------------------------------------------
+# Argument conversion, shared with graft.ml
+
+_SIGNATURES = {}  # JVM class name -> {method name: [parameter type names, ...]}
+
+
+def _signatures(java_obj):
+    """The public methods of `java_obj`'s class: name -> the parameter type
+    names (`Class.getName()`: "double", "[D", "graft.linalg.DMat", ...) of
+    each overload. Read by reflection once per class."""
+    cls = java_obj.getClass()
+    name = cls.getName()
+    if name not in _SIGNATURES:
+        table = {}
+        for m in cls.getMethods():
+            types = [t.getName() for t in m.getParameterTypes()]
+            table.setdefault(m.getName(), []).append(types)
+        _SIGNATURES[name] = table
+    return _SIGNATURES[name]
+
+
+def _double_array(sc, vals):
+    arr = sc._gateway.new_array(sc._jvm.double, len(vals))
+    for i, v in enumerate(vals):
+        arr[i] = float(v)
+    return arr
+
+
+def _double_array_2d(sc, rows):
+    arr = sc._gateway.new_array(sc._jvm.double, len(rows), len(rows[0]) if rows else 0)
+    for i, r in enumerate(rows):
+        for j, v in enumerate(r):
+            arr[i][j] = float(v)
+    return arr
+
+
+def _to_java(sc, value, jtype=None):
+    """`value` as a py4j argument of JVM type `jtype` (None: judged by the
+    Python value). py4j matches a Python int to no `double` parameter and a
+    list to no `double[]`, so numbers are coerced and sequences become
+    arrays; Mat becomes a graft DMat and pyspark.ml Vectors and Matrices
+    their JVM twins."""
+    # pyspark.ml needs numpy: imported here so `import graft` does not
+    from pyspark.ml.common import _py2java
+    from pyspark.ml.linalg import Matrix, Vector
+    from pyspark.ml.param import TypeConverters
+
+    if isinstance(value, Mat):
+        module = getattr(getattr(sc._jvm.graft.linalg, "DMat$"), "MODULE$")
+        return module.apply(value.num_rows, value.num_cols, _double_array(sc, value.values))
+    if jtype is None and isinstance(value, (list, tuple)):
+        jtype = "[[D" if value and isinstance(value[0], (list, tuple)) else "[D"
+    if jtype == "double":
+        return TypeConverters.toFloat(value)
+    if jtype == "int":
+        return TypeConverters.toInt(value)
+    if jtype == "[D":
+        return _double_array(sc, TypeConverters.toListFloat(value))
+    if jtype == "[[D":
+        return _double_array_2d(sc, TypeConverters.toListListFloat(value))
+    if isinstance(value, (Vector, Matrix)):
+        return _py2java(sc, value)
+    return value
+
+
+def _call_jvm(sc, java_obj, name, args):
+    """`java_obj.name(*args)`, each argument converted by `_to_java` to the
+    parameter type of the method's one overload of that arity (by value
+    alone when there are several)."""
+    overloads = [t for t in _signatures(java_obj).get(name, []) if len(t) == len(args)]
+    types = overloads[0] if len(overloads) == 1 else [None] * len(args)
+    return getattr(java_obj, name)(*[_to_java(sc, a, t) for a, t in zip(args, types)])
+
+
 class _JvmEstimator:
     """Generic forwarding proxy around a graft JVM estimator."""
 
@@ -60,50 +137,17 @@ class _JvmEstimator:
 
     def __init__(self, spark, *ctor_args):
         self._spark = spark
-        self._jvm = spark._jvm
-        cls = self._jvm
+        cls = spark._jvm
         for part in self._jvm_class.split("."):
             cls = getattr(cls, part)
-        self._java_obj = cls(*[self._convert(a) for a in ctor_args])
-
-    # ---------------------------------------------------- argument conversion
-
-    def _double_array(self, vals):
-        arr = self._spark._sc._gateway.new_array(self._jvm.double, len(vals))
-        for i, v in enumerate(vals):
-            arr[i] = float(v)
-        return arr
-
-    def _double_array_2d(self, rows):
-        arr = self._spark._sc._gateway.new_array(self._jvm.double, len(rows), len(rows[0]))
-        for i, r in enumerate(rows):
-            for j, v in enumerate(r):
-                arr[i][j] = float(v)
-        return arr
-
-    def _dmat(self, m):
-        module = getattr(getattr(self._jvm.graft.linalg, "DMat$"), "MODULE$")
-        return module.apply(m.num_rows, m.num_cols, self._double_array(m.values))
-
-    def _convert(self, a):
-        if isinstance(a, Mat):
-            return self._dmat(a)
-        if isinstance(a, (list, tuple)):
-            if a and isinstance(a[0], (list, tuple)):
-                return self._double_array_2d(a)
-            return self._double_array(a)
-        return a
-
-    # ------------------------------------------------------------- forwarding
+        self._java_obj = cls(*[_to_java(spark._sc, a) for a in ctor_args])
 
     def __getattr__(self, name):
         # only setter-style chained calls forward generically; anything else
         # (typos included) still reaches the JVM and fails there with the
         # real signature in the py4j error
-        target = getattr(self._java_obj, name)
-
         def call(*args):
-            result = target(*[self._convert(a) for a in args])
+            result = _call_jvm(self._spark._sc, self._java_obj, name, args)
             # chained setters return the JVM estimator itself -> rewrap as self
             if result is not None and getattr(result, "_target_id", None) == \
                     getattr(self._java_obj, "_target_id", object()):

@@ -9,11 +9,17 @@ contract the reference library's python package exposes
 (reference: python/artan/filter/linear_kalman_filter.py:26,
 python/artan/state/stateful_transformer.py:131).
 
-Param names mirror the Scala side (``graft/ml/KalmanML.scala``,
-``RegressionML.scala``, ``MixtureML.scala``) exactly — pyspark's
-``_transfer_params_to_java``/``_from_java`` sync by name, and the identical
-``graft.ml.<ClassName>`` naming means a ``Pipeline`` saved from Python (or
-Scala) loads back on either side without any translation table.
+Each stage declares its Params from its JVM twin ``graft.ml.<ClassName>``
+(``graft/ml/KalmanML.scala``, ``RegressionML.scala``, ``MixtureML.scala``)
+when it is built: name, doc and default come from the JVM stage, and the
+type converter from the JVM Param class. ``set<Param>(...)`` calls the JVM
+setter of that name and copies the JVM param map back, so a setter's side
+effects (a sliding window switching on ``calculateSlidingLikelihood``, the
+``setEnable*`` and no-argument boolean setters) are defined once, in Scala;
+``get<Param>()`` is ``getOrDefault``. The identical ``graft.ml.<ClassName>``
+naming means a ``Pipeline`` saved from Python (or Scala) loads back on
+either side without any translation table. Params whose JVM setter takes a
+function (the EKF/UKF/CKF lambdas) cannot cross py4j and stay out of Python.
 
 The nonlinear filters (EKF/UKF/CKF) ARE wrapped — beyond the reference,
 whose python package stops at the linear family because its measurement
@@ -39,9 +45,50 @@ Usage::
     out = model.transform(df)
 """
 
-from pyspark.ml.param import Param, Params, TypeConverters
+from pyspark import SparkContext
+from pyspark.ml.param import Param, TypeConverters
 from pyspark.ml.util import JavaMLReader, JavaMLWritable, MLReadable
 from pyspark.ml.wrapper import JavaTransformer
+
+from graft import _call_jvm, _signatures
+
+# The Python type converter of each JVM Param class the graft.ml stages use.
+_CONVERTERS = {
+    "org.apache.spark.ml.param." + cls: conv for cls, conv in [
+        ("IntParam", TypeConverters.toInt),
+        ("DoubleParam", TypeConverters.toFloat),
+        ("BooleanParam", TypeConverters.toBoolean),
+        ("DoubleArrayParam", TypeConverters.toListFloat),
+        ("DoubleArrayArrayParam", TypeConverters.toListListFloat),
+        ("Param", TypeConverters.identity),
+    ]
+}
+
+_DECLARATIONS = {}  # JVM class name -> ([(name, doc, converter)], {binding: param name})
+
+
+def _declaration(java_obj):
+    """The Python-visible Params of a JVM stage and its `set*`/`get*`
+    bindings, read once per class: every JVM param but those whose setter
+    takes a function, bound to `set<Param>` / `setEnable<Param>` where the
+    JVM class has that method, and to `get<Param>`."""
+    cls = java_obj.getClass().getName()
+    if cls not in _DECLARATIONS:
+        methods = _signatures(java_obj)
+        params, bindings = [], {}
+        for jp in java_obj.params():
+            name = jp.name()
+            cap = name[0].upper() + name[1:]
+            if any(t[:1] and t[0].startswith("scala.Function")
+                   for t in methods.get("set" + cap, [])):
+                continue
+            params.append((name, jp.doc(), _CONVERTERS[jp.getClass().getName()]))
+            bindings["get" + cap] = name
+            for setter in ("set" + cap, "setEnable" + cap):
+                if setter in methods:
+                    bindings[setter] = name
+        _DECLARATIONS[cls] = (params, bindings)
+    return _DECLARATIONS[cls]
 
 
 class _GraftMLReader(JavaMLReader):
@@ -62,376 +109,42 @@ class GraftMLReadable(MLReadable):
 
 
 class _GraftTransformer(JavaTransformer, GraftMLReadable, JavaMLWritable):
-    """Base: constructs the graft.ml java twin and round-trips params."""
+    """Base: constructs the graft.ml java twin, declares its Params and
+    binds `set<Param>`/`get<Param>` to them (see the module docstring)."""
 
     _java_class = None  # "graft.ml.<ClassName>" — set by subclasses
 
-    def __init__(self):
+    def __init__(self, **args):
         super(_GraftTransformer, self).__init__()
         self._java_obj = self._new_java_obj(self._java_class, self.uid)
-
-    @classmethod
-    def _from_java(cls, java_stage):
-        py_stage = cls()
-        py_stage._java_obj = java_stage
-        py_stage._resetUid(java_stage.uid())
-        py_stage._transfer_params_from_java()
-        return py_stage
-
-
-# --------------------------------------------------------------------------
-# Shared param mixins (stateful engine surface)
-
-class HasStatefulParams(Params):
-    """Params shared by every transformer on the stateful engine."""
-
-    stateKeyCol = Param(
-        Params._dummy(), "stateKeyCol",
-        "column identifying the model instance; one independent model runs "
-        "per distinct key",
-        typeConverter=TypeConverters.toString)
-
-    eventTimeCol = Param(
-        Params._dummy(), "eventTimeCol",
-        "event-time column used for in-key ordering (batch) and "
-        "watermarking (streaming)",
-        typeConverter=TypeConverters.toString)
-
-    watermarkDuration = Param(
-        Params._dummy(), "watermarkDuration",
-        "streaming watermark duration applied to the event-time column",
-        typeConverter=TypeConverters.toString)
-
-    stateTimeoutMode = Param(
-        Params._dummy(), "stateTimeoutMode",
-        "streaming state timeout mode: none, process or event",
-        typeConverter=TypeConverters.toString)
-
-    stateTimeoutDuration = Param(
-        Params._dummy(), "stateTimeoutDuration",
-        "streaming state timeout duration, e.g. '1 hour'",
-        typeConverter=TypeConverters.toString)
-
-    def setStateKeyCol(self, value):
-        """Set the state key column; each distinct value runs its own model."""
-        return self._set(stateKeyCol=value)
-
-    def getStateKeyCol(self):
-        return self.getOrDefault(self.stateKeyCol)
-
-    def setEventTimeCol(self, value):
-        """Set the event-time column (in-key ordering / watermark base)."""
-        return self._set(eventTimeCol=value)
-
-    def getEventTimeCol(self):
-        return self.getOrDefault(self.eventTimeCol)
-
-    def setWatermarkDuration(self, value):
-        """Set the streaming watermark duration, e.g. '10 minutes'."""
-        return self._set(watermarkDuration=value)
-
-    def getWatermarkDuration(self):
-        return self.getOrDefault(self.watermarkDuration)
-
-    def setStateTimeoutMode(self, value):
-        """Set the state timeout mode: 'none', 'process' or 'event'."""
-        return self._set(stateTimeoutMode=value)
-
-    def getStateTimeoutMode(self):
-        return self.getOrDefault(self.stateTimeoutMode)
-
-    def setStateTimeoutDuration(self, value):
-        """Set the state timeout duration, e.g. '1 hour'."""
-        return self._set(stateTimeoutDuration=value)
-
-    def getStateTimeoutDuration(self):
-        return self.getOrDefault(self.stateTimeoutDuration)
-
-
-# --------------------------------------------------------------------------
-# Kalman family
-
-class KalmanFilterParams(HasStatefulParams):
-    """Param surface of the linear Kalman family (matches
-    graft/ml/KalmanML.scala param-for-param)."""
-
-    stateSize = Param(
-        Params._dummy(), "stateSize", "dimension of the state vector",
-        typeConverter=TypeConverters.toInt)
-
-    measurementSize = Param(
-        Params._dummy(), "measurementSize",
-        "dimension of the measurement vector",
-        typeConverter=TypeConverters.toInt)
-
-    measurementCol = Param(
-        Params._dummy(), "measurementCol",
-        "column with the measurement vector",
-        typeConverter=TypeConverters.toString)
-
-    initialStateMean = Param(
-        Params._dummy(), "initialStateMean",
-        "initial state mean; default zeros",
-        typeConverter=TypeConverters.toVector)
-
-    initialStateCovariance = Param(
-        Params._dummy(), "initialStateCovariance",
-        "initial state covariance; default identity",
-        typeConverter=TypeConverters.toMatrix)
-
-    initialStateMeanCol = Param(
-        Params._dummy(), "initialStateMeanCol",
-        "per-key initial state mean column",
-        typeConverter=TypeConverters.toString)
-
-    initialStateCovarianceCol = Param(
-        Params._dummy(), "initialStateCovarianceCol",
-        "per-key initial state covariance column",
-        typeConverter=TypeConverters.toString)
-
-    initialStateDistributionCol = Param(
-        Params._dummy(), "initialStateDistributionCol",
-        "struct column (mean, covariance) carrying the initial state "
-        "distribution — the batch-posterior -> streaming-prior warm start",
-        typeConverter=TypeConverters.toString)
-
-    processModel = Param(
-        Params._dummy(), "processModel",
-        "state transition matrix F; default identity",
-        typeConverter=TypeConverters.toMatrix)
-
-    processNoise = Param(
-        Params._dummy(), "processNoise",
-        "process noise covariance Q; default identity",
-        typeConverter=TypeConverters.toMatrix)
-
-    measurementModel = Param(
-        Params._dummy(), "measurementModel",
-        "measurement projection H; default [I 0]",
-        typeConverter=TypeConverters.toMatrix)
-
-    measurementNoise = Param(
-        Params._dummy(), "measurementNoise",
-        "measurement noise covariance R; default identity",
-        typeConverter=TypeConverters.toMatrix)
-
-    processModelCol = Param(
-        Params._dummy(), "processModelCol", "per-row process model column",
-        typeConverter=TypeConverters.toString)
-
-    processNoiseCol = Param(
-        Params._dummy(), "processNoiseCol", "per-row process noise column",
-        typeConverter=TypeConverters.toString)
-
-    measurementModelCol = Param(
-        Params._dummy(), "measurementModelCol",
-        "per-row measurement model column",
-        typeConverter=TypeConverters.toString)
-
-    measurementNoiseCol = Param(
-        Params._dummy(), "measurementNoiseCol",
-        "per-row measurement noise column",
-        typeConverter=TypeConverters.toString)
-
-    controlCol = Param(
-        Params._dummy(), "controlCol", "per-row control vector column",
-        typeConverter=TypeConverters.toString)
-
-    controlFunctionCol = Param(
-        Params._dummy(), "controlFunctionCol",
-        "per-row control function (B matrix) column",
-        typeConverter=TypeConverters.toString)
-
-    fadingFactor = Param(
-        Params._dummy(), "fadingFactor",
-        "forgetting factor >= 1.0 weighting recent measurements",
-        typeConverter=TypeConverters.toFloat)
-
-    multiStepPredict = Param(
-        Params._dummy(), "multiStepPredict",
-        "emit this many extra predict-only steps per measurement",
-        typeConverter=TypeConverters.toInt)
-
-    calculateLoglikelihood = Param(
-        Params._dummy(), "calculateLoglikelihood",
-        "emit the residual gaussian loglikelihood per measurement",
-        typeConverter=TypeConverters.toBoolean)
-
-    calculateMahalanobis = Param(
-        Params._dummy(), "calculateMahalanobis",
-        "emit the residual mahalanobis distance per measurement",
-        typeConverter=TypeConverters.toBoolean)
-
-    calculateSlidingLikelihood = Param(
-        Params._dummy(), "calculateSlidingLikelihood",
-        "emit likelihood over a sliding window of recent measurements",
-        typeConverter=TypeConverters.toBoolean)
-
-    slidingLikelihoodWindow = Param(
-        Params._dummy(), "slidingLikelihoodWindow",
-        "number of consecutive measurements in the sliding likelihood",
-        typeConverter=TypeConverters.toInt)
-
-    outputSystemMatrices = Param(
-        Params._dummy(), "outputSystemMatrices",
-        "emit the resolved H/F/Q/R system matrices per output row",
-        typeConverter=TypeConverters.toBoolean)
-
-    multipleModelAdaptiveEstimation = Param(
-        Params._dummy(), "multipleModelAdaptiveEstimation",
-        "aggregate the filter bank into a single sliding-likelihood-weighted "
-        "estimate (MMAE)",
-        typeConverter=TypeConverters.toBoolean)
-
-    multipleModelMeasurementWindowDuration = Param(
-        Params._dummy(), "multipleModelMeasurementWindowDuration",
-        "event-time window for the MMAE aggregation",
-        typeConverter=TypeConverters.toString)
-
-    # ------------------------------------------------------------- setters
-
-    def setStateSize(self, value):
-        """Set the state vector dimension."""
-        return self._set(stateSize=value)
-
-    def getStateSize(self):
-        return self.getOrDefault(self.stateSize)
-
-    def setMeasurementSize(self, value):
-        """Set the measurement vector dimension."""
-        return self._set(measurementSize=value)
-
-    def getMeasurementSize(self):
-        return self.getOrDefault(self.measurementSize)
-
-    def setMeasurementCol(self, value):
-        """Set the measurement column (array<double> or ml Vector)."""
-        return self._set(measurementCol=value)
-
-    def getMeasurementCol(self):
-        return self.getOrDefault(self.measurementCol)
-
-    def setInitialStateMean(self, value):
-        """Set the constant initial state mean (pyspark.ml.linalg.Vector)."""
-        return self._set(initialStateMean=value)
-
-    def getInitialStateMean(self):
-        return self.getOrDefault(self.initialStateMean)
-
-    def setInitialStateCovariance(self, value):
-        """Set the constant initial covariance (pyspark.ml.linalg.Matrix)."""
-        return self._set(initialStateCovariance=value)
-
-    def getInitialStateCovariance(self):
-        return self.getOrDefault(self.initialStateCovariance)
-
-    def setInitialStateMeanCol(self, value):
-        """Set the per-key initial state mean column."""
-        return self._set(initialStateMeanCol=value)
-
-    def setInitialStateCovarianceCol(self, value):
-        """Set the per-key initial covariance column."""
-        return self._set(initialStateCovarianceCol=value)
-
-    def setInitialStateDistributionCol(self, value):
-        """Set the (mean, covariance) struct column for warm starts."""
-        return self._set(initialStateDistributionCol=value)
-
-    def setProcessModel(self, value):
-        """Set the constant state transition matrix F."""
-        return self._set(processModel=value)
-
-    def getProcessModel(self):
-        return self.getOrDefault(self.processModel)
-
-    def setProcessNoise(self, value):
-        """Set the constant process noise covariance Q."""
-        return self._set(processNoise=value)
-
-    def getProcessNoise(self):
-        return self.getOrDefault(self.processNoise)
-
-    def setMeasurementModel(self, value):
-        """Set the constant measurement projection H."""
-        return self._set(measurementModel=value)
-
-    def getMeasurementModel(self):
-        return self.getOrDefault(self.measurementModel)
-
-    def setMeasurementNoise(self, value):
-        """Set the constant measurement noise covariance R."""
-        return self._set(measurementNoise=value)
-
-    def getMeasurementNoise(self):
-        return self.getOrDefault(self.measurementNoise)
-
-    def setProcessModelCol(self, value):
-        """Set the per-row process model column."""
-        return self._set(processModelCol=value)
-
-    def setProcessNoiseCol(self, value):
-        """Set the per-row process noise column."""
-        return self._set(processNoiseCol=value)
-
-    def setMeasurementModelCol(self, value):
-        """Set the per-row measurement model column."""
-        return self._set(measurementModelCol=value)
-
-    def setMeasurementNoiseCol(self, value):
-        """Set the per-row measurement noise column."""
-        return self._set(measurementNoiseCol=value)
-
-    def setControlCol(self, value):
-        """Set the per-row control vector column."""
-        return self._set(controlCol=value)
-
-    def setControlFunctionCol(self, value):
-        """Set the per-row control function (B matrix) column."""
-        return self._set(controlFunctionCol=value)
-
-    def setFadingFactor(self, value):
-        """Set the fading factor (>= 1.0)."""
-        return self._set(fadingFactor=value)
-
-    def getFadingFactor(self):
-        return self.getOrDefault(self.fadingFactor)
-
-    def setMultiStepPredict(self, value):
-        """Emit value extra predict-only steps after each update."""
-        return self._set(multiStepPredict=value)
-
-    def setCalculateLoglikelihood(self):
-        """Emit the residual loglikelihood per measurement."""
-        return self._set(calculateLoglikelihood=True)
-
-    def setCalculateMahalanobis(self):
-        """Emit the residual mahalanobis distance per measurement."""
-        return self._set(calculateMahalanobis=True)
-
-    def setCalculateSlidingLikelihood(self):
-        """Emit the sliding-window likelihood per measurement."""
-        return self._set(calculateSlidingLikelihood=True)
-
-    def setSlidingLikelihoodWindow(self, value):
-        """Set the sliding likelihood window size (enables the calc)."""
-        return self._set(slidingLikelihoodWindow=value,
-                         calculateSlidingLikelihood=True)
-
-    def setOutputSystemMatrices(self):
-        """Add the resolved system matrices to the output."""
-        return self._set(outputSystemMatrices=True)
-
-    def setEnableMultipleModelAdaptiveEstimation(self):
-        """Enable MMAE output mode (implies sliding likelihood)."""
-        return self._set(multipleModelAdaptiveEstimation=True,
-                         calculateSlidingLikelihood=True)
-
-    def setMultipleModelMeasurementWindowDuration(self, value):
-        """Set the event-time window for MMAE aggregation."""
-        return self._set(multipleModelMeasurementWindowDuration=value)
-
-
-class LinearKalmanFilter(_GraftTransformer, KalmanFilterParams):
+        params, self._bindings = _declaration(self._java_obj)
+        for name, doc, converter in params:
+            setattr(self, name, Param(self, name, doc, typeConverter=converter))
+        self._transfer_params_from_java()
+        for name, value in args.items():
+            if value is not None:
+                getattr(self, "set" + name[0].upper() + name[1:])(value)
+
+    def __getattr__(self, name):
+        bindings = self.__dict__.get("_bindings", {})
+        if name not in bindings:
+            raise AttributeError(
+                "'%s' object has no attribute '%s'" % (type(self).__name__, name))
+        param = bindings[name]
+        if name.startswith("get"):
+            return lambda: self.getOrDefault(param)
+
+        def call(*args):
+            self._transfer_params_to_java()
+            _call_jvm(SparkContext._active_spark_context, self._java_obj, name, args)
+            self._transfer_params_from_java()
+            return self
+
+        call.__doc__ = self.getParam(param).doc
+        return call
+
+
+class LinearKalmanFilter(_GraftTransformer):
     """Linear Kalman filter as a pyspark.ml Pipeline stage: transforms a
     DataFrame (batch or streaming) of measurements into per-key state
     estimates; one independent filter runs per distinct ``stateKeyCol``
@@ -440,59 +153,23 @@ class LinearKalmanFilter(_GraftTransformer, KalmanFilterParams):
     _java_class = "graft.ml.LinearKalmanFilter"
 
     def __init__(self, stateSize=None, measurementSize=None):
-        super(LinearKalmanFilter, self).__init__()
-        if stateSize is not None:
-            self.setStateSize(stateSize)
-        if measurementSize is not None:
-            self.setMeasurementSize(measurementSize)
+        super(LinearKalmanFilter, self).__init__(
+            stateSize=stateSize, measurementSize=measurementSize)
 
 
-class LinearKalmanSmoother(_GraftTransformer, KalmanFilterParams):
+class LinearKalmanSmoother(_GraftTransformer):
     """Rauch-Tung-Striebel smoother Pipeline stage: full forward filter pass
     + backward smoothing recursion per key (fixed-lag when ``fixedLag`` is
     set). Parity: reference python/artan/smoother/linear_kalman_smoother.py."""
 
     _java_class = "graft.ml.LinearKalmanSmoother"
 
-    fixedLag = Param(
-        Params._dummy(), "fixedLag",
-        "smooth over a bounded trailing window instead of the full pass",
-        typeConverter=TypeConverters.toInt)
-
     def __init__(self, stateSize=None, measurementSize=None):
-        super(LinearKalmanSmoother, self).__init__()
-        if stateSize is not None:
-            self.setStateSize(stateSize)
-        if measurementSize is not None:
-            self.setMeasurementSize(measurementSize)
-
-    def setFixedLag(self, value):
-        """Smooth over a bounded trailing window of this length."""
-        return self._set(fixedLag=value)
-
-    def getFixedLag(self):
-        return self.getOrDefault(self.fixedLag)
+        super(LinearKalmanSmoother, self).__init__(
+            stateSize=stateSize, measurementSize=measurementSize)
 
 
-class _NamedFamilyParams(Params):
-    """The named-measurement-family param shared by the nonlinear filters."""
-
-    measurementFunctionFamily = Param(
-        Params._dummy(), "measurementFunctionFamily",
-        "named measurement function family g in h(x) = g(H*x): "
-        "'square' (quadratic link) or 'exp' (GLM log link)",
-        typeConverter=TypeConverters.toString)
-
-    def setMeasurementFunctionFamily(self, value):
-        """Set the named measurement family: 'square' or 'exp'."""
-        return self._set(measurementFunctionFamily=value)
-
-    def getMeasurementFunctionFamily(self):
-        return self.getOrDefault(self.measurementFunctionFamily)
-
-
-class ExtendedKalmanFilter(_GraftTransformer, KalmanFilterParams,
-                           _NamedFamilyParams):
+class ExtendedKalmanFilter(_GraftTransformer):
     """Extended Kalman filter Pipeline stage with a NAMED measurement
     family: ``h(x) = g(H·x)`` with g = 'square' or 'exp' (the GLM log link
     of the reference's EKFRateSourceGLMLog example); the analytic jacobian
@@ -504,15 +181,11 @@ class ExtendedKalmanFilter(_GraftTransformer, KalmanFilterParams,
     _java_class = "graft.ml.ExtendedKalmanFilter"
 
     def __init__(self, stateSize=None, measurementSize=None):
-        super(ExtendedKalmanFilter, self).__init__()
-        if stateSize is not None:
-            self.setStateSize(stateSize)
-        if measurementSize is not None:
-            self.setMeasurementSize(measurementSize)
+        super(ExtendedKalmanFilter, self).__init__(
+            stateSize=stateSize, measurementSize=measurementSize)
 
 
-class UnscentedKalmanFilter(_GraftTransformer, KalmanFilterParams,
-                            _NamedFamilyParams):
+class UnscentedKalmanFilter(_GraftTransformer):
     """Unscented Kalman filter Pipeline stage with named measurement
     families ('square' / 'exp') and the full sigma-point surface (merwe /
     julier) plus RAUKF adaptive process noise. Reference parity point:
@@ -520,89 +193,12 @@ class UnscentedKalmanFilter(_GraftTransformer, KalmanFilterParams,
 
     _java_class = "graft.ml.UnscentedKalmanFilter"
 
-    sigmaPoints = Param(
-        Params._dummy(), "sigmaPoints",
-        "sigma point algorithm: merwe or julier",
-        typeConverter=TypeConverters.toString)
-
-    merweAlpha = Param(Params._dummy(), "merweAlpha", "merwe alpha",
-                       typeConverter=TypeConverters.toFloat)
-
-    merweBeta = Param(Params._dummy(), "merweBeta", "merwe beta",
-                      typeConverter=TypeConverters.toFloat)
-
-    merweKappa = Param(Params._dummy(), "merweKappa", "merwe kappa",
-                       typeConverter=TypeConverters.toFloat)
-
-    julierKappa = Param(Params._dummy(), "julierKappa", "julier kappa",
-                        typeConverter=TypeConverters.toFloat)
-
-    adaptiveProcessNoise = Param(
-        Params._dummy(), "adaptiveProcessNoise",
-        "enable RAUKF adaptive process noise",
-        typeConverter=TypeConverters.toBoolean)
-
-    adaptiveProcessNoiseThreshold = Param(
-        Params._dummy(), "adaptiveProcessNoiseThreshold",
-        "squared-mahalanobis residual threshold activating noise adaptation",
-        typeConverter=TypeConverters.toFloat)
-
-    adaptiveProcessNoiseLambda = Param(
-        Params._dummy(), "adaptiveProcessNoiseLambda",
-        "stability weight floor for noise updates",
-        typeConverter=TypeConverters.toFloat)
-
-    adaptiveProcessNoiseAlpha = Param(
-        Params._dummy(), "adaptiveProcessNoiseAlpha",
-        "threshold scale in the adaptation weight",
-        typeConverter=TypeConverters.toFloat)
-
     def __init__(self, stateSize=None, measurementSize=None):
-        super(UnscentedKalmanFilter, self).__init__()
-        if stateSize is not None:
-            self.setStateSize(stateSize)
-        if measurementSize is not None:
-            self.setMeasurementSize(measurementSize)
-
-    def setSigmaPoints(self, value):
-        """Set the sigma point algorithm: 'merwe' or 'julier'."""
-        return self._set(sigmaPoints=value)
-
-    def setMerweAlpha(self, value):
-        """Set merwe alpha."""
-        return self._set(merweAlpha=value)
-
-    def setMerweBeta(self, value):
-        """Set merwe beta."""
-        return self._set(merweBeta=value)
-
-    def setMerweKappa(self, value):
-        """Set merwe kappa."""
-        return self._set(merweKappa=value)
-
-    def setJulierKappa(self, value):
-        """Set julier kappa."""
-        return self._set(julierKappa=value)
-
-    def setEnableAdaptiveProcessNoise(self):
-        """Enable RAUKF adaptive process noise."""
-        return self._set(adaptiveProcessNoise=True)
-
-    def setAdaptiveProcessNoiseThreshold(self, value):
-        """Set the adaptation activation threshold."""
-        return self._set(adaptiveProcessNoiseThreshold=value)
-
-    def setAdaptiveProcessNoiseLambda(self, value):
-        """Set the stability weight floor."""
-        return self._set(adaptiveProcessNoiseLambda=value)
-
-    def setAdaptiveProcessNoiseAlpha(self, value):
-        """Set the threshold scale."""
-        return self._set(adaptiveProcessNoiseAlpha=value)
+        super(UnscentedKalmanFilter, self).__init__(
+            stateSize=stateSize, measurementSize=measurementSize)
 
 
-class CubatureKalmanFilter(_GraftTransformer, KalmanFilterParams,
-                           _NamedFamilyParams):
+class CubatureKalmanFilter(_GraftTransformer):
     """Cubature Kalman filter Pipeline stage with named measurement
     families ('square' / 'exp'). Like the EKF/UKF, an overtake over the
     reference's python surface."""
@@ -610,340 +206,60 @@ class CubatureKalmanFilter(_GraftTransformer, KalmanFilterParams,
     _java_class = "graft.ml.CubatureKalmanFilter"
 
     def __init__(self, stateSize=None, measurementSize=None):
-        super(CubatureKalmanFilter, self).__init__()
-        if stateSize is not None:
-            self.setStateSize(stateSize)
-        if measurementSize is not None:
-            self.setMeasurementSize(measurementSize)
+        super(CubatureKalmanFilter, self).__init__(
+            stateSize=stateSize, measurementSize=measurementSize)
 
 
-# --------------------------------------------------------------------------
-# Online regression
-
-class OnlineRegressionParams(HasStatefulParams):
-    """Shared params of the online regression filters (RLS/LMS)."""
-
-    featuresSize = Param(
-        Params._dummy(), "featuresSize", "dimension of the feature vector",
-        typeConverter=TypeConverters.toInt)
-
-    labelCol = Param(
-        Params._dummy(), "labelCol", "label column",
-        typeConverter=TypeConverters.toString)
-
-    featuresCol = Param(
-        Params._dummy(), "featuresCol", "features column",
-        typeConverter=TypeConverters.toString)
-
-    initialEstimate = Param(
-        Params._dummy(), "initialEstimate",
-        "initial coefficient estimate; default zeros",
-        typeConverter=TypeConverters.toVector)
-
-    initialEstimateCol = Param(
-        Params._dummy(), "initialEstimateCol",
-        "per-key initial estimate column",
-        typeConverter=TypeConverters.toString)
-
-    def setFeaturesSize(self, value):
-        """Set the feature vector dimension."""
-        return self._set(featuresSize=value)
-
-    def getFeaturesSize(self):
-        return self.getOrDefault(self.featuresSize)
-
-    def setLabelCol(self, value):
-        """Set the label column."""
-        return self._set(labelCol=value)
-
-    def setFeaturesCol(self, value):
-        """Set the features column."""
-        return self._set(featuresCol=value)
-
-    def setInitialEstimate(self, value):
-        """Set the constant initial coefficient estimate (Vector)."""
-        return self._set(initialEstimate=value)
-
-    def setInitialEstimateCol(self, value):
-        """Set the per-key initial estimate column."""
-        return self._set(initialEstimateCol=value)
-
-
-class RecursiveLeastSquaresFilter(_GraftTransformer, OnlineRegressionParams):
+class RecursiveLeastSquaresFilter(_GraftTransformer):
     """Recursive least squares Pipeline stage: online linear regression with
     exponential forgetting, one model per key. Parity: reference
     python/artan/filter/recursive_least_squares_filter.py."""
 
     _java_class = "graft.ml.RecursiveLeastSquaresFilter"
 
-    forgettingFactor = Param(
-        Params._dummy(), "forgettingFactor",
-        "exponential forgetting factor in (0, 1]",
-        typeConverter=TypeConverters.toFloat)
-
-    regularizationMatrix = Param(
-        Params._dummy(), "regularizationMatrix",
-        "initial inverse-regularization matrix P0; default 1e5 * I",
-        typeConverter=TypeConverters.toMatrix)
-
-    regularizationMatrixFactor = Param(
-        Params._dummy(), "regularizationMatrixFactor", "P0 = factor * I",
-        typeConverter=TypeConverters.toFloat)
-
-    regularizationMatrixCol = Param(
-        Params._dummy(), "regularizationMatrixCol", "per-key P0 column",
-        typeConverter=TypeConverters.toString)
-
     def __init__(self, featuresSize=None):
-        super(RecursiveLeastSquaresFilter, self).__init__()
-        if featuresSize is not None:
-            self.setFeaturesSize(featuresSize)
-
-    def setForgettingFactor(self, value):
-        """Set the forgetting factor in (0, 1]."""
-        return self._set(forgettingFactor=value)
-
-    def getForgettingFactor(self):
-        return self.getOrDefault(self.forgettingFactor)
-
-    def setRegularizationMatrix(self, value):
-        """Set the initial inverse-regularization matrix P0."""
-        return self._set(regularizationMatrix=value)
-
-    def setRegularizationMatrixFactor(self, value):
-        """Set P0 = factor * I."""
-        return self._set(regularizationMatrixFactor=value)
-
-    def setRegularizationMatrixCol(self, value):
-        """Set the per-key P0 column."""
-        return self._set(regularizationMatrixCol=value)
+        super(RecursiveLeastSquaresFilter, self).__init__(featuresSize=featuresSize)
 
 
-class LeastMeanSquaresFilter(_GraftTransformer, OnlineRegressionParams):
+class LeastMeanSquaresFilter(_GraftTransformer):
     """Normalized least-mean-squares Pipeline stage. Parity: reference
     python/artan/filter/least_mean_squares_filter.py."""
 
     _java_class = "graft.ml.LeastMeanSquaresFilter"
 
-    learningRate = Param(
-        Params._dummy(), "learningRate", "LMS step size mu",
-        typeConverter=TypeConverters.toFloat)
-
-    regularization = Param(
-        Params._dummy(), "regularization",
-        "normalization constant eps in mu / (eps + x'x)",
-        typeConverter=TypeConverters.toFloat)
-
     def __init__(self, featuresSize=None):
-        super(LeastMeanSquaresFilter, self).__init__()
-        if featuresSize is not None:
-            self.setFeaturesSize(featuresSize)
-
-    def setLearningRate(self, value):
-        """Set the LMS step size."""
-        return self._set(learningRate=value)
-
-    def getLearningRate(self):
-        return self.getOrDefault(self.learningRate)
-
-    def setRegularization(self, value):
-        """Set the normalization constant."""
-        return self._set(regularization=value)
+        super(LeastMeanSquaresFilter, self).__init__(featuresSize=featuresSize)
 
 
-# --------------------------------------------------------------------------
-# Online mixtures
-
-class MixtureParams(HasStatefulParams):
-    """Shared params of the online mixture estimators."""
-
-    mixtureCount = Param(
-        Params._dummy(), "mixtureCount", "number of mixture components",
-        typeConverter=TypeConverters.toInt)
-
-    sampleCol = Param(
-        Params._dummy(), "sampleCol", "sample column",
-        typeConverter=TypeConverters.toString)
-
-    stepSize = Param(
-        Params._dummy(), "stepSize", "fixed stochastic-EM step size",
-        typeConverter=TypeConverters.toFloat)
-
-    decayRate = Param(
-        Params._dummy(), "decayRate",
-        "step decays as (2+t)^(-decayRate); negative disables decay",
-        typeConverter=TypeConverters.toFloat)
-
-    minibatchSize = Param(
-        Params._dummy(), "minibatchSize",
-        "samples buffered per stochastic-EM step",
-        typeConverter=TypeConverters.toInt)
-
-    updateHoldout = Param(
-        Params._dummy(), "updateHoldout",
-        "steps before emitted params start updating",
-        typeConverter=TypeConverters.toInt)
-
-    initialWeights = Param(
-        Params._dummy(), "initialWeights",
-        "initial component weights; default uniform",
-        typeConverter=TypeConverters.toListFloat)
-
-    initialMixtureModelCol = Param(
-        Params._dummy(), "initialMixtureModelCol",
-        "struct column (weights, params) carrying a per-key initial mixture "
-        "model (warm start)",
-        typeConverter=TypeConverters.toString)
-
-    enableBatchTrain = Param(
-        Params._dummy(), "enableBatchTrain",
-        "full-batch EM per key instead of online stochastic EM",
-        typeConverter=TypeConverters.toBoolean)
-
-    batchTrainMaxIter = Param(
-        Params._dummy(), "batchTrainMaxIter",
-        "max EM iterations in batch train mode",
-        typeConverter=TypeConverters.toInt)
-
-    batchTrainTol = Param(
-        Params._dummy(), "batchTrainTol",
-        "mean-loglikelihood improvement stopping tolerance",
-        typeConverter=TypeConverters.toFloat)
-
-    def setMixtureCount(self, value):
-        """Set the number of mixture components."""
-        return self._set(mixtureCount=value)
-
-    def getMixtureCount(self):
-        return self.getOrDefault(self.mixtureCount)
-
-    def setSampleCol(self, value):
-        """Set the sample column."""
-        return self._set(sampleCol=value)
-
-    def setStepSize(self, value):
-        """Set the fixed stochastic-EM step size in (0, 1]."""
-        return self._set(stepSize=value)
-
-    def getStepSize(self):
-        return self.getOrDefault(self.stepSize)
-
-    def setDecayRate(self, value):
-        """Set the step decay exponent (negative disables)."""
-        return self._set(decayRate=value)
-
-    def setMinibatchSize(self, value):
-        """Set the samples buffered per stochastic-EM step."""
-        return self._set(minibatchSize=value)
-
-    def setUpdateHoldout(self, value):
-        """Set the steps before emitted params start updating."""
-        return self._set(updateHoldout=value)
-
-    def setInitialWeights(self, value):
-        """Set the initial component weights."""
-        return self._set(initialWeights=value)
-
-    def setInitialMixtureModelCol(self, value):
-        """Set the per-key initial mixture model struct column."""
-        return self._set(initialMixtureModelCol=value)
-
-    def setEnableBatchTrain(self):
-        """Run full-batch EM per key (batch DataFrames only)."""
-        return self._set(enableBatchTrain=True)
-
-    def setBatchTrainMaxIter(self, value):
-        """Set max EM iterations in batch train mode."""
-        return self._set(batchTrainMaxIter=value)
-
-    def setBatchTrainTol(self, value):
-        """Set the batch-EM stopping tolerance."""
-        return self._set(batchTrainTol=value)
-
-
-class MultivariateGaussianMixture(_GraftTransformer, MixtureParams):
+class MultivariateGaussianMixture(_GraftTransformer):
     """Online multivariate gaussian mixture Pipeline stage. Parity:
     reference python/artan/mixture/multivariate_gaussian_mixture.py."""
 
     _java_class = "graft.ml.MultivariateGaussianMixture"
 
-    sampleSize = Param(
-        Params._dummy(), "sampleSize", "dimension of the samples",
-        typeConverter=TypeConverters.toInt)
-
-    initialMeans = Param(
-        Params._dummy(), "initialMeans",
-        "initial component means (mixtureCount x sampleSize)",
-        typeConverter=TypeConverters.toListListFloat)
-
-    initialCovariances = Param(
-        Params._dummy(), "initialCovariances",
-        "initial component covariances, row-major "
-        "(mixtureCount x sampleSize^2)",
-        typeConverter=TypeConverters.toListListFloat)
-
     def __init__(self, mixtureCount=None, sampleSize=None):
-        super(MultivariateGaussianMixture, self).__init__()
-        if mixtureCount is not None:
-            self.setMixtureCount(mixtureCount)
-        if sampleSize is not None:
-            self.setSampleSize(sampleSize)
-
-    def setSampleSize(self, value):
-        """Set the sample dimension."""
-        return self._set(sampleSize=value)
-
-    def getSampleSize(self):
-        return self.getOrDefault(self.sampleSize)
-
-    def setInitialMeans(self, value):
-        """Set the initial component means (list of lists)."""
-        return self._set(initialMeans=value)
-
-    def setInitialCovariances(self, value):
-        """Set the initial component covariances (row-major lists)."""
-        return self._set(initialCovariances=value)
+        super(MultivariateGaussianMixture, self).__init__(
+            mixtureCount=mixtureCount, sampleSize=sampleSize)
 
 
-class PoissonMixture(_GraftTransformer, MixtureParams):
+class PoissonMixture(_GraftTransformer):
     """Online Poisson mixture Pipeline stage. Parity: reference
     python/artan/mixture/poisson_mixture.py."""
 
     _java_class = "graft.ml.PoissonMixture"
 
-    initialRates = Param(
-        Params._dummy(), "initialRates", "initial component rates",
-        typeConverter=TypeConverters.toListFloat)
-
     def __init__(self, mixtureCount=None):
-        super(PoissonMixture, self).__init__()
-        if mixtureCount is not None:
-            self.setMixtureCount(mixtureCount)
-
-    def setInitialRates(self, value):
-        """Set the initial component rates."""
-        return self._set(initialRates=value)
+        super(PoissonMixture, self).__init__(mixtureCount=mixtureCount)
 
 
-class BernoulliMixture(_GraftTransformer, MixtureParams):
+class BernoulliMixture(_GraftTransformer):
     """Online Bernoulli mixture Pipeline stage. Parity: reference
     python/artan/mixture/bernoulli_mixture.py."""
 
     _java_class = "graft.ml.BernoulliMixture"
 
-    initialProbabilities = Param(
-        Params._dummy(), "initialProbabilities",
-        "initial component probabilities",
-        typeConverter=TypeConverters.toListFloat)
-
     def __init__(self, mixtureCount=None):
-        super(BernoulliMixture, self).__init__()
-        if mixtureCount is not None:
-            self.setMixtureCount(mixtureCount)
-
-    def setInitialProbabilities(self, value):
-        """Set the initial component probabilities."""
-        return self._set(initialProbabilities=value)
+        super(BernoulliMixture, self).__init__(mixtureCount=mixtureCount)
 
 
 __all__ = [

@@ -3,7 +3,7 @@ package graft
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.dedup.MinHashLSH
+import graft.dedup.{MinHashLSH, SetVerify}
 import graft.operators.CorpusStats
 import graft.sim.{ProductQuantizer, Similarity}
 import graft.text.TextFunctions
@@ -119,16 +119,16 @@ object CurationQueries {
       val lsh = new MinHashLSH(32, 8, 3)
       val sigs = lsh.signatures(corpus, "doc_id", "text")
       val cand = lsh.bandPairs(lsh.bandedFromSigs(sigs, "doc_id"), "doc_id")
-      val sa = sigs.select(col("doc_id").as("a"), col("sig").as("siga"), col("sset").as("seta"))
-      val sb = sigs.select(col("doc_id").as("b"), col("sig").as("sigb"), col("sset").as("setb"))
-      val inter = size(array_intersect(col("seta"), col("setb")))
-      cand.join(sa, Seq("a")).join(sb, Seq("b"))
+      val sa = sigs.select(col("doc_id").as("a"), col("sig").as("siga"),
+        SetVerify.sorted(col("sset")).as("set_a"))
+      val sb = sigs.select(col("doc_id").as("b"), col("sig").as("sigb"),
+        SetVerify.sorted(col("sset")).as("set_b"))
+      SetVerify.withOverlap(cand.join(sa, Seq("a")).join(sb, Seq("b")))
         .select(col("a"), col("b"),
           aggregate(
             zip_with(col("siga"), col("sigb"), (x, y) => when(x === y, 1L).otherwise(0L)),
             lit(0L), _ + _).as("n_eq_sig"),
-          inter.cast("long").as("n_inter"),
-          (size(col("seta")) + size(col("setb")) - inter).cast("long").as("n_union"))
+          col("n_inter"), col("n_union"))
         .orderBy(col("a"), col("b"))
     }),
 

@@ -603,12 +603,15 @@ private[graft] object SignatureStore {
  * containment index and the prefix-filter τ-join): attach both sides'
  * sorted sets to a candidate pair table, then count their overlap.
  */
-private[dedup] object SetVerify {
+private[graft] object SetVerify {
 
-  /** (sid, sset) with `sset` sorted: sort_array canonicalizes the set for
-    * the merge-count verify kernel (round 13). */
+  /** A set column sorted: sort_array canonicalizes the set for the
+    * merge-count verify kernel (round 13). */
+  def sorted(set: Column): Column = sort_array(set)
+
+  /** (sid, sset) with `sset` [[sorted]]. */
   def sortedSets(sigs: DataFrame, idCol: String): DataFrame =
-    sigs.select(col(idCol).as("sid"), sort_array(col("sset")).as("sset"))
+    sigs.select(col(idCol).as("sid"), sorted(col("sset")).as("sset"))
 
   /** `pairs` (a, b, ...) joined with `sets` (sid, sset, sorted) on each side
     * as set_a and set_b. A caller that needs a join strategy hints `sets`:
@@ -663,10 +666,6 @@ object SimHash {
   /** The 60-bit simhash fingerprint of a document. */
   def simhash(text: Column): Column =
     simhashFromToks(graft.functions.HashExpressions.tokenHashes(text, Bits))
-
-  /** One row per chunk: (id, chunk index, 15-bit chunk value, simhash). */
-  def chunked(df: DataFrame, idCol: String, textCol: String): DataFrame =
-    chunksOf(fingerprints(df, idCol, textCol), idCol)
 
   /** (id, simhash). Token hashes materialize in their own projection so the
     * 60 per-bit counters share one tokenization pass. */

@@ -393,16 +393,9 @@ object Similarity {
     graft.functions.VectorExpressions.nearestCentroidHier(vec, kernel).as("cell")
   }
 
-  /** IVF top-k: probe the query's `nprobe` nearest cells, exact cosine rank
-    * within the probed cells. `numCentroids` is the fixed quantizer size. */
-  def ivfTopK(
-      corpus: DataFrame, queries: DataFrame,
-      idCol: String, vecCol: String, qidCol: String, qvecCol: String,
-      k: Int, numCentroids: Int, nprobe: Int, roundTo: Int = 6): DataFrame =
-    ivfTopKWith(ivfTrain(corpus, idCol, vecCol, numCentroids),
-      corpus, queries, idCol, vecCol, qidCol, qvecCol, k, nprobe, roundTo)
-
-  /** IVF top-k search against a precomputed quantizer (sampled or k-means). */
+  /** IVF top-k: probe the query's `nprobe` nearest cells of a precomputed
+    * quantizer (sampled or k-means), exact cosine rank within the probed
+    * cells. */
   def ivfTopKWith(
       cents: Array[(Long, Array[Double])],
       corpus: DataFrame, queries: DataFrame,

@@ -4,9 +4,18 @@ composition (fit + transform), param get/set introspection, param-map
 extraction, and save/load persistence — standalone AND inside a Pipeline —
 the reference's python contract (python/artan/tests/test_filters.py intent).
 
+The Python stages declare their Params from the JVM stages, so this also
+pins that surface: every set*/get* binding of the hand-written stages the
+JVM-declared ones replaced (tools/fixtures/ml_surface.json) still resolves,
+each stage's Params equal its JVM twin's, unset getters read the Scala
+defaults, setter side effects come from Scala, and a PipelineModel saved by
+those hand-written stages (tools/fixtures/ml_pipeline_model, with its
+transform rows in ml_pipeline_rows.json) loads and reproduces its rows.
+
 Usage: python3 tools/pyspark_ml_smoke.py
 """
 import glob
+import json
 import os
 import shutil
 import sys
@@ -44,6 +53,86 @@ spark = (SparkSession.builder.master("local[4]")
 spark.sparkContext.setLogLevel("WARN")
 
 workdir = tempfile.mkdtemp(prefix="graft_ml_smoke_")
+FIXTURES = os.path.join(HERE, "fixtures")
+STAGES = {cls.__name__: cls for cls in (
+    LinearKalmanFilter, LinearKalmanSmoother, ExtendedKalmanFilter,
+    UnscentedKalmanFilter, CubatureKalmanFilter, RecursiveLeastSquaresFilter,
+    LeastMeanSquaresFilter, MultivariateGaussianMixture, PoissonMixture,
+    BernoulliMixture)}
+
+# ------------------------------------------------- surface pin
+
+instances = {name: cls() for name, cls in STAGES.items()}
+with open(os.path.join(FIXTURES, "ml_surface.json")) as f:
+    surface = json.load(f)
+assert len(surface) == 367, len(surface)
+missing = [b for b in surface
+           if not callable(getattr(instances[b.split(".")[0]], b.split(".")[1], None))]
+assert not missing, missing
+print("PASS surface: all", len(surface), "set*/get* bindings resolve")
+
+# ------------------------------------------------- param parity with the JVM
+
+FUNCTION_PARAMS = {"processFunction", "measurementFunction",
+                   "processStateJacobian", "processNoiseJacobian",
+                   "measurementStateJacobian", "measurementNoiseJacobian"}
+PARAM_COUNTS = {"LinearKalmanFilter": 32, "LinearKalmanSmoother": 33,
+                "ExtendedKalmanFilter": 33, "UnscentedKalmanFilter": 42,
+                "CubatureKalmanFilter": 33, "RecursiveLeastSquaresFilter": 14,
+                "LeastMeanSquaresFilter": 12, "MultivariateGaussianMixture": 19,
+                "PoissonMixture": 17, "BernoulliMixture": 17}
+for name, stage in instances.items():
+    py_names = sorted(p.name for p in stage.params)
+    jvm_names = sorted(set(p.name() for p in stage._java_obj.params()) - FUNCTION_PARAMS)
+    assert py_names == jvm_names, (name, set(py_names) ^ set(jvm_names))
+    assert len(py_names) == PARAM_COUNTS[name], (name, len(py_names))
+print("PASS parity: each stage's Params are its JVM twin's minus the function-valued ones")
+
+# ------------------------------------------------- Scala defaults reach Python
+
+assert LinearKalmanFilter(2, 1).getFadingFactor() == 1.0
+ukf_defaults = UnscentedKalmanFilter(2, 1)
+assert ukf_defaults.getSigmaPoints() == "merwe" and ukf_defaults.getMerweAlpha() == 0.3
+assert MultivariateGaussianMixture(2, 1).getBatchTrainMaxIter() == 30
+for name, stage in instances.items():
+    for p in stage.params:
+        jp = stage._java_obj.getParam(p.name)
+        if stage._java_obj.hasDefault(jp):
+            assert stage.getOrDefault(p) == stage._java_obj.getDefault(jp).get(), (name, p.name)
+print("PASS defaults: unset getters read the Scala defaults")
+
+# ------------------------------------------------- setter side effects (Scala's)
+
+win = LinearKalmanFilter(2, 1).setSlidingLikelihoodWindow(3)
+assert win.getSlidingLikelihoodWindow() == 3
+assert win.getCalculateSlidingLikelihood() is True
+mmae = LinearKalmanFilter(2, 1).setEnableMultipleModelAdaptiveEstimation()
+assert mmae.getMultipleModelAdaptiveEstimation() is True
+assert mmae.getCalculateSlidingLikelihood() is True
+raukf = UnscentedKalmanFilter(2, 1).setEnableAdaptiveProcessNoise()
+assert raukf.getAdaptiveProcessNoise() is True
+coerced = LinearKalmanFilter(2, 1).setFadingFactor(1).setMultiStepPredict(2.0)
+assert coerced.getFadingFactor() == 1.0 and coerced.getMultiStepPredict() == 2
+weights = PoissonMixture(2).setInitialWeights([1, 3])
+assert weights.getInitialWeights() == [1.0, 3.0]
+print("PASS setters: side effects and argument conversion come from the JVM setter")
+
+# ------------------------------------------------- load compatibility
+
+with open(os.path.join(FIXTURES, "ml_pipeline_rows.json")) as f:
+    saved = json.load(f)
+saved_df = (spark.createDataFrame(saved["input"], "key string, idx int, trend double")
+            .select("key", F.timestamp_seconds(F.lit(1700000000) + F.col("idx") * 60)
+                    .alias("ts"), "trend"))
+saved_model = PipelineModel.load(os.path.join(FIXTURES, "ml_pipeline_model"))
+assert [type(st).__name__ for st in saved_model.stages] == \
+    ["VectorAssembler", "LinearKalmanFilter", "MultivariateGaussianMixture"]
+assert saved_model.stages[2].getInitialWeights() == [0.4, 0.6]
+reloaded = [json.loads(r) for r in saved_model.transform(saved_df)
+            .withColumn("ts", F.col("ts").cast("long"))
+            .orderBy("key", "stateIndex").toJSON().collect()]
+assert reloaded == saved["output"], (reloaded[:2], saved["output"][:2])
+print("PASS load: the saved PipelineModel loads and reproduces its", len(reloaded), "rows")
 
 # ------------------------------------------------- params get/set round-trip
 

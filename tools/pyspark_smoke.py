@@ -4,7 +4,10 @@ estimators from PySpark through the wrappers (no raw spark._jvm in user code)
 and assert they produce correct estimates. Driver-side tooling (like
 local_verify.py) — the library itself stays Scala-only.
 
-Usage: python3 tools/pyspark_smoke.py
+Usage: python3 tools/pyspark_smoke.py <sf-dir>
+
+<sf-dir> is a test-data directory holding embeddings.parquet (the ANN
+sections read it); without the argument, $SPARK_GRAFT_SF_DIR.
 """
 import glob
 import os
@@ -14,6 +17,9 @@ HERE = os.path.dirname(os.path.abspath(__file__))
 CLASSES = os.path.join(HERE, "..", "target", "scala-2.13", "classes")
 if not glob.glob(os.path.join(CLASSES, "graft", "filter", "LinearKalmanFilter*.class")):
     sys.exit("compile first: sbt compile")
+SF_DIR = sys.argv[1] if len(sys.argv) > 1 else os.environ.get("SPARK_GRAFT_SF_DIR")
+if not SF_DIR:
+    sys.exit("usage: python3 tools/pyspark_smoke.py <sf-dir with embeddings.parquet>")
 
 # Prefer the INSTALLED package (python/setup.py: `python3 setup.py develop
 # --user`, or `pip install -e python/ --no-build-isolation` where the wheel
@@ -700,6 +706,74 @@ auc = auc_by_group(
 # 3 wins + 1 tie of 4 pairs -> 0.875
 assert len(auc) == 1 and auc[0]["auc_micro"] == 875000, auc
 print("PASS auc_by_group")
+
+# ------------------------------------------ Unicode, fuzzy join, payloads
+
+import graft
+
+# NFC: the NFD spelling (e + U+0301) must fold onto the composed bytes
+nfd = "résumé data"
+nfc = "résumé data"
+df = spark.createDataFrame(
+    [(1, nfd), (2, nfc), (3, "Привет мир")],
+    ["doc_id", "text"])
+out = df.select("doc_id",
+                F.length(graft.nfc_normalize(F.col("text"))).alias("n"),
+                graft.dominant_script(graft.script_counts(F.col("text"))).alias("s"),
+                F.size(graft.u_tokens(F.col("text"))).alias("t")).collect()
+m = {r[0]: (r[1], r[2], r[3]) for r in out}
+assert m[1] == m[2] == (11, "latn", 2), m
+assert m[3][1] == "cyrl" and m[3][2] == 2, m
+
+fz = spark.createDataFrame(
+    [(1, "alpha bravo charlie delta echo foxtrot"),
+     (2, "alpxha bravo charlie delta echo foxtrot")], ["doc_id", "text"])
+pairs = graft.fuzzy_pairs_indel(fz, "doc_id", "text").collect()
+assert len(pairs) == 1 and pairs[0]["a"] == 1 and pairs[0]["b"] == 2, pairs
+
+# CJK per-codepoint tokenization (round 12): a Han sentence is one token
+# per codepoint, not one run-token; Thai stays a run
+df = spark.createDataFrame(
+    [(1, "世界模型"), (2, "สวัสดีชาวโลก"), (3, "hello world")], ["doc_id", "text"])
+out = {r[0]: r[1] for r in
+       df.select("doc_id", F.size(graft.u_tokens(F.col("text"))).alias("n")).collect()}
+assert out == {1: 4, 2: 1, 3: 2}, out
+
+# cross-format BMP <-> JPEG dedup: same mosaic raster, different container,
+# one dHash cluster per doc
+docs = spark.createDataFrame(
+    [(1, "a deterministic document body for the mosaic raster"),
+     (2, "another, different document body with other bytes")],
+    ["doc_id", "text"])
+bmp = graft.with_mosaic_bmp_payload(docs, "text")
+jpg = graft.with_jpeg_payload(
+    docs.select((F.col("doc_id") + 100).alias("doc_id"), "text"), "text")
+ph = graft.perceptual_hash(bmp.select("doc_id", "payload")
+                           .unionAll(jpg.select("doc_id", "payload")),
+                           "doc_id", "payload").collect()
+h = {r[0]: r[1] for r in ph}
+assert h[1] == h[101] and h[2] == h[102] and h[1] != h[2], h
+print("PASS unicode text path, indel fuzzy join, cross-format payload dedup")
+
+# ------------------------------------------------------- incremental ANN
+
+emb = spark.read.parquet(os.path.join(SF_DIR, "embeddings.parquet"))
+hist = emb.where(F.col("vec_id") % 3 != 0)
+batch = emb.where(F.col("vec_id") % 3 == 0).select(
+    F.col("vec_id").alias("qid"), F.col("embedding").alias("qv"))
+r1 = graft.ann_incremental(hist, batch, "vec_id", "embedding", "qid", "qv",
+                           k=3, nprobe=2, num_centroids=8, iters=1)
+assert r1.count() > 0
+r2 = graft.ann_incremental_kscaled(hist, batch, "vec_id", "embedding",
+                                   "qid", "qv", k=3, num_centroids=16, iters=1)
+assert r2.count() > 0
+
+# k-scaled incremental ANN returns a clean per-query rank ladder
+r = graft.ann_incremental_kscaled(hist, batch, "vec_id", "embedding",
+                                  "qid", "qv", k=3, num_centroids=21, iters=1)
+rows = r.collect()
+assert rows and all(1 <= x["rank"] <= 3 for x in rows), rows[:5]
+print("PASS ann_incremental + ann_incremental_kscaled")
 
 spark.stop()
 print("PASS: round-8 wave-2 + wave-3 + wave-6 + wave-7 + wave-8 + wave-9 wrappers")
