@@ -367,40 +367,18 @@ object ModelQueries {
     "q_video_dedup" -> ((s, dir) => {
       // the video leg: middle-frame dHash groups containers whose sampled
       // frame renders identically despite byte-different sources
-      val docs = t(s, dir, "documents").where(col("n_chars") > 130)
-        .select(col("doc_id"), col("text"))
-      val corpus = docs.unionAll(docs.select(
-        (col("doc_id") + 2100000000L).as("doc_id"),
-        concat(col("text").substr(lit(1), length(col("text")) - 1), lit("#")).as("text")))
+      val corpus = withByteVariants(dedupDocs(s, dir))
       val withVid = Multimodal.withVideoPayload(corpus, "text")
-      Multimodal.videoFingerprint(withVid, "doc_id", "payload")
-        .join(corpus.select(col("doc_id"), md5(col("text")).as("ch")), Seq("doc_id"))
-        .where(col("vfp").isNotNull) // poison rows = quarantine, not a dup cluster
-        .groupBy(col("vfp"))
-        .agg(count(lit(1)).as("n_members"),
-          countDistinct(col("ch")).as("n_contents"),
-          min(col("doc_id")).as("canonical_id"))
-        .orderBy(col("vfp"))
+      fingerprintGroups(Multimodal.videoFingerprint(withVid, "doc_id", "payload"), "vfp", corpus)
     }),
 
     "q_audio_dedup" -> ((s, dir) => {
       // the audio twin of q_image_dedup: byte-variant payloads decode to
       // the identical waveform (no sample reads the changed byte), so the
       // delta-sign fingerprint groups what byte-hash dedup splits
-      val docs = t(s, dir, "documents").where(col("n_chars") > 130)
-        .select(col("doc_id"), col("text"))
-      val corpus = docs.unionAll(docs.select(
-        (col("doc_id") + 2100000000L).as("doc_id"),
-        concat(col("text").substr(lit(1), length(col("text")) - 1), lit("#")).as("text")))
+      val corpus = withByteVariants(dedupDocs(s, dir))
       val withWav = Multimodal.withAudioPayload(corpus, "text")
-      Multimodal.audioFingerprint(withWav, "doc_id", "payload")
-        .join(corpus.select(col("doc_id"), md5(col("text")).as("ch")), Seq("doc_id"))
-        .where(col("afp").isNotNull) // poison rows = quarantine, not a dup cluster
-        .groupBy(col("afp"))
-        .agg(count(lit(1)).as("n_members"),
-          countDistinct(col("ch")).as("n_contents"),
-          min(col("doc_id")).as("canonical_id"))
-        .orderBy(col("afp"))
+      fingerprintGroups(Multimodal.audioFingerprint(withWav, "doc_id", "payload"), "afp", corpus)
     }),
 
     "q_image_dedup" -> ((s, dir) => {
@@ -409,20 +387,9 @@ object ModelQueries {
       // raster is pixel-identical (n > w*h, so no pixel samples the
       // changed byte) — byte-hash dedup misses the pair, the dHash over
       // the decoded raster catches it. Map-side decode + one hash agg.
-      val docs = t(s, dir, "documents").where(col("n_chars") > 130)
-        .select(col("doc_id"), col("text"))
-      val corpus = docs.unionAll(docs.select(
-        (col("doc_id") + 2100000000L).as("doc_id"),
-        concat(col("text").substr(lit(1), length(col("text")) - 1), lit("#")).as("text")))
+      val corpus = withByteVariants(dedupDocs(s, dir))
       val withBin = Multimodal.withImagePayload(corpus, "text")
-      Multimodal.perceptualHash(withBin, "doc_id", "payload")
-        .join(corpus.select(col("doc_id"), md5(col("text")).as("ch")), Seq("doc_id"))
-        .where(col("phash").isNotNull) // poison rows = quarantine, not a dup cluster
-        .groupBy(col("phash"))
-        .agg(count(lit(1)).as("n_members"),
-          countDistinct(col("ch")).as("n_contents"),
-          min(col("doc_id")).as("canonical_id"))
-        .orderBy(col("phash"))
+      fingerprintGroups(Multimodal.perceptualHash(withBin, "doc_id", "payload"), "phash", corpus)
     }),
 
     "q_image_dedup_png" -> ((s, dir) => {
@@ -432,26 +399,17 @@ object ModelQueries {
       // signature, chunk CRCs, zlib inflate, filter reconstruction). Three
       // byte-different payloads, two distinct texts, ONE decoded raster —
       // dHash groups all three; any byte-hash dedup sees three singletons.
-      val docs = t(s, dir, "documents").where(col("n_chars") > 130)
-        .select(col("doc_id"), col("text"))
-      val variant = docs.select(
-        (col("doc_id") + 2100000000L).as("doc_id"),
-        concat(col("text").substr(lit(1), length(col("text")) - 1), lit("#")).as("text"))
+      val docs = dedupDocs(s, dir)
+      val bmpDocs = withByteVariants(docs)
       val pngDocs = docs.select((col("doc_id") + 2400000000L).as("doc_id"), col("text"))
-      val bmpSide = Multimodal.withImagePayload(docs.unionAll(variant), "text")
+      val bmpSide = Multimodal.withImagePayload(bmpDocs, "text")
       val pngSide = Multimodal.withPngPayload(pngDocs, "text")
-      val corpus = docs.unionAll(variant).unionAll(pngDocs)
-      Multimodal.perceptualHash(
+      fingerprintGroups(
+        Multimodal.perceptualHash(
           bmpSide.select(col("doc_id"), col("payload"))
             .unionAll(pngSide.select(col("doc_id"), col("payload"))),
-          "doc_id", "payload")
-        .join(corpus.select(col("doc_id"), md5(col("text")).as("ch")), Seq("doc_id"))
-        .where(col("phash").isNotNull)
-        .groupBy(col("phash"))
-        .agg(count(lit(1)).as("n_members"),
-          countDistinct(col("ch")).as("n_contents"),
-          min(col("doc_id")).as("canonical_id"))
-        .orderBy(col("phash"))
+          "doc_id", "payload"),
+        "phash", bmpDocs.unionAll(pngDocs))
     }),
 
     "q_image_dedup_jpeg" -> ((s, dir) => {
@@ -463,25 +421,46 @@ object ModelQueries {
       // dHash groups the pair, byte-hash dedup sees two singletons. The
       // decode rides javax.imageio's actual JPEG path (marker parse,
       // Huffman decode, dequantize, IDCT, YCbCr→RGB).
-      val docs = t(s, dir, "documents").where(col("n_chars") > 130)
-        .select(col("doc_id"), col("text"))
+      val docs = dedupDocs(s, dir)
       val jpgDocs = docs.select((col("doc_id") + 2600000000L).as("doc_id"), col("text"))
       val bmpSide = Multimodal.withMosaicBmpPayload(docs, "text")
       val jpgSide = Multimodal.withJpegPayload(jpgDocs, "text")
-      val corpus = docs.unionAll(jpgDocs)
-      Multimodal.perceptualHash(
+      fingerprintGroups(
+        Multimodal.perceptualHash(
           bmpSide.select(col("doc_id"), col("payload"))
             .unionAll(jpgSide.select(col("doc_id"), col("payload"))),
-          "doc_id", "payload")
-        .join(corpus.select(col("doc_id"), md5(col("text")).as("ch")), Seq("doc_id"))
-        .where(col("phash").isNotNull)
-        .groupBy(col("phash"))
-        .agg(count(lit(1)).as("n_members"),
-          countDistinct(col("ch")).as("n_contents"),
-          min(col("doc_id")).as("canonical_id"))
-        .orderBy(col("phash"))
+          "doc_id", "payload"),
+        "phash", docs.unionAll(jpgDocs))
     })
   )
+
+  // ============================================================ media dedup
+
+  /** The media-dedup corpus: documents over 130 chars, `(doc_id, text)`. */
+  private def dedupDocs(s: SparkSession, dir: String): DataFrame =
+    t(s, dir, "documents").where(col("n_chars") > 130).select(col("doc_id"), col("text"))
+
+  /** `docs` plus one byte variant of each: id + 2100000000, last char
+    * replaced by `#` — a different md5 whose payload renders the same
+    * media (no pixel or sample reads the changed byte). */
+  private def withByteVariants(docs: DataFrame): DataFrame =
+    docs.unionAll(docs.select(
+      (col("doc_id") + 2100000000L).as("doc_id"),
+      concat(col("text").substr(lit(1), length(col("text")) - 1), lit("#")).as("text")))
+
+  /** The grouping step of the five media-dedup queries: joins each
+    * fingerprint row to the md5 of its `corpus` text, drops NULL
+    * fingerprints (poison rows = quarantine, not a dup cluster), and per
+    * fingerprint counts members and distinct contents and picks the
+    * smallest id, ordered by the fingerprint. */
+  private def fingerprintGroups(fps: DataFrame, fp: String, corpus: DataFrame): DataFrame =
+    fps.join(corpus.select(col("doc_id"), md5(col("text")).as("ch")), Seq("doc_id"))
+      .where(col(fp).isNotNull)
+      .groupBy(col(fp))
+      .agg(count(lit(1)).as("n_members"),
+        countDistinct(col("ch")).as("n_contents"),
+        min(col("doc_id")).as("canonical_id"))
+      .orderBy(col(fp))
 
   // ================================================================= oracles
 

@@ -4,7 +4,7 @@ import java.awt.image.BufferedImage
 import java.io.ByteArrayInputStream
 
 import javax.imageio.ImageIO
-import javax.sound.sampled.AudioSystem
+import javax.sound.sampled.{AudioFormat, AudioSystem}
 
 import org.apache.spark.sql.{DataFrame, Dataset, Encoder, Encoders}
 import org.apache.spark.sql.functions._
@@ -61,35 +61,46 @@ object Multimodal {
     (4 + b0 % 8, 4 + b1 % 8)
   }
 
-  /** A valid 24-bit bottom-up BMP whose gray pixel (x,y) = src[(y*w+x) mod n]
-    * (0 when src is empty). 54-byte header + 4-byte-aligned rows. */
-  private[graft] def buildBmp(src: Array[Byte]): Array[Byte] = {
-    val (w, h) = dims(src)
+  /** The gray value every builder's raster takes at cell (x, y) of a w-wide
+    * grid: src[(y*w + x) mod n], 0 when src is empty. A pixel for the plain
+    * contract ([[buildBmp]], [[buildPng]]), an 8×8 block for the mosaic one
+    * ([[buildBmpMosaic]], [[buildJpeg]]). */
+  @inline private def grayAt(src: Array[Byte], w: Int, x: Int, y: Int): Byte =
+    if (src.length == 0) 0 else src((y * w + x) % src.length)
+
+  /** The one little-endian int32 writer of the BMP, GVID and WAV builders. */
+  private def putIntLE(out: Array[Byte], off: Int, v: Int): Unit = {
+    out(off) = (v & 0xff).toByte
+    out(off + 1) = ((v >> 8) & 0xff).toByte
+    out(off + 2) = ((v >> 16) & 0xff).toByte
+    out(off + 3) = ((v >> 24) & 0xff).toByte
+  }
+
+  private def readIntLE(b: Array[Byte], off: Int): Int =
+    (b(off) & 0xff) | ((b(off + 1) & 0xff) << 8) | ((b(off + 2) & 0xff) << 16) | ((b(off + 3) & 0xff) << 24)
+
+  /** The one BMP writer: a valid 24-bit bottom-up BMP of the w × h raster
+    * whose gray pixel (x, y) is `gray(x, y)` (low byte). 54-byte header +
+    * 4-byte-aligned rows — the shape [[tryDirectBmp]] reads directly. */
+  private def writeBmp(w: Int, h: Int)(gray: (Int, Int) => Int): Array[Byte] = {
     val rowSize = ((3 * w + 3) / 4) * 4
     val total = 54 + rowSize * h
     val out = new Array[Byte](total)
-    def putIntLE(off: Int, v: Int): Unit = {
-      out(off) = (v & 0xff).toByte
-      out(off + 1) = ((v >> 8) & 0xff).toByte
-      out(off + 2) = ((v >> 16) & 0xff).toByte
-      out(off + 3) = ((v >> 24) & 0xff).toByte
-    }
     out(0) = 'B'; out(1) = 'M'
-    putIntLE(2, total)
-    putIntLE(10, 54) // pixel data offset
-    putIntLE(14, 40) // BITMAPINFOHEADER size
-    putIntLE(18, w)
-    putIntLE(22, h)
+    putIntLE(out, 2, total)
+    putIntLE(out, 10, 54) // pixel data offset
+    putIntLE(out, 14, 40) // BITMAPINFOHEADER size
+    putIntLE(out, 18, w)
+    putIntLE(out, 22, h)
     out(26) = 1 // planes
     out(28) = 24 // bpp
-    putIntLE(34, rowSize * h)
+    putIntLE(out, 34, rowSize * h)
     var y = 0
     while (y < h) {
       val rowOff = 54 + (h - 1 - y) * rowSize // bottom-up storage
       var x = 0
       while (x < w) {
-        val v: Byte =
-          if (src.length == 0) 0 else src((y * w + x) % src.length)
+        val v = gray(x, y).toByte
         val p = rowOff + 3 * x
         out(p) = v; out(p + 1) = v; out(p + 2) = v
         x += 1
@@ -99,8 +110,11 @@ object Multimodal {
     out
   }
 
-  private val bmpUdf = udf { src: Array[Byte] =>
-    Option(src).map(buildBmp).getOrElse(buildBmp(Array.emptyByteArray))
+  /** A valid 24-bit bottom-up BMP whose gray pixel (x,y) = src[(y*w+x) mod n]
+    * (0 when src is empty). */
+  private[graft] def buildBmp(src: Array[Byte]): Array[Byte] = {
+    val (w, h) = dims(src)
+    writeBmp(w, h)((x, y) => grayAt(src, w, x, y))
   }
 
   // ---------------------------------------------- contract-direct raster view
@@ -188,7 +202,7 @@ object Multimodal {
     while (y < h) {
       var x = 0
       while (x < w) {
-        val v: Byte = if (src.length == 0) 0 else src((y * w + x) % src.length)
+        val v = grayAt(src, w, x, y)
         val p = y * stride + 1 + 3 * x
         raw(p) = v; raw(p + 1) = v; raw(p + 2) = v
         x += 1
@@ -227,10 +241,6 @@ object Multimodal {
     out.toByteArray
   }
 
-  private val pngUdf = udf { src: Array[Byte] =>
-    Option(src).map(buildPng).getOrElse(buildPng(Array.emptyByteArray))
-  }
-
   // --------------------------------------------------------------- JPEG side
 
   /** Block-mosaic raster contract shared by [[buildBmpMosaic]] and
@@ -240,46 +250,12 @@ object Multimodal {
     * has DC = 8·(v−128) and ALL AC coefficients zero, so with a unit
     * quantization table the round trip is EXACT — the one image family
     * where a lossy codec is byte-exact and therefore engine-replayable
-    * forever (MultimodalSpec pins decode(buildJpeg(s)) == mosaic(s)). */
-  @inline private def mosaicVal(src: Array[Byte], wb: Int, bx: Int, by: Int): Byte =
-    if (src.length == 0) 0 else src((by * wb + bx) % src.length)
-
-  /** A 24-bit BMP rendering of the block-mosaic contract (byte-different
-    * container, raster-identical to [[buildJpeg]] of the same source). */
+    * forever (MultimodalSpec pins decode(buildJpeg(s)) == mosaic(s)).
+    * A 24-bit BMP rendering of it (byte-different container,
+    * raster-identical to [[buildJpeg]] of the same source). */
   private[graft] def buildBmpMosaic(src: Array[Byte]): Array[Byte] = {
     val (wb, hb) = dims(src)
-    val w = 8 * wb; val h = 8 * hb
-    val rowSize = ((3 * w + 3) / 4) * 4
-    val total = 54 + rowSize * h
-    val out = new Array[Byte](total)
-    def putIntLE(off: Int, v: Int): Unit = {
-      out(off) = (v & 0xff).toByte
-      out(off + 1) = ((v >> 8) & 0xff).toByte
-      out(off + 2) = ((v >> 16) & 0xff).toByte
-      out(off + 3) = ((v >> 24) & 0xff).toByte
-    }
-    out(0) = 'B'; out(1) = 'M'
-    putIntLE(2, total)
-    putIntLE(10, 54)
-    putIntLE(14, 40)
-    putIntLE(18, w)
-    putIntLE(22, h)
-    out(26) = 1
-    out(28) = 24
-    putIntLE(34, rowSize * h)
-    var y = 0
-    while (y < h) {
-      val rowOff = 54 + (h - 1 - y) * rowSize
-      var x = 0
-      while (x < w) {
-        val v = mosaicVal(src, wb, x / 8, y / 8)
-        val p = rowOff + 3 * x
-        out(p) = v; out(p + 1) = v; out(p + 2) = v
-        x += 1
-      }
-      y += 1
-    }
-    out
+    writeBmp(8 * wb, 8 * hb)((x, y) => grayAt(src, wb, x / 8, y / 8))
   }
 
   /**
@@ -290,7 +266,7 @@ object Multimodal {
    * Grayscale single-component, no subsampling, UNIT quantization table,
    * minimal canonical Huffman tables (12 DC categories at code length 4;
    * one AC symbol, EOB, at length 1). Because every 8×8 block is uniform,
-   * each block is DC-only and the decode is EXACT (see [[mosaicVal]]) —
+   * each block is DC-only and the decode is EXACT (see [[buildBmpMosaic]]) —
    * the JPEG is byte-different from the mosaic BMP but raster-identical:
    * the dominant crawl-format re-encode that byte-hash dedup misses and
    * perceptual dHash groups (q_image_dedup_jpeg).
@@ -362,7 +338,7 @@ object Multimodal {
     while (by < hb) {
       var bx = 0
       while (bx < wb) {
-        val v = mosaicVal(src, wb, bx, by) & 0xff
+        val v = grayAt(src, wb, bx, by) & 0xff
         val dc = 8 * (v - 128) // DCT DC of a uniform level-shifted block
         putDcDiffAndEob(dc - prevDc) // Y
         prevDc = dc
@@ -382,31 +358,63 @@ object Multimodal {
     out.toByteArray
   }
 
-  private val bmpMosaicUdf = udf { src: Array[Byte] =>
-    Option(src).map(buildBmpMosaic).getOrElse(buildBmpMosaic(Array.emptyByteArray))
-  }
-
-  private val jpegUdf = udf { src: Array[Byte] =>
-    Option(src).map(buildJpeg).getOrElse(buildJpeg(Array.emptyByteArray))
+  /** The one payload column: `df` plus `payload` = `build` over the UTF-8
+    * bytes of `textCol` (over no bytes when the text is NULL). */
+  private def withPayload(df: DataFrame, textCol: String)(build: Array[Byte] => Array[Byte]): DataFrame = {
+    val payload = udf { src: Array[Byte] => build(if (src == null) Array.emptyByteArray else src) }
+    df.withColumn("payload", payload(encode(col(textCol), "UTF-8")))
   }
 
   /** Adds a `payload` column holding a mosaic-contract BMP of the text. */
   def withMosaicBmpPayload(df: DataFrame, textCol: String): DataFrame =
-    df.withColumn("payload", bmpMosaicUdf(encode(col(textCol), "UTF-8")))
+    withPayload(df, textCol)(buildBmpMosaic)
 
   /** Adds a `payload` column holding a real baseline JPEG of the text
     * (same mosaic raster contract as [[withMosaicBmpPayload]]). */
   def withJpegPayload(df: DataFrame, textCol: String): DataFrame =
-    df.withColumn("payload", jpegUdf(encode(col(textCol), "UTF-8")))
+    withPayload(df, textCol)(buildJpeg)
 
   /** Adds a `payload` column holding a real PNG built from the text bytes
     * (same raster contract as [[withImagePayload]], different container). */
   def withPngPayload(df: DataFrame, textCol: String): DataFrame =
-    df.withColumn("payload", pngUdf(encode(col(textCol), "UTF-8")))
+    withPayload(df, textCol)(buildPng)
 
   /** Adds a `payload` column holding a real BMP built from the text bytes. */
   def withImagePayload(df: DataFrame, textCol: String): DataFrame =
-    df.withColumn("payload", bmpUdf(encode(col(textCol), "UTF-8")))
+    withPayload(df, textCol)(buildBmp)
+
+  /** Adds a `payload` column holding a GVID container of real BMP frames. */
+  def withVideoPayload(df: DataFrame, textCol: String): DataFrame =
+    withPayload(df, textCol)(buildVideo)
+
+  /** Adds a `payload` column holding a real PCM16 WAV built from text bytes. */
+  def withAudioPayload(df: DataFrame, textCol: String): DataFrame =
+    withPayload(df, textCol)(buildWav)
+
+  // ------------------------------------------------------------- readers
+
+  /** The one per-row reader: `read(id, payload)` over `(idCol as long,
+    * payloadCol)`, one narrow mapPartitions stage. */
+  private def readPayloads[T: Encoder](df: DataFrame, idCol: String, payloadCol: String)(
+      read: (Long, Array[Byte]) => T): Dataset[T] =
+    df.select(col(idCol).cast("long"), col(payloadCol))
+      .as[(Long, Array[Byte])](Encoders.tuple(Encoders.scalaLong, Encoders.BINARY))
+      .mapPartitions { rows => rows.map { case (id, bytes) => read(id, bytes) } }
+
+  /**
+   * The poison-row rule of the three fingerprints: `(idCol, name)` rows whose
+   * value is `hash(id, payload)`, or NULL when the hash throws — at corpus
+   * scale one corrupt blob must not kill a 10⁹-row pass. Downstream dedup
+   * must filter `name IS NOT NULL` (nulls would otherwise hash-group
+   * together as a fake duplicate cluster); the null rows ARE the quarantine
+   * list. The feature decoders have no such rule: they fail the job.
+   */
+  private def fingerprint(df: DataFrame, idCol: String, payloadCol: String, name: String)(
+      hash: (Long, Array[Byte]) => Long): DataFrame =
+    readPayloads(df, idCol, payloadCol) { (id, bytes) =>
+      val h = try java.lang.Long.valueOf(hash(id, bytes)) catch { case scala.util.control.NonFatal(_) => null }
+      (id, h)
+    }(Encoders.tuple(Encoders.scalaLong, Encoders.LONG)).toDF(idCol, name)
 
   /**
    * REAL image decode + feature extraction, batched per partition: the
@@ -417,9 +425,7 @@ object Multimodal {
    */
   def decodeImages(df: DataFrame, idCol: String, payloadCol: String): Dataset[MediaFeatures] = {
     implicit val enc: Encoder[MediaFeatures] = Encoders.product[MediaFeatures]
-    df.select(col(idCol).cast("long"), col(payloadCol))
-      .as[(Long, Array[Byte])](Encoders.tuple(Encoders.scalaLong, Encoders.BINARY))
-      .mapPartitions { rows => rows.map { case (id, bytes) => decodeOne(id, bytes) } }
+    readPayloads(df, idCol, payloadCol)(decodeOne)
   }
 
   private def decodeOne(id: Long, bytes: Array[Byte]): MediaFeatures = {
@@ -487,28 +493,12 @@ object Multimodal {
    * near-duplicates (small hamming distance) reuse the SimHash chunk-LSH
    * machinery — 4×16-bit chunk match guarantees recall for distance ≤ 3.
    *
-   * POISON-ROW PATH: an undecodable payload (null bytes, ImageIO can't
-   * parse it) emits a NULL phash instead of failing the job — at corpus
-   * scale one corrupt blob must not kill a 10⁹-row pass. Downstream
-   * dedup must filter `phash IS NOT NULL` (nulls would otherwise hash-
-   * group together as a fake duplicate cluster); the null rows ARE the
-   * quarantine list. Same contract on the audio/video twins.
+   * POISON-ROW PATH (see [[fingerprint]]): an undecodable payload (null
+   * bytes, ImageIO can't parse it) emits a NULL phash instead of failing
+   * the job. Same contract on the audio/video twins.
    */
-  def perceptualHash(df: DataFrame, idCol: String, payloadCol: String): DataFrame = {
-    implicit val enc: Encoder[(Long, java.lang.Long)] =
-      Encoders.tuple(Encoders.scalaLong, Encoders.LONG)
-    df.select(col(idCol).cast("long"), col(payloadCol))
-      .as[(Long, Array[Byte])](Encoders.tuple(Encoders.scalaLong, Encoders.BINARY))
-      .mapPartitions { rows =>
-        rows.map { case (id, bytes) =>
-          try {
-            (id, java.lang.Long.valueOf(dHash(decodeRaster(bytes))))
-          } catch {
-            case scala.util.control.NonFatal(_) => (id, null: java.lang.Long)
-          }
-        }
-      }.toDF(idCol, "phash")
-  }
+  def perceptualHash(df: DataFrame, idCol: String, payloadCol: String): DataFrame =
+    fingerprint(df, idCol, payloadCol, "phash")((_, bytes) => dHash(decodeRaster(bytes)))
 
   // ------------------------------------------------------------ video side
 
@@ -536,57 +526,56 @@ object Multimodal {
     }
     val total = 8 + frames.map(4 + _.length).sum
     val out = new Array[Byte](total)
-    def putIntLE(off: Int, v: Int): Unit = {
-      out(off) = (v & 0xff).toByte; out(off + 1) = ((v >> 8) & 0xff).toByte
-      out(off + 2) = ((v >> 16) & 0xff).toByte; out(off + 3) = ((v >> 24) & 0xff).toByte
-    }
     out(0) = 'G'; out(1) = 'V'; out(2) = 'I'; out(3) = 'D'
-    putIntLE(4, nFrames)
+    putIntLE(out, 4, nFrames)
     var pos = 8
     frames.foreach { b =>
-      putIntLE(pos, b.length)
+      putIntLE(out, pos, b.length)
       System.arraycopy(b, 0, out, pos + 4, b.length)
       pos += 4 + b.length
     }
     out
   }
 
-  private val videoUdf = udf { src: Array[Byte] =>
-    Option(src).map(buildVideo).getOrElse(buildVideo(Array.emptyByteArray))
+  /**
+   * The one GVID frame walk: (frame count, middle index n/2, the middle
+   * frame's bytes) of doc `id`'s container. Walks the whole frame index
+   * without materializing any frame but the middle one. The full `GVID`
+   * magic and a frame count of at least 1 are checked, and every one of
+   * the count's frame lengths is bounds-checked before it is followed or
+   * sliced (`copyOfRange` would otherwise zero-pad a cut frame silently);
+   * a container that fails a check is rejected, naming the doc.
+   */
+  private def middleFrame(id: Long, bytes: Array[Byte]): (Int, Int, Array[Byte]) = {
+    require(bytes.length >= 8 && bytes(0) == 'G' && bytes(1) == 'V' && bytes(2) == 'I' && bytes(3) == 'D',
+      s"not a GVID container for doc $id")
+    val nFrames = readIntLE(bytes, 4)
+    require(nFrames >= 1, s"GVID frame count $nFrames for doc $id")
+    val target = nFrames / 2
+    var pos = 8; var f = 0; var mid = 0; var midLen = 0
+    while (f < nFrames) {
+      require(pos + 4 <= bytes.length, s"truncated GVID frame index for doc $id")
+      val len = readIntLE(bytes, pos)
+      require(len >= 0 && pos + 4L + len <= bytes.length, s"GVID frame $f overruns payload for doc $id")
+      if (f == target) { mid = pos + 4; midLen = len }
+      pos += 4 + len; f += 1
+    }
+    (nFrames, target, java.util.Arrays.copyOfRange(bytes, mid, mid + midLen))
   }
 
-  /** Adds a `payload` column holding a GVID container of real BMP frames. */
-  def withVideoPayload(df: DataFrame, textCol: String): DataFrame =
-    df.withColumn("payload", videoUdf(encode(col(textCol), "UTF-8")))
-
-  private def readIntLE(b: Array[Byte], off: Int): Int =
-    (b(off) & 0xff) | ((b(off + 1) & 0xff) << 8) | ((b(off + 2) & 0xff) << 16) | ((b(off + 3) & 0xff) << 24)
-
   /**
-   * Frame sampling + REAL decode: parses the container, walks the frame
-   * index to the MIDDLE frame (n_frames / 2) without materializing the
-   * others, and runs the sampled frame through javax.imageio. Narrow
+   * Frame sampling + REAL decode: walks the container to the MIDDLE frame
+   * (n_frames / 2) and decodes it like [[decodeImages]]. Narrow
    * mapPartitions; per-row cost is one frame decode, not the whole clip.
+   * A truncated or mis-tagged container fails the job, naming the doc.
    */
   def sampleMiddleFrame(df: DataFrame, idCol: String, payloadCol: String): Dataset[FrameFeatures] = {
     implicit val enc: Encoder[FrameFeatures] = Encoders.product[FrameFeatures]
-    df.select(col(idCol).cast("long"), col(payloadCol))
-      .as[(Long, Array[Byte])](Encoders.tuple(Encoders.scalaLong, Encoders.BINARY))
-      .mapPartitions { rows =>
-        rows.map { case (id, bytes) =>
-          require(bytes.length >= 8 && bytes(0) == 'G' && bytes(1) == 'V' && bytes(2) == 'I' && bytes(3) == 'D',
-            s"not a GVID container for doc $id")
-          val nFrames = readIntLE(bytes, 4)
-          val target = nFrames / 2
-          var pos = 8
-          var f = 0
-          while (f < target) { pos += 4 + readIntLE(bytes, pos); f += 1 }
-          val len = readIntLE(bytes, pos)
-          val frame = java.util.Arrays.copyOfRange(bytes, pos + 4, pos + 4 + len)
-          val m = decodeOne(id, frame)
-          FrameFeatures(id, bytes.length.toLong, nFrames, target, m.width, m.height, m.feature)
-        }
-      }
+    readPayloads(df, idCol, payloadCol) { (id, bytes) =>
+      val (nFrames, target, frame) = middleFrame(id, bytes)
+      val m = decodeOne(id, frame)
+      FrameFeatures(id, bytes.length.toLong, nFrames, target, m.width, m.height, m.feature)
+    }
   }
 
   /**
@@ -597,42 +586,11 @@ object Multimodal {
    * `perceptualHash`: container byte edits that don't change the sampled
    * frame's pixels leave it fixed.
    *
-   * POISON-ROW PATH (see `perceptualHash`): a truncated container, a frame
-   * walk that runs past the payload (every offset is bounds-checked before
-   * the slice — `copyOfRange` would otherwise zero-pad silently), or an
-   * undecodable sampled frame emits a NULL vfp instead of failing the job.
+   * POISON-ROW PATH (see [[fingerprint]]): a container the frame walk
+   * rejects, or an undecodable sampled frame, emits a NULL vfp.
    */
-  def videoFingerprint(df: DataFrame, idCol: String, payloadCol: String): DataFrame = {
-    df.select(col(idCol).cast("long"), col(payloadCol))
-      .as[(Long, Array[Byte])](Encoders.tuple(Encoders.scalaLong, Encoders.BINARY))
-      .mapPartitions { rows =>
-        rows.map { case (id, bytes) =>
-          try {
-            require(bytes.length >= 8 && bytes(0) == 'G' && bytes(1) == 'V',
-              s"not a GVID container for doc $id")
-            val nFrames = readIntLE(bytes, 4)
-            val target = nFrames / 2
-            var pos = 8; var f = 0
-            while (f < target) {
-              require(pos + 4 <= bytes.length, s"truncated GVID frame index for doc $id")
-              val flen = readIntLE(bytes, pos)
-              require(flen >= 0 && pos + 4 + flen <= bytes.length,
-                s"GVID frame $f overruns payload for doc $id")
-              pos += 4 + flen; f += 1
-            }
-            require(pos + 4 <= bytes.length, s"truncated GVID frame index for doc $id")
-            val len = readIntLE(bytes, pos)
-            require(len >= 0 && pos + 4 + len <= bytes.length,
-              s"GVID middle frame overruns payload for doc $id")
-            val frame = java.util.Arrays.copyOfRange(bytes, pos + 4, pos + 4 + len)
-            (id, java.lang.Long.valueOf(dHash(decodeRaster(frame))))
-          } catch {
-            case scala.util.control.NonFatal(_) => (id, null: java.lang.Long)
-          }
-        }
-      }(Encoders.tuple(Encoders.scalaLong, Encoders.LONG))
-      .toDF(idCol, "vfp")
-  }
+  def videoFingerprint(df: DataFrame, idCol: String, payloadCol: String): DataFrame =
+    fingerprint(df, idCol, payloadCol, "vfp")((id, bytes) => dHash(decodeRaster(middleFrame(id, bytes)._3)))
 
   // ------------------------------------------------------------ audio side
 
@@ -645,20 +603,16 @@ object Multimodal {
     val nSamples = 64 + b0 % 64
     val dataLen = nSamples * 2
     val out = new Array[Byte](44 + dataLen)
-    def putIntLE(off: Int, v: Int): Unit = {
-      out(off) = (v & 0xff).toByte; out(off + 1) = ((v >> 8) & 0xff).toByte
-      out(off + 2) = ((v >> 16) & 0xff).toByte; out(off + 3) = ((v >> 24) & 0xff).toByte
-    }
     def putTag(off: Int, s: String): Unit = s.zipWithIndex.foreach { case (c, i) => out(off + i) = c.toByte }
-    putTag(0, "RIFF"); putIntLE(4, 36 + dataLen); putTag(8, "WAVE")
-    putTag(12, "fmt "); putIntLE(16, 16)
+    putTag(0, "RIFF"); putIntLE(out, 4, 36 + dataLen); putTag(8, "WAVE")
+    putTag(12, "fmt "); putIntLE(out, 16, 16)
     out(20) = 1 // PCM
     out(22) = 1 // mono
-    putIntLE(24, SampleRate)
-    putIntLE(28, SampleRate * 2) // byte rate
+    putIntLE(out, 24, SampleRate)
+    putIntLE(out, 28, SampleRate * 2) // byte rate
     out(32) = 2 // block align
     out(34) = 16 // bits/sample
-    putTag(36, "data"); putIntLE(40, dataLen)
+    putTag(36, "data"); putIntLE(out, 40, dataLen)
     var k = 0
     while (k < nSamples) {
       val v = if (src.length == 0) 0 else ((src(k % src.length) & 0xff) - 128) * 256
@@ -669,6 +623,18 @@ object Multimodal {
     out
   }
 
+  /** The one PCM read, via javax.sound.sampled (container and format parse;
+    * throws on an unsupported container): the format, the frame count and
+    * the PCM bytes, whose sample i [[pcm16]] reads. */
+  private def readPcm(bytes: Array[Byte]): (AudioFormat, Long, Array[Byte]) = {
+    val in = AudioSystem.getAudioInputStream(new ByteArrayInputStream(bytes))
+    try (in.getFormat, in.getFrameLength, in.readAllBytes()) finally in.close()
+  }
+
+  /** Sample i of little-endian PCM16 bytes. */
+  @inline private def pcm16(data: Array[Byte], i: Int): Long =
+    ((data(2 * i) & 0xff) | (data(2 * i + 1) << 8)).toShort.toLong
+
   /**
    * Acoustic fingerprint of decoded PCM: bit k set when sample(k+1) >
    * sample(k) — the sign-of-delta (zero-crossing-family) fingerprint,
@@ -676,67 +642,38 @@ object Multimodal {
    * that doesn't alter the rendered samples leaves it fixed (the audio
    * twin of `perceptualHash`; near-matches via the same 16-bit chunk
    * LSH). First 63 delta bits packed into a non-negative BIGINT.
+   *
+   * POISON-ROW PATH (see [[fingerprint]]): an unparseable or unsupported
+   * audio container emits a NULL afp, never a job kill.
    */
-  def audioFingerprint(df: DataFrame, idCol: String, payloadCol: String): DataFrame = {
-    df.select(col(idCol).cast("long"), col(payloadCol))
-      .as[(Long, Array[Byte])](Encoders.tuple(Encoders.scalaLong, Encoders.BINARY))
-      .mapPartitions { rows =>
-        rows.map { case (id, bytes) =>
-          // POISON-ROW PATH (see perceptualHash): an unparseable or
-          // unsupported audio container emits a NULL afp, never a job kill
-          try {
-            val in = AudioSystem.getAudioInputStream(new ByteArrayInputStream(bytes))
-            val data = in.readAllBytes()
-            in.close()
-            def sample(k: Int): Long =
-              ((data(2 * k) & 0xff) | (data(2 * k + 1) << 8)).toShort.toLong
-            val nSamples = data.length / 2
-            var hash = 0L; var k = 0
-            while (k < nSamples - 1 && k < 63) {
-              if (sample(k + 1) > sample(k)) hash |= (1L << k)
-              k += 1
-            }
-            (id, java.lang.Long.valueOf(hash))
-          } catch {
-            case scala.util.control.NonFatal(_) => (id, null: java.lang.Long)
-          }
-        }
-      }(Encoders.tuple(Encoders.scalaLong, Encoders.LONG))
-      .toDF(idCol, "afp")
-  }
-
-  private val wavUdf = udf { src: Array[Byte] =>
-    Option(src).map(buildWav).getOrElse(buildWav(Array.emptyByteArray))
-  }
-
-  /** Adds a `payload` column holding a real PCM16 WAV built from text bytes. */
-  def withAudioPayload(df: DataFrame, textCol: String): DataFrame =
-    df.withColumn("payload", wavUdf(encode(col(textCol), "UTF-8")))
+  def audioFingerprint(df: DataFrame, idCol: String, payloadCol: String): DataFrame =
+    fingerprint(df, idCol, payloadCol, "afp") { (_, bytes) =>
+      val data = readPcm(bytes)._3
+      val nSamples = data.length / 2
+      var hash = 0L; var k = 0
+      while (k < nSamples - 1 && k < 63) {
+        if (pcm16(data, k + 1) > pcm16(data, k)) hash |= (1L << k)
+        k += 1
+      }
+      hash
+    }
 
   /** REAL audio decode via javax.sound.sampled: container/format parse, then
     * PCM frame scan for exact sample sum (oracle-predictable), mean |s|, peak. */
   def decodeAudio(df: DataFrame, idCol: String, payloadCol: String): Dataset[AudioFeatures] = {
     implicit val enc: Encoder[AudioFeatures] = Encoders.product[AudioFeatures]
-    df.select(col(idCol).cast("long"), col(payloadCol))
-      .as[(Long, Array[Byte])](Encoders.tuple(Encoders.scalaLong, Encoders.BINARY))
-      .mapPartitions { rows =>
-        rows.map { case (id, bytes) =>
-          val in = AudioSystem.getAudioInputStream(new ByteArrayInputStream(bytes))
-          val fmt = in.getFormat
-          val frames = in.getFrameLength
-          val data = in.readAllBytes()
-          in.close()
-          var sum = 0L; var sumAbs = 0L; var peak = 0L
-          var k = 0
-          while (k + 1 < data.length) {
-            val s = ((data(k) & 0xff) | (data(k + 1) << 8)).toShort.toLong
-            sum += s; sumAbs += math.abs(s); peak = math.max(peak, math.abs(s))
-            k += 2
-          }
-          val n = math.max(1L, frames)
-          AudioFeatures(id, bytes.length.toLong, fmt.getSampleRate.toInt, fmt.getChannels,
-            frames, Array(sum.toFloat / 256f, sumAbs.toFloat / n / 256f, peak.toFloat / 256f))
-        }
+    readPayloads(df, idCol, payloadCol) { (id, bytes) =>
+      val (fmt, frames, data) = readPcm(bytes)
+      var sum = 0L; var sumAbs = 0L; var peak = 0L
+      var i = 0
+      while (i < data.length / 2) {
+        val s = pcm16(data, i)
+        sum += s; sumAbs += math.abs(s); peak = math.max(peak, math.abs(s))
+        i += 1
       }
+      val n = math.max(1L, frames)
+      AudioFeatures(id, bytes.length.toLong, fmt.getSampleRate.toInt, fmt.getChannels,
+        frames, Array(sum.toFloat / 256f, sumAbs.toFloat / n / 256f, peak.toFloat / 256f))
+    }
   }
 }

@@ -175,6 +175,63 @@ class MultimodalSpec extends AnyFunSuite with SparkTestSession {
     assert(af(1L).isDefined && af(2L).isEmpty, af.toString)
   }
 
+  /** The failure text of `e` and its causes (a task failure reaches the
+    * driver wrapped in a SparkException). */
+  private def failureText(e: Throwable): String =
+    Iterator.iterate(e)(_.getCause).takeWhile(_ != null).map(_.getMessage).mkString("\n")
+
+  /** A 2-frame GVID container: "c" * 200 -> b0 = 'c' (99), 2 + 99 % 3 = 2
+    * frames, each a 7x7 BMP of 54 + 24 * 7 = 222 bytes -> 8 + 2 * 226 = 460. */
+  private def twoFrameVideo(): Array[Byte] = {
+    import spark.implicits._
+    val b = Multimodal.withVideoPayload(Seq((5L, "c" * 200)).toDF("doc_id", "text"), "text")
+      .select($"payload").as[Array[Byte]].head()
+    assert(b.length == 460)
+    b
+  }
+
+  test("a truncated GVID container fails sampleMiddleFrame naming the doc; its fingerprint is NULL") {
+    import spark.implicits._
+    val full = twoFrameVideo()
+    // intact: the middle frame (1) is 49 pixels of 'c' = 99
+    val ok = Multimodal.sampleMiddleFrame(Seq((5L, full)).toDF("doc_id", "payload"), "doc_id", "payload")
+      .head()
+    assert(ok.frame_idx == 1 && ok.feature(0) == 4851f)
+    // cut 40 bytes inside the middle frame: the walk must refuse it, not
+    // decode a zero-padded frame
+    val cut = Seq((5L, full.take(full.length - 40))).toDF("doc_id", "payload")
+    val e = intercept[Exception] {
+      Multimodal.sampleMiddleFrame(cut, "doc_id", "payload").collect()
+    }
+    assert(failureText(e).contains("for doc 5"), failureText(e))
+    val vf = Multimodal.videoFingerprint(cut, "doc_id", "payload").collect()
+    assert(vf.length == 1 && vf(0).isNullAt(1), vf.mkString(","))
+  }
+
+  test("a mis-tagged GVID container is rejected by both video operators") {
+    import spark.implicits._
+    def withCount(n: Int): Array[Byte] => Unit =
+      b => java.nio.ByteBuffer.wrap(b, 4, 4).order(java.nio.ByteOrder.LITTLE_ENDIAN).putInt(n)
+    // magic GVIX; frame counts 0 and -3 name no middle frame; 3 frames over
+    // the 2 present is a container cut at a frame boundary
+    val relabels = Seq[(String, Array[Byte] => Unit)](
+      "not a GVID container for doc 6" -> (b => b(3) = 'X'),
+      "GVID frame count 0 for doc 6" -> withCount(0),
+      "GVID frame count -3 for doc 6" -> withCount(-3),
+      "truncated GVID frame index for doc 6" -> withCount(3))
+    for ((expected, relabel) <- relabels) {
+      val relabeled = twoFrameVideo()
+      relabel(relabeled)
+      val df = Seq((6L, relabeled)).toDF("doc_id", "payload")
+      val e = intercept[Exception] {
+        Multimodal.sampleMiddleFrame(df, "doc_id", "payload").collect()
+      }
+      assert(failureText(e).contains(expected), failureText(e))
+      val vf = Multimodal.videoFingerprint(df, "doc_id", "payload").collect()
+      assert(vf.length == 1 && vf(0).isNullAt(1), s"$expected: ${vf.mkString(",")}")
+    }
+  }
+
   test("contract-direct BMP raster is pixel-identical to the ImageIO raster") {
     // the gate-corpus payload shapes: short, empty, multibyte-UTF-8-leading,
     // single-char, and long-enough-to-wrap sources

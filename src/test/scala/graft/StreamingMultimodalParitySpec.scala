@@ -10,8 +10,8 @@ import graft.multimodal.Multimodal
 import graft.operators.CorpusStats
 
 /**
- * Batch ≡ streaming for the perceptual/multimodal wave and chunking: all
- * four operators are STATELESS MAPS (payload build → decode → fingerprint;
+ * Batch ≡ streaming for the perceptual/multimodal wave and chunking: every
+ * operator here is a STATELESS MAP (payload build → decode → fingerprint;
  * tokenize → window → hash), so the identical code must run unchanged on a
  * Structured Streaming source in append mode — no watermark, no state —
  * and agree with the batch result on the union of all micro-batches row
@@ -86,5 +86,40 @@ class StreamingMultimodalParitySpec extends AnyFunSuite with SparkTestSession {
     val rows = spark.table("poison_parity").collect()
     sq.stop()
     assert(rows.length == 1 && rows(0).isNullAt(1), rows.mkString(","))
+  }
+
+  test("JPEG/BMP perceptual fingerprint is a stateless streaming map") {
+    import spark.implicits._
+    implicit val sqlCtx = spark.sqlContext
+    // the q_image_dedup_jpeg shape: per source text a mosaic BMP and a real
+    // baseline JPEG of the same raster — byte-different containers, one
+    // decoded image, one dHash
+    val docs = Seq(
+      (0L, "a streaming document with enough characters to rasterize"),
+      (1L, "another, different document body so the hashes differ"))
+    def fingerprints(df: DataFrame): DataFrame = {
+      val bmp = Multimodal.withMosaicBmpPayload(df, "text")
+        .select(col("doc_id"), col("payload"))
+      val jpg = Multimodal.withJpegPayload(
+          df.select((col("doc_id") + 100L).as("doc_id"), col("text")), "text")
+        .select(col("doc_id"), col("payload"))
+      Multimodal.perceptualHash(bmp.unionAll(jpg), "doc_id", "payload")
+    }
+    val expected = fingerprints(docs.toDF("doc_id", "text"))
+      .as[(Long, java.lang.Long)].collect().sortBy(_._1)
+    // cross-format pair agrees, different docs differ
+    val em = expected.toMap
+    assert(em(0L) == em(100L) && em(1L) == em(101L) && em(0L) != em(1L), expected.toSeq)
+
+    val stream = MemoryStream[(Long, String)]
+    val sq = fingerprints(stream.toDS().toDF("doc_id", "text"))
+      .writeStream.format("memory").queryName("jpeg_phash_parity")
+      .outputMode("append").start()
+    stream.addData(docs.take(1)); sq.processAllAvailable()
+    stream.addData(docs.drop(1)); sq.processAllAvailable()
+    val streamed = spark.table("jpeg_phash_parity")
+      .as[(Long, java.lang.Long)].collect().sortBy(_._1)
+    sq.stop()
+    assert(streamed.toSeq == expected.toSeq)
   }
 }

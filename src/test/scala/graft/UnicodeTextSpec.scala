@@ -1,10 +1,12 @@
 package graft
 
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.filter.SparkTestSession
-import graft.functions.UnicodeKernels
+import graft.functions.{UnicodeExpressions, UnicodeKernels}
 import graft.text.{TextFunctions, UnicodeText}
 
 /**
@@ -190,5 +192,67 @@ class UnicodeTextSpec extends AnyFunSuite with SparkTestSession {
       assert(UnicodeKernels.classify(hi) == bi, s"$name hi")
     }
     assert(UnicodeKernels.classify(' ') == -1 && UnicodeKernels.classify(0x10000) == -1)
+  }
+
+  // batch ≡ streaming: the script histogram and the token-stats kernel are
+  // stateless per-row maps, so a MemoryStream run delivered across several
+  // micro-batches must equal the batch run row for row
+  private val texts = Seq(
+    (0L, "hello streaming world"),
+    (1L, "こんにちは世界"), // こんにちは世界
+    (2L, "Привет мир 123"), // Привет мир
+    (3L, "مرحبا بالعالم"), // مرحبا بالعالم
+    (4L, ""))
+
+  test("script-histogram language ID is a stateless streaming map") {
+    import spark.implicits._
+    implicit val sqlCtx = spark.sqlContext
+    def score(df: DataFrame): DataFrame = {
+      val sc = UnicodeText.scriptCounts(col("text"))
+      df.withColumn("_sc", sc)
+        .select(col("doc_id"), UnicodeText.dominantScript(col("_sc")).as("script"),
+          col("_sc")(UnicodeText.Scripts.indexOf("latn")).as("n_latn"),
+          col("_sc")(UnicodeText.Scripts.indexOf("kana")).as("n_kana"))
+    }
+    val expected = score(texts.toDF("doc_id", "text"))
+      .as[(Long, String, Long, Long)].collect().sortBy(_._1)
+    assert(expected.map(_._2).toSeq == Seq("latn", "kana", "cyrl", "arab", "und"),
+      expected.toSeq)
+
+    val stream = MemoryStream[(Long, String)]
+    val sq = score(stream.toDS().toDF("doc_id", "text"))
+      .writeStream.format("memory").queryName("script_parity")
+      .outputMode("append").start()
+    stream.addData(texts.take(2)); sq.processAllAvailable()
+    stream.addData(texts.drop(2)); sq.processAllAvailable()
+    val streamed = spark.table("script_parity")
+      .as[(Long, String, Long, Long)].collect().sortBy(_._1)
+    sq.stop()
+    assert(streamed.toSeq == expected.toSeq)
+  }
+
+  test("unicode token stats kernel is a stateless streaming map") {
+    import spark.implicits._
+    implicit val sqlCtx = spark.sqlContext
+    def score(df: DataFrame): DataFrame =
+      df.select(col("doc_id"), UnicodeExpressions.uTokenStats(col("text")).as("st"))
+        .select(col("doc_id"), col("st")(0).as("n_tokens"),
+          col("st")(1).as("n_distinct"), col("st")(2).as("cp_len_sum"))
+    val expected = score(texts.toDF("doc_id", "text"))
+      .as[(Long, Long, Long, Long)].collect().sortBy(_._1)
+    // CJK text splits per codepoint: 7 single-cp tokens from doc 1
+    assert(expected.find(_._1 == 1L).exists(r => r._2 == 7L && r._4 == 7L), expected.toSeq)
+    assert(expected.find(_._1 == 4L).exists(r => r._2 == 0L), expected.toSeq)
+
+    val stream = MemoryStream[(Long, String)]
+    val sq = score(stream.toDS().toDF("doc_id", "text"))
+      .writeStream.format("memory").queryName("utok_parity")
+      .outputMode("append").start()
+    stream.addData(texts.take(3)); sq.processAllAvailable()
+    stream.addData(texts.drop(3)); sq.processAllAvailable()
+    val streamed = spark.table("utok_parity")
+      .as[(Long, Long, Long, Long)].collect().sortBy(_._1)
+    sq.stop()
+    assert(streamed.toSeq == expected.toSeq)
   }
 }

@@ -1,14 +1,14 @@
 #!/usr/bin/env python3
-"""Count the code lines of the Scala sources under one or more directories.
+"""Count the code lines of Scala sources: directories of them, or single files.
 
-Usage: python3 tools/code_lines.py <dir> [<dir> ...]
+Usage: python3 tools/code_lines.py <dir-or-.scala-file> [...]
 
 This is the size count ROADMAP.md and CHANGES.md quote ("`src/main/scala`
-shrinks by N lines"): every `.scala` file under each directory, leaving out
-blank lines, lines that hold only a `//` comment and everything inside
-`/* ... */` blocks, scaladoc included. A line that keeps code outside a
-block comment counts. Prints `<count> <dir>` per directory, then the total
-when more than one directory is given.
+shrinks by N lines"): every `.scala` file under each directory (or the
+`.scala` file itself), leaving out blank lines, lines that hold only a `//`
+comment and everything inside `/* ... */` blocks, scaladoc included. A line
+that keeps code outside a block comment counts. Prints `<count> <path>` per
+argument, then the total when more than one is given.
 """
 import os
 import sys
@@ -58,9 +58,12 @@ def main(dirs):
         sys.exit(__doc__.strip().splitlines()[2])
     total = 0
     for d in dirs:
-        if not os.path.isdir(d):
-            sys.exit(f"not a directory: {d}")
-        n = tree_lines(d)
+        if os.path.isdir(d):
+            n = tree_lines(d)
+        elif os.path.isfile(d) and d.endswith(".scala"):
+            n = code_lines(d)
+        else:
+            sys.exit(f"not a directory or .scala file: {d}")
         total += n
         print(f"{n} {d}")
     if len(dirs) > 1:
